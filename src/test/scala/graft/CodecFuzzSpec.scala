@@ -13,10 +13,40 @@ import graft.pipeline.{Multimodal, TextOps}
   * honesty or None", and a thrown exception would kill a whole Spark
   * task rather than skip one bad blob. */
 class CodecFuzzSpec extends AnyFunSuite {
+  import CodecFuzzSpec._
 
   private val rnd = new scala.util.Random(17)
 
-  private def decoders: Seq[(String, Array[Byte] => Any)] = Seq(
+  private def check(name: String, fn: Array[Byte] => Any,
+                    b: Array[Byte], what: String): Unit =
+    try fn(b) catch {
+      case e: Throwable =>
+        fail(s"$name threw ${e.getClass.getSimpleName} on $what " +
+          s"(len=${b.length}): ${e.getMessage}")
+    }
+
+  test("decoders never throw on random bytes") {
+    val blobs = randomBlobs(rnd)
+    for ((name, fn) <- decoders; b <- blobs) check(name, fn, b, "random")
+  }
+
+  test("decoders never throw on truncated valid streams") {
+    for ((name, fn) <- decoders; v <- validStreams; cut <- cuts(v))
+      check(name, fn, v.take(cut), "truncation")
+  }
+
+  test("decoders never throw on single-byte corruptions of valid streams") {
+    for ((name, fn) <- decoders; v <- validStreams; _ <- 0 until 8)
+      check(name, fn, corrupt(v, rnd), "corruption")
+  }
+}
+
+/** The decoder seam and the malformed-input classes, shared with
+  * [[CodecGoldenSpec]], which pins the decoders' results on the same
+  * seeded inputs. */
+object CodecFuzzSpec {
+
+  def decoders: Seq[(String, Array[Byte] => Any)] = Seq(
     "imageMeta" -> (Multimodal.imageMeta(_)),
     "audioMeta" -> (Multimodal.audioMeta(_)),
     "mp3Meta" -> (Multimodal.mp3Meta(_)),
@@ -54,7 +84,7 @@ class CodecFuzzSpec extends AnyFunSuite {
       TextOps.sitemapEntries(new String(b, "UTF-8"))),
     "warcRecords" -> (TextOps.warcRecords(_)))
 
-  private def validStreams: Seq[Array[Byte]] = Seq(
+  def validStreams: Seq[Array[Byte]] = Seq(
     Multimodal.layer1Bytes(3, 2),
     Multimodal.layer2Bytes(3, 2),
     Multimodal.layer3Bytes(3, 2),
@@ -102,31 +132,19 @@ class CodecFuzzSpec extends AnyFunSuite {
      "</script><p>tail</p>").getBytes("UTF-8"),
     TextOps.warcBytes(Seq(("response", "http://x/1", "hello"))))
 
-  private def check(name: String, fn: Array[Byte] => Any,
-                    b: Array[Byte], what: String): Unit =
-    try fn(b) catch {
-      case e: Throwable =>
-        fail(s"$name threw ${e.getClass.getSimpleName} on $what " +
-          s"(len=${b.length}): ${e.getMessage}")
-    }
+  /** Sixty random blobs plus the empty one, drawn from `rnd`. */
+  def randomBlobs(rnd: scala.util.Random): Seq[Array[Byte]] =
+    Seq(Array.empty[Byte]) ++
+      (0 until 60).map(_ => Array.fill(rnd.nextInt(400))(rnd.nextInt.toByte))
 
-  test("decoders never throw on random bytes") {
-    val blobs = Seq(Array.empty[Byte]) ++
-      (0 until 60).map(i => Array.fill(rnd.nextInt(400))(rnd.nextInt.toByte))
-    for ((name, fn) <- decoders; b <- blobs) check(name, fn, b, "random")
-  }
+  /** Prefix lengths of `v` that the truncation sweep keeps. */
+  def cuts(v: Array[Byte]): Seq[Int] =
+    Seq(1, 5, v.length / 3, v.length / 2, v.length - 3).map(math.max(0, _))
 
-  test("decoders never throw on truncated valid streams") {
-    for ((name, fn) <- decoders; v <- validStreams;
-         cut <- Seq(1, 5, v.length / 3, v.length / 2, v.length - 3))
-      check(name, fn, v.take(math.max(0, cut)), "truncation")
-  }
-
-  test("decoders never throw on single-byte corruptions of valid streams") {
-    for ((name, fn) <- decoders; v <- validStreams; _ <- 0 until 8) {
-      val b = v.clone()
-      b(rnd.nextInt(b.length)) = rnd.nextInt.toByte
-      check(name, fn, b, "corruption")
-    }
+  /** A copy of `v` with one byte, drawn from `rnd`, overwritten. */
+  def corrupt(v: Array[Byte], rnd: scala.util.Random): Array[Byte] = {
+    val b = v.clone()
+    b(rnd.nextInt(b.length)) = rnd.nextInt.toByte
+    b
   }
 }
