@@ -67,6 +67,32 @@ object Bench {
     "pipeline_audio_ingest", "multimodal_tiff_packbits",
     "source_csv_quoting", "ts_interpolate")
 
+  /** Characters the stdout line may take: the bench record is read from
+    * the last 2000 stdout characters, and sbt appends a ~75-90 char
+    * "[success] ..." trailer after this line. */
+  private[graft] val LineBudget = 1880
+
+  /** The headline line that fits `budget`: the highest precision of
+    * 3, 2, 1 and 0 decimals whose line fits, else the line at 0
+    * decimals keeping the most entries that fit, slowest first, with
+    * the count of dropped entries passed on as `trimmed` so the line
+    * says it is partial. `line(entries, format, trimmed)` renders one
+    * candidate. */
+  private[graft] def fitLine(head: Seq[(String, Double)], budget: Int)(
+      line: (Seq[(String, Double)], Double => String, Int) => String)
+      : String = {
+    val fmts = Seq[Double => String](v => f"$v%.3f", v => f"$v%.2f",
+      v => f"$v%.1f", v => f"$v%.0f")
+    fmts.iterator.map(line(head, _, 0)).find(_.length <= budget).getOrElse {
+      val slowest = head.sortBy { case (k, v) => (-v, k) }
+      val keep = (head.length - 1 to 0 by -1).find(n =>
+        line(slowest.take(n), fmts.last, head.length - n).length <= budget)
+        .getOrElse(0)
+      val kept = slowest.take(keep).map(_._1).toSet
+      line(head.filter(e => kept(e._1)), fmts.last, head.length - keep)
+    }
+  }
+
   /** 1-minute system load average (or -1 when the platform hides it):
     * the sandbox CPU-throttles under sustained load (NOTES.md — the same
     * bench has measured 82 s fresh-boot vs 177–783 s after ~30 min of
@@ -152,10 +178,11 @@ object Bench {
     // 177+ s at loadavg 5.7.)
     val throttled = loadStart > 1.0
     def jsonLine(qs: Seq[(String, Double)], fmt: Double => String,
-                 withFull: Boolean): String = {
+                 withFull: Boolean, trimmed: Int = 0): String = {
       val m = qs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$m,""" +
+        (if (trimmed > 0) s""""trimmed":$trimmed,""" else "") +
         s""""failed":$failed,"n_queries":${results.size},"sf":"$sfDir",""" +
         s""""load_sec":${fmt(loadSec)},"loadavg":[$loadStart,$loadEnd],""" +
         s""""throttled":$throttled,"repeat":$repeat""" +
@@ -167,20 +194,11 @@ object Bench {
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (full + "\n").getBytes("UTF-8"))
 
-    // The driver captures only the LAST 2000 stdout characters, and sbt
-    // appends a ~75-90 char "[success] ..." trailer after this line — the
-    // 70-entry headline map at 3 dp overflowed that window in r16 AND r17
-    // (both rounds' PERF parsed null; verdict #2). Emit the HIGHEST
-    // precision whose full line still fits with margin; the per-query
-    // headline set itself is additions-only (never trimmed).
     val head = results.collect {
       case (k, v, _) if headline.contains(k) => (k, v)
     }
-    val line = Seq[Double => String](v => f"$v%.3f", v => f"$v%.2f")
-      .map(fmt => jsonLine(head, fmt, withFull = false))
-      .find(_.length <= 1880)
-      .getOrElse(jsonLine(head, v => f"$v%.2f", withFull = false))
-    println(line)
+    println(fitLine(head, LineBudget)((qs, fmt, trimmed) =>
+      jsonLine(qs, fmt, withFull = false, trimmed)))
     spark.stop()
     // A crashing query must fail the bench run, not just skew a timing.
     if (results.exists(!_._3)) sys.exit(1)

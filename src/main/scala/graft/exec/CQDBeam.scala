@@ -40,7 +40,7 @@ import graft.score._
   * is summed into downstream edge scores — full-crossing cost is inherent
   * to the reference semantics; keep entity universes scoped per query.
   *
-  * MEASURED (ScratchBeamScaleProbe, round 16, 10⁶ synthetic entities,
+  * MEASURED (a beam-scale probe, round 16, 10⁶ synthetic entities,
   * 2p TransE, dim 8, local[16]): with beam 16 the 10⁵ → 10⁶ decade runs
   * 1.07 s → 1.86 s (exponent 0.24 — linear-at-most in |E|, as the
   * beam·|E| bound predicts); beam 16 → 64 at 10⁶ costs 2.0×, confirming

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, BinaryExpression, ImplicitCastInputTypes, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -779,12 +780,16 @@ object ArrayKernels {
     String.valueOf(e.eval(null))
   }
 
-  /** Idempotent session-local registration (the non-extensions path). */
-  def register(spark: SparkSession): Unit =
+  /** Session-local registration (the non-extensions path). Idempotent
+    * per session: a name already in the session's registry is left as
+    * it is, so repeat calls replace (and log) nothing. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     functions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "scala_udf")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
+  }
 
   // Column API (resolves through the function registry).
   def arrayDot(a: Column, b: Column): Column = call_function("array_dot", a, b)

@@ -276,62 +276,10 @@ object Aac {
     out.toMap
   }
 
-  // ------------------------------------------------------------------
-  // Bit I/O
-  // ------------------------------------------------------------------
-
-  private final class BitReader(bytes: Array[Byte], startByte: Int,
-                                endByte: Int) {
-    var pos: Long = startByte * 8L
-    private val end: Long = endByte * 8L
-    def remaining: Long = end - pos
-    def bit(): Int = {
-      if (pos >= end) throw new IllegalStateException("bit past end")
-      val b = (bytes((pos >> 3).toInt) >> (7 - (pos & 7)).toInt) & 1
-      pos += 1
-      b
-    }
-    def bits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) { v = (v << 1) | bit(); i += 1 }
-      v
-    }
-    def byteAlign(): Unit =
-      while ((pos & 7) != 0) pos += 1
-    /** Walk one codeword against a book (string-prefix walk — the
-      * fixture-table idiom the MP3 decoder uses). */
-    def huff(book: AacHuff.Book): Int = {
-      val sb = new StringBuilder
-      while (sb.length <= book.maxLen) {
-        sb.append(if (bit() == 1) '1' else '0')
-        book.decode.get(sb.toString) match {
-          case Some(i) => return i
-          case None    =>
-        }
-      }
-      throw new IllegalStateException(s"no codeword after ${sb.length} bits")
-    }
-  }
-
-  private[pipeline] final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var acc = 0
-    private var nAcc = 0
-    def bits(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((v >> i) & 1)
-        nAcc += 1
-        if (nAcc == 8) { out.write(acc); acc = 0; nAcc = 0 }
-        i -= 1
-      }
-    }
-    def str(code: String): Unit =
-      code.foreach(c => bits(if (c == '1') 1 else 0, 1))
-    def byteAlign(): Unit = if (nAcc != 0) bits(0, 8 - nAcc)
-    def toBytes: Array[Byte] = { byteAlign(); out.toByteArray }
-  }
+  /** Walks one codeword of `book`; a miss refuses the frame. */
+  private def huff(r: BitReader, book: AacHuff.Book): Int =
+    r.code(book.decode.get, book.maxLen)
+      .getOrElse(throw new IllegalStateException("no codeword"))
 
   // ------------------------------------------------------------------
   // Decoder
@@ -546,17 +494,17 @@ object Aac {
         while (k < maxSfb) {
           val cb = cbOf(g)(k)
           if (cb >= 14) {
-            lastIs += r.huff(sfBook) - 60
+            lastIs += huff(r, sfBook) - 60
             if (lastIs < -60 || lastIs > 60) return None
             isPos(g)(k) = lastIs
           } else if (cb == 13) {
             // first noise band: 9-bit PCM dpcm; later bands: codebook
             if (firstNoise) { lastNrg += r.bits(9) - 256; firstNoise = false }
-            else lastNrg += r.huff(sfBook) - 60
+            else lastNrg += huff(r, sfBook) - 60
             if (lastNrg < -100 || lastNrg > 155) return None
             nrg(g)(k) = lastNrg
           } else if (cb != 0) {
-            last += r.huff(sfBook) - 60
+            last += huff(r, sfBook) - 60
             if (last < 0 || last > 255) return None
             sf(g)(k) = last
           }
@@ -668,7 +616,7 @@ object Aac {
               val win = winBase + w
               var line = swb(k)
               while (line < swb(k + 1)) {
-                val idx = r.huff(book)
+                val idx = huff(r, book)
                 val vals = AacHuff.indexTuple(cb, idx)
                 if (!signed) {
                   var j = 0
@@ -905,7 +853,7 @@ object Aac {
     while (ok && (hi < hdrs.length || blkLeft > 0)) {
       if (blkLeft == 0) {
         val h = hdrs(hi)
-        r = new BitReader(bytes, h.pos + 7, h.pos + h.frameLen)
+        r = new BitReader(bytes, (h.pos + 7) * 8L, (h.pos + h.frameLen) * 8L)
         blkLeft = h.rdb + 1
         hi += 1
       }

@@ -77,83 +77,11 @@ object Flac {
   }
 
   // ------------------------------------------------------------------
-  // Bit I/O (MSB-first, the stream order of the whole format)
-  // ------------------------------------------------------------------
-
-  private[graft] final class Writer {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var acc = 0
-    private var nAcc = 0
-    def bits(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((v >>> i) & 1L).toInt
-        nAcc += 1
-        if (nAcc == 8) { out.write(acc); acc = 0; nAcc = 0 }
-        i -= 1
-      }
-    }
-    /** n-bit two's-complement signed field. */
-    def signed(v: Long, n: Int): Unit = bits(v & ((1L << n) - 1), n)
-    /** FLAC unary: q zero bits terminated by a one (RFC 9639 §9.4.1). */
-    def unary(q: Long): Unit = {
-      var i = 0L
-      while (i < q) { bits(0, 1); i += 1 }
-      bits(1, 1)
-    }
-    def byteAlign(): Unit = if (nAcc != 0) bits(0, 8 - nAcc)
-    def aligned: Boolean = nAcc == 0
-    /** Bytes emitted so far — callable only at byte alignment (used to
-      * compute the in-stream CRCs over the exact prefix). */
-    def bytesSoFar: Array[Byte] = {
-      require(nAcc == 0, "bytesSoFar at a non-aligned position")
-      out.toByteArray
-    }
-    def toBytes: Array[Byte] = { byteAlign(); out.toByteArray }
-  }
-
-  private final class Reader(val bytes: Array[Byte], startByte: Int) {
-    var pos: Long = startByte * 8L
-    private val end: Long = bytes.length * 8L
-    def bytePos: Int = { require((pos & 7) == 0); (pos >> 3).toInt }
-    def remainingBits: Long = end - pos
-    def bit(): Int = {
-      if (pos >= end) throw new IllegalStateException("truncated")
-      val b = (bytes((pos >> 3).toInt) >> (7 - (pos & 7)).toInt) & 1
-      pos += 1
-      b
-    }
-    def bits(n: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < n) { v = (v << 1) | bit(); i += 1 }
-      v
-    }
-    /** n-bit two's-complement signed read (n == 0 → 0). */
-    def signed(n: Int): Long = {
-      if (n == 0) return 0L
-      val v = bits(n)
-      if ((v & (1L << (n - 1))) != 0) v - (1L << n) else v
-    }
-    /** FLAC unary (count zeros to the terminating one). */
-    def unary(): Long = {
-      var q = 0L
-      while (bit() == 0) q += 1
-      q
-    }
-    def byteAlignRead(): Long = {
-      var padding = 0L
-      while ((pos & 7) != 0) padding = (padding << 1) | bit()
-      padding
-    }
-  }
-
-  // ------------------------------------------------------------------
   // UTF-8-style coded number (RFC 9639 §9.1.2 — the UTF-8 byte
   // patterns extended through a 7-byte / 36-bit form)
   // ------------------------------------------------------------------
 
-  def writeCodedNumber(w: Writer, v: Long): Unit = {
+  def writeCodedNumber(w: BitWriter, v: Long): Unit = {
     require(v >= 0 && v < (1L << 36), s"coded number out of range: $v")
     if (v < 0x80L) w.bits(v, 8)
     else {
@@ -181,8 +109,8 @@ object Flac {
   }
 
   /** Returns the decoded value, or -1 on a malformed sequence. */
-  def readCodedNumber(r: Reader): Long = {
-    val first = r.bits(8)
+  def readCodedNumber(r: BitReader): Long = {
+    val first = r.long(8)
     if ((first & 0x80L) == 0) return first
     var cont = 0
     var mask = 0x40L
@@ -191,7 +119,7 @@ object Flac {
     var v = first & (mask - 1)
     var c = 0
     while (c < cont) {
-      val b = r.bits(8)
+      val b = r.long(8)
       if ((b & 0xc0L) != 0x80L) return -1
       v = (v << 6) | (b & 0x3f)
       c += 1
@@ -297,7 +225,7 @@ object Flac {
                  sampleRate: Int, hdr: FrameHeaderPlan,
                  plans: Array[ChannelPlan]): Array[Byte] = {
     val blockSize = pcm(0).length
-    val w = new Writer
+    val w = new BitWriter
     // sync (14) + reserved (1) + blocking strategy (1)
     w.bits(0xff, 8)
     w.bits(0xf8 | hdr.strategy, 8)
@@ -319,7 +247,7 @@ object Flac {
       case 14 => w.bits(sampleRate / 10, 16)
       case _  => ()
     }
-    val headerBytes = w.bytesSoFar
+    val headerBytes = w.toBytes
     w.bits(crc8(headerBytes, 0, headerBytes.length), 8)
 
     // channel decorrelation → encoded channels (+1 bit on the side)
@@ -341,12 +269,12 @@ object Flac {
       writeSubframe(w, samplesFull, ebps, plan)
     }
     w.byteAlign()
-    val body = w.bytesSoFar
+    val body = w.toBytes
     w.bits(crc16(body, 0, body.length), 16)
     w.toBytes
   }
 
-  private def writeSubframe(w: Writer, samplesFull: Array[Long], ebps: Int,
+  private def writeSubframe(w: BitWriter, samplesFull: Array[Long], ebps: Int,
                             plan: ChannelPlan): Unit = {
     w.bits(0, 1) // zero pad bit
     val typeCode = plan.sub match {
@@ -393,7 +321,7 @@ object Flac {
     }
   }
 
-  private def writeResiduals(w: Writer, residual: Array[Long],
+  private def writeResiduals(w: BitWriter, residual: Array[Long],
                              blockSize: Int, predOrder: Int,
                              res: ResidualPlan): Unit = {
     val escapeCode = if (res.method == 0) 15 else 31
@@ -674,38 +602,44 @@ object Flac {
       }
       Right(frames.result())
     } catch {
-      case _: IllegalStateException => Left("truncated")
+      case _: Bits.PastEnd => Left("truncated")
     }
+  }
+
+  /** The byte offset of a reader standing on a byte boundary. */
+  private def bytePos(r: BitReader): Int = {
+    require((r.pos & 7) == 0, "byte offset at a non-aligned position")
+    (r.pos >> 3).toInt
   }
 
   private def decodeFrame(bytes: Array[Byte], start: Int, index: Int,
                           sRate: Int, sBps: Int)
       : Either[String, (DecodedFrame, Int)] = {
-    val r = new Reader(bytes, start)
-    if (r.remainingBits < 40) return Left("truncated")
-    if (r.bits(8) != 0xffL) return Left("sync")
-    val b2 = r.bits(8)
+    val r = new BitReader(bytes, start)
+    if (r.remaining < 40) return Left("truncated")
+    if (r.long(8) != 0xffL) return Left("sync")
+    val b2 = r.long(8)
     if ((b2 & 0xfc) != 0xf8) return Left("sync")
     if ((b2 & 0x02) != 0) return Left("reserved")
     val strategy = (b2 & 1).toInt
-    val bsCode = r.bits(4).toInt
-    val rateCode = r.bits(4).toInt
-    val chAssign = r.bits(4).toInt
-    val bpsCode = r.bits(3).toInt
-    if (r.bits(1) != 0) return Left("reserved")
+    val bsCode = r.long(4).toInt
+    val rateCode = r.long(4).toInt
+    val chAssign = r.long(4).toInt
+    val bpsCode = r.long(3).toInt
+    if (r.long(1) != 0) return Left("reserved")
     if (bsCode == 0 || rateCode == 15 || chAssign > 10) return Left("reserved")
     val codedNumber = readCodedNumber(r)
     if (codedNumber < 0) return Left("coded-number")
     val blockSize = bsCode match {
-      case 6 => r.bits(8).toInt + 1
-      case 7 => r.bits(16).toInt + 1
+      case 6 => r.long(8).toInt + 1
+      case 7 => r.long(16).toInt + 1
       case c => blockSizeOfCode(c)
     }
     val sampleRate = rateCode match {
       case 0  => sRate
-      case 12 => r.bits(8).toInt * 1000
-      case 13 => r.bits(16).toInt
-      case 14 => r.bits(16).toInt * 10
+      case 12 => r.long(8).toInt * 1000
+      case 13 => r.long(16).toInt
+      case 14 => r.long(16).toInt * 10
       case c  => rateOfCode(c)
     }
     val bps = bpsOfCode(bpsCode) match {
@@ -713,8 +647,8 @@ object Flac {
       case -1 => return Left("reserved")
       case v  => v
     }
-    val headerEnd = r.bytePos
-    val wantCrc8 = r.bits(8).toInt
+    val headerEnd = bytePos(r)
+    val wantCrc8 = r.long(8).toInt
     if (crc8(bytes, start, headerEnd) != wantCrc8) return Left("crc8")
 
     val nCh = if (chAssign <= 7) chAssign + 1 else 2
@@ -736,9 +670,9 @@ object Flac {
       }
       ch += 1
     }
-    if (r.byteAlignRead() != 0) return Left("padding")
-    val frameEnd = r.bytePos
-    val wantCrc16 = r.bits(16).toInt
+    if (r.byteAlign() != 0) return Left("padding")
+    val frameEnd = bytePos(r)
+    val wantCrc16 = r.long(16).toInt
     if (crc16(bytes, start, frameEnd) != wantCrc16) return Left("crc16")
 
     // undo channel decorrelation
@@ -763,13 +697,13 @@ object Flac {
     }
     val info = FrameInfo(index, codedNumber, blockSize, sampleRate, chAssign,
       bps, strategy, subTypes, wastedArr)
-    Right((DecodedFrame(info, pcm), r.bytePos)) // pos is already past CRC-16
+    Right((DecodedFrame(info, pcm), bytePos(r))) // pos is already past CRC-16
   }
 
-  private def readSubframe(r: Reader, blockSize: Int, ebps: Int)
+  private def readSubframe(r: BitReader, blockSize: Int, ebps: Int)
       : Either[String, (Array[Long], Int, Int)] = {
     if (r.bit() != 0) return Left("subframe-pad")
-    val typeCode = r.bits(6).toInt
+    val typeCode = r.long(6).toInt
     val wasted =
       if (r.bit() == 1) { val k = r.unary(); (k + 1).toInt } else 0
     val eb = ebps - wasted
@@ -799,7 +733,7 @@ object Flac {
         val order = tc - 31
         var i = 0
         while (i < order) { s(i) = r.signed(eb); i += 1 }
-        val precM1 = r.bits(4).toInt
+        val precM1 = r.long(4).toInt
         if (precM1 == 15) return Left("lpc-precision")
         val precision = precM1 + 1
         val shift = r.signed(5)
@@ -826,13 +760,13 @@ object Flac {
     }
   }
 
-  private def readResiduals(r: Reader, blockSize: Int, predOrder: Int)
+  private def readResiduals(r: BitReader, blockSize: Int, predOrder: Int)
       : Either[String, Array[Long]] = {
-    val method = r.bits(2).toInt
+    val method = r.long(2).toInt
     if (method > 1) return Left("residual-method")
     val escapeCode = if (method == 0) 15 else 31
     val paramBits = if (method == 0) 4 else 5
-    val partOrder = r.bits(4).toInt
+    val partOrder = r.long(4).toInt
     if (blockSize % (1 << partOrder) != 0) return Left("partition")
     val partLen = blockSize >> partOrder
     if (partLen <= predOrder) return Left("partition")
@@ -841,16 +775,16 @@ object Flac {
     var part = 0
     while (part < (1 << partOrder)) {
       val n = if (part == 0) partLen - predOrder else partLen
-      val param = r.bits(paramBits).toInt
+      val param = r.long(paramBits).toInt
       if (param == escapeCode) {
-        val nBits = r.bits(5).toInt
+        val nBits = r.long(5).toInt
         var k = 0
         while (k < n) { residual(base + k) = r.signed(nBits); k += 1 }
       } else {
         var k = 0
         while (k < n) {
           val q = r.unary()
-          val low = if (param > 0) r.bits(param) else 0L
+          val low = if (param > 0) r.long(param) else 0L
           residual(base + k) = unzigzag((q << param) | low)
           k += 1
         }

@@ -1532,18 +1532,9 @@ object Multimodal {
       while (go) {
         header(p) match {
           case Some((len, _, _, prot)) if p + len <= bytes.length =>
-            var bitPos = (p + 4 + 2 * prot) * 8 // skip header (+CRC)
-            def readBits(n: Int): Int = {
-              var v = 0; var i = 0
-              while (i < n) {
-                v = (v << 1) |
-                  ((bytes(bitPos >> 3) >> (7 - (bitPos & 7))) & 1)
-                bitPos += 1; i += 1
-              }
-              v
-            }
-            val alloc = Array.fill(32)(readBits(4))
-            val scf = alloc.map(a => if (a > 0) readBits(6) else 0)
+            val r = new BitReader(bytes, p + 4 + 2 * prot) // skip header (+CRC)
+            val alloc = Array.fill(32)(r.bits(4))
+            val scf = alloc.map(a => if (a > 0) r.bits(6) else 0)
             val samples = Array.ofDim[Double](32, 12)
             var g = 0
             while (g < 12) { // groups are interleaved across subbands
@@ -1551,7 +1542,7 @@ object Multimodal {
               while (sb < 32) {
                 if (alloc(sb) > 0) {
                   val nb = alloc(sb) + 1
-                  val code = readBits(nb)
+                  val code = r.bits(nb)
                   val sf = math.pow(2.0, 1.0 - scf(sb) / 3.0)
                   val frac = code.toDouble / (1 << (nb - 1)) - 1.0 +
                     2.0 / (1 << nb)
@@ -1586,38 +1577,30 @@ object Multimodal {
     * Unused slot bits are zero ancillary data, as the spec allows. */
   def layer1Bytes(seed: Long, nFrames: Int): Array[Byte] = {
     val frameLen = 384 // (12 * 256000 / 32000) * 4
-    val out = new Array[Byte](frameLen * nFrames)
-    var bitPos = 0
-    def putBits(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        if (((v >> i) & 1) == 1)
-          out(bitPos >> 3) = (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-        bitPos += 1; i -= 1
-      }
-    }
+    val w = new BitWriter
     (0 until nFrames).foreach { f =>
-      bitPos = f * frameLen * 8
-      putBits(0xff, 8); putBits(0xff, 8) // sync + MPEG1 + Layer I + no CRC
-      putBits(0x88, 8)                   // bitrate idx 8 (256), sr idx 2 (32k)
-      putBits(0xc0, 8)                   // mono
+      w.pos = f * frameLen * 8L
+      w.bits(0xff, 8); w.bits(0xff, 8) // sync + MPEG1 + Layer I + no CRC
+      w.bits(0x88, 8)                  // bitrate idx 8 (256), sr idx 2 (32k)
+      w.bits(0xc0, 8)                  // mono
       val alloc = Array.tabulate(32)(sb => ((seed + sb) % 8).toInt)
-      alloc.foreach(a => putBits(a, 4))
+      alloc.foreach(a => w.bits(a, 4))
       (0 until 32).foreach { sb =>
         if (alloc(sb) > 0)
-          putBits(3 * (((seed * 5 + f * 11 + sb * 7) % 21).toInt), 6)
+          w.bits(3 * (((seed * 5 + f * 11 + sb * 7) % 21).toInt), 6)
       }
       (0 until 12).foreach { g =>
         (0 until 32).foreach { sb =>
           if (alloc(sb) > 0) {
             val nb = alloc(sb) + 1
-            putBits(((seed * 131 + f * 17 + g * 29 + sb * 13) %
+            w.bits(((seed * 131 + f * 17 + g * 29 + sb * 13) %
               (1 << nb)).toInt, nb)
           }
         }
       }
     }
-    out
+    w.pos = nFrames * frameLen * 8L
+    w.toBytes
   }
 
   /** One decoded Layer II subband block: the 36 requantized samples of
@@ -1704,19 +1687,10 @@ object Multimodal {
       while (go) {
         header(p) match {
           case Some((len, _, _, prot)) if p + len <= bytes.length =>
-            var bitPos = (p + 4 + 2 * prot) * 8
-            def readBits(n: Int): Int = {
-              var v = 0; var i = 0
-              while (i < n) {
-                v = (v << 1) |
-                  ((bytes(bitPos >> 3) >> (7 - (bitPos & 7))) & 1)
-                bitPos += 1; i += 1
-              }
-              v
-            }
+            val r = new BitReader(bytes, p + 4 + 2 * prot)
             val alloc = Array.tabulate(l2Sblimit)(sb =>
-              readBits(l2AllocBits(sb)))
-            val scfsi = alloc.map(a => if (a > 0) readBits(2) else 0)
+              r.bits(l2AllocBits(sb)))
+            val scfsi = alloc.map(a => if (a > 0) r.bits(2) else 0)
             // scalefactor per (subband, part): parts are the three
             // 12-sample thirds of the frame (granules 0-3, 4-7, 8-11)
             val scfPart = Array.ofDim[Int](l2Sblimit, 3)
@@ -1724,16 +1698,16 @@ object Multimodal {
             while (sb < l2Sblimit) {
               if (alloc(sb) > 0) scfsi(sb) match {
                 case 0 =>
-                  scfPart(sb)(0) = readBits(6); scfPart(sb)(1) = readBits(6)
-                  scfPart(sb)(2) = readBits(6)
+                  scfPart(sb)(0) = r.bits(6); scfPart(sb)(1) = r.bits(6)
+                  scfPart(sb)(2) = r.bits(6)
                 case 1 =>
-                  val a = readBits(6); val b = readBits(6)
+                  val a = r.bits(6); val b = r.bits(6)
                   scfPart(sb)(0) = a; scfPart(sb)(1) = a; scfPart(sb)(2) = b
                 case 2 =>
-                  val a = readBits(6)
+                  val a = r.bits(6)
                   scfPart(sb)(0) = a; scfPart(sb)(1) = a; scfPart(sb)(2) = a
                 case _ =>
-                  val a = readBits(6); val b = readBits(6)
+                  val a = r.bits(6); val b = r.bits(6)
                   scfPart(sb)(0) = a; scfPart(sb)(1) = b; scfPart(sb)(2) = b
               }
               sb += 1
@@ -1757,7 +1731,7 @@ object Multimodal {
                     val gBits = steps match {
                       case 3 => 5; case 5 => 7; case _ => 10
                     }
-                    var c = readBits(gBits)
+                    var c = r.bits(gBits)
                     var j = 0
                     while (j < 3) {
                       samples(sb2)(gr * 3 + j) = requant(c % steps, steps, sf)
@@ -1767,7 +1741,7 @@ object Multimodal {
                     val nb = l2SampleBits(steps)
                     var j = 0
                     while (j < 3) {
-                      samples(sb2)(gr * 3 + j) = requant(readBits(nb), steps, sf)
+                      samples(sb2)(gr * 3 + j) = requant(r.bits(nb), steps, sf)
                       j += 1
                     }
                   }
@@ -1806,38 +1780,29 @@ object Multimodal {
     * code `(… + j·7) % steps`. */
   def layer2Bytes(seed: Long, nFrames: Int): Array[Byte] = {
     val frameLen = 576 // 144 * 192000 / 48000
-    val out = new Array[Byte](frameLen * nFrames)
-    var bitPos = 0
-    def putBits(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        if (((v >> i) & 1) == 1)
-          out(bitPos >> 3) = (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-        bitPos += 1; i -= 1
-      }
-    }
+    val w = new BitWriter
     def allocOf(sb: Int): Int =
       if (sb < 3) ((seed + sb) % 5).toInt
       else if (sb < 11) ((seed + sb * 3) % 6).toInt
       else if (sb < 23) ((seed + sb) % 6).toInt
       else ((seed + sb) % 3).toInt
     (0 until nFrames).foreach { f =>
-      bitPos = f * frameLen * 8
-      putBits(0xff, 8); putBits(0xfd, 8) // sync + MPEG1 + Layer II + no CRC
-      putBits(0xa4, 8)                   // bitrate idx 10 (192), sr idx 1 (48k)
-      putBits(0xc0, 8)                   // mono
+      w.pos = f * frameLen * 8L
+      w.bits(0xff, 8); w.bits(0xfd, 8) // sync + MPEG1 + Layer II + no CRC
+      w.bits(0xa4, 8)                  // bitrate idx 10 (192), sr idx 1 (48k)
+      w.bits(0xc0, 8)                  // mono
       val alloc = Array.tabulate(l2Sblimit)(allocOf)
-      (0 until l2Sblimit).foreach(sb => putBits(alloc(sb), l2AllocBits(sb)))
+      (0 until l2Sblimit).foreach(sb => w.bits(alloc(sb), l2AllocBits(sb)))
       val scfsi = Array.tabulate(l2Sblimit)(sb => ((seed + sb) % 4).toInt)
       (0 until l2Sblimit).foreach(sb =>
-        if (alloc(sb) > 0) putBits(scfsi(sb), 2))
+        if (alloc(sb) > 0) w.bits(scfsi(sb), 2))
       (0 until l2Sblimit).foreach { sb =>
         if (alloc(sb) > 0) {
           val nScf = scfsi(sb) match {
             case 0 => 3; case 2 => 1; case _ => 2
           }
           (0 until nScf).foreach(slot =>
-            putBits(3 * (((seed * 5 + f * 11 + sb * 7 + slot * 3) % 21).toInt), 6))
+            w.bits(3 * (((seed * 5 + f * 11 + sb * 7 + slot * 3) % 21).toInt), 6))
         }
       }
       (0 until 12).foreach { g =>
@@ -1846,21 +1811,22 @@ object Multimodal {
             val steps = l2Steps(sb, alloc(sb))
             if (l2Grouped(steps)) {
               val gBits = steps match { case 3 => 5; case 5 => 7; case _ => 10 }
-              putBits(((seed * 131 + f * 17 + g * 29 + sb * 13) %
+              w.bits(((seed * 131 + f * 17 + g * 29 + sb * 13) %
                 (steps.toLong * steps * steps)).toInt, gBits)
             } else {
               (0 until 3).foreach { j =>
-                putBits(((seed * 131 + f * 17 + g * 29 + sb * 13 + j * 7) %
+                w.bits(((seed * 131 + f * 17 + g * 29 + sb * 13 + j * 7) %
                   steps).toInt, l2SampleBits(steps))
               }
             }
           }
         }
       }
-      require(bitPos <= (f + 1) * frameLen * 8,
-        s"Layer II frame overflow: ${bitPos - f * frameLen * 8} bits")
+      require(w.pos <= (f + 1) * frameLen * 8L,
+        s"Layer II frame overflow: ${w.pos - f * frameLen * 8L} bits")
     }
-    out
+    w.pos = nFrames * frameLen * 8L
+    w.toBytes
   }
 
   /** Subband-domain sample statistics for MPEG-1 Layer I/II payloads —
@@ -2065,36 +2031,28 @@ object Multimodal {
       var ok = true
       while (ok) header(p) match {
         case Some(len) if p + len <= bytes.length =>
-          var bitPos = (p + 4) * 8
-          def bits(n: Int): Int = {
-            var v = 0; var i = 0
-            while (i < n) {
-              v = (v << 1) | ((bytes(bitPos >> 3) >> (7 - (bitPos & 7))) & 1)
-              bitPos += 1; i += 1
-            }
-            v
-          }
-          if (bits(9) != 0) { ok = false } // bit reservoir: declared
+          val r = new BitReader(bytes, p + 4)
+          if (r.bits(9) != 0) { ok = false } // bit reservoir: declared
           else {
-            bits(5); bits(4) // private, scfsi (fixture sends both granules)
+            r.bits(5); r.bits(4) // private, scfsi (fixture sends both granules)
             // side info per granule, then main data per granule
             final case class Side(part23: Int, bigValues: Int, gain: Int,
                                   scomp: Int, winSwitch: Boolean,
                                   tables: Array[Int], r0: Int, r1: Int)
             val sides = (0 until 2).map { _ =>
-              val part23 = bits(12); val bv = bits(9); val gain = bits(8)
-              val scomp = bits(4)
-              val ws = bits(1) == 1
+              val part23 = r.bits(12); val bv = r.bits(9); val gain = r.bits(8)
+              val scomp = r.bits(4)
+              val ws = r.bits(1) == 1
               val (tabs, r0, r1) =
                 if (ws) { // block_type, mixed, 2 tables, 3 subblock gains
-                  bits(2); bits(1)
-                  val t = Array(bits(5), bits(5)); bits(9)
+                  r.bits(2); r.bits(1)
+                  val t = Array(r.bits(5), r.bits(5)); r.bits(9)
                   (t, -1, -1)
                 } else {
-                  val t = Array(bits(5), bits(5), bits(5))
-                  (t, bits(4), bits(3))
+                  val t = Array(r.bits(5), r.bits(5), r.bits(5))
+                  (t, r.bits(4), r.bits(3))
                 }
-              bits(1); bits(1); bits(1) // preflag, scalefac_scale, count1sel
+              r.bits(1); r.bits(1); r.bits(1) // preflag, scalefac_scale, count1sel
               Side(part23, bv, gain, scomp, ws, tabs, r0, r1)
             }
             var g = 0
@@ -2102,9 +2060,9 @@ object Multimodal {
               val s = sides(g)
               if (s.winSwitch || s.tables.exists(_ > 1)) { ok = false }
               else {
-                val start = bitPos
+                val start = r.pos
                 val (slen1, slen2) = L3Slen(s.scomp)
-                bits(slen1 * 11 + slen2 * 10) // scalefactor fields
+                r.bits(slen1 * 11 + slen2 * 10) // scalefactor fields
                 var nNz = 0; var isSum = 0L; var sqSum = 0L
                 var line = 0
                 var k = 0
@@ -2121,20 +2079,20 @@ object Multimodal {
                     // table 1 (B.7): (0,0)='1' (0,1)='001' (1,0)='01'
                     // (1,1)='000', sign bit per nonzero value
                     val (x0, y0) =
-                      if (bits(1) == 1) (0, 0)
-                      else if (bits(1) == 1) (1, 0)
-                      else if (bits(1) == 1) (0, 1)
+                      if (r.bits(1) == 1) (0, 0)
+                      else if (r.bits(1) == 1) (1, 0)
+                      else if (r.bits(1) == 1) (0, 1)
                       else (1, 1)
-                    val x = if (x0 != 0 && bits(1) == 1) -x0 else x0
-                    val y = if (y0 != 0 && bits(1) == 1) -y0 else y0
+                    val x = if (x0 != 0 && r.bits(1) == 1) -x0 else x0
+                    val y = if (y0 != 0 && r.bits(1) == 1) -y0 else y0
                     Seq(x, y).foreach { v =>
                       if (v != 0) { nNz += 1; isSum += v; sqSum += v.toLong * v }
                     }
                     line += 2; k += 1
                   }
-                  if (bitPos - start > s.part23) bad = true
+                  if (r.pos - start > s.part23) bad = true
                 }
-                if (bad || bitPos - start != s.part23) ok = false // count1 etc.
+                if (bad || r.pos - start != s.part23) ok = false // count1 etc.
                 else out += L3Granule(f, g, s.bigValues, s.gain, s.part23,
                                       nNz, isSum, sqSum)
               }
@@ -2159,23 +2117,12 @@ object Multimodal {
     * on it to the bit. */
   def layer3Bytes(seed: Long, nFrames: Int): Array[Byte] = {
     val frameLen = 576
-    val out = new Array[Byte](frameLen * nFrames)
+    val w = new BitWriter
     (0 until nFrames).foreach { f =>
-      var bitPos = f * frameLen * 8
-      def put(v: Long, n: Int): Unit = {
-        var i = n - 1
-        while (i >= 0) {
-          if (((v >> i) & 1) == 1)
-            out(bitPos >> 3) =
-              (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-          bitPos += 1; i -= 1
-        }
-      }
-      def putStr(s: String): Unit =
-        s.foreach(c => put(if (c == '1') 1 else 0, 1))
-      put(0xff, 8); put(0xfb, 8) // sync + MPEG1 + Layer III + no CRC
-      put(0xb4, 8)               // bitrate idx 11 (192), sr idx 1 (48k)
-      put(0xc0, 8)               // mono
+      w.pos = f * frameLen * 8L
+      w.bits(0xff, 8); w.bits(0xfb, 8) // sync + MPEG1 + Layer III + no CRC
+      w.bits(0xb4, 8)                  // bitrate idx 11 (192), sr idx 1 (48k)
+      w.bits(0xc0, 8)                  // mono
       def pairs(g: Int): Seq[(Int, Int)] = {
         val n = 16 + ((seed + f + g) % 17).toInt
         (0 until n).map(k =>
@@ -2186,31 +2133,32 @@ object Multimodal {
         (if (x == 0 && y == 0) 1 else if (y == 0) 2 else 3) +
           (if (x != 0) 1 else 0) + (if (y != 0) 1 else 0)
       // side info (17 bytes, mono)
-      put(0, 9); put(0, 5); put(0, 4) // main_data_begin, private, scfsi
+      w.bits(0, 9); w.bits(0, 5); w.bits(0, 4) // main_data_begin, private, scfsi
       (0 until 2).foreach { g =>
         val p23 = pairs(g).map { case (x, y) => hlen(x.abs, y.abs) }.sum
-        put(p23, 12)
-        put(pairs(g).size, 9)
-        put((seed * 13 + f * 19 + g * 29) % 256, 8)
-        put(0, 4)  // scalefac_compress 0 -> zero scalefactor bits
-        put(0, 1)  // no window switching
-        put(1, 5); put(1, 5); put(1, 5) // table 1 for all three regions
-        put(4, 4); put(3, 3)            // region0_count, region1_count
-        put(0, 1); put(0, 1); put(0, 1) // preflag, sf_scale, count1 sel
+        w.bits(p23, 12)
+        w.bits(pairs(g).size, 9)
+        w.bits((seed * 13 + f * 19 + g * 29) % 256, 8)
+        w.bits(0, 4) // scalefac_compress 0 -> zero scalefactor bits
+        w.bits(0, 1) // no window switching
+        w.bits(1, 5); w.bits(1, 5); w.bits(1, 5) // table 1 for all three regions
+        w.bits(4, 4); w.bits(3, 3)               // region0_count, region1_count
+        w.bits(0, 1); w.bits(0, 1); w.bits(0, 1) // preflag, sf_scale, count1 sel
       }
       (0 until 2).foreach { g =>
         pairs(g).foreach { case (x, y) =>
-          putStr(
+          w.str(
             if (x == 0 && y == 0) "1"
             else if (y == 0) "01"
             else if (x == 0) "001"
             else "000")
-          if (x != 0) put(if (x < 0) 1 else 0, 1)
-          if (y != 0) put(if (y < 0) 1 else 0, 1)
+          if (x != 0) w.bits(if (x < 0) 1 else 0, 1)
+          if (y != 0) w.bits(if (y < 0) 1 else 0, 1)
         }
       }
     }
-    out
+    w.pos = nFrames * frameLen * 8L
+    w.toBytes
   }
 
   // ---- Layer III full path: reservoir + count1 + scalefactors +
@@ -2650,23 +2598,15 @@ object Multimodal {
     while (ok && f < offs.length) {
       val o = offs(f)
       val (_, nch, ms, intens, prot, _, lsf) = headers(f)
-      var sBitPos = (o + 4 + crcBytes(prot)) * 8
-      def sbits(n: Int): Int = {
-        var v = 0; var i = 0
-        while (i < n) {
-          v = (v << 1) | ((bytes(sBitPos >> 3) >> (7 - (sBitPos & 7))) & 1)
-          sBitPos += 1; i += 1
-        }
-        v
-      }
+      val si = new BitReader(bytes, o + 4 + crcBytes(prot))
       // LSF: 8-bit main_data_begin, 1/2 private bits, NO scfsi, ONE
       // granule, 9-bit scalefac_compress, preflag DERIVED (sfc >= 500)
-      val mdb = sbits(if (lsf) 8 else 9)
-      sbits(if (lsf) { if (nch == 1) 1 else 2 }
+      val mdb = si.bits(if (lsf) 8 else 9)
+      si.bits(if (lsf) { if (nch == 1) 1 else 2 }
             else { if (nch == 1) 5 else 3 }) // private bits
       val scfsi =
         if (lsf) Array.fill(nch)(Array.fill(4)(0))
-        else Array.fill(nch)(Array.fill(4)(sbits(1)))
+        else Array.fill(nch)(Array.fill(4)(si.bits(1)))
       val ngr = if (lsf) 1 else 2
       // The RIGHT channel of an LSF intensity-stereo frame reinterprets
       // its scalefac_compress through the intensity classes (13818-3):
@@ -2675,12 +2615,12 @@ object Multimodal {
       def lsfIntChan(ch: Int): Boolean =
         lsf && intens && nch == 2 && ch == 1
       val sides = Array.tabulate(ngr, nch) { (_, chIdx) =>
-        val part23 = sbits(12); val bv = sbits(9); val gain = sbits(8)
-        val scomp = sbits(if (lsf) 9 else 4)
+        val part23 = si.bits(12); val bv = si.bits(9); val gain = si.bits(8)
+        val scomp = si.bits(if (lsf) 9 else 4)
         if (lsfIntChan(chIdx) && (scomp >> 1) == 255) ok = false
         def lsfPre: Int =
           if (lsfIntChan(chIdx)) 0 else if (scomp >= 500) 1 else 0
-        val ws = sbits(1)
+        val ws = si.bits(1)
         if (ws == 1) {
           // window switching (§2.4.1.7): block_type, mixed_block_flag,
           // TWO table_selects, three subblock_gains (transmitted for
@@ -2693,11 +2633,11 @@ object Multimodal {
           // (lsfScale's short/mixed partition classes); only the
           // forbidden block_type 0, mixed flags on non-short types, and
           // LSF mixed on non-aligned loaded geometry refuse.
-          val bt = sbits(2); val mixed = sbits(1)
-          val tabs = Array(sbits(5), sbits(5))
-          val sbg = Array(sbits(3), sbits(3), sbits(3))
-          val pre = if (lsf) lsfPre else sbits(1)
-          val sfs = sbits(1); val c1 = sbits(1)
+          val bt = si.bits(2); val mixed = si.bits(1)
+          val tabs = Array(si.bits(5), si.bits(5))
+          val sbg = Array(si.bits(3), si.bits(3), si.bits(3))
+          val pre = if (lsf) lsfPre else si.bits(1)
+          val sfs = si.bits(1); val c1 = si.bits(1)
           if (bt == 0 || (mixed == 1 && bt != 2) ||
               (lsf && mixed == 1 && !lsfMixedAligned)) {
             ok = false
@@ -2705,10 +2645,10 @@ object Multimodal {
           } else Side(part23, bv, gain, scomp, tabs, 0, 0, pre, sfs, c1,
                       bt, sbg, mixed)
         } else {
-          val tabs = Array(sbits(5), sbits(5), sbits(5))
-          val r0 = sbits(4); val r1 = sbits(3)
-          val pre = if (lsf) lsfPre else sbits(1)
-          val sfs = sbits(1); val c1 = sbits(1)
+          val tabs = Array(si.bits(5), si.bits(5), si.bits(5))
+          val r0 = si.bits(4); val r1 = si.bits(3)
+          val pre = if (lsf) lsfPre else si.bits(1)
+          val sfs = si.bits(1); val c1 = si.bits(1)
           Side(part23, bv, gain, scomp, tabs, r0, r1, pre, sfs, c1)
         }
       }
@@ -2717,19 +2657,7 @@ object Multimodal {
         val startByte = poolBefore(f) - mdb
         if (startByte < 0) ok = false
         else {
-          var bitPos = startByte * 8
-          var oob = false
-          def bits(n: Int): Int = {
-            if (bitPos + n > pool.length * 8) { oob = true; bitPos += n; 0 }
-            else {
-              var v = 0; var i = 0
-              while (i < n) {
-                v = (v << 1) | ((pool(bitPos >> 3) >> (7 - (bitPos & 7))) & 1)
-                bitPos += 1; i += 1
-              }
-              v
-            }
-          }
+          val md = new BitReader(pool, startByte)
           val sfPrev = Array.ofDim[Int](nch, 21) // granule-0 scalefactors
           // §2.4.2.7: scfsi must be all-zero when either granule of the
           // channel uses short blocks — a short granule populates no
@@ -2764,8 +2692,8 @@ object Multimodal {
               // round 14 (A = real ISO quad code, B = closed form)
               if (s.tables.exists(t => t != 0 && !huffTabs.contains(t)))
                 ok = false
-              else {
-                val start = bitPos
+              else try {
+                val start = md.pos
                 val (slen1, slen2) =
                   if (lsf) (0, 0) else L3Slen(s.scomp)
                 val short = s.bt == 2
@@ -2803,7 +2731,7 @@ object Multimodal {
                     var k2 = 0
                     while (k2 < parts(pi)) {
                       val sl = slens(pi)
-                      val v = bits(sl)
+                      val v = md.bits(sl)
                       if (btn == 0) { sf(slot) = v; slenL(slot) = sl }
                       else if (btn == 1) {
                         sfS(slot / 3)(slot % 3) = v
@@ -2820,12 +2748,12 @@ object Multimodal {
                   }
                 } else if (mix) {
                   var band = 0
-                  while (band < 8) { sf(band) = bits(slen1); band += 1 }
+                  while (band < 8) { sf(band) = md.bits(slen1); band += 1 }
                   var b2 = 3
                   while (b2 < 12) {
                     val slen = if (b2 < 6) slen1 else slen2
                     var w = 0
-                    while (w < 3) { sfS(b2)(w) = bits(slen); w += 1 }
+                    while (w < 3) { sfS(b2)(w) = md.bits(slen); w += 1 }
                     b2 += 1
                   }
                 } else if (short) {
@@ -2833,7 +2761,7 @@ object Multimodal {
                   while (b2 < 12) {
                     val slen = if (b2 < 6) slen1 else slen2
                     var w = 0
-                    while (w < 3) { sfS(b2)(w) = bits(slen); w += 1 }
+                    while (w < 3) { sfS(b2)(w) = md.bits(slen); w += 1 }
                     b2 += 1
                   }
                 } else {
@@ -2844,7 +2772,7 @@ object Multimodal {
                     val slen = if (band < 11) slen1 else slen2
                     if (g == 1 && scfsi(ch)(group) == 1)
                       sf(band) = sfPrev(ch)(band)
-                    else sf(band) = bits(slen)
+                    else sf(band) = md.bits(slen)
                     band += 1
                   }
                   if (g == 0) Array.copy(sf, 0, sfPrev(ch), 0, 21)
@@ -2859,23 +2787,16 @@ object Multimodal {
                 // codeword walk, then per value the ESC linbits
                 // extension (x0 = 15 ⇒ magnitude += linbits bits) and
                 // the sign bit — the §2.4.3.7 field order.
-                def readPair(tab: L3HuffTable): Option[(Int, Int)] = {
-                  val sb = new java.lang.StringBuilder(tab.maxLen)
-                  var hit: Option[(Int, Int)] = None
-                  while (hit.isEmpty && sb.length < tab.maxLen) {
-                    sb.append(if (bits(1) == 1) '1' else '0')
-                    hit = tab.codes.get(sb.toString)
-                  }
-                  hit.map { case (x0, y0) =>
+                def readPair(tab: L3HuffTable): Option[(Int, Int)] =
+                  md.code(tab.codes.get, tab.maxLen).map { case (x0, y0) =>
                     val xm = if (tab.linbits > 0 && x0 == 15)
-                      x0 + bits(tab.linbits) else x0
-                    val x = if (xm != 0 && bits(1) == 1) -xm else xm
+                      x0 + md.bits(tab.linbits) else x0
+                    val x = if (xm != 0 && md.bits(1) == 1) -xm else xm
                     val ym = if (tab.linbits > 0 && y0 == 15)
-                      y0 + bits(tab.linbits) else y0
-                    val y = if (ym != 0 && bits(1) == 1) -ym else ym
+                      y0 + md.bits(tab.linbits) else y0
+                    val y = if (ym != 0 && md.bits(1) == 1) -ym else ym
                     (x, y)
                   }
-                }
                 while (!bad && k < s.bigValues && line + 2 <= 576) {
                   // window switching: implicit entropy-line-36 boundary
                   // (region0_count 7 long / 8 short both land there),
@@ -2894,37 +2815,31 @@ object Multimodal {
                       line += 2
                   }
                   k += 1
-                  if (bitPos - start > s.part23) bad = true
+                  if (md.pos - start > s.part23) bad = true
                 }
                 var nC1 = 0
-                while (!bad && bitPos - start < s.part23 && line + 4 <= 576) {
+                while (!bad && md.pos - start < s.part23 && line + 4 <= 576) {
                   // count1 region per count1table_select (§2.4.2.7):
                   // 0 → table A (real ISO quad Huffman code, walked like
                   // a big-values codeword), 1 → table B (the closed-form
                   // 4-bit complement code). Either way the decoded 4-bit
                   // index IS (v,w,x,y), then a sign bit per nonzero.
                   val c =
-                    if (s.c1Sel == 0) {
-                      val sb = new java.lang.StringBuilder(
-                        L3IsoHuff.quadAMaxLen)
-                      var hit = -1
-                      while (hit < 0 && sb.length < L3IsoHuff.quadAMaxLen) {
-                        sb.append(if (bits(1) == 1) '1' else '0')
-                        hit = L3IsoHuff.quadA.getOrElse(sb.toString, -1)
-                      }
-                      if (hit < 0) { bad = true; 0 } else hit
-                    } else 0xf ^ bits(4)
+                    if (s.c1Sel == 0)
+                      md.code(L3IsoHuff.quadA.get, L3IsoHuff.quadAMaxLen)
+                        .getOrElse { bad = true; 0 }
+                    else 0xf ^ md.bits(4)
                   var j = 0
                   while (!bad && j < 4) {
                     val v0 = (c >> (3 - j)) & 1
                     is(line + j) =
-                      if (v0 != 0 && bits(1) == 1) -v0 else v0
+                      if (v0 != 0 && md.bits(1) == 1) -v0 else v0
                     j += 1
                   }
                   line += 4; nC1 += 1
-                  if (bitPos - start > s.part23) bad = true
+                  if (md.pos - start > s.part23) bad = true
                 }
-                if (bad || oob || bitPos - start != s.part23) ok = false
+                if (bad || md.pos - start != s.part23) ok = false
                 else {
                   // requantization (§2.4.3.4.7), pre-stereo-processing
                   val mult = math.pow(2.0, (s.gain - 210) / 4.0)
@@ -2981,6 +2896,9 @@ object Multimodal {
                   grans += L3GranuleFull(f, g, mdb, s.preflag, nC1, nNz,
                     xs / 1e6 + 0.0, xq / 1e6 + 0.0, ch)
                 }
+              } catch {
+                // main data running past the reservoir refuses the stream
+                case _: Bits.PastEnd => ok = false
               }
               ch += 1
             }
@@ -3243,16 +3161,8 @@ object Multimodal {
     val frameLen = 576
     val hdrSide = if (crc) 23 else 21 // 4 header [+2 crc] + 17 side
     val cap = frameLen - hdrSide // main-data bytes per frame
-    val out = new Array[Byte](frameLen * nFrames)
-    val poolBits = new Array[Byte](cap * nFrames * 8) // bit-addressed pool
-    var poolPos = 0 // bit cursor into the pool
-    def putPool(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        if (((v >> i) & 1) == 1) poolBits(poolPos) = 1
-        poolPos += 1; i -= 1
-      }
-    }
+    val out = new BitWriter
+    val pool = new BitWriter // the main-data reservoir
 
     def sfBase(f: Int, g: Int, band: Int): Int =
       ((seed + f + band + g * 3) % 4).toInt
@@ -3309,82 +3219,72 @@ object Multimodal {
       // nominal pool position; stuff the gap left by the previous frame.
       val nominal = f * cap
       val want = if (f == 0) 0 else ((seed * 7 + f * 13) % 40).toInt
-      val avail = nominal - (poolPos + 7) / 8
+      val avail = nominal - ((pool.pos + 7) / 8).toInt
       val mdb = math.min(want, math.max(avail, 0))
       mdbs(f) = mdb
       val startBit = (nominal - mdb) * 8
-      while (poolPos < startBit) { poolPos += 1 } // zero stuffing
+      pool.pos = math.max(pool.pos, startBit) // zero stuffing
       (0 until 2).foreach { g =>
         var band = 0
         while (band < 21) {
           val group = if (band < 6) 0 else if (band < 11) 1
                       else if (band < 16) 2 else 3
           if (g == 0 || ((scfsiOf(f) >> (3 - group)) & 1) == 0)
-            putPool(sfOf(f, g, band), 2)
+            pool.bits(sfOf(f, g, band), 2)
           band += 1
         }
         pairs(f, g).foreach { case (x, y) =>
           val s = if (x == 0 && y == 0) "1"
                   else if (y == 0) "01"
                   else if (x == 0) "001" else "000"
-          s.foreach(c => putPool(if (c == '1') 1 else 0, 1))
-          if (x != 0) putPool(if (x < 0) 1 else 0, 1)
-          if (y != 0) putPool(if (y < 0) 1 else 0, 1)
+          pool.str(s)
+          if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
+          if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
         }
         quads(f, g).foreach { q =>
           var code = 0
           q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-          putPool(code, 4)
-          q.foreach(v => if (v != 0) putPool(if (v < 0) 1 else 0, 1))
+          pool.bits(code, 4)
+          q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
         }
       }
     }
+    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
     // physical frames: header + side info, then the pool slice
     (0 until nFrames).foreach { f =>
-      var bitPos = f * frameLen * 8
-      def put(v: Long, n: Int): Unit = {
-        var i = n - 1
-        while (i >= 0) {
-          if (((v >> i) & 1) == 1)
-            out(bitPos >> 3) =
-              (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-          bitPos += 1; i -= 1
-        }
-      }
-      put(0xff, 8); put(if (crc) 0xfa else 0xfb, 8)
-      put(0xb4, 8); put(0xc0, 8)
-      if (crc) put(0, 16) // CRC placeholder, patched after the side info
-      put(mdbs(f), 9); put(0, 5); put(scfsiOf(f), 4)
+      out.pos = f * frameLen * 8L
+      out.bits(0xff, 8); out.bits(if (crc) 0xfa else 0xfb, 8)
+      out.bits(0xb4, 8); out.bits(0xc0, 8)
+      if (crc) out.bits(0, 16) // CRC placeholder, patched after the side info
+      out.bits(mdbs(f), 9); out.bits(0, 5); out.bits(scfsiOf(f), 4)
       (0 until 2).foreach { g =>
-        put(sfBits(f, g) + huffBits(f, g), 12)
-        put(pairs(f, g).size, 9)
-        put(gainOf(f, g), 8)
-        put(9, 4)                       // scalefac_compress 9 → slen 2/2
-        put(0, 1)                       // no window switching
-        put(1, 5); put(1, 5); put(1, 5) // table 1 everywhere
-        put(4, 4); put(3, 3)            // region counts
-        put(preflagOf(f, g), 1)
-        put(1, 1)                       // scalefac_scale 1 (multiplier 1)
-        put(1, 1)                       // count1 table B
+        out.bits(sfBits(f, g) + huffBits(f, g), 12)
+        out.bits(pairs(f, g).size, 9)
+        out.bits(gainOf(f, g), 8)
+        out.bits(9, 4)                                 // scalefac_compress 9 → slen 2/2
+        out.bits(0, 1)                                 // no window switching
+        out.bits(1, 5); out.bits(1, 5); out.bits(1, 5) // table 1 everywhere
+        out.bits(4, 4); out.bits(3, 3)                 // region counts
+        out.bits(preflagOf(f, g), 1)
+        out.bits(1, 1) // scalefac_scale 1 (multiplier 1)
+        out.bits(1, 1) // count1 table B
       }
       if (crc) {
         val base = f * frameLen
-        val protected_ = out.slice(base + 2, base + 4) ++
-          out.slice(base + 6, base + 23)
+        val head = out.toBytes
+        val protected_ = head.slice(base + 2, base + 4) ++
+          head.slice(base + 6, base + 23)
         val c = mpegCrc16(protected_, 0, protected_.length)
-        out(base + 4) = ((c >> 8) & 0xff).toByte
-        out(base + 5) = (c & 0xff).toByte
+        val sideEnd = out.pos
+        out.pos = (base + 4) * 8L
+        out.bits(c, 16)
+        out.pos = sideEnd
       }
       // copy this frame's main-data area from the pool
-      var b = 0
-      while (b < cap * 8) {
-        if (poolBits(f * cap * 8 + b) == 1)
-          out(bitPos >> 3) =
-            (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-        bitPos += 1; b += 1
-      }
+      out.bytes(main, f * cap, cap)
     }
-    out
+    out.pos = nFrames * frameLen * 8L
+    out.toBytes
   }
 
   /** The encode half of the SHORT-BLOCK round trip: a real MPEG-1
@@ -3400,16 +3300,8 @@ object Multimodal {
   def layer3ShortBytes(seed: Long, nFrames: Int): Array[Byte] = {
     val frameLen = 576
     val cap = frameLen - 21
-    val out = new Array[Byte](frameLen * nFrames)
-    val poolBits = new Array[Byte](cap * nFrames * 8)
-    var poolPos = 0
-    def putPool(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        if (((v >> i) & 1) == 1) poolBits(poolPos) = 1
-        poolPos += 1; i -= 1
-      }
-    }
+    val out = new BitWriter
+    val pool = new BitWriter // the main-data reservoir
     def sfOf(f: Int, g: Int, b: Int, w: Int): Int =
       ((seed + f + b + w + g * 3) % 4).toInt
     def sbgOf(f: Int, g: Int, w: Int): Int =
@@ -3445,67 +3337,55 @@ object Multimodal {
     (0 until nFrames).foreach { f =>
       val nominal = f * cap
       val want = if (f == 0) 0 else ((seed * 7 + f * 13) % 40).toInt
-      val avail = nominal - (poolPos + 7) / 8
+      val avail = nominal - ((pool.pos + 7) / 8).toInt
       val mdb = math.min(want, math.max(avail, 0))
       mdbs(f) = mdb
       val startBit = (nominal - mdb) * 8
-      while (poolPos < startBit) { poolPos += 1 }
+      pool.pos = math.max(pool.pos, startBit)
       (0 until 2).foreach { g =>
         (0 until 12).foreach { b =>
-          (0 until 3).foreach(w => putPool(sfOf(f, g, b, w), 2))
+          (0 until 3).foreach(w => pool.bits(sfOf(f, g, b, w), 2))
         }
         pairs(f, g).foreach { case (x, y) =>
           val s = if (x == 0 && y == 0) "1"
                   else if (y == 0) "01"
                   else if (x == 0) "001" else "000"
-          s.foreach(c => putPool(if (c == '1') 1 else 0, 1))
-          if (x != 0) putPool(if (x < 0) 1 else 0, 1)
-          if (y != 0) putPool(if (y < 0) 1 else 0, 1)
+          pool.str(s)
+          if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
+          if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
         }
         quads(f, g).foreach { q =>
           var code = 0
           q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-          putPool(code, 4)
-          q.foreach(v => if (v != 0) putPool(if (v < 0) 1 else 0, 1))
+          pool.bits(code, 4)
+          q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
         }
       }
     }
+    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
     (0 until nFrames).foreach { f =>
-      var bitPos = f * frameLen * 8
-      def put(v: Long, n: Int): Unit = {
-        var i = n - 1
-        while (i >= 0) {
-          if (((v >> i) & 1) == 1)
-            out(bitPos >> 3) =
-              (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-          bitPos += 1; i -= 1
-        }
-      }
-      put(0xff, 8); put(0xfb, 8)
-      put(0xb4, 8); put(0xc0, 8)
-      put(mdbs(f), 9); put(0, 5); put(0, 4) // scfsi 0: short always fresh
+      out.pos = f * frameLen * 8L
+      out.bits(0xff, 8); out.bits(0xfb, 8)
+      out.bits(0xb4, 8); out.bits(0xc0, 8)
+      // scfsi 0: short always fresh
+      out.bits(mdbs(f), 9); out.bits(0, 5); out.bits(0, 4)
       (0 until 2).foreach { g =>
-        put(72 + huffBits(f, g), 12)        // part2 = 12 bands × 3 w × 2
-        put(pairs(f, g).size, 9)
-        put(gainOf(f, g), 8)
-        put(9, 4)                           // scalefac_compress 9 → 2/2
-        put(1, 1)                           // window switching
-        put(2, 2); put(0, 1)                // block_type 2, not mixed
-        put(1, 5); put(1, 5)                // table 1 in both regions
-        (0 until 3).foreach(w => put(sbgOf(f, g, w), 3))
-        put(0, 1)                           // preflag (not used w/ short)
-        put(1, 1)                           // scalefac_scale 1
-        put(1, 1)                           // count1 table B
+        out.bits(72 + huffBits(f, g), 12)        // part2 = 12 bands × 3 w × 2
+        out.bits(pairs(f, g).size, 9)
+        out.bits(gainOf(f, g), 8)
+        out.bits(9, 4)                 // scalefac_compress 9 → 2/2
+        out.bits(1, 1)                 // window switching
+        out.bits(2, 2); out.bits(0, 1) // block_type 2, not mixed
+        out.bits(1, 5); out.bits(1, 5) // table 1 in both regions
+        (0 until 3).foreach(w => out.bits(sbgOf(f, g, w), 3))
+        out.bits(0, 1) // preflag (not used w/ short)
+        out.bits(1, 1) // scalefac_scale 1
+        out.bits(1, 1) // count1 table B
       }
-      var b = 0
-      while (b < cap * 8) {
-        if (poolBits(f * cap * 8 + b) == 1)
-          out(bitPos >> 3) =
-            (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-        bitPos += 1; b += 1
-      }
+      out.bytes(main, f * cap, cap)
     }
-    out
+    out.pos = nFrames * frameLen * 8L
+    out.toBytes
   }
 
   /** The encode half of the MS-STEREO SHORT-BLOCK round trip: a real
@@ -3529,16 +3409,8 @@ object Multimodal {
                              intensity: Boolean = false): Array[Byte] = {
     val frameLen = 576
     val cap = frameLen - 36 // 4 header + 32 side info
-    val out = new Array[Byte](frameLen * nFrames)
-    val poolBits = new Array[Byte](cap * nFrames * 8)
-    var poolPos = 0
-    def putPool(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        if (((v >> i) & 1) == 1) poolBits(poolPos) = 1
-        poolPos += 1; i -= 1
-      }
-    }
+    val out = new BitWriter
+    val pool = new BitWriter // the main-data reservoir
     def sfOf(f: Int, g: Int, b: Int, w: Int, ch: Int): Int =
       ((seed + f + b + w + g * 3 + ch * 5) % 4).toInt
     def sbgOf(f: Int, g: Int, w: Int, ch: Int): Int =
@@ -3576,74 +3448,61 @@ object Multimodal {
     (0 until nFrames).foreach { f =>
       val nominal = f * cap
       val want = if (f == 0) 0 else ((seed * 7 + f * 13) % 40).toInt
-      val avail = nominal - (poolPos + 7) / 8
+      val avail = nominal - ((pool.pos + 7) / 8).toInt
       val mdb = math.min(want, math.max(avail, 0))
       mdbs(f) = mdb
       val startBit = (nominal - mdb) * 8
-      while (poolPos < startBit) { poolPos += 1 }
+      pool.pos = math.max(pool.pos, startBit)
       (0 until 2).foreach { g =>
         (0 until 2).foreach { ch =>
           (0 until 12).foreach { b =>
-            (0 until 3).foreach(w => putPool(sfOf(f, g, b, w, ch), 2))
+            (0 until 3).foreach(w => pool.bits(sfOf(f, g, b, w, ch), 2))
           }
           pairs(f, g, ch).foreach { case (x, y) =>
             val str = if (x == 0 && y == 0) "1"
                       else if (y == 0) "01"
                       else if (x == 0) "001" else "000"
-            str.foreach(c => putPool(if (c == '1') 1 else 0, 1))
-            if (x != 0) putPool(if (x < 0) 1 else 0, 1)
-            if (y != 0) putPool(if (y < 0) 1 else 0, 1)
+            pool.str(str)
+            if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
+            if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
           }
           quads(f, g, ch).foreach { q =>
             var code = 0
             q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-            putPool(code, 4)
-            q.foreach(v => if (v != 0) putPool(if (v < 0) 1 else 0, 1))
+            pool.bits(code, 4)
+            q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
           }
         }
       }
     }
+    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
     (0 until nFrames).foreach { f =>
-      var bitPos = f * frameLen * 8
-      def put(v: Long, n: Int): Unit = {
-        var i = n - 1
-        while (i >= 0) {
-          if (((v >> i) & 1) == 1)
-            out(bitPos >> 3) =
-              (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-          bitPos += 1; i -= 1
-        }
-      }
-      put(0xff, 8); put(0xfb, 8)
-      put(0xb4, 8)
+      out.pos = f * frameLen * 8L
+      out.bits(0xff, 8); out.bits(0xfb, 8)
+      out.bits(0xb4, 8)
       // joint stereo; mode_extension 10 = MS, 01 = intensity
-      put(if (intensity) 0x50 else 0x60, 8)
-      put(mdbs(f), 9); put(0, 3)
-      put(0, 4); put(0, 4) // scfsi 0 both channels
+      out.bits(if (intensity) 0x50 else 0x60, 8)
+      out.bits(mdbs(f), 9); out.bits(0, 3)
+      out.bits(0, 4); out.bits(0, 4) // scfsi 0 both channels
       (0 until 2).foreach { g =>
         (0 until 2).foreach { ch =>
-          put(72 + huffBits(f, g, ch), 12)
-          put(pairs(f, g, ch).size, 9)
-          put(gainOf(f, g, ch), 8)
-          put(9, 4)                      // scalefac_compress 9 → 2/2
-          put(1, 1)                      // window switching
-          put(2, 2); put(0, 1)           // block_type 2, not mixed
-          put(1, 5); put(1, 5)           // table 1 in both regions
-          (0 until 3).foreach(w => put(sbgOf(f, g, w, ch), 3))
-          put(0, 1)                      // preflag
-          put(1, 1)                      // scalefac_scale 1
-          put(1, 1)                      // count1 table B
+          out.bits(72 + huffBits(f, g, ch), 12)
+          out.bits(pairs(f, g, ch).size, 9)
+          out.bits(gainOf(f, g, ch), 8)
+          out.bits(9, 4)                 // scalefac_compress 9 → 2/2
+          out.bits(1, 1)                 // window switching
+          out.bits(2, 2); out.bits(0, 1) // block_type 2, not mixed
+          out.bits(1, 5); out.bits(1, 5) // table 1 in both regions
+          (0 until 3).foreach(w => out.bits(sbgOf(f, g, w, ch), 3))
+          out.bits(0, 1) // preflag
+          out.bits(1, 1) // scalefac_scale 1
+          out.bits(1, 1) // count1 table B
         }
       }
-      var b = 0
-      while (b < cap * 8) {
-        if (poolBits(f * cap * 8 + b) == 1)
-          out(bitPos >> 3) =
-            (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-        bitPos += 1; b += 1
-      }
+      out.bytes(main, f * cap, cap)
     }
-    out
+    out.pos = nFrames * frameLen * 8L
+    out.toBytes
   }
 
   /** The encode half of the MIXED-BLOCK round trip: a real MPEG-1
@@ -3660,16 +3519,8 @@ object Multimodal {
   def layer3MixedBytes(seed: Long, nFrames: Int): Array[Byte] = {
     val frameLen = 576
     val cap = frameLen - 21
-    val out = new Array[Byte](frameLen * nFrames)
-    val poolBits = new Array[Byte](cap * nFrames * 8)
-    var poolPos = 0
-    def putPool(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        if (((v >> i) & 1) == 1) poolBits(poolPos) = 1
-        poolPos += 1; i -= 1
-      }
-    }
+    val out = new BitWriter
+    val pool = new BitWriter // the main-data reservoir
     def sfLOf(f: Int, g: Int, band: Int): Int =
       ((seed + f + band + g * 3) % 4).toInt
     def sfSOf(f: Int, g: Int, b: Int, w: Int): Int =
@@ -3707,68 +3558,55 @@ object Multimodal {
     (0 until nFrames).foreach { f =>
       val nominal = f * cap
       val want = if (f == 0) 0 else ((seed * 7 + f * 13) % 40).toInt
-      val avail = nominal - (poolPos + 7) / 8
+      val avail = nominal - ((pool.pos + 7) / 8).toInt
       val mdb = math.min(want, math.max(avail, 0))
       mdbs(f) = mdb
       val startBit = (nominal - mdb) * 8
-      while (poolPos < startBit) { poolPos += 1 }
+      pool.pos = math.max(pool.pos, startBit)
       (0 until 2).foreach { g =>
-        (0 until 8).foreach(band => putPool(sfLOf(f, g, band), 2))
+        (0 until 8).foreach(band => pool.bits(sfLOf(f, g, band), 2))
         (3 until 12).foreach { b =>
-          (0 until 3).foreach(w => putPool(sfSOf(f, g, b, w), 2))
+          (0 until 3).foreach(w => pool.bits(sfSOf(f, g, b, w), 2))
         }
         pairs(f, g).foreach { case (x, y) =>
           val str = if (x == 0 && y == 0) "1"
                     else if (y == 0) "01"
                     else if (x == 0) "001" else "000"
-          str.foreach(c => putPool(if (c == '1') 1 else 0, 1))
-          if (x != 0) putPool(if (x < 0) 1 else 0, 1)
-          if (y != 0) putPool(if (y < 0) 1 else 0, 1)
+          pool.str(str)
+          if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
+          if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
         }
         quads(f, g).foreach { q =>
           var code = 0
           q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-          putPool(code, 4)
-          q.foreach(v => if (v != 0) putPool(if (v < 0) 1 else 0, 1))
+          pool.bits(code, 4)
+          q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
         }
       }
     }
+    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
     (0 until nFrames).foreach { f =>
-      var bitPos = f * frameLen * 8
-      def put(v: Long, n: Int): Unit = {
-        var i = n - 1
-        while (i >= 0) {
-          if (((v >> i) & 1) == 1)
-            out(bitPos >> 3) =
-              (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-          bitPos += 1; i -= 1
-        }
-      }
-      put(0xff, 8); put(0xfb, 8)
-      put(0xb4, 8); put(0xc0, 8)
-      put(mdbs(f), 9); put(0, 5); put(0, 4) // scfsi 0
+      out.pos = f * frameLen * 8L
+      out.bits(0xff, 8); out.bits(0xfb, 8)
+      out.bits(0xb4, 8); out.bits(0xc0, 8)
+      out.bits(mdbs(f), 9); out.bits(0, 5); out.bits(0, 4) // scfsi 0
       (0 until 2).foreach { g =>
-        put(70 + huffBits(f, g), 12)        // part2: 17·2 + 18·2
-        put(pairs(f, g).size, 9)
-        put(gainOf(f, g), 8)
-        put(9, 4)                           // scalefac_compress 9 → 2/2
-        put(1, 1)                           // window switching
-        put(2, 2); put(1, 1)                // block_type 2, MIXED
-        put(1, 5); put(1, 5)                // table 1 in both regions
-        (0 until 3).foreach(w => put(sbgOf(f, g, w), 3))
-        put(0, 1)                           // preflag
-        put(1, 1)                           // scalefac_scale 1
-        put(1, 1)                           // count1 table B
+        out.bits(70 + huffBits(f, g), 12)        // part2: 17·2 + 18·2
+        out.bits(pairs(f, g).size, 9)
+        out.bits(gainOf(f, g), 8)
+        out.bits(9, 4)                 // scalefac_compress 9 → 2/2
+        out.bits(1, 1)                 // window switching
+        out.bits(2, 2); out.bits(1, 1) // block_type 2, MIXED
+        out.bits(1, 5); out.bits(1, 5) // table 1 in both regions
+        (0 until 3).foreach(w => out.bits(sbgOf(f, g, w), 3))
+        out.bits(0, 1) // preflag
+        out.bits(1, 1) // scalefac_scale 1
+        out.bits(1, 1) // count1 table B
       }
-      var b = 0
-      while (b < cap * 8) {
-        if (poolBits(f * cap * 8 + b) == 1)
-          out(bitPos >> 3) =
-            (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-        bitPos += 1; b += 1
-      }
+      out.bytes(main, f * cap, cap)
     }
-    out
+    out.pos = nFrames * frameLen * 8L
+    out.toBytes
   }
 
   /** STEREO MIXED-BLOCK fixture (round 15): a real MPEG-1 Layer III
@@ -3791,16 +3629,8 @@ object Multimodal {
                              intensity: Boolean = false): Array[Byte] = {
     val frameLen = 576
     val cap = frameLen - 36 // 4 header + 32 side info
-    val out = new Array[Byte](frameLen * nFrames)
-    val poolBits = new Array[Byte](cap * nFrames * 8)
-    var poolPos = 0
-    def putPool(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        if (((v >> i) & 1) == 1) poolBits(poolPos) = 1
-        poolPos += 1; i -= 1
-      }
-    }
+    val out = new BitWriter
+    val pool = new BitWriter // the main-data reservoir
     def sfLOf(f: Int, g: Int, band: Int, ch: Int): Int =
       ((seed + f + band + g * 3 + ch * 5) % 4).toInt
     def sfSOf(f: Int, g: Int, b: Int, w: Int, ch: Int): Int =
@@ -3841,75 +3671,62 @@ object Multimodal {
     (0 until nFrames).foreach { f =>
       val nominal = f * cap
       val want = if (f == 0) 0 else ((seed * 7 + f * 13) % 40).toInt
-      val avail = nominal - (poolPos + 7) / 8
+      val avail = nominal - ((pool.pos + 7) / 8).toInt
       val mdb = math.min(want, math.max(avail, 0))
       mdbs(f) = mdb
       val startBit = (nominal - mdb) * 8
-      while (poolPos < startBit) { poolPos += 1 }
+      pool.pos = math.max(pool.pos, startBit)
       (0 until 2).foreach { g =>
         (0 until 2).foreach { ch =>
-          (0 until 8).foreach(band => putPool(sfLOf(f, g, band, ch), 2))
+          (0 until 8).foreach(band => pool.bits(sfLOf(f, g, band, ch), 2))
           (3 until 12).foreach { b =>
-            (0 until 3).foreach(w => putPool(sfSOf(f, g, b, w, ch), 2))
+            (0 until 3).foreach(w => pool.bits(sfSOf(f, g, b, w, ch), 2))
           }
           pairs(f, g, ch).foreach { case (x, y) =>
             val str = if (x == 0 && y == 0) "1"
                       else if (y == 0) "01"
                       else if (x == 0) "001" else "000"
-            str.foreach(c => putPool(if (c == '1') 1 else 0, 1))
-            if (x != 0) putPool(if (x < 0) 1 else 0, 1)
-            if (y != 0) putPool(if (y < 0) 1 else 0, 1)
+            pool.str(str)
+            if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
+            if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
           }
           quads(f, g, ch).foreach { q =>
             var code = 0
             q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-            putPool(code, 4)
-            q.foreach(v => if (v != 0) putPool(if (v < 0) 1 else 0, 1))
+            pool.bits(code, 4)
+            q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
           }
         }
       }
     }
+    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
     (0 until nFrames).foreach { f =>
-      var bitPos = f * frameLen * 8
-      def put(v: Long, n: Int): Unit = {
-        var i = n - 1
-        while (i >= 0) {
-          if (((v >> i) & 1) == 1)
-            out(bitPos >> 3) =
-              (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-          bitPos += 1; i -= 1
-        }
-      }
-      put(0xff, 8); put(0xfb, 8)
-      put(0xb4, 8)
+      out.pos = f * frameLen * 8L
+      out.bits(0xff, 8); out.bits(0xfb, 8)
+      out.bits(0xb4, 8)
       // joint stereo; mode_extension 10 = MS, 01 = intensity
-      put(if (intensity) 0x50 else 0x60, 8)
-      put(mdbs(f), 9); put(0, 3)
-      put(0, 4); put(0, 4) // scfsi 0 both channels
+      out.bits(if (intensity) 0x50 else 0x60, 8)
+      out.bits(mdbs(f), 9); out.bits(0, 3)
+      out.bits(0, 4); out.bits(0, 4) // scfsi 0 both channels
       (0 until 2).foreach { g =>
         (0 until 2).foreach { ch =>
-          put(70 + huffBits(f, g, ch), 12) // part2: 17·2 + 18·2 (mixed)
-          put(pairs(f, g, ch).size, 9)
-          put(gainOf(f, g, ch), 8)
-          put(9, 4)                      // scalefac_compress 9 → 2/2
-          put(1, 1)                      // window switching
-          put(2, 2); put(1, 1)           // block_type 2, MIXED
-          put(1, 5); put(1, 5)           // table 1 in both regions
-          (0 until 3).foreach(w => put(sbgOf(f, g, w, ch), 3))
-          put(0, 1)                      // preflag
-          put(1, 1)                      // scalefac_scale 1
-          put(1, 1)                      // count1 table B
+          out.bits(70 + huffBits(f, g, ch), 12) // part2: 17·2 + 18·2 (mixed)
+          out.bits(pairs(f, g, ch).size, 9)
+          out.bits(gainOf(f, g, ch), 8)
+          out.bits(9, 4)                 // scalefac_compress 9 → 2/2
+          out.bits(1, 1)                 // window switching
+          out.bits(2, 2); out.bits(1, 1) // block_type 2, MIXED
+          out.bits(1, 5); out.bits(1, 5) // table 1 in both regions
+          (0 until 3).foreach(w => out.bits(sbgOf(f, g, w, ch), 3))
+          out.bits(0, 1) // preflag
+          out.bits(1, 1) // scalefac_scale 1
+          out.bits(1, 1) // count1 table B
         }
       }
-      var b = 0
-      while (b < cap * 8) {
-        if (poolBits(f * cap * 8 + b) == 1)
-          out(bitPos >> 3) =
-            (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-        bitPos += 1; b += 1
-      }
+      out.bytes(main, f * cap, cap)
     }
-    out
+    out.pos = nFrames * frameLen * 8L
+    out.toBytes
   }
 
   /** MPEG-2 LSF (ISO 13818-3) Layer III fixture (round 15): a mono
@@ -3937,16 +3754,8 @@ object Multimodal {
     // re-encode-equivalence verification shape.
     val frameLen = if (v25) 384 else 192
     val cap = frameLen - 13 // 4 header + 9 LSF mono side info
-    val out = new Array[Byte](frameLen * nFrames)
-    val poolBits = new Array[Byte](cap * nFrames * 8)
-    var poolPos = 0
-    def putPool(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        if (((v >> i) & 1) == 1) poolBits(poolPos) = 1
-        poolPos += 1; i -= 1
-      }
-    }
+    val out = new BitWriter
+    val pool = new BitWriter // the main-data reservoir
     def sfcOf(f: Int): Int = (f % 3) match {
       case 0 => ((seed * 3 + f * 7) % 400).toInt
       case 1 => 400 + ((seed * 5 + f * 11) % 100).toInt
@@ -3986,17 +3795,17 @@ object Multimodal {
     (0 until nFrames).foreach { f =>
       val nominal = f * cap
       val want = if (f == 0) 0 else ((seed * 7 + f * 13) % 40).toInt
-      val avail = nominal - (poolPos + 7) / 8
+      val avail = nominal - ((pool.pos + 7) / 8).toInt
       val mdb = math.min(want, math.max(avail, 0))
       mdbs(f) = mdb
       val startBit = (nominal - mdb) * 8
-      while (poolPos < startBit) { poolPos += 1 }
+      pool.pos = math.max(pool.pos, startBit)
       val (slens, parts) = lsfScaleLong(sfcOf(f))
       var band = 0
       (0 until 4).foreach { pi =>
         (0 until parts(pi)).foreach { _ =>
           if (slens(pi) > 0)
-            putPool((seed + f + band * 3) % (1L << slens(pi)), slens(pi))
+            pool.bits((seed + f + band * 3) % (1L << slens(pi)), slens(pi))
           band += 1
         }
       }
@@ -4004,54 +3813,41 @@ object Multimodal {
         val str = if (x == 0 && y == 0) "1"
                   else if (y == 0) "01"
                   else if (x == 0) "001" else "000"
-        str.foreach(c => putPool(if (c == '1') 1 else 0, 1))
-        if (x != 0) putPool(if (x < 0) 1 else 0, 1)
-        if (y != 0) putPool(if (y < 0) 1 else 0, 1)
+        pool.str(str)
+        if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
+        if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
       }
       quads(f).foreach { q =>
         var code = 0
         q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-        putPool(code, 4)
-        q.foreach(v => if (v != 0) putPool(if (v < 0) 1 else 0, 1))
+        pool.bits(code, 4)
+        q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
       }
     }
+    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
     (0 until nFrames).foreach { f =>
-      var bitPos = f * frameLen * 8
-      def put(v: Long, n: Int): Unit = {
-        var i = n - 1
-        while (i >= 0) {
-          if (((v >> i) & 1) == 1)
-            out(bitPos >> 3) =
-              (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-          bitPos += 1; i -= 1
-        }
-      }
+      out.pos = f * frameLen * 8L
       // V2 LSF header: sync + version 10 (V2.5: 00) + Layer III + no
       // CRC; 64 kbps (LSF bitrate index 8), 24 kHz / 12 kHz (sr index
       // 1), no padding, mono
-      put(0xff, 8); put(if (v25) 0xe3 else 0xf3, 8)
-      put(0x84, 8); put(0xc0, 8)
-      put(mdbs(f), 8); put(0, 1) // 8-bit main_data_begin + 1 private bit
-      put(sfBits(f) + huffBits(f), 12)
-      put(pairs(f).size, 9)
-      put(gainOf(f), 8)
-      put(sfcOf(f), 9)                   // 9-bit scalefac_compress
-      put(1, 1)                          // window switching
-      put(btOf(f), 2); put(0, 1)         // block_type 1/3, not mixed
-      put(1, 5); put(1, 5)               // table 1 in both regions
-      (0 until 3).foreach(w =>           // inert for long forms
-        put((seed + f + w) % 8, 3))
-      put(1, 1)                          // scalefac_scale 1 (no preflag bit)
-      put(1, 1)                          // count1 table B
-      var b = 0
-      while (b < cap * 8) {
-        if (poolBits(f * cap * 8 + b) == 1)
-          out(bitPos >> 3) =
-            (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-        bitPos += 1; b += 1
-      }
+      out.bits(0xff, 8); out.bits(if (v25) 0xe3 else 0xf3, 8)
+      out.bits(0x84, 8); out.bits(0xc0, 8)
+      out.bits(mdbs(f), 8); out.bits(0, 1) // 8-bit main_data_begin + 1 private bit
+      out.bits(sfBits(f) + huffBits(f), 12)
+      out.bits(pairs(f).size, 9)
+      out.bits(gainOf(f), 8)
+      out.bits(sfcOf(f), 9)                // 9-bit scalefac_compress
+      out.bits(1, 1)                       // window switching
+      out.bits(btOf(f), 2); out.bits(0, 1) // block_type 1/3, not mixed
+      out.bits(1, 5); out.bits(1, 5)       // table 1 in both regions
+      (0 until 3).foreach(w =>             // inert for long forms
+        out.bits((seed + f + w) % 8, 3))
+      out.bits(1, 1) // scalefac_scale 1 (no preflag bit)
+      out.bits(1, 1) // count1 table B
+      out.bytes(main, f * cap, cap)
     }
-    out
+    out.pos = nFrames * frameLen * 8L
+    out.toBytes
   }
 
   /** MPEG-2 LSF SHORT/MIXED-block fixture (round 16): the same mono
@@ -4073,16 +3869,8 @@ object Multimodal {
                           mixed: Boolean = false): Array[Byte] = {
     val frameLen = 192
     val cap = frameLen - 13
-    val out = new Array[Byte](frameLen * nFrames)
-    val poolBits = new Array[Byte](cap * nFrames * 8)
-    var poolPos = 0
-    def putPool(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        if (((v >> i) & 1) == 1) poolBits(poolPos) = 1
-        poolPos += 1; i -= 1
-      }
-    }
+    val out = new BitWriter
+    val pool = new BitWriter // the main-data reservoir
     val btn = if (mixed) 2 else 1
     def sfcOf(f: Int): Int = (f % 3) match {
       case 0 => ((seed * 3 + f * 7) % 400).toInt
@@ -4123,17 +3911,17 @@ object Multimodal {
     (0 until nFrames).foreach { f =>
       val nominal = f * cap
       val want = if (f == 0) 0 else ((seed * 7 + f * 13) % 40).toInt
-      val avail = nominal - (poolPos + 7) / 8
+      val avail = nominal - ((pool.pos + 7) / 8).toInt
       val mdb = math.min(want, math.max(avail, 0))
       mdbs(f) = mdb
       val startBit = (nominal - mdb) * 8
-      while (poolPos < startBit) { poolPos += 1 }
+      pool.pos = math.max(pool.pos, startBit)
       val (slens, parts) = lsfScale(sfcOf(f), btn)
       var slot = 0
       (0 until 4).foreach { pi =>
         (0 until parts(pi)).foreach { _ =>
           if (slens(pi) > 0)
-            putPool((seed + f + slot * 3) % (1L << slens(pi)), slens(pi))
+            pool.bits((seed + f + slot * 3) % (1L << slens(pi)), slens(pi))
           slot += 1
         }
       }
@@ -4141,49 +3929,36 @@ object Multimodal {
         val str = if (x == 0 && y == 0) "1"
                   else if (y == 0) "01"
                   else if (x == 0) "001" else "000"
-        str.foreach(c => putPool(if (c == '1') 1 else 0, 1))
-        if (x != 0) putPool(if (x < 0) 1 else 0, 1)
-        if (y != 0) putPool(if (y < 0) 1 else 0, 1)
+        pool.str(str)
+        if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
+        if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
       }
       quads(f).foreach { q =>
         var code = 0
         q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-        putPool(code, 4)
-        q.foreach(v => if (v != 0) putPool(if (v < 0) 1 else 0, 1))
+        pool.bits(code, 4)
+        q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
       }
     }
+    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
     (0 until nFrames).foreach { f =>
-      var bitPos = f * frameLen * 8
-      def put(v: Long, n: Int): Unit = {
-        var i = n - 1
-        while (i >= 0) {
-          if (((v >> i) & 1) == 1)
-            out(bitPos >> 3) =
-              (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-          bitPos += 1; i -= 1
-        }
-      }
-      put(0xff, 8); put(0xf3, 8); put(0x84, 8); put(0xc0, 8)
-      put(mdbs(f), 8); put(0, 1)
-      put(sfBits(f) + huffBits(f), 12)
-      put(pairs(f).size, 9)
-      put(gainOf(f), 8)
-      put(sfcOf(f), 9)
-      put(1, 1)                           // window switching
-      put(2, 2); put(if (mixed) 1 else 0, 1) // block_type 2, mixed flag
-      put(1, 5); put(1, 5)                // table 1 in both regions
-      (0 until 3).foreach(w => put(sbgOf(f, w), 3)) // APPLIED this time
-      put(1, 1)                           // scalefac_scale 1
-      put(1, 1)                           // count1 table B
-      var b = 0
-      while (b < cap * 8) {
-        if (poolBits(f * cap * 8 + b) == 1)
-          out(bitPos >> 3) =
-            (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-        bitPos += 1; b += 1
-      }
+      out.pos = f * frameLen * 8L
+      out.bits(0xff, 8); out.bits(0xf3, 8); out.bits(0x84, 8); out.bits(0xc0, 8)
+      out.bits(mdbs(f), 8); out.bits(0, 1)
+      out.bits(sfBits(f) + huffBits(f), 12)
+      out.bits(pairs(f).size, 9)
+      out.bits(gainOf(f), 8)
+      out.bits(sfcOf(f), 9)
+      out.bits(1, 1)                                     // window switching
+      out.bits(2, 2); out.bits(if (mixed) 1 else 0, 1)   // block_type 2, mixed flag
+      out.bits(1, 5); out.bits(1, 5)                     // table 1 in both regions
+      (0 until 3).foreach(w => out.bits(sbgOf(f, w), 3)) // APPLIED this time
+      out.bits(1, 1)                                     // scalefac_scale 1
+      out.bits(1, 1)                                     // count1 table B
+      out.bytes(main, f * cap, cap)
     }
-    out
+    out.pos = nFrames * frameLen * 8L
+    out.toBytes
   }
 
   /** MPEG-2 LSF INTENSITY-STEREO fixture (round 16): joint stereo
@@ -4210,16 +3985,8 @@ object Multimodal {
                               shortBlocks: Boolean = false): Array[Byte] = {
     val frameLen = 192
     val cap = frameLen - 21 // 4 header + 17 LSF stereo side info
-    val out = new Array[Byte](frameLen * nFrames)
-    val poolBits = new Array[Byte](cap * nFrames * 8)
-    var poolPos = 0
-    def putPool(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        if (((v >> i) & 1) == 1) poolBits(poolPos) = 1
-        poolPos += 1; i -= 1
-      }
-    }
+    val out = new BitWriter
+    val pool = new BitWriter // the main-data reservoir
     def sfcOf(f: Int): Int = (f % 3) match { // left channel, long classes
       case 0 => ((seed * 3 + f * 7) % 400).toInt
       case 1 => 400 + ((seed * 5 + f * 11) % 100).toInt
@@ -4270,18 +4037,18 @@ object Multimodal {
     (0 until nFrames).foreach { f =>
       val nominal = f * cap
       val want = if (f == 0) 0 else ((seed * 7 + f * 13) % 40).toInt
-      val avail = nominal - (poolPos + 7) / 8
+      val avail = nominal - ((pool.pos + 7) / 8).toInt
       val mdb = math.min(want, math.max(avail, 0))
       mdbs(f) = mdb
       val startBit = (nominal - mdb) * 8
-      while (poolPos < startBit) { poolPos += 1 }
+      pool.pos = math.max(pool.pos, startBit)
       (0 until 2).foreach { ch =>
         val (slens, parts) = scaleParts(f, ch)
         var slot = 0
         (0 until 4).foreach { pi =>
           (0 until parts(pi)).foreach { _ =>
             if (slens(pi) > 0)
-              putPool((seed + f + slot * 3) % (1L << slens(pi)), slens(pi))
+              pool.bits((seed + f + slot * 3) % (1L << slens(pi)), slens(pi))
             slot += 1
           }
         }
@@ -4289,65 +4056,54 @@ object Multimodal {
           val str = if (x == 0 && y == 0) "1"
                     else if (y == 0) "01"
                     else if (x == 0) "001" else "000"
-          str.foreach(c => putPool(if (c == '1') 1 else 0, 1))
-          if (x != 0) putPool(if (x < 0) 1 else 0, 1)
-          if (y != 0) putPool(if (y < 0) 1 else 0, 1)
+          pool.str(str)
+          if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
+          if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
         }
         quads(f, ch).foreach { q =>
           var code = 0
           q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-          putPool(code, 4)
-          q.foreach(v => if (v != 0) putPool(if (v < 0) 1 else 0, 1))
+          pool.bits(code, 4)
+          q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
         }
       }
     }
+    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
     (0 until nFrames).foreach { f =>
-      var bitPos = f * frameLen * 8
-      def put(v: Long, n: Int): Unit = {
-        var i = n - 1
-        while (i >= 0) {
-          if (((v >> i) & 1) == 1)
-            out(bitPos >> 3) =
-              (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-          bitPos += 1; i -= 1
-        }
-      }
+      out.pos = f * frameLen * 8L
       // V2 LSF header: 64 kbps, 24 kHz, joint stereo, mode_ext 01
       // (intensity on, MS off)
-      put(0xff, 8); put(0xf3, 8); put(0x84, 8); put(0x50, 8)
-      put(mdbs(f), 8); put(0, 2) // 8-bit main_data_begin + 2 private
+      out.bits(0xff, 8); out.bits(0xf3, 8); out.bits(0x84, 8); out.bits(0x50, 8)
+      out.bits(mdbs(f), 8); out.bits(0, 2) // 8-bit main_data_begin + 2 private
       (0 until 2).foreach { ch =>
-        put(sfBits(f, ch) + huffBits(f, ch), 12)
-        put(pairs(f, ch).size, 9)
-        put(gainOf(f, ch), 8)
-        put(scompOf(f, ch), 9)
+        out.bits(sfBits(f, ch) + huffBits(f, ch), 12)
+        out.bits(pairs(f, ch).size, 9)
+        out.bits(gainOf(f, ch), 8)
+        out.bits(scompOf(f, ch), 9)
         if (shortBlocks) {
           // window-switched short form (both channels block_type 2):
           // intensity over LSF SHORT blocks — per-window bound +
           // btn-1 intensity classes; subblock gains applied
-          put(1, 1)                // window switching
-          put(2, 2); put(0, 1)     // block_type 2, not mixed
-          put(1, 5); put(1, 5)     // table 1 in both regions
-          (0 until 3).foreach(w => put((seed + f + w + ch) % 8, 3))
-          put(1, 1)                // scalefac_scale 1 (no preflag bit)
-          put(1, 1)                // count1 table B
+          out.bits(1, 1)                 // window switching
+          out.bits(2, 2); out.bits(0, 1) // block_type 2, not mixed
+          out.bits(1, 5); out.bits(1, 5) // table 1 in both regions
+          (0 until 3).foreach(w => out.bits((seed + f + w + ch) % 8, 3))
+          out.bits(1, 1) // scalefac_scale 1 (no preflag bit)
+          out.bits(1, 1) // count1 table B
         } else {
-          put(0, 1)                // no window switching (long block)
-          put(1, 5); put(1, 5); put(1, 5) // table 1 in all three regions
-          put(4, 4); put(3, 3)     // region0/region1 counts (inert: one table)
-          put(1, 1)                // scalefac_scale 1 (no preflag bit)
-          put(1, 1)                // count1 table B
+          out.bits(0, 1)           // no window switching (long block)
+          // table 1 in all three regions
+          out.bits(1, 5); out.bits(1, 5); out.bits(1, 5)
+          // region0/region1 counts (inert: one table)
+          out.bits(4, 4); out.bits(3, 3)
+          out.bits(1, 1) // scalefac_scale 1 (no preflag bit)
+          out.bits(1, 1) // count1 table B
         }
       }
-      var b = 0
-      while (b < cap * 8) {
-        if (poolBits(f * cap * 8 + b) == 1)
-          out(bitPos >> 3) =
-            (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-        bitPos += 1; b += 1
-      }
+      out.bytes(main, f * cap, cap)
     }
-    out
+    out.pos = nFrames * frameLen * 8L
+    out.toBytes
   }
 
   /** The encode half of the START/STOP-WINDOW round trip: a real MPEG-1
@@ -4362,16 +4118,8 @@ object Multimodal {
   def layer3StartStopBytes(seed: Long, nFrames: Int): Array[Byte] = {
     val frameLen = 576
     val cap = frameLen - 21
-    val out = new Array[Byte](frameLen * nFrames)
-    val poolBits = new Array[Byte](cap * nFrames * 8)
-    var poolPos = 0
-    def putPool(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        if (((v >> i) & 1) == 1) poolBits(poolPos) = 1
-        poolPos += 1; i -= 1
-      }
-    }
+    val out = new BitWriter
+    val pool = new BitWriter // the main-data reservoir
     def sfOf(f: Int, g: Int, band: Int): Int =
       ((seed + f + band + g * 3) % 4).toInt
     def pairs(f: Int, g: Int): Seq[(Int, Int)] = {
@@ -4409,66 +4157,53 @@ object Multimodal {
     (0 until nFrames).foreach { f =>
       val nominal = f * cap
       val want = if (f == 0) 0 else ((seed * 7 + f * 13) % 40).toInt
-      val avail = nominal - (poolPos + 7) / 8
+      val avail = nominal - ((pool.pos + 7) / 8).toInt
       val mdb = math.min(want, math.max(avail, 0))
       mdbs(f) = mdb
       val startBit = (nominal - mdb) * 8
-      while (poolPos < startBit) { poolPos += 1 }
+      pool.pos = math.max(pool.pos, startBit)
       (0 until 2).foreach { g =>
-        (0 until 21).foreach(band => putPool(sfOf(f, g, band), 2))
+        (0 until 21).foreach(band => pool.bits(sfOf(f, g, band), 2))
         pairs(f, g).foreach { case (x, y) =>
           val str = if (x == 0 && y == 0) "1"
                     else if (y == 0) "01"
                     else if (x == 0) "001" else "000"
-          str.foreach(c => putPool(if (c == '1') 1 else 0, 1))
-          if (x != 0) putPool(if (x < 0) 1 else 0, 1)
-          if (y != 0) putPool(if (y < 0) 1 else 0, 1)
+          pool.str(str)
+          if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
+          if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
         }
         quads(f, g).foreach { q =>
           var code = 0
           q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-          putPool(code, 4)
-          q.foreach(v => if (v != 0) putPool(if (v < 0) 1 else 0, 1))
+          pool.bits(code, 4)
+          q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
         }
       }
     }
+    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
     (0 until nFrames).foreach { f =>
-      var bitPos = f * frameLen * 8
-      def put(v: Long, n: Int): Unit = {
-        var i = n - 1
-        while (i >= 0) {
-          if (((v >> i) & 1) == 1)
-            out(bitPos >> 3) =
-              (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-          bitPos += 1; i -= 1
-        }
-      }
-      put(0xff, 8); put(0xfb, 8)
-      put(0xb4, 8); put(0xc0, 8)
-      put(mdbs(f), 9); put(0, 5); put(0, 4) // scfsi 0
+      out.pos = f * frameLen * 8L
+      out.bits(0xff, 8); out.bits(0xfb, 8)
+      out.bits(0xb4, 8); out.bits(0xc0, 8)
+      out.bits(mdbs(f), 9); out.bits(0, 5); out.bits(0, 4) // scfsi 0
       (0 until 2).foreach { g =>
-        put(42 + huffBits(f, g), 12)        // part2 = 21 bands × 2 bits
-        put(pairs(f, g).size, 9)
-        put(gainOf(f, g), 8)
-        put(9, 4)                           // scalefac_compress 9 → 2/2
-        put(1, 1)                           // window switching
-        put(btOf(f, g), 2); put(0, 1)       // block_type 1/3, not mixed
-        put(1, 5); put(1, 5)                // table 1 in both regions
-        (0 until 3).foreach(w =>            // inert for long forms
-          put((seed + f + g + w) % 8, 3))
-        put(preflagOf(f, g), 1)
-        put(1, 1)                           // scalefac_scale 1
-        put(1, 1)                           // count1 table B
+        out.bits(42 + huffBits(f, g), 12)        // part2 = 21 bands × 2 bits
+        out.bits(pairs(f, g).size, 9)
+        out.bits(gainOf(f, g), 8)
+        out.bits(9, 4)                          // scalefac_compress 9 → 2/2
+        out.bits(1, 1)                          // window switching
+        out.bits(btOf(f, g), 2); out.bits(0, 1) // block_type 1/3, not mixed
+        out.bits(1, 5); out.bits(1, 5)          // table 1 in both regions
+        (0 until 3).foreach(w =>                // inert for long forms
+          out.bits((seed + f + g + w) % 8, 3))
+        out.bits(preflagOf(f, g), 1)
+        out.bits(1, 1) // scalefac_scale 1
+        out.bits(1, 1) // count1 table B
       }
-      var b = 0
-      while (b < cap * 8) {
-        if (poolBits(f * cap * 8 + b) == 1)
-          out(bitPos >> 3) =
-            (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-        bitPos += 1; b += 1
-      }
+      out.bytes(main, f * cap, cap)
     }
-    out
+    out.pos = nFrames * frameLen * 8L
+    out.toBytes
   }
 
   /** The encode half of the generalized-table/linbits round trip: a
@@ -4484,16 +4219,8 @@ object Multimodal {
   def layer3LinbitsBytes(seed: Long, nFrames: Int): Array[Byte] = {
     val frameLen = 576
     val cap = frameLen - 21
-    val out = new Array[Byte](frameLen * nFrames)
-    val poolBits = new Array[Byte](cap * nFrames * 8)
-    var poolPos = 0
-    def putPool(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        if (((v >> i) & 1) == 1) poolBits(poolPos) = 1
-        poolPos += 1; i -= 1
-      }
-    }
+    val out = new BitWriter
+    val pool = new BitWriter // the main-data reservoir
     def pairs(f: Int, g: Int): Seq[(Int, Int)] = {
       val n = 10 + ((seed + f + g) % 7).toInt
       (0 until n).map { k =>
@@ -4525,59 +4252,47 @@ object Multimodal {
       pb + qb
     }
     (0 until nFrames).foreach { f =>
-      poolPos = f * cap * 8 // no reservoir: nominal, byte-aligned starts
+      pool.pos = f * cap * 8L // no reservoir: nominal, byte-aligned starts
       (0 until 2).foreach { g =>
         pairs(f, g).foreach { case (x, y) =>
           val mx = math.abs(x); val my = math.abs(y)
-          putPool(math.min(mx, 15) * 16 + math.min(my, 15), 8)
-          if (mx >= 15) putPool(mx - 15, 4)
-          if (x != 0) putPool(if (x < 0) 1 else 0, 1)
-          if (my >= 15) putPool(my - 15, 4)
-          if (y != 0) putPool(if (y < 0) 1 else 0, 1)
+          pool.bits(math.min(mx, 15) * 16 + math.min(my, 15), 8)
+          if (mx >= 15) pool.bits(mx - 15, 4)
+          if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
+          if (my >= 15) pool.bits(my - 15, 4)
+          if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
         }
         quads(f, g).foreach { q =>
           var code = 0
           q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-          putPool(code, 4)
-          q.foreach(v => if (v != 0) putPool(if (v < 0) 1 else 0, 1))
+          pool.bits(code, 4)
+          q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
         }
       }
     }
+    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
     (0 until nFrames).foreach { f =>
-      var bitPos = f * frameLen * 8
-      def put(v: Long, n: Int): Unit = {
-        var i = n - 1
-        while (i >= 0) {
-          if (((v >> i) & 1) == 1)
-            out(bitPos >> 3) =
-              (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-          bitPos += 1; i -= 1
-        }
-      }
-      put(0xff, 8); put(0xfb, 8)
-      put(0xb4, 8); put(0xc0, 8)
-      put(0, 9); put(0, 5); put(0, 4) // mdb 0, private, scfsi 0
+      out.pos = f * frameLen * 8L
+      out.bits(0xff, 8); out.bits(0xfb, 8)
+      out.bits(0xb4, 8); out.bits(0xc0, 8)
+      out.bits(0, 9); out.bits(0, 5); out.bits(0, 4) // mdb 0, private, scfsi 0
       (0 until 2).foreach { g =>
-        put(huffBits(f, g), 12)       // scomp 0 → zero scalefactor bits
-        put(pairs(f, g).size, 9)
-        put(gainOf(f, g), 8)
-        put(0, 4)                     // scalefac_compress 0
-        put(0, 1)                     // no window switching
-        put(4, 5); put(4, 5); put(4, 5) // table 4 (synthetic linbits slot)
-        put(4, 4); put(3, 3)          // region counts
-        put(0, 1)                     // preflag 0
-        put(1, 1)                     // scalefac_scale 1
-        put(1, 1)                     // count1 table B
+        out.bits(huffBits(f, g), 12)       // scomp 0 → zero scalefactor bits
+        out.bits(pairs(f, g).size, 9)
+        out.bits(gainOf(f, g), 8)
+        out.bits(0, 4) // scalefac_compress 0
+        out.bits(0, 1) // no window switching
+        // table 4 (synthetic linbits slot)
+        out.bits(4, 5); out.bits(4, 5); out.bits(4, 5)
+        out.bits(4, 4); out.bits(3, 3) // region counts
+        out.bits(0, 1)                 // preflag 0
+        out.bits(1, 1)                 // scalefac_scale 1
+        out.bits(1, 1)                 // count1 table B
       }
-      var b = 0
-      while (b < cap * 8) {
-        if (poolBits(f * cap * 8 + b) == 1)
-          out(bitPos >> 3) =
-            (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-        bitPos += 1; b += 1
-      }
+      out.bytes(main, f * cap, cap)
     }
-    out
+    out.pos = nFrames * frameLen * 8L
+    out.toBytes
   }
 
   /** The encode half of the REAL-ISO-table round trip
@@ -4599,20 +4314,8 @@ object Multimodal {
   def layer3HuffRealBytes(seed: Long, nFrames: Int): Array[Byte] = {
     val frameLen = 576
     val cap = frameLen - 21
-    val out = new Array[Byte](frameLen * nFrames)
-    val poolBits = new Array[Byte](cap * nFrames * 8)
-    var poolPos = 0
-    def putPool(w: String): Unit = {
-      var i = 0
-      while (i < w.length) {
-        if (w.charAt(i) == '1') poolBits(poolPos) = 1
-        poolPos += 1; i += 1
-      }
-    }
-    def putPoolBit(b: Int): Unit = {
-      if (b == 1) poolBits(poolPos) = 1
-      poolPos += 1
-    }
+    val out = new BitWriter
+    val pool = new BitWriter // the main-data reservoir
     // region of pair k: 0 (lines 0-19, table 7), 1 (lines 20-41,
     // table 10), 2 (table 9) — value range 0..5 / 0..7 / 0..5
     def tabOf(k: Int): Int = if (k < 10) 7 else if (k < 21) 10 else 9
@@ -4653,56 +4356,43 @@ object Multimodal {
       pb + qb
     }
     (0 until nFrames).foreach { f =>
-      poolPos = f * cap * 8 // no reservoir: byte-aligned nominal starts
+      pool.pos = f * cap * 8L // no reservoir: byte-aligned nominal starts
       (0 until 2).foreach { g =>
         pairs(f, g).zipWithIndex.foreach { case ((x, y), k) =>
-          putPool(L3IsoHuff.encode(tabOf(k))((math.abs(x), math.abs(y))))
-          if (x != 0) putPoolBit(if (x < 0) 1 else 0)
-          if (y != 0) putPoolBit(if (y < 0) 1 else 0)
+          pool.str(L3IsoHuff.encode(tabOf(k))((math.abs(x), math.abs(y))))
+          if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
+          if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
         }
         quads(f, g).foreach { q =>
           var idx = 0
           q.foreach(v => idx = (idx << 1) | (if (v != 0) 1 else 0))
-          putPool(L3IsoHuff.quadAEncode(idx))
-          q.foreach(v => if (v != 0) putPoolBit(if (v < 0) 1 else 0))
+          pool.str(L3IsoHuff.quadAEncode(idx))
+          q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
         }
       }
     }
+    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
     (0 until nFrames).foreach { f =>
-      var bitPos = f * frameLen * 8
-      def put(v: Long, n: Int): Unit = {
-        var i = n - 1
-        while (i >= 0) {
-          if (((v >> i) & 1) == 1)
-            out(bitPos >> 3) =
-              (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-          bitPos += 1; i -= 1
-        }
-      }
-      put(0xff, 8); put(0xfb, 8)
-      put(0xb4, 8); put(0xc0, 8)
-      put(0, 9); put(0, 5); put(0, 4) // mdb 0, private, scfsi 0
+      out.pos = f * frameLen * 8L
+      out.bits(0xff, 8); out.bits(0xfb, 8)
+      out.bits(0xb4, 8); out.bits(0xc0, 8)
+      out.bits(0, 9); out.bits(0, 5); out.bits(0, 4) // mdb 0, private, scfsi 0
       (0 until 2).foreach { g =>
-        put(huffBits(f, g), 12)       // scomp 0 → zero scalefactor bits
-        put(pairs(f, g).size, 9)
-        put(gainOf(f, g), 8)
-        put(0, 4)                     // scalefac_compress 0
-        put(0, 1)                     // no window switching
-        put(7, 5); put(10, 5); put(9, 5) // REAL tables 7 / 10 / 9
-        put(4, 4); put(3, 3)          // region0_count 4, region1_count 3
-        put(0, 1)                     // preflag 0
-        put(1, 1)                     // scalefac_scale 1
-        put(0, 1)                     // count1 table A (REAL)
+        out.bits(huffBits(f, g), 12)       // scomp 0 → zero scalefactor bits
+        out.bits(pairs(f, g).size, 9)
+        out.bits(gainOf(f, g), 8)
+        out.bits(0, 4)                                  // scalefac_compress 0
+        out.bits(0, 1)                                  // no window switching
+        out.bits(7, 5); out.bits(10, 5); out.bits(9, 5) // REAL tables 7 / 10 / 9
+        out.bits(4, 4); out.bits(3, 3)                  // region0_count 4, region1_count 3
+        out.bits(0, 1)                                  // preflag 0
+        out.bits(1, 1)                                  // scalefac_scale 1
+        out.bits(0, 1)                                  // count1 table A (REAL)
       }
-      var b = 0
-      while (b < cap * 8) {
-        if (poolBits(f * cap * 8 + b) == 1)
-          out(bitPos >> 3) =
-            (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-        bitPos += 1; b += 1
-      }
+      out.bytes(main, f * cap, cap)
     }
-    out
+    out.pos = nFrames * frameLen * 8L
+    out.toBytes
   }
 
   /** The TABLE-12 twin of [[layer3HuffRealBytes]] (round 15 — exercises
@@ -4718,20 +4408,8 @@ object Multimodal {
   def layer3Huff12Bytes(seed: Long, nFrames: Int): Array[Byte] = {
     val frameLen = 576
     val cap = frameLen - 21
-    val out = new Array[Byte](frameLen * nFrames)
-    val poolBits = new Array[Byte](cap * nFrames * 8)
-    var poolPos = 0
-    def putPool(w: String): Unit = {
-      var i = 0
-      while (i < w.length) {
-        if (w.charAt(i) == '1') poolBits(poolPos) = 1
-        poolPos += 1; i += 1
-      }
-    }
-    def putPoolBit(b: Int): Unit = {
-      if (b == 1) poolBits(poolPos) = 1
-      poolPos += 1
-    }
+    val out = new BitWriter
+    val pool = new BitWriter // the main-data reservoir
     def pairs(f: Int, g: Int): Seq[(Int, Int)] = {
       val n = 22 + ((seed + f + g) % 5).toInt
       (0 until n).map { k =>
@@ -4767,56 +4445,44 @@ object Multimodal {
       pb + qb
     }
     (0 until nFrames).foreach { f =>
-      poolPos = f * cap * 8
+      pool.pos = f * cap * 8L
       (0 until 2).foreach { g =>
         pairs(f, g).foreach { case (x, y) =>
-          putPool(L3IsoHuff.encode(12)((math.abs(x), math.abs(y))))
-          if (x != 0) putPoolBit(if (x < 0) 1 else 0)
-          if (y != 0) putPoolBit(if (y < 0) 1 else 0)
+          pool.str(L3IsoHuff.encode(12)((math.abs(x), math.abs(y))))
+          if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
+          if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
         }
         quads(f, g).foreach { q =>
           var idx = 0
           q.foreach(v => idx = (idx << 1) | (if (v != 0) 1 else 0))
-          putPool(L3IsoHuff.quadAEncode(idx))
-          q.foreach(v => if (v != 0) putPoolBit(if (v < 0) 1 else 0))
+          pool.str(L3IsoHuff.quadAEncode(idx))
+          q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
         }
       }
     }
+    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
     (0 until nFrames).foreach { f =>
-      var bitPos = f * frameLen * 8
-      def put(v: Long, n: Int): Unit = {
-        var i = n - 1
-        while (i >= 0) {
-          if (((v >> i) & 1) == 1)
-            out(bitPos >> 3) =
-              (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-          bitPos += 1; i -= 1
-        }
-      }
-      put(0xff, 8); put(0xfb, 8)
-      put(0xb4, 8); put(0xc0, 8)
-      put(0, 9); put(0, 5); put(0, 4)
+      out.pos = f * frameLen * 8L
+      out.bits(0xff, 8); out.bits(0xfb, 8)
+      out.bits(0xb4, 8); out.bits(0xc0, 8)
+      out.bits(0, 9); out.bits(0, 5); out.bits(0, 4)
       (0 until 2).foreach { g =>
-        put(huffBits(f, g), 12)
-        put(pairs(f, g).size, 9)
-        put(gainOf(f, g), 8)
-        put(0, 4)                        // scalefac_compress 0
-        put(0, 1)                        // no window switching
-        put(12, 5); put(12, 5); put(12, 5) // REAL table 12, all regions
-        put(4, 4); put(3, 3)             // region0_count 4, region1_count 3
-        put(0, 1)                        // preflag 0
-        put(1, 1)                        // scalefac_scale 1
-        put(0, 1)                        // count1 table A (REAL)
+        out.bits(huffBits(f, g), 12)
+        out.bits(pairs(f, g).size, 9)
+        out.bits(gainOf(f, g), 8)
+        out.bits(0, 4) // scalefac_compress 0
+        out.bits(0, 1) // no window switching
+        // REAL table 12, all regions
+        out.bits(12, 5); out.bits(12, 5); out.bits(12, 5)
+        out.bits(4, 4); out.bits(3, 3) // region0_count 4, region1_count 3
+        out.bits(0, 1)                 // preflag 0
+        out.bits(1, 1)                 // scalefac_scale 1
+        out.bits(0, 1)                 // count1 table A (REAL)
       }
-      var b = 0
-      while (b < cap * 8) {
-        if (poolBits(f * cap * 8 + b) == 1)
-          out(bitPos >> 3) =
-            (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-        bitPos += 1; b += 1
-      }
+      out.bytes(main, f * cap, cap)
     }
-    out
+    out.pos = nFrames * frameLen * 8L
+    out.toBytes
   }
 
   /** Fixture for the RUNTIME-LOADED table path ([[L3IsoHuff.load]],
@@ -4835,23 +4501,8 @@ object Multimodal {
                           linbits1: Int): Array[Byte] = {
     val frameLen = 576
     val cap = frameLen - 21
-    val out = new Array[Byte](frameLen * nFrames)
-    val poolBits = new Array[Byte](cap * nFrames * 8)
-    var poolPos = 0
-    def putPool(w: String): Unit = {
-      var i = 0
-      while (i < w.length) {
-        if (w.charAt(i) == '1') poolBits(poolPos) = 1
-        poolPos += 1; i += 1
-      }
-    }
-    def putPoolBits(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        if (((v >> i) & 1) == 1) poolBits(poolPos) = 1
-        poolPos += 1; i -= 1
-      }
-    }
+    val out = new BitWriter
+    val pool = new BitWriter // the main-data reservoir
     val sfb48 = L3IsoSynth.sfbLong(48000)
     val b0 = sfb48(5)  // region0_count 4 → boundary line 20
     val b1 = sfb48(9)  // region1_count 3 → boundary line 42
@@ -4898,59 +4549,46 @@ object Multimodal {
       pb + qb
     }
     (0 until nFrames).foreach { f =>
-      poolPos = f * cap * 8
+      pool.pos = f * cap * 8L
       (0 until 2).foreach { g =>
         pairs(f, g).zipWithIndex.foreach { case ((x, y), k) =>
           val ax = math.abs(x); val ay = math.abs(y)
-          putPool(enc((math.min(ax, 15), math.min(ay, 15))))
-          if (escBits(k, ax) > 0) putPoolBits(ax - 15, linbits1)
-          if (x != 0) putPoolBits(if (x < 0) 1 else 0, 1)
-          if (escBits(k, ay) > 0) putPoolBits(ay - 15, linbits1)
-          if (y != 0) putPoolBits(if (y < 0) 1 else 0, 1)
+          pool.str(enc((math.min(ax, 15), math.min(ay, 15))))
+          if (escBits(k, ax) > 0) pool.bits(ax - 15, linbits1)
+          if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
+          if (escBits(k, ay) > 0) pool.bits(ay - 15, linbits1)
+          if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
         }
         quads(f, g).foreach { q =>
           var idx = 0
           q.foreach(v => idx = (idx << 1) | (if (v != 0) 1 else 0))
-          putPool(L3IsoHuff.quadAEncode(idx))
-          q.foreach(v => if (v != 0) putPoolBits(if (v < 0) 1 else 0, 1))
+          pool.str(L3IsoHuff.quadAEncode(idx))
+          q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
         }
       }
     }
+    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
     (0 until nFrames).foreach { f =>
-      var bitPos = f * frameLen * 8
-      def put(v: Long, n: Int): Unit = {
-        var i = n - 1
-        while (i >= 0) {
-          if (((v >> i) & 1) == 1)
-            out(bitPos >> 3) =
-              (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-          bitPos += 1; i -= 1
-        }
-      }
-      put(0xff, 8); put(0xfb, 8)
-      put(0xb4, 8); put(0xc0, 8)
-      put(0, 9); put(0, 5); put(0, 4)
+      out.pos = f * frameLen * 8L
+      out.bits(0xff, 8); out.bits(0xfb, 8)
+      out.bits(0xb4, 8); out.bits(0xc0, 8)
+      out.bits(0, 9); out.bits(0, 5); out.bits(0, 4)
       (0 until 2).foreach { g =>
-        put(huffBits(f, g), 12)
-        put(pairs(f, g).size, 9)
-        put(gainOf(f, g), 8)
-        put(0, 4)                        // scalefac_compress 0
-        put(0, 1)                        // no window switching
-        put(t0, 5); put(t1, 5); put(t0, 5) // LOADED table ids
-        put(4, 4); put(3, 3)             // region0_count 4, region1_count 3
-        put(0, 1)                        // preflag 0
-        put(1, 1)                        // scalefac_scale 1
-        put(0, 1)                        // count1 table A (REAL)
+        out.bits(huffBits(f, g), 12)
+        out.bits(pairs(f, g).size, 9)
+        out.bits(gainOf(f, g), 8)
+        out.bits(0, 4)                                    // scalefac_compress 0
+        out.bits(0, 1)                                    // no window switching
+        out.bits(t0, 5); out.bits(t1, 5); out.bits(t0, 5) // LOADED table ids
+        out.bits(4, 4); out.bits(3, 3)                    // region0_count 4, region1_count 3
+        out.bits(0, 1)                                    // preflag 0
+        out.bits(1, 1)                                    // scalefac_scale 1
+        out.bits(0, 1)                                    // count1 table A (REAL)
       }
-      var b = 0
-      while (b < cap * 8) {
-        if (poolBits(f * cap * 8 + b) == 1)
-          out(bitPos >> 3) =
-            (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-        bitPos += 1; b += 1
-      }
+      out.bytes(main, f * cap, cap)
     }
-    out
+    out.pos = nFrames * frameLen * 8L
+    out.toBytes
   }
 
   /** The 44.1 kHz twin of [[layer3HuffRealBytes]] (round 14): a mono
@@ -5013,56 +4651,46 @@ object Multimodal {
     val lens =
       if (sr32) Array.fill(nFrames)(864) // 144·192000/32000, integral
       else Array.tabulate(nFrames)(f => 626 + f % 2)
-    val out = new Array[Byte](lens.sum)
+    val out = new BitWriter
     var base = 0
     (0 until nFrames).foreach { f =>
-      var bitPos = base * 8
-      def put(v: Long, n: Int): Unit = {
-        var i = n - 1
-        while (i >= 0) {
-          if (((v >> i) & 1) == 1)
-            out(bitPos >> 3) =
-              (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-          bitPos += 1; i -= 1
-        }
-      }
-      def putStr(w: String): Unit =
-        w.foreach(c => put(if (c == '1') 1 else 0, 1))
-      put(0xff, 8); put(0xfb, 8)
+      out.pos = base * 8L
+      out.bits(0xff, 8); out.bits(0xfb, 8)
       // br idx 11 (192k); sr idx 0 (44.1, padding alternates) or 2 (32k)
-      put(if (sr32) 0xb8 else 0xb0 | ((f % 2) << 1), 8)
-      put(0xc0, 8)                  // mono
-      put(0, 9); put(0, 5); put(0, 4) // mdb 0, private, scfsi 0
+      out.bits(if (sr32) 0xb8 else 0xb0 | ((f % 2) << 1), 8)
+      out.bits(0xc0, 8)             // mono
+      out.bits(0, 9); out.bits(0, 5); out.bits(0, 4) // mdb 0, private, scfsi 0
       (0 until 2).foreach { g =>
-        put(21 + huffBits(f, g), 12)  // 21 scalefactor bits + entropy
-        put(pairs(f, g).size, 9)
-        put(gainOf(f, g), 8)
-        put(5, 4)                     // scalefac_compress 5 → slen 1/1
-        put(0, 1)                     // no window switching
-        put(7, 5); put(10, 5); put(9, 5) // REAL tables 7 / 10 / 9
-        put(4, 4); put(3, 3)          // region0_count 4, region1_count 3
-        put(0, 1)                     // preflag 0
-        put(1, 1)                     // scalefac_scale 1
-        put(0, 1)                     // count1 table A
+        out.bits(21 + huffBits(f, g), 12) // 21 scalefactor bits + entropy
+        out.bits(pairs(f, g).size, 9)
+        out.bits(gainOf(f, g), 8)
+        out.bits(5, 4) // scalefac_compress 5 → slen 1/1
+        out.bits(0, 1) // no window switching
+        out.bits(7, 5); out.bits(10, 5); out.bits(9, 5) // REAL tables 7 / 10 / 9
+        out.bits(4, 4); out.bits(3, 3) // region0_count 4, region1_count 3
+        out.bits(0, 1)                 // preflag 0
+        out.bits(1, 1)                 // scalefac_scale 1
+        out.bits(0, 1)                 // count1 table A
       }
       // main data immediately after side info (mdb 0, no reservoir)
       (0 until 2).foreach { g =>
-        (0 until 21).foreach(b => put(sfOf(f, g, b), 1))
+        (0 until 21).foreach(b => out.bits(sfOf(f, g, b), 1))
         pairs(f, g).zipWithIndex.foreach { case ((x, y), k) =>
-          putStr(L3IsoHuff.encode(tabOf(k))((math.abs(x), math.abs(y))))
-          if (x != 0) put(if (x < 0) 1 else 0, 1)
-          if (y != 0) put(if (y < 0) 1 else 0, 1)
+          out.str(L3IsoHuff.encode(tabOf(k))((math.abs(x), math.abs(y))))
+          if (x != 0) out.bits(if (x < 0) 1 else 0, 1)
+          if (y != 0) out.bits(if (y < 0) 1 else 0, 1)
         }
         quads(f, g).foreach { q =>
           var idx = 0
           q.foreach(v => idx = (idx << 1) | (if (v != 0) 1 else 0))
-          putStr(L3IsoHuff.quadAEncode(idx))
-          q.foreach(v => if (v != 0) put(if (v < 0) 1 else 0, 1))
+          out.str(L3IsoHuff.quadAEncode(idx))
+          q.foreach(v => if (v != 0) out.bits(if (v < 0) 1 else 0, 1))
         }
       }
       base += lens(f)
     }
-    out
+    out.pos = lens.sum * 8L
+    out.toBytes
   }
 
   /** Joint-stereo (MS) twin of [[layer3BytesFull]]: 48 kHz / 192 kbps
@@ -5077,16 +4705,8 @@ object Multimodal {
                         isPos67: Boolean = false): Array[Byte] = {
     val frameLen = 576
     val cap = frameLen - 36 // 4 header + 32 side info
-    val out = new Array[Byte](frameLen * nFrames)
-    val poolBits = new Array[Byte](cap * nFrames * 8)
-    var poolPos = 0
-    def putPool(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        if (((v >> i) & 1) == 1) poolBits(poolPos) = 1
-        poolPos += 1; i -= 1
-      }
-    }
+    val out = new BitWriter
+    val pool = new BitWriter // the main-data reservoir
     // intensity fixture: scfsi off (all scalefactors transmitted — the
     // right channel's high-band slots carry is_pos), right channel
     // band-limited to lines < 16 with no count1 region.
@@ -5146,11 +4766,11 @@ object Multimodal {
     (0 until nFrames).foreach { f =>
       val nominal = f * cap
       val want = if (f == 0) 0 else ((seed * 7 + f * 13) % 40).toInt
-      val avail = nominal - (poolPos + 7) / 8
+      val avail = nominal - ((pool.pos + 7) / 8).toInt
       val mdb = math.min(want, math.max(avail, 0))
       mdbs(f) = mdb
       val startBit = (nominal - mdb) * 8
-      while (poolPos < startBit) { poolPos += 1 }
+      pool.pos = math.max(pool.pos, startBit)
       (0 until 2).foreach { g =>
         (0 until 2).foreach { ch =>
           var band = 0
@@ -5158,7 +4778,7 @@ object Multimodal {
             val group = if (band < 6) 0 else if (band < 11) 1
                         else if (band < 16) 2 else 3
             if (g == 0 || ((scfsiOf(f, ch) >> (3 - group)) & 1) == 0)
-              putPool(sfBase(f, if (g == 1 &&
+              pool.bits(sfBase(f, if (g == 1 &&
                 ((scfsiOf(f, ch) >> (3 - group)) & 1) == 1) 0 else g,
                 band, ch), slenOf(ch))
             band += 1
@@ -5167,58 +4787,45 @@ object Multimodal {
             val c = if (x == 0 && y == 0) "1"
                     else if (y == 0) "01"
                     else if (x == 0) "001" else "000"
-            c.foreach(cc => putPool(if (cc == '1') 1 else 0, 1))
-            if (x != 0) putPool(if (x < 0) 1 else 0, 1)
-            if (y != 0) putPool(if (y < 0) 1 else 0, 1)
+            pool.str(c)
+            if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
+            if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
           }
           quads(f, g, ch).foreach { q =>
             var code = 0
             q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-            putPool(code, 4)
-            q.foreach(v => if (v != 0) putPool(if (v < 0) 1 else 0, 1))
+            pool.bits(code, 4)
+            q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
           }
         }
       }
     }
+    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
     (0 until nFrames).foreach { f =>
-      var bitPos = f * frameLen * 8
-      def put(v: Long, n: Int): Unit = {
-        var i = n - 1
-        while (i >= 0) {
-          if (((v >> i) & 1) == 1)
-            out(bitPos >> 3) =
-              (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-          bitPos += 1; i -= 1
-        }
-      }
-      put(0xff, 8); put(0xfb, 8)
-      put(0xb4, 8)
-      put(if (intensity) 0x50 else 0x60, 8) // joint stereo + MS/intensity
-      put(mdbs(f), 9); put(0, 3)
-      (0 until 2).foreach(ch => put(scfsiOf(f, ch), 4))
+      out.pos = f * frameLen * 8L
+      out.bits(0xff, 8); out.bits(0xfb, 8)
+      out.bits(0xb4, 8)
+      out.bits(if (intensity) 0x50 else 0x60, 8) // joint stereo + MS/intensity
+      out.bits(mdbs(f), 9); out.bits(0, 3)
+      (0 until 2).foreach(ch => out.bits(scfsiOf(f, ch), 4))
       (0 until 2).foreach { g =>
         (0 until 2).foreach { ch =>
-          put(sfBits(f, g, ch) + huffBits(f, g, ch), 12)
-          put(pairs(f, g, ch).size, 9)
-          put(gainOf(f, g, ch), 8)
-          put(if (isPos67 && ch == 1) 13 else 9, 4)
-          put(0, 1)
-          put(1, 5); put(1, 5); put(1, 5)
-          put(4, 4); put(3, 3)
-          put(preflagOf(f, g, ch), 1)
-          put(1, 1)
-          put(1, 1)
+          out.bits(sfBits(f, g, ch) + huffBits(f, g, ch), 12)
+          out.bits(pairs(f, g, ch).size, 9)
+          out.bits(gainOf(f, g, ch), 8)
+          out.bits(if (isPos67 && ch == 1) 13 else 9, 4)
+          out.bits(0, 1)
+          out.bits(1, 5); out.bits(1, 5); out.bits(1, 5)
+          out.bits(4, 4); out.bits(3, 3)
+          out.bits(preflagOf(f, g, ch), 1)
+          out.bits(1, 1)
+          out.bits(1, 1)
         }
       }
-      var b = 0
-      while (b < cap * 8) {
-        if (poolBits(f * cap * 8 + b) == 1)
-          out(bitPos >> 3) =
-            (out(bitPos >> 3) | (1 << (7 - (bitPos & 7)))).toByte
-        bitPos += 1; b += 1
-      }
+      out.bytes(main, f * cap, cap)
     }
-    out
+    out.pos = nFrames * frameLen * 8L
+    out.toBytes
   }
 
   /** One entropy-decoded MPEG-1 intra block: macroblock index, block
@@ -5284,54 +4891,36 @@ object Multimodal {
   def mpeg1IFrameDecode(bytes: Array[Byte])
       : Option[((Int, Int), Seq[MpegIBlock])] = {
     if (bytes.length < 12) return None
-    var bitPos = 0
-    def bits(n: Int): Int = {
-      var v = 0; var i = 0
-      while (i < n) {
-        v = (v << 1) | ((bytes(bitPos >> 3) >> (7 - (bitPos & 7))) & 1)
-        bitPos += 1; i += 1
-      }
-      v
-    }
-    def alignByte(): Unit = bitPos = (bitPos + 7) & ~7
+    val r = new BitReader(bytes)
     try {
-      if (bits(32) != 0x000001b3) return None
-      val w = bits(12); val h = bits(12)
-      bits(4); bits(4); bits(18); bits(1); bits(10); bits(1)
-      if (bits(1) == 1) (0 until 64).foreach(_ => bits(8)) // intra matrix
-      if (bits(1) == 1) (0 until 64).foreach(_ => bits(8)) // non-intra
-      alignByte()
-      var code = bits(32)
+      if (r.bits(32) != 0x000001b3) return None
+      val w = r.bits(12); val h = r.bits(12)
+      r.bits(4); r.bits(4); r.bits(18); r.bits(1); r.bits(10); r.bits(1)
+      if (r.bits(1) == 1) (0 until 64).foreach(_ => r.bits(8)) // intra matrix
+      if (r.bits(1) == 1) (0 until 64).foreach(_ => r.bits(8)) // non-intra
+      r.byteAlign()
+      var code = r.bits(32)
       if (code == 0x000001b8) { // GOP header
-        bits(27); alignByte(); code = bits(32)
+        r.bits(27); r.byteAlign(); code = r.bits(32)
       }
       if (code != 0x00000100) return None // first picture start
       val nMb = (w / 16) * (h / 16)
       val blocks = Seq.newBuilder[MpegIBlock]
-      def vlc[A](table: Seq[(String, A)]): A = {
-        val sb = new java.lang.StringBuilder(12)
-        while (true) {
-          sb.append(if (bits(1) == 1) '1' else '0')
-          val s = sb.toString
-          table.find(_._1 == s) match {
-            case Some((_, a)) => return a
-            case None => if (s.length > 12) throw new RuntimeException("vlc")
-          }
-        }
-        throw new IllegalStateException
-      }
+      def vlc[A](table: Seq[(String, A)]): A =
+        r.code(c => table.find(_._1 == c).map(_._2), 13)
+          .getOrElse(throw new RuntimeException("vlc"))
       var pic = 0
       var morePictures = true
       while (morePictures) {
-        bits(10)
-        if (bits(3) != 1) return None // I pictures only
-        bits(16)
-        while (bits(1) == 1) bits(8) // extra_information_picture
-        alignByte()
-        val slice = bits(32)
+        r.bits(10)
+        if (r.bits(3) != 1) return None // I pictures only
+        r.bits(16)
+        while (r.bits(1) == 1) r.bits(8) // extra_information_picture
+        r.byteAlign()
+        val slice = r.bits(32)
         if (slice < 0x00000101 || slice > 0x000001af) return None
-        var qscale = bits(5)
-        while (bits(1) == 1) bits(8) // extra_information_slice
+        var qscale = r.bits(5)
+        while (r.bits(1) == 1) r.bits(8) // extra_information_slice
         val pred = Array(128, 128, 128) // DC predictors, reset per slice
         var mb = 0
         while (mb < nMb) {
@@ -5339,7 +4928,7 @@ object Multimodal {
           // encoder emits 1 but the table subset is decoded honestly)
           vlc(Seq("1" -> 1, "011" -> 2, "010" -> 3))
           // macroblock_type for I pictures: '1' intra, '01' intra+quant
-          if (vlc(Seq("1" -> false, "01" -> true))) qscale = bits(5)
+          if (vlc(Seq("1" -> false, "01" -> true))) qscale = r.bits(5)
           var blk = 0
           while (blk < 6) {
             val comp = if (blk < 4) 0 else blk - 3
@@ -5348,7 +4937,7 @@ object Multimodal {
             val diff =
               if (size == 0) 0
               else {
-                val v = bits(size)
+                val v = r.bits(size)
                 if (v >= (1 << (size - 1))) v else v - (1 << size) + 1
               }
             pred(comp) += diff
@@ -5362,13 +4951,13 @@ object Multimodal {
               step match {
                 case (-1, _) => eob = true
                 case (-2, _) => // escape: run(6) + 8-bit signed level
-                  val run = bits(6)
-                  val raw = bits(8)
+                  val run = r.bits(6)
+                  val raw = r.bits(8)
                   val level = if (raw >= 128) raw - 256 else raw
                   pos += run + 1
                   acSum += dequantAc0(level, qscale, pos); nAc += 1
                 case (run, mag) =>
-                  val level = if (bits(1) == 1) -mag else mag
+                  val level = if (r.bits(1) == 1) -mag else mag
                   pos += run + 1
                   acSum += dequantAc0(level, qscale, pos); nAc += 1
               }
@@ -5379,9 +4968,9 @@ object Multimodal {
           }
           mb += 1
         }
-        alignByte()
-        morePictures = bitPos + 32 <= bytes.length * 8 &&
-          bits(32) == 0x00000100
+        r.byteAlign()
+        morePictures = r.remaining >= 32 &&
+          r.bits(32) == 0x00000100
         if (morePictures) pic += 1
       }
       Some(((w, h), blocks.result()))
@@ -5399,6 +4988,19 @@ object Multimodal {
     if (level < 0) -a2.toLong else a2.toLong
   }
 
+  /** An MPEG-1 video sequence header (11172-2 §2.4.2.3): size, aspect
+    * and picture-rate codes 1, variable bit rate (0x3FFFF), marker, VBV
+    * buffer 0, not constrained, default quantizer matrices. */
+  private def mpeg1SequenceHeader(out: BitWriter, width: Int,
+                                  height: Int): Unit = {
+    out.bits(0x000001b3L, 32)
+    out.bits(width, 12); out.bits(height, 12)
+    out.bits(1, 4); out.bits(1, 4); out.bits(0x3ffff, 18); out.bits(1, 1)
+    out.bits(0, 10)
+    out.bits(0, 1); out.bits(0, 1); out.bits(0, 1) // constrained, loadI, loadNI
+    out.byteAlign()
+  }
+
   /** A real MPEG-1 video I-frame elementary stream (sequence header +
     * I-picture + one slice of intra macroblocks + sequence end) with
     * genuinely VLC-coded deterministic content — the encode half of the
@@ -5412,30 +5014,23 @@ object Multimodal {
   def mpeg1IFrameBytes(seed: Long, width: Int = 32, height: Int = 32,
                        nPictures: Int = 1): Array[Byte] = {
     require(width % 16 == 0 && height % 16 == 0 && nPictures >= 1)
-    val bits = new scala.collection.mutable.ArrayBuffer[Boolean](1 << 14)
-    def put(v: Long, n: Int): Unit =
-      (n - 1 to 0 by -1).foreach(i => bits += ((v >> i) & 1) == 1)
-    def putStr(s: String): Unit = s.foreach(c => bits += c == '1')
-    def align(): Unit = while (bits.length % 8 != 0) bits += false
-    put(0x000001b3L, 32)
-    put(width, 12); put(height, 12)
-    put(1, 4); put(1, 4); put(0x3ffff, 18); put(1, 1); put(0, 10)
-    put(0, 1); put(0, 1); put(0, 1) // constrained, loadI, loadNI
-    align()
+    val out = new BitWriter
+    mpeg1SequenceHeader(out, width, height)
     (0 until nPictures).foreach { pic =>
       // temporal_reference carries the picture index (so a start-code
       // frame index recovers it without entropy decode)
-      put(0x00000100L, 32); put(pic, 10); put(1, 3); put(0xffff, 16)
-      put(0, 1)
-      align()
-      put(0x00000101L, 32)
+      out.bits(0x00000100L, 32); out.bits(pic, 10); out.bits(1, 3)
+      out.bits(0xffff, 16)
+      out.bits(0, 1)
+      out.byteAlign()
+      out.bits(0x00000101L, 32)
       val qscale = 8
-      put(qscale, 5); put(0, 1)
+      out.bits(qscale, 5); out.bits(0, 1)
       val pred = Array(128, 128, 128)
       val nMb = (width / 16) * (height / 16)
       (0 until nMb).foreach { m =>
-        putStr("1") // address increment 1
-        putStr("1") // intra
+        out.str("1") // address increment 1
+        out.str("1") // intra
         (0 until 6).foreach { b =>
           val comp = if (b < 4) 0 else b - 3
           val dcq = ((seed * 7 + pic * 37 + m * 13 + b * 29) % 256).toInt
@@ -5444,9 +5039,9 @@ object Multimodal {
           val size =
             if (diff == 0) 0
             else 32 - Integer.numberOfLeadingZeros(math.abs(diff))
-          putStr(if (b < 4) DcLuma(size) else DcChroma(size))
+          out.str(if (b < 4) DcLuma(size) else DcChroma(size))
           if (size > 0)
-            put(if (diff > 0) diff else diff + (1 << size) - 1, size)
+            out.bits(if (diff > 0) diff else diff + (1 << size) - 1, size)
           // AC: five disjoint-range zigzag positions, ascending
           val ps = Seq(
             1 + ((seed + m + b) % 4).toInt, 6 + ((seed * 3 + m) % 6).toInt,
@@ -5461,22 +5056,18 @@ object Multimodal {
             prev = p
             AcByRunLevel.get((run, math.abs(level))) match {
               case Some(code) =>
-                putStr(code); put(if (level < 0) 1 else 0, 1)
+                out.str(code); out.bits(if (level < 0) 1 else 0, 1)
               case None =>
-                putStr("000001"); put(run, 6); put(level & 0xff, 8)
+                out.str("000001"); out.bits(run, 6); out.bits(level & 0xff, 8)
             }
           }
-          putStr("10") // EOB
+          out.str("10") // EOB
         }
       }
-      align()
+      out.byteAlign()
     }
-    put(0x000001b7L, 32) // sequence end
-    val out = new Array[Byte](bits.length / 8)
-    bits.zipWithIndex.foreach { case (bit, i) =>
-      if (bit) out(i >> 3) = (out(i >> 3) | (1 << (7 - (i & 7)))).toByte
-    }
-    out
+    out.bits(0x000001b7L, 32) // sequence end
+    out.toBytes
   }
 
   /** Start-code frame index of an MPEG-1 video elementary stream — the
@@ -5698,37 +5289,19 @@ object Multimodal {
   def mpeg1IPDecode(bytes: Array[Byte])
       : Option[((Int, Int), Seq[MpegPMb])] = {
     if (bytes.length < 12) return None
-    var bitPos = 0
-    def bits(n: Int): Int = {
-      var v = 0; var i = 0
-      while (i < n) {
-        v = (v << 1) | ((bytes(bitPos >> 3) >> (7 - (bitPos & 7))) & 1)
-        bitPos += 1; i += 1
-      }
-      v
-    }
-    def alignByte(): Unit = bitPos = (bitPos + 7) & ~7
-    def vlc[A](table: Seq[(String, A)]): A = {
-      val sb = new java.lang.StringBuilder(12)
-      while (true) {
-        sb.append(if (bits(1) == 1) '1' else '0')
-        table.find(_._1 == sb.toString) match {
-          case Some((_, a)) => return a
-          case None =>
-            if (sb.length > 12) throw new RuntimeException("vlc")
-        }
-      }
-      throw new IllegalStateException
-    }
+    val r = new BitReader(bytes)
+    def vlc[A](table: Seq[(String, A)]): A =
+      r.code(c => table.find(_._1 == c).map(_._2), 13)
+        .getOrElse(throw new RuntimeException("vlc"))
     try {
-      if (bits(32) != 0x000001b3) return None
-      val w = bits(12); val h = bits(12)
+      if (r.bits(32) != 0x000001b3) return None
+      val w = r.bits(12); val h = r.bits(12)
       if (w % 16 != 0 || h % 16 != 0 || w == 0 || h == 0 ||
           w > 4096 || h > 4096) return None
-      bits(4); bits(4); bits(18); bits(1); bits(10); bits(1)
-      if (bits(1) == 1) (0 until 64).foreach(_ => bits(8))
-      if (bits(1) == 1) (0 until 64).foreach(_ => bits(8))
-      alignByte()
+      r.bits(4); r.bits(4); r.bits(18); r.bits(1); r.bits(10); r.bits(1)
+      if (r.bits(1) == 1) (0 until 64).foreach(_ => r.bits(8))
+      if (r.bits(1) == 1) (0 until 64).foreach(_ => r.bits(8))
+      r.byteAlign()
       val mbw = w / 16; val nMb = mbw * (h / 16)
       val cw = w / 2; val chH = h / 2
       // planes: luma + Cb + Cr; refY.. = latest I/P reference (backward
@@ -5779,31 +5352,23 @@ object Multimodal {
       def decodeNonIntraBlock(qs: Int): Seq[(Int, Long)] = {
         val coeffs = Seq.newBuilder[(Int, Long)]
         var pos =
-          if (bits(1) == 1) {
-            val lvl = if (bits(1) == 1) -1 else 1
+          if (r.bits(1) == 1) {
+            val lvl = if (r.bits(1) == 1) -1 else 1
             coeffs += ((0, dequantNonIntra(lvl, qs)))
             0
           } else {
             val zeroTable = Seq("000001" -> ((-2, 0))) ++
               AcCodes.filter(_._1.startsWith("0"))
-            val sb = new java.lang.StringBuilder(12).append('0')
-            var hit: Option[(Int, Int)] = None
-            while (hit.isEmpty) {
-              zeroTable.find(_._1 == sb.toString) match {
-                case Some((_, a)) => hit = Some(a)
-                case None =>
-                  if (sb.length > 12) throw new RuntimeException("vlc")
-                  sb.append(if (bits(1) == 1) '1' else '0')
-              }
-            }
-            hit.get match {
+            // the leading 0 is read; no code is "0" alone
+            r.code(c => zeroTable.find(_._1 == "0" + c).map(_._2), 12)
+              .getOrElse(throw new RuntimeException("vlc")) match {
               case (-2, _) =>
-                val run = bits(6); val raw = bits(8)
+                val run = r.bits(6); val raw = r.bits(8)
                 val level = if (raw >= 128) raw - 256 else raw
                 coeffs += ((run, dequantNonIntra(level, qs)))
                 run
               case (run, mag) =>
-                val level = if (bits(1) == 1) -mag else mag
+                val level = if (r.bits(1) == 1) -mag else mag
                 coeffs += ((run, dequantNonIntra(level, qs)))
                 run
             }
@@ -5815,12 +5380,12 @@ object Multimodal {
           step match {
             case (-1, _) => eob = true
             case (-2, _) =>
-              val run = bits(6); val raw = bits(8)
+              val run = r.bits(6); val raw = r.bits(8)
               val level = if (raw >= 128) raw - 256 else raw
               pos += run + 1
               coeffs += ((pos, dequantNonIntra(level, qs)))
             case (run, mag) =>
-              val level = if (bits(1) == 1) -mag else mag
+              val level = if (r.bits(1) == 1) -mag else mag
               pos += run + 1
               coeffs += ((pos, dequantNonIntra(level, qs)))
           }
@@ -5845,41 +5410,41 @@ object Multimodal {
 
       var pic = 0
       var morePictures = true
-      var code = bits(32)
-      if (code == 0x000001b8) { bits(27); alignByte(); code = bits(32) }
+      var code = r.bits(32)
+      if (code == 0x000001b8) { r.bits(27); r.byteAlign(); code = r.bits(32) }
       if (code != 0x00000100) return None
       while (morePictures) {
-        bits(10) // temporal_reference
-        val ptype = bits(3)
+        r.bits(10) // temporal_reference
+        val ptype = r.bits(3)
         if (ptype < 1 || ptype > 4) return None // I/P/B/D
         if (ptype == 2 && refY == null) return None // P needs a reference
         if (ptype == 3 && (refY == null || prevY == null)) return None
-        bits(16) // vbv_delay
+        r.bits(16) // vbv_delay
         // f_code 1..7 (§2.4.3.1): r_size = f_code − 1 residual bits per
         // nonzero motion code, delta = 1 + f·(|code|−1) + residual,
         // predictors wrap into [−16f, 16f−1]
         var rSizeF = 0; var rSizeB = 0
         if (ptype == 2 || ptype == 3) {
-          if (bits(1) != 0) return None // full_pel_forward_vector
-          val fc = bits(3)
+          if (r.bits(1) != 0) return None // full_pel_forward_vector
+          val fc = r.bits(3)
           if (fc < 1) return None // forbidden forward_f_code
           rSizeF = fc - 1
         }
         if (ptype == 3) {
-          if (bits(1) != 0) return None // full_pel_backward_vector
-          val fc = bits(3)
+          if (r.bits(1) != 0) return None // full_pel_backward_vector
+          val fc = r.bits(3)
           if (fc < 1) return None // forbidden backward_f_code
           rSizeB = fc - 1
         }
         val fF = 1 << rSizeF; val fB = 1 << rSizeB
-        while (bits(1) == 1) bits(8) // extra_information_picture
-        alignByte()
-        val slice = bits(32)
+        while (r.bits(1) == 1) r.bits(8) // extra_information_picture
+        r.byteAlign()
+        val slice = r.bits(32)
         if (slice < 0x00000101 || slice > 0x000001af) return None
         // the first slice must cover the picture's first macroblock row
         if ((slice & 0xff) != 1) return None
-        var qscale = bits(5)
-        while (bits(1) == 1) bits(8)
+        var qscale = r.bits(5)
+        while (r.bits(1) == 1) r.bits(8)
         val newY = new Array[Int](w * h)
         val newCb = new Array[Int](cw * chH)
         val newCr = new Array[Int](cw * chH)
@@ -6002,31 +5567,21 @@ object Multimodal {
           // predictors, motion-vector predictors, and the B
           // skipped-macroblock mode memory.
           if (mb > 0) {
-            val save = bitPos
-            val aligned = (bitPos + 7) & ~7
-            if (aligned + 32 <= bytes.length * 8) {
-              var pad0 = true
-              var pb = bitPos
-              while (pb < aligned) {
-                if (((bytes(pb >> 3) >> (7 - (pb & 7))) & 1) != 0)
-                  pad0 = false
-                pb += 1
-              }
-              if (pad0) {
-                bitPos = aligned
-                val code = bits(32)
-                if (code >= 0x00000101 && code <= 0x000001af) {
-                  if ((code & 0xff) - 1 != mb / mbw)
-                    throw new RuntimeException("slicegap")
-                  qscale = bits(5)
-                  while (bits(1) == 1) bits(8)
-                  pred(0) = 128; pred(1) = 128; pred(2) = 128
-                  pmvFx = 0; pmvFy = 0; pmvBx = 0; pmvBy = 0
-                  lastFwd = false; lastBwd = false
-                  sliceFirstInc = mb % mbw + 1
-                } else bitPos = save
-              }
-            }
+            val save = r.pos
+            // all-zero padding to the byte boundary, then a start code
+            if (((save + 7) & ~7L) + 32 <= r.end && r.byteAlign() == 0) {
+              val code = r.bits(32)
+              if (code >= 0x00000101 && code <= 0x000001af) {
+                if ((code & 0xff) - 1 != mb / mbw)
+                  throw new RuntimeException("slicegap")
+                qscale = r.bits(5)
+                while (r.bits(1) == 1) r.bits(8)
+                pred(0) = 128; pred(1) = 128; pred(2) = 128
+                pmvFx = 0; pmvFy = 0; pmvBx = 0; pmvBy = 0
+                lastFwd = false; lastBwd = false
+                sliceFirstInc = mb % mbw + 1
+              } else r.pos = save
+            } else r.pos = save
           }
           val incRaw = addrInc()
           val inc =
@@ -6095,7 +5650,7 @@ object Multimodal {
               val (bI, bQ, bF, bBk, bC) = vlc(BMbTypeCodes)
               (bI, bQ, bF, bBk, bC, false)
             }
-          if (withQuant) qscale = bits(5)
+          if (withQuant) qscale = r.bits(5)
           if (useFwd || useBwd) {
             // reconstruct differentially (§2.4.4.2): delta =
             // 1 + f·(|code|−1) + residual, predictor wraps into
@@ -6113,7 +5668,7 @@ object Multimodal {
             // f_code > 1 and code ≠ 0) r_size residual bits
             def readMv(rSize: Int): (Int, Int) = {
               val c = vlc(MotionCodes)
-              (c, if (rSize > 0 && c != 0) bits(rSize) else 0)
+              (c, if (rSize > 0 && c != 0) r.bits(rSize) else 0)
             }
             if (useFwd && !zeroVec) {
               val (mh, rh) = readMv(rSizeF); val (mv, rv) = readMv(rSizeF)
@@ -6165,7 +5720,7 @@ object Multimodal {
               val diff =
                 if (size == 0) 0
                 else {
-                  val v = bits(size)
+                  val v = r.bits(size)
                   if (v >= (1 << (size - 1))) v else v - (1 << size) + 1
                 }
               pred(comp) += diff
@@ -6182,13 +5737,13 @@ object Multimodal {
                   step match {
                     case (-1, _) => eob = true
                     case (-2, _) =>
-                      val run = bits(6)
-                      val raw = bits(8)
+                      val run = r.bits(6)
+                      val raw = r.bits(8)
                       val level = if (raw >= 128) raw - 256 else raw
                       pos += run + 1
                       coeffs += ((pos, dequantAc0(level, qscale, pos)))
                     case (run, mag) =>
-                      val level = if (bits(1) == 1) -mag else mag
+                      val level = if (r.bits(1) == 1) -mag else mag
                       pos += run + 1
                       coeffs += ((pos, dequantAc0(level, qscale, pos)))
                   }
@@ -6225,22 +5780,22 @@ object Multimodal {
               blk += 1
             }
             // D pictures close every macroblock with end_of_macroblock=1
-            if (ptype == 4 && bits(1) != 1)
+            if (ptype == 4 && r.bits(1) != 1)
               throw new RuntimeException("eomb")
             val (ys, yq) = mbLumaStats(newY, w, mbw, mb)
             out += MpegPMb(pic, mb, 0, 0, 0, ys, yq)
           }
           mb += 1
         }
-        alignByte()
+        r.byteAlign()
         if (!isB && ptype != 4) {
           // I/P become the new backward reference; the old one slides to
           // the forward slot. B and D pictures are never references.
           prevY = refY; prevCb = refCb; prevCr = refCr
           refY = newY; refCb = newCb; refCr = newCr
         }
-        morePictures = bitPos + 32 <= bytes.length * 8 &&
-          bits(32) == 0x00000100
+        morePictures = r.remaining >= 32 &&
+          r.bits(32) == 0x00000100
         if (morePictures) pic += 1
       }
       Some(((w, h), out.result()))
@@ -6303,17 +5858,9 @@ object Multimodal {
     * Vector ranges are chosen so every reference read is in-bounds. */
   def mpeg1IPBytes(seed: Long, withB: Boolean = false): Array[Byte] = {
     val width = 64; val height = 32
-    val bits = new scala.collection.mutable.ArrayBuffer[Boolean](1 << 14)
-    def put(v: Long, n: Int): Unit =
-      (n - 1 to 0 by -1).foreach(i => bits += ((v >> i) & 1) == 1)
-    def putStr(s: String): Unit = s.foreach(c => bits += c == '1')
-    def align(): Unit = while (bits.length % 8 != 0) bits += false
+    val out = new BitWriter
     val s = seed
-    put(0x000001b3L, 32)
-    put(width, 12); put(height, 12)
-    put(1, 4); put(1, 4); put(0x3ffff, 18); put(1, 1); put(0, 10)
-    put(0, 1); put(0, 1); put(0, 1)
-    align()
+    mpeg1SequenceHeader(out, width, height)
     val qscale = 8
     def putIntraMb(pic: Int, m: Int, pred: Array[Int]): Unit = {
       (0 until 6).foreach { b =>
@@ -6324,9 +5871,9 @@ object Multimodal {
         val size =
           if (diff == 0) 0
           else 32 - Integer.numberOfLeadingZeros(math.abs(diff))
-        putStr(if (b < 4) DcLuma(size) else DcChroma(size))
+        out.str(if (b < 4) DcLuma(size) else DcChroma(size))
         if (size > 0)
-          put(if (diff > 0) diff else diff + (1 << size) - 1, size)
+          out.bits(if (diff > 0) diff else diff + (1 << size) - 1, size)
         val ps = Seq(
           1 + ((s + m + b) % 4).toInt, 6 + ((s * 3 + m) % 6).toInt,
           15 + ((b * 5 + m) % 8).toInt, 30 + ((s + b * 7) % 10).toInt,
@@ -6340,27 +5887,28 @@ object Multimodal {
           prev = p
           AcByRunLevel.get((run, math.abs(level))) match {
             case Some(code) =>
-              putStr(code); put(if (level < 0) 1 else 0, 1)
+              out.str(code); out.bits(if (level < 0) 1 else 0, 1)
             case None =>
-              putStr("000001"); put(run, 6); put(level & 0xff, 8)
+              out.str("000001"); out.bits(run, 6); out.bits(level & 0xff, 8)
           }
         }
-        putStr("10")
+        out.str("10")
       }
     }
     // ---- I picture ----
-    put(0x00000100L, 32); put(0, 10); put(1, 3); put(0xffff, 16); put(0, 1)
-    align()
-    put(0x00000101L, 32); put(qscale, 5); put(0, 1)
+    out.bits(0x00000100L, 32); out.bits(0, 10); out.bits(1, 3)
+    out.bits(0xffff, 16); out.bits(0, 1)
+    out.byteAlign()
+    out.bits(0x00000101L, 32); out.bits(qscale, 5); out.bits(0, 1)
     val predI = Array(128, 128, 128)
-    (0 until 8).foreach { m => putStr("1"); putStr("1"); putIntraMb(0, m, predI) }
-    align()
+    (0 until 8).foreach { m => out.str("1"); out.str("1"); putIntraMb(0, m, predI) }
+    out.byteAlign()
     // ---- P picture ----
-    put(0x00000100L, 32); put(1, 10); put(2, 3); put(0xffff, 16)
-    put(0, 1); put(1, 3) // full_pel 0, forward_f_code 1
-    put(0, 1)
-    align()
-    put(0x00000101L, 32); put(qscale, 5); put(0, 1)
+    out.bits(0x00000100L, 32); out.bits(1, 10); out.bits(2, 3); out.bits(0xffff, 16)
+    out.bits(0, 1); out.bits(1, 3) // full_pel 0, forward_f_code 1
+    out.bits(0, 1)
+    out.byteAlign()
+    out.bits(0x00000101L, 32); out.bits(qscale, 5); out.bits(0, 1)
     val predP = Array(128, 128, 128)
     def mcode(v: Int): String = MotionCodes.find(_._2 == v).get._1
     val (v1x, v1y) = mpeg1PVec(s, 1)
@@ -6369,30 +5917,31 @@ object Multimodal {
     val (v6x, v6y) = mpeg1PVec(s, 6)
     val (v7x, v7y) = mpeg1PVec(s, 7)
     // mb0: intra
-    putStr("1"); putStr("00011"); putIntraMb(1, 0, predP)
+    out.str("1"); out.str("00011"); putIntraMb(1, 0, predP)
     // mb1: MC (PMV reset by intra → codes = v1)
-    putStr("1"); putStr("001"); putStr(mcode(v1x)); putStr(mcode(v1y))
+    out.str("1"); out.str("001"); out.str(mcode(v1x)); out.str(mcode(v1y))
     // mb2: MC, coded DIFFERENTIALLY against v1
-    putStr("1"); putStr("001")
-    putStr(mcode(v2x - v1x)); putStr(mcode(v2y - v1y))
+    out.str("1"); out.str("001")
+    out.str(mcode(v2x - v1x)); out.str(mcode(v2y - v1y))
     // mb3: skipped (mb4's increment is 2); mb4: MC (PMV reset by skip)
-    putStr("011"); putStr("001"); putStr(mcode(v4x)); putStr(mcode(v4y))
+    out.str("011"); out.str("001"); out.str(mcode(v4x)); out.str(mcode(v4y))
     // mb5: intra (resets PMV + DC predictors were reset after mb0)
     predP(0) = 128; predP(1) = 128; predP(2) = 128
-    putStr("1"); putStr("00011"); putIntraMb(1, 5, predP)
+    out.str("1"); out.str("00011"); putIntraMb(1, 5, predP)
     // mb6: MC; mb7: MC differential against v6
-    putStr("1"); putStr("001"); putStr(mcode(v6x)); putStr(mcode(v6y))
-    putStr("1"); putStr("001")
-    putStr(mcode(v7x - v6x)); putStr(mcode(v7y - v6y))
-    align()
+    out.str("1"); out.str("001"); out.str(mcode(v6x)); out.str(mcode(v6y))
+    out.str("1"); out.str("001")
+    out.str(mcode(v7x - v6x)); out.str(mcode(v7y - v6y))
+    out.byteAlign()
     if (withB) {
       // ---- B picture (display order between I and P: tempref 1) ----
-      put(0x00000100L, 32); put(1, 10); put(3, 3); put(0xffff, 16)
-      put(0, 1); put(1, 3) // full_pel_fwd 0, forward_f_code 1
-      put(0, 1); put(1, 3) // full_pel_bwd 0, backward_f_code 1
-      put(0, 1)
-      align()
-      put(0x00000101L, 32); put(qscale, 5); put(0, 1)
+      out.bits(0x00000100L, 32); out.bits(1, 10); out.bits(3, 3)
+      out.bits(0xffff, 16)
+      out.bits(0, 1); out.bits(1, 3) // full_pel_fwd 0, forward_f_code 1
+      out.bits(0, 1); out.bits(1, 3) // full_pel_bwd 0, backward_f_code 1
+      out.bits(0, 1)
+      out.byteAlign()
+      out.bits(0x00000101L, 32); out.bits(qscale, 5); out.bits(0, 1)
       val predB = Array(128, 128, 128)
       val (bf1x, bf1y, _, _) = mpeg1BVec(s, 1)
       val (_, _, bb3x, bb3y) = mpeg1BVec(s, 3)
@@ -6400,34 +5949,30 @@ object Multimodal {
       val (bf6x, bf6y, bb6x, bb6y) = mpeg1BVec(s, 6)
       val (_, _, bb7x, bb7y) = mpeg1BVec(s, 7)
       // mb0: intra
-      putStr("1"); putStr("00011"); putIntraMb(2, 0, predB)
+      out.str("1"); out.str("00011"); putIntraMb(2, 0, predB)
       // mb1: forward, not coded (PMVs reset by intra → codes = bf1)
-      putStr("1"); putStr("0010"); putStr(mcode(bf1x)); putStr(mcode(bf1y))
+      out.str("1"); out.str("0010"); out.str(mcode(bf1x)); out.str(mcode(bf1y))
       // mb2: skipped (repeats mb1's forward mode, unchanged vectors)
       // mb3: backward, not coded (bwd PMV still 0 → codes = bb3)
-      putStr("011"); putStr("010"); putStr(mcode(bb3x)); putStr(mcode(bb3y))
+      out.str("011"); out.str("010"); out.str(mcode(bb3x)); out.str(mcode(bb3y))
       // mb4: forward — fwd PMV is still bf1 (skip/bwd leave it) →
       // a genuine differential chain across intervening macroblocks
-      putStr("1"); putStr("0010")
-      putStr(mcode(bf4x - bf1x)); putStr(mcode(bf4y - bf1y))
+      out.str("1"); out.str("0010")
+      out.str(mcode(bf4x - bf1x)); out.str(mcode(bf4y - bf1y))
       // mb5: intra (resets PMVs; DC predictors were reset after mb0)
       predB(0) = 128; predB(1) = 128; predB(2) = 128
-      putStr("1"); putStr("00011"); putIntraMb(2, 5, predB)
+      out.str("1"); out.str("00011"); putIntraMb(2, 5, predB)
       // mb6: interpolated (both vectors, PMVs reset → codes = vectors)
-      putStr("1"); putStr("10")
-      putStr(mcode(bf6x)); putStr(mcode(bf6y))
-      putStr(mcode(bb6x)); putStr(mcode(bb6y))
+      out.str("1"); out.str("10")
+      out.str(mcode(bf6x)); out.str(mcode(bf6y))
+      out.str(mcode(bb6x)); out.str(mcode(bb6y))
       // mb7: backward, differential against bb6
-      putStr("1"); putStr("010")
-      putStr(mcode(bb7x - bb6x)); putStr(mcode(bb7y - bb6y))
-      align()
+      out.str("1"); out.str("010")
+      out.str(mcode(bb7x - bb6x)); out.str(mcode(bb7y - bb6y))
+      out.byteAlign()
     }
-    put(0x000001b7L, 32)
-    val out = new Array[Byte](bits.length / 8)
-    bits.zipWithIndex.foreach { case (bit, i) =>
-      if (bit) out(i >> 3) = (out(i >> 3) | (1 << (7 - (i & 7)))).toByte
-    }
-    out
+    out.bits(0x000001b7L, 32)
+    out.toBytes
   }
 
   /** Seed-dependent P-picture forward vectors (half-pel units), ranged so
@@ -6549,17 +6094,9 @@ object Multimodal {
     * — and a wrong first increment is a slice gap (refusal-tested). */
   def mpeg1SliceBytes(seed: Long, midRow: Boolean = false): Array[Byte] = {
     val width = 64; val height = 32
-    val bits = new scala.collection.mutable.ArrayBuffer[Boolean](1 << 13)
-    def put(v: Long, n: Int): Unit =
-      (n - 1 to 0 by -1).foreach(i => bits += ((v >> i) & 1) == 1)
-    def putStr(str: String): Unit = str.foreach(c => bits += c == '1')
-    def align(): Unit = while (bits.length % 8 != 0) bits += false
+    val out = new BitWriter
     val s = seed
-    put(0x000001b3L, 32)
-    put(width, 12); put(height, 12)
-    put(1, 4); put(1, 4); put(0x3ffff, 18); put(1, 1); put(0, 10)
-    put(0, 1); put(0, 1); put(0, 1)
-    align()
+    mpeg1SequenceHeader(out, width, height)
     def putIntraMb(pic: Int, m: Int, pred: Array[Int]): Unit = {
       (0 until 6).foreach { b =>
         val comp = if (b < 4) 0 else b - 3
@@ -6569,9 +6106,9 @@ object Multimodal {
         val size =
           if (diff == 0) 0
           else 32 - Integer.numberOfLeadingZeros(math.abs(diff))
-        putStr(if (b < 4) DcLuma(size) else DcChroma(size))
+        out.str(if (b < 4) DcLuma(size) else DcChroma(size))
         if (size > 0)
-          put(if (diff > 0) diff else diff + (1 << size) - 1, size)
+          out.bits(if (diff > 0) diff else diff + (1 << size) - 1, size)
         val ps = Seq(
           1 + ((s + m + b) % 4).toInt, 6 + ((s * 3 + m) % 6).toInt,
           15 + ((b * 5 + m) % 8).toInt, 30 + ((s + b * 7) % 10).toInt,
@@ -6585,77 +6122,74 @@ object Multimodal {
           prev = p
           AcByRunLevel.get((run, math.abs(level))) match {
             case Some(code) =>
-              putStr(code); put(if (level < 0) 1 else 0, 1)
+              out.str(code); out.bits(if (level < 0) 1 else 0, 1)
             case None =>
-              putStr("000001"); put(run, 6); put(level & 0xff, 8)
+              out.str("000001"); out.bits(run, 6); out.bits(level & 0xff, 8)
           }
         }
-        putStr("10")
+        out.str("10")
       }
     }
     def mcode(v: Int): String = MotionCodes.find(_._2 == v).get._1
     // ---- I picture, two slices ----
-    put(0x00000100L, 32); put(0, 10); put(1, 3); put(0xffff, 16); put(0, 1)
-    align()
-    put(0x00000101L, 32); put(8, 5); put(0, 1)
+    out.bits(0x00000100L, 32); out.bits(0, 10); out.bits(1, 3)
+    out.bits(0xffff, 16); out.bits(0, 1)
+    out.byteAlign()
+    out.bits(0x00000101L, 32); out.bits(8, 5); out.bits(0, 1)
     val predI = Array(128, 128, 128)
-    (0 until 4).foreach { m => putStr("1"); putStr("1"); putIntraMb(0, m, predI) }
-    align()
-    put(0x00000102L, 32); put(8, 5); put(0, 1)
+    (0 until 4).foreach { m => out.str("1"); out.str("1"); putIntraMb(0, m, predI) }
+    out.byteAlign()
+    out.bits(0x00000102L, 32); out.bits(8, 5); out.bits(0, 1)
     predI(0) = 128; predI(1) = 128; predI(2) = 128 // slice reset
-    (4 until 8).foreach { m => putStr("1"); putStr("1"); putIntraMb(0, m, predI) }
-    align()
+    (4 until 8).foreach { m => out.str("1"); out.str("1"); putIntraMb(0, m, predI) }
+    out.byteAlign()
     // ---- P picture, two slices ----
-    put(0x00000100L, 32); put(1, 10); put(2, 3); put(0xffff, 16)
-    put(0, 1); put(1, 3)
-    put(0, 1)
-    align()
+    out.bits(0x00000100L, 32); out.bits(1, 10); out.bits(2, 3); out.bits(0xffff, 16)
+    out.bits(0, 1); out.bits(1, 3)
+    out.bits(0, 1)
+    out.byteAlign()
     val v = (0 until 8).map(m => mpeg1SliceVec(s, m))
-    put(0x00000101L, 32); put(8, 5); put(0, 1)
+    out.bits(0x00000101L, 32); out.bits(8, 5); out.bits(0, 1)
     val predP = Array(128, 128, 128)
     // mb0 intra; mb1 MC abs; mb2/mb3 MC differential — leaves PMV = v3
-    putStr("1"); putStr("00011"); putIntraMb(1, 0, predP)
-    putStr("1"); putStr("001"); putStr(mcode(v(1)._1)); putStr(mcode(v(1)._2))
-    putStr("1"); putStr("001")
-    putStr(mcode(v(2)._1 - v(1)._1)); putStr(mcode(v(2)._2 - v(1)._2))
-    putStr("1"); putStr("001")
-    putStr(mcode(v(3)._1 - v(2)._1)); putStr(mcode(v(3)._2 - v(2)._2))
+    out.str("1"); out.str("00011"); putIntraMb(1, 0, predP)
+    out.str("1"); out.str("001"); out.str(mcode(v(1)._1)); out.str(mcode(v(1)._2))
+    out.str("1"); out.str("001")
+    out.str(mcode(v(2)._1 - v(1)._1)); out.str(mcode(v(2)._2 - v(1)._2))
+    out.str("1"); out.str("001")
+    out.str(mcode(v(3)._1 - v(2)._1)); out.str(mcode(v(3)._2 - v(2)._2))
     if (midRow) {
       // slice 1 continues across the row boundary: mb4/mb5 carry the
       // SAME reconstructed vectors, now coded differentially
-      putStr("1"); putStr("001")
-      putStr(mcode(v(4)._1 - v(3)._1)); putStr(mcode(v(4)._2 - v(3)._2))
-      putStr("1"); putStr("001")
-      putStr(mcode(v(5)._1 - v(4)._1)); putStr(mcode(v(5)._2 - v(4)._2))
-      align()
+      out.str("1"); out.str("001")
+      out.str(mcode(v(4)._1 - v(3)._1)); out.str(mcode(v(4)._2 - v(3)._2))
+      out.str("1"); out.str("001")
+      out.str(mcode(v(5)._1 - v(4)._1)); out.str(mcode(v(5)._2 - v(4)._2))
+      out.byteAlign()
       // slice 2 starts MID-ROW at mb6: vertical position 2, first
       // increment 3 (reset address 2·4−1−... = 3 → 3+3 = mb6)
-      put(0x00000102L, 32); put(8, 5); put(0, 1)
+      out.bits(0x00000102L, 32); out.bits(8, 5); out.bits(0, 1)
       predP(0) = 128; predP(1) = 128; predP(2) = 128
-      putStr("010") // first address increment = 3 (positioning)
-      putStr("00011"); putIntraMb(1, 6, predP)
-      putStr("1"); putStr("001")
-      putStr(mcode(v(7)._1)); putStr(mcode(v(7)._2))
-      align()
+      out.str("010") // first address increment = 3 (positioning)
+      out.str("00011"); putIntraMb(1, 6, predP)
+      out.str("1"); out.str("001")
+      out.str(mcode(v(7)._1)); out.str(mcode(v(7)._2))
+      out.byteAlign()
     } else {
-      align()
-      put(0x00000102L, 32); put(8, 5); put(0, 1)
+      out.byteAlign()
+      out.bits(0x00000102L, 32); out.bits(8, 5); out.bits(0, 1)
       predP(0) = 128; predP(1) = 128; predP(2) = 128
       // mb4 MC ABSOLUTE (slice reset zeroed the predictor); mb5
       // differential vs mb4; mb6 intra; mb7 MC absolute after the intra
-      putStr("1"); putStr("001"); putStr(mcode(v(4)._1)); putStr(mcode(v(4)._2))
-      putStr("1"); putStr("001")
-      putStr(mcode(v(5)._1 - v(4)._1)); putStr(mcode(v(5)._2 - v(4)._2))
-      putStr("1"); putStr("00011"); putIntraMb(1, 6, predP)
-      putStr("1"); putStr("001"); putStr(mcode(v(7)._1)); putStr(mcode(v(7)._2))
-      align()
+      out.str("1"); out.str("001"); out.str(mcode(v(4)._1)); out.str(mcode(v(4)._2))
+      out.str("1"); out.str("001")
+      out.str(mcode(v(5)._1 - v(4)._1)); out.str(mcode(v(5)._2 - v(4)._2))
+      out.str("1"); out.str("00011"); putIntraMb(1, 6, predP)
+      out.str("1"); out.str("001"); out.str(mcode(v(7)._1)); out.str(mcode(v(7)._2))
+      out.byteAlign()
     }
-    put(0x000001b7L, 32)
-    val out = new Array[Byte](bits.length / 8)
-    bits.zipWithIndex.foreach { case (bit, i) =>
-      if (bit) out(i >> 3) = (out(i >> 3) | (1 << (7 - (i & 7)))).toByte
-    }
-    out
+    out.bits(0x000001b7L, 32)
+    out.toBytes
   }
 
   /** The encode half of the D-PICTURE round trip: a 64×32 MPEG-1 stream
@@ -6666,26 +6200,19 @@ object Multimodal {
     * f_code fields, and D pictures never become references. */
   def mpeg1DBytes(seed: Long, nPictures: Int): Array[Byte] = {
     val width = 64; val height = 32
-    val bits = new scala.collection.mutable.ArrayBuffer[Boolean](1 << 12)
-    def put(v: Long, n: Int): Unit =
-      (n - 1 to 0 by -1).foreach(i => bits += ((v >> i) & 1) == 1)
-    def putStr(str: String): Unit = str.foreach(c => bits += c == '1')
-    def align(): Unit = while (bits.length % 8 != 0) bits += false
+    val out = new BitWriter
     val s = seed
-    put(0x000001b3L, 32)
-    put(width, 12); put(height, 12)
-    put(1, 4); put(1, 4); put(0x3ffff, 18); put(1, 1); put(0, 10)
-    put(0, 1); put(0, 1); put(0, 1)
-    align()
+    mpeg1SequenceHeader(out, width, height)
     (0 until nPictures).foreach { pic =>
-      put(0x00000100L, 32); put(pic, 10); put(4, 3); put(0xffff, 16)
-      put(0, 1) // extra_bit_picture (no f_code fields for D)
-      align()
-      put(0x00000101L, 32); put(8, 5); put(0, 1)
+      out.bits(0x00000100L, 32); out.bits(pic, 10); out.bits(4, 3)
+      out.bits(0xffff, 16)
+      out.bits(0, 1) // extra_bit_picture (no f_code fields for D)
+      out.byteAlign()
+      out.bits(0x00000101L, 32); out.bits(8, 5); out.bits(0, 1)
       val pred = Array(128, 128, 128)
       (0 until 8).foreach { m =>
-        putStr("1") // macroblock_address_increment 1
-        putStr("1") // macroblock_type: intra (the only D type)
+        out.str("1") // macroblock_address_increment 1
+        out.str("1") // macroblock_type: intra (the only D type)
         (0 until 6).foreach { b =>
           val comp = if (b < 4) 0 else b - 3
           val dcq = ((s * 7 + pic * 37 + m * 13 + b * 29) % 256).toInt
@@ -6694,20 +6221,16 @@ object Multimodal {
           val size =
             if (diff == 0) 0
             else 32 - Integer.numberOfLeadingZeros(math.abs(diff))
-          putStr(if (b < 4) DcLuma(size) else DcChroma(size))
+          out.str(if (b < 4) DcLuma(size) else DcChroma(size))
           if (size > 0)
-            put(if (diff > 0) diff else diff + (1 << size) - 1, size)
+            out.bits(if (diff > 0) diff else diff + (1 << size) - 1, size)
         }
-        putStr("1") // end_of_macroblock
+        out.str("1") // end_of_macroblock
       }
-      align()
+      out.byteAlign()
     }
-    put(0x000001b7L, 32)
-    val out = new Array[Byte](bits.length / 8)
-    bits.zipWithIndex.foreach { case (bit, i) =>
-      if (bit) out(i >> 3) = (out(i >> 3) | (1 << (7 - (i & 7)))).toByte
-    }
-    out
+    out.bits(0x000001b7L, 32)
+    out.toBytes
   }
 
   /** The encode half of the PREDICTION-ERROR (coded-residual) round
@@ -6730,17 +6253,9 @@ object Multimodal {
                           fcode2: Boolean = false,
                           bigMotion: Boolean = false): Array[Byte] = {
     val width = 64; val height = 32
-    val bits = new scala.collection.mutable.ArrayBuffer[Boolean](1 << 14)
-    def put(v: Long, n: Int): Unit =
-      (n - 1 to 0 by -1).foreach(i => bits += ((v >> i) & 1) == 1)
-    def putStr(str: String): Unit = str.foreach(c => bits += c == '1')
-    def align(): Unit = while (bits.length % 8 != 0) bits += false
+    val out = new BitWriter
     val s = seed
-    put(0x000001b3L, 32)
-    put(width, 12); put(height, 12)
-    put(1, 4); put(1, 4); put(0x3ffff, 18); put(1, 1); put(0, 10)
-    put(0, 1); put(0, 1); put(0, 1)
-    align()
+    mpeg1SequenceHeader(out, width, height)
     def putIntraMb(pic: Int, m: Int, pred: Array[Int]): Unit = {
       (0 until 6).foreach { b =>
         val comp = if (b < 4) 0 else b - 3
@@ -6750,9 +6265,9 @@ object Multimodal {
         val size =
           if (diff == 0) 0
           else 32 - Integer.numberOfLeadingZeros(math.abs(diff))
-        putStr(if (b < 4) DcLuma(size) else DcChroma(size))
+        out.str(if (b < 4) DcLuma(size) else DcChroma(size))
         if (size > 0)
-          put(if (diff > 0) diff else diff + (1 << size) - 1, size)
+          out.bits(if (diff > 0) diff else diff + (1 << size) - 1, size)
         val ps = Seq(
           1 + ((s + m + b) % 4).toInt, 6 + ((s * 3 + m) % 6).toInt,
           15 + ((b * 5 + m) % 8).toInt, 30 + ((s + b * 7) % 10).toInt,
@@ -6766,12 +6281,12 @@ object Multimodal {
           prev = p
           AcByRunLevel.get((run, math.abs(level))) match {
             case Some(code) =>
-              putStr(code); put(if (level < 0) 1 else 0, 1)
+              out.str(code); out.bits(if (level < 0) 1 else 0, 1)
             case None =>
-              putStr("000001"); put(run, 6); put(level & 0xff, 8)
+              out.str("000001"); out.bits(run, 6); out.bits(level & 0xff, 8)
           }
         }
-        putStr("10")
+        out.str("10")
       }
     }
     def putResidualBlock(m: Int, b: Int): Unit = {
@@ -6786,51 +6301,52 @@ object Multimodal {
         val run = if (k == 0) pos else pos - prev - 1
         prev = pos
         if (k == 0 && run == 0 && math.abs(level) == 1) {
-          putStr("1"); put(if (level < 0) 1 else 0, 1) // dct_coeff_first
+          out.str("1"); out.bits(if (level < 0) 1 else 0, 1) // dct_coeff_first
         } else {
           AcByRunLevel.get((run, math.abs(level))) match {
             case Some(code) =>
-              putStr(code); put(if (level < 0) 1 else 0, 1)
+              out.str(code); out.bits(if (level < 0) 1 else 0, 1)
             case None =>
-              putStr("000001"); put(run, 6); put(level & 0xff, 8)
+              out.str("000001"); out.bits(run, 6); out.bits(level & 0xff, 8)
           }
         }
       }
-      putStr("10") // EOB
+      out.str("10") // EOB
     }
     def cbpOf(m: Int): Int = (1 + ((s * 5 + m * 11) % 63)).toInt
     def putCodedBlocks(m: Int): Unit = {
       val cbp = cbpOf(m)
-      putStr(CbpByValue(cbp))
+      out.str(CbpByValue(cbp))
       (0 until 6).foreach { b =>
         if ((cbp & (1 << (5 - b))) != 0) putResidualBlock(m, b)
       }
     }
     // ---- I picture ----
-    put(0x00000100L, 32); put(0, 10); put(1, 3); put(0xffff, 16); put(0, 1)
-    align()
-    put(0x00000101L, 32); put(8, 5); put(0, 1)
+    out.bits(0x00000100L, 32); out.bits(0, 10); out.bits(1, 3)
+    out.bits(0xffff, 16); out.bits(0, 1)
+    out.byteAlign()
+    out.bits(0x00000101L, 32); out.bits(8, 5); out.bits(0, 1)
     val predI = Array(128, 128, 128)
-    (0 until 8).foreach { m => putStr("1"); putStr("1"); putIntraMb(0, m, predI) }
-    align()
+    (0 until 8).foreach { m => out.str("1"); out.str("1"); putIntraMb(0, m, predI) }
+    out.byteAlign()
     // ---- P picture ----
-    put(0x00000100L, 32); put(1, 10); put(2, 3); put(0xffff, 16)
+    out.bits(0x00000100L, 32); out.bits(1, 10); out.bits(2, 3); out.bits(0xffff, 16)
     // full_pel 0; forward_f_code 1, or 2 in the fcode2 variant (every
     // nonzero motion code then carries one residual bit)
-    put(0, 1); put(if (fcode2) 2 else 1, 3)
-    put(0, 1)
-    align()
-    put(0x00000101L, 32); put(8, 5); put(0, 1)
+    out.bits(0, 1); out.bits(if (fcode2) 2 else 1, 3)
+    out.bits(0, 1)
+    out.byteAlign()
+    out.bits(0x00000101L, 32); out.bits(8, 5); out.bits(0, 1)
     def mcode(v: Int): String = MotionCodes.find(_._2 == v).get._1
     // encode vector value v at the active f_code: f = 1 emits the code
     // directly; f = 2 emits (code, 1-bit residual) with
     // |v| = 1 + 2·(|code|−1) + r — the SAME decoded vector either way
     def putMv(v: Int): Unit =
-      if (!fcode2 || v == 0) putStr(mcode(v))
+      if (!fcode2 || v == 0) out.str(mcode(v))
       else {
         val a = math.abs(v)
         val code = (a - 1) / 2 + 1; val r = (a - 1) % 2
-        putStr(mcode(if (v < 0) -code else code)); put(r, 1)
+        out.str(mcode(if (v < 0) -code else code)); out.bits(r, 1)
       }
     def vecOf(m: Int): (Int, Int) =
       if (bigMotion) mpeg1PResVecBig(s, m) else mpeg1PResVec(s, m)
@@ -6839,35 +6355,36 @@ object Multimodal {
     val (w5x, w5y) = vecOf(5)
     val predP = Array(128, 128, 128)
     // mb0: intra (resets PMV and DC predictors)
-    putStr("1"); putStr("00011"); putIntraMb(1, 0, predP)
+    out.str("1"); out.str("00011"); putIntraMb(1, 0, predP)
     // mb1: MC + coded (PMV reset by intra → codes = w1)
-    putStr("1"); putStr("1")
+    out.str("1"); out.str("1")
     putMv(w1x); putMv(w1y); putCodedBlocks(1)
     // mb2: pattern-only (zero vector; resets PMV)
-    putStr("1"); putStr("01"); putCodedBlocks(2)
+    out.str("1"); out.str("01"); putCodedBlocks(2)
     // mb3: quant + MC + coded, qscale → 4 (PMV reset by mb2 → codes = w3)
-    putStr("1"); putStr("00010"); put(4, 5)
+    out.str("1"); out.str("00010"); out.bits(4, 5)
     putMv(w3x); putMv(w3y); putCodedBlocks(3)
     // mb4: skipped (mb5's increment is 2); mb5: MC not-coded (PMV reset
     // by the skip → codes = w5)
-    putStr("011"); putStr("001"); putMv(w5x); putMv(w5y)
+    out.str("011"); out.str("001"); putMv(w5x); putMv(w5y)
     // mb6: quant + pattern-only (re-emits qscale 4)
-    putStr("1"); putStr("00001"); put(4, 5); putCodedBlocks(6)
+    out.str("1"); out.str("00001"); out.bits(4, 5); putCodedBlocks(6)
     // mb7: intra — DC predictors reset after the non-intra run; decoded
     // at the UPDATED qscale 4 (proves the decoder carries the new value)
     predP(0) = 128; predP(1) = 128; predP(2) = 128
-    putStr("1"); putStr("00011"); putIntraMb(1, 7, predP)
-    align()
+    out.str("1"); out.str("00011"); putIntraMb(1, 7, predP)
+    out.byteAlign()
     if (withB) {
       // ---- B picture: the three CODED Table-B.2c forms + the carry
       // ---- paths (display order between I and P: tempref 1); with
       // ---- bQuant, the three QUANT+coded forms instead ----
-      put(0x00000100L, 32); put(1, 10); put(3, 3); put(0xffff, 16)
-      put(0, 1); put(1, 3) // full_pel_fwd 0, forward_f_code 1
-      put(0, 1); put(1, 3) // full_pel_bwd 0, backward_f_code 1
-      put(0, 1)
-      align()
-      put(0x00000101L, 32); put(8, 5); put(0, 1)
+      out.bits(0x00000100L, 32); out.bits(1, 10); out.bits(3, 3)
+      out.bits(0xffff, 16)
+      out.bits(0, 1); out.bits(1, 3) // full_pel_fwd 0, forward_f_code 1
+      out.bits(0, 1); out.bits(1, 3) // full_pel_bwd 0, backward_f_code 1
+      out.bits(0, 1)
+      out.byteAlign()
+      out.bits(0x00000101L, 32); out.bits(8, 5); out.bits(0, 1)
       if (bQuant) {
         // mb0 intra; mb1 quant+interp+coded '00010' (qscale→4, absolute
         // vectors after the intra reset); mb2 quant+forward+coded
@@ -6883,70 +6400,62 @@ object Multimodal {
         val (f1x, f1y, b1x, b1y) = mpeg1BQVec(s, 1)
         val (_, _, b4x, b4y) = mpeg1BQVec(s, 4)
         val (f5x, f5y, _, _) = mpeg1BQVec(s, 5)
-        putStr("1"); putStr("00011"); putIntraMb(2, 0, predQ)
-        putStr("1"); putStr("00010"); put(4, 5)
-        putStr(mcode(f1x)); putStr(mcode(f1y))
-        putStr(mcode(b1x)); putStr(mcode(b1y))
+        out.str("1"); out.str("00011"); putIntraMb(2, 0, predQ)
+        out.str("1"); out.str("00010"); out.bits(4, 5)
+        out.str(mcode(f1x)); out.str(mcode(f1y))
+        out.str(mcode(b1x)); out.str(mcode(b1y))
         putCodedBlocks(17)
-        putStr("1"); putStr("000011"); put(6, 5)
-        putStr(mcode(0)); putStr(mcode(0)); putCodedBlocks(18)
+        out.str("1"); out.str("000011"); out.bits(6, 5)
+        out.str(mcode(0)); out.str(mcode(0)); putCodedBlocks(18)
         predQ(0) = 128; predQ(1) = 128; predQ(2) = 128
-        putStr("1"); putStr("00011"); putIntraMb(2, 3, predQ)
-        putStr("1"); putStr("000010"); put(4, 5)
-        putStr(mcode(b4x)); putStr(mcode(b4y)); putCodedBlocks(20)
-        putStr("1"); putStr("11")
-        putStr(mcode(f5x)); putStr(mcode(f5y))
-        putStr(mcode(0)); putStr(mcode(0))
+        out.str("1"); out.str("00011"); putIntraMb(2, 3, predQ)
+        out.str("1"); out.str("000010"); out.bits(4, 5)
+        out.str(mcode(b4x)); out.str(mcode(b4y)); putCodedBlocks(20)
+        out.str("1"); out.str("11")
+        out.str(mcode(f5x)); out.str(mcode(f5y))
+        out.str(mcode(0)); out.str(mcode(0))
         putCodedBlocks(21)
-        putStr("1"); putStr("0010"); putStr(mcode(0)); putStr(mcode(0))
+        out.str("1"); out.str("0010"); out.str(mcode(0)); out.str(mcode(0))
         predQ(0) = 128; predQ(1) = 128; predQ(2) = 128
-        putStr("1"); putStr("00011"); putIntraMb(2, 7, predQ)
-        align()
-        put(0x000001b7L, 32)
-        val outQ = new Array[Byte](bits.length / 8)
-        bits.zipWithIndex.foreach { case (bit, i) =>
-          if (bit) outQ(i / 8) = (outQ(i / 8) | (1 << (7 - (i % 8)))).toByte
-        }
-        return outQ
+        out.str("1"); out.str("00011"); putIntraMb(2, 7, predQ)
+        out.byteAlign()
+        out.bits(0x000001b7L, 32)
+        return out.toBytes
       }
       val predB = Array(128, 128, 128)
       val (f1x, f1y, _, _) = mpeg1BResVec(s, 1)
       val (_, _, b2x, b2y) = mpeg1BResVec(s, 2)
       val (f4x, f4y, b4x, b4y) = mpeg1BResVec(s, 4)
       // mb0: intra (resets both PMVs and DC predictors)
-      putStr("1"); putStr("00011"); putIntraMb(2, 0, predB)
+      out.str("1"); out.str("00011"); putIntraMb(2, 0, predB)
       // mb1: forward CODED '0011' (PMVs reset → codes absolute).
       // Residual/cbp formulas use m+8 so B blocks differ from P's.
-      putStr("1"); putStr("0011"); putStr(mcode(f1x)); putStr(mcode(f1y))
+      out.str("1"); out.str("0011"); out.str(mcode(f1x)); out.str(mcode(f1y))
       putCodedBlocks(9)
       // mb2: backward CODED '011' (bwd PMV still 0 → absolute)
-      putStr("1"); putStr("011"); putStr(mcode(b2x)); putStr(mcode(b2y))
+      out.str("1"); out.str("011"); out.str(mcode(b2x)); out.str(mcode(b2y))
       putCodedBlocks(10)
       // mb3: intra (resets both PMVs)
       predB(0) = 128; predB(1) = 128; predB(2) = 128
-      putStr("1"); putStr("00011"); putIntraMb(2, 3, predB)
+      out.str("1"); out.str("00011"); putIntraMb(2, 3, predB)
       // mb4: interpolated CODED '11' (PMVs reset → absolute)
-      putStr("1"); putStr("11")
-      putStr(mcode(f4x)); putStr(mcode(f4y))
-      putStr(mcode(b4x)); putStr(mcode(b4y))
+      out.str("1"); out.str("11")
+      out.str(mcode(f4x)); out.str(mcode(f4y))
+      out.str(mcode(b4x)); out.str(mcode(b4y))
       putCodedBlocks(12)
       // mb5: skipped — repeats mb4's interp mode with unchanged
       // vectors and NO residual (skipped macroblocks are
       // prediction-only even after a coded one); mb6: forward
       // not-coded with zero motion codes — the forward predictor
       // CARRIES mb4's vector across the skip
-      putStr("011"); putStr("0010"); putStr(mcode(0)); putStr(mcode(0))
+      out.str("011"); out.str("0010"); out.str(mcode(0)); out.str(mcode(0))
       // mb7: intra
       predB(0) = 128; predB(1) = 128; predB(2) = 128
-      putStr("1"); putStr("00011"); putIntraMb(2, 7, predB)
-      align()
+      out.str("1"); out.str("00011"); putIntraMb(2, 7, predB)
+      out.byteAlign()
     }
-    put(0x000001b7L, 32)
-    val out = new Array[Byte](bits.length / 8)
-    bits.zipWithIndex.foreach { case (bit, i) =>
-      if (bit) out(i >> 3) = (out(i >> 3) | (1 << (7 - (i & 7)))).toByte
-    }
-    out
+    out.bits(0x000001b7L, 32)
+    out.toBytes
   }
 
   /** A minimal real MP4: ftyp + moov(mvhd + one video trak [+ one audio
@@ -7634,6 +7143,32 @@ object Multimodal {
     0xe3, 0xe4, 0xe5, 0xe6, 0xe7, 0xe8, 0xe9, 0xea, 0xf1, 0xf2, 0xf3, 0xf4,
     0xf5, 0xf6, 0xf7, 0xf8, 0xf9, 0xfa)
 
+  /** JPEG magnitude category: the bit length of |v| (T.81 F.1.2.1). */
+  private def jpegCat(v: Int): Int =
+    if (v == 0) 0 else 32 - Integer.numberOfLeadingZeros(math.abs(v))
+
+  /** An entropy-coded segment of the JPEG encoders: Huffman codes and
+    * magnitude bits in a [[BitWriter]], written out at each restart
+    * marker and scan end padded with 1 bits to a byte boundary, every
+    * 0xFF byte followed by a stuffed 0x00 (T.81 F.1.2.3, B.1.1.5). */
+  private final class JpegEntropyWriter(out: java.io.ByteArrayOutputStream) {
+    private var seg = new BitWriter
+    /** One raw bit, as a DC refinement scan sends it. */
+    def bit(v: Int): Unit = seg.bits(v, 1)
+    def coded(codes: Map[Int, (Int, Int)], sym: Int): Unit = {
+      val (c, l) = codes(sym); seg.bits(c, l)
+    }
+    /** `v` in `t` bits; a negative value as v − 1 in the low bits (the
+      * 'extend' convention of T.81 F.1.2.1). */
+    def magnitude(v: Int, t: Int): Unit =
+      if (t > 0) seg.bits((if (v < 0) v - 1 else v) & ((1 << t) - 1), t)
+    def flush(): Unit = {
+      seg.bits(0xff, ((8 - (seg.pos & 7)) & 7).toInt)
+      seg.toBytes.foreach { b => out.write(b); if (b == -1) out.write(0) }
+      seg = new BitWriter
+    }
+  }
+
   /** Canonical Huffman code assignment (T.81 Annex C): symbol → (code, len). */
   private def huffCodes(bits: Array[Int], vals: Array[Int]): Map[Int, (Int, Int)] = {
     var code = 0
@@ -7739,30 +7274,13 @@ object Multimodal {
     // Entropy-coded segment: per block DC diff (category + bits) then EOB.
     val dcC = huffCodes(JpegDcBits, JpegDcVals)
     val acC = huffCodes(JpegAcBits, JpegAcVals)
-    var bitBuf = 0L; var nBits = 0
-    def putBits(code: Int, len: Int): Unit = {
-      bitBuf = (bitBuf << len) | (code & ((1L << len) - 1)); nBits += len
-      while (nBits >= 8) {
-        val b = ((bitBuf >> (nBits - 8)) & 0xff).toInt
-        u8(b); if (b == 0xff) u8(0x00) // byte stuffing
-        nBits -= 8
-      }
-    }
-    // category = bit length of |v|; negative values encode as v − 1 in
-    // the low bits (T.81 F.1.2.1 'extend' convention)
-    def cat(v: Int): Int =
-      if (v == 0) 0 else 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    def putCoded(codes: Map[Int, (Int, Int)], sym: Int): Unit = {
-      val (c, l) = codes(sym); putBits(c, l)
-    }
-    def putMag(v: Int, t: Int): Unit =
-      if (t > 0) putBits((if (v < 0) v - 1 else v) & ((1 << t) - 1), t)
+    val ent = new JpegEntropyWriter(out)
     val prevDc = new Array[Int](nComp)
     var rstSeq = 0
     mcus.zipWithIndex.foreach { case (mcu, m) =>
       if (restartInterval > 0 && m > 0 && m % restartInterval == 0) {
         // Pad to the byte boundary with 1s, emit RSTn, reset predictors.
-        if (nBits > 0) putBits(0xff, (8 - (nBits % 8)) & 7)
+        ent.flush()
         u8(0xff); u8(0xd0 + rstSeq)
         rstSeq = (rstSeq + 1) % 8
         java.util.Arrays.fill(prevDc, 0)
@@ -7777,8 +7295,8 @@ object Multimodal {
           val coefs = mcu(c)(k)
           val diff = coefs(0) - prevDc(c)
           prevDc(c) = coefs(0)
-          val t = cat(diff)
-          putCoded(dcC, t); putMag(diff, t)
+          val t = jpegCat(diff)
+          ent.coded(dcC, t); ent.magnitude(diff, t)
           // AC run-length coding over zigzag indices 1..63
           val lastNz = (63 to 1 by -1).find(coefs(_) != 0).getOrElse(0)
           var run = 0
@@ -7786,20 +7304,20 @@ object Multimodal {
           while (z <= lastNz) {
             if (coefs(z) == 0) run += 1
             else {
-              while (run >= 16) { putCoded(acC, 0xf0); run -= 16 } // ZRL
-              val s = cat(coefs(z))
-              putCoded(acC, (run << 4) | s); putMag(coefs(z), s)
+              while (run >= 16) { ent.coded(acC, 0xf0); run -= 16 } // ZRL
+              val s = jpegCat(coefs(z))
+              ent.coded(acC, (run << 4) | s); ent.magnitude(coefs(z), s)
               run = 0
             }
             z += 1
           }
-          if (lastNz < 63) putCoded(acC, 0x00) // EOB
+          if (lastNz < 63) ent.coded(acC, 0x00) // EOB
           k += 1
         }
         c += 1
       }
     }
-    if (nBits > 0) putBits(0xff, 8 - (nBits % 8) & 7) // pad with 1s
+    ent.flush()
     marker(0xd9) // EOI
     out.toByteArray
   }
@@ -7839,24 +7357,7 @@ object Multimodal {
     dht(0x10, JpegAcBits, JpegAcVals)
     val dcC = huffCodes(JpegDcBits, JpegDcVals)
     val acC = huffCodes(JpegAcBits, JpegAcVals)
-    var bitBuf = 0L; var nBits = 0
-    def putBits(code: Int, len: Int): Unit = {
-      bitBuf = (bitBuf << len) | (code & ((1L << len) - 1)); nBits += len
-      while (nBits >= 8) {
-        val b = ((bitBuf >> (nBits - 8)) & 0xff).toInt
-        u8(b); if (b == 0xff) u8(0x00) // byte stuffing
-        nBits -= 8
-      }
-    }
-    def flushBits(): Unit =
-      if (nBits % 8 != 0) putBits(0xff, 8 - (nBits % 8))
-    def cat(v: Int): Int =
-      if (v == 0) 0 else 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    def putCoded(codes: Map[Int, (Int, Int)], sym: Int): Unit = {
-      val (c, l) = codes(sym); putBits(c, l)
-    }
-    def putMag(v: Int, t: Int): Unit =
-      if (t > 0) putBits((if (v < 0) v - 1 else v) & ((1 << t) - 1), t)
+    val ent = new JpegEntropyWriter(out)
     def sosHeader(sel: Seq[Int], ss: Int, se: Int, ah: Int, al: Int): Unit = {
       marker(0xda); u16(2 + 1 + 2 * sel.length + 3); u8(sel.length)
       sel.foreach { c => u8(c + 1); u8(0x00) }
@@ -7873,12 +7374,12 @@ object Multimodal {
         while (c < nComp) {
           val dc1 = comps(c)(b)(0) >> 1
           val diff = dc1 - prevDc(c); prevDc(c) = dc1
-          val t = cat(diff); putCoded(dcC, t); putMag(diff, t)
+          val t = jpegCat(diff); ent.coded(dcC, t); ent.magnitude(diff, t)
           c += 1
         }
         b += 1
       }
-      flushBits()
+      ent.flush()
     }
     // Scans 2..: per-component spectral-selection AC bands, Al=0.
     for (c <- 0 until nComp; band <- Seq((1, 5), (6, 63))) {
@@ -7892,17 +7393,17 @@ object Multimodal {
         while (k <= lastNz) {
           if (coefs(k) == 0) run += 1
           else {
-            while (run >= 16) { putCoded(acC, 0xf0); run -= 16 } // ZRL
-            val s = cat(coefs(k))
-            putCoded(acC, (run << 4) | s); putMag(coefs(k), s)
+            while (run >= 16) { ent.coded(acC, 0xf0); run -= 16 } // ZRL
+            val s = jpegCat(coefs(k))
+            ent.coded(acC, (run << 4) | s); ent.magnitude(coefs(k), s)
             run = 0
           }
           k += 1
         }
-        if (lastNz < se) putCoded(acC, 0x00) // EOB0: end-of-band run of 1
+        if (lastNz < se) ent.coded(acC, 0x00) // EOB0: end-of-band run of 1
         b += 1
       }
-      flushBits()
+      ent.flush()
     }
     // Final scan: interleaved DC refinement Ah=1→Al=0, one raw bit/block.
     sosHeader(0 until nComp, 0, 0, 1, 0)
@@ -7910,10 +7411,10 @@ object Multimodal {
       var b = 0
       while (b < bw * bh) {
         var c = 0
-        while (c < nComp) { putBits(comps(c)(b)(0) & 1, 1); c += 1 }
+        while (c < nComp) { ent.bit(comps(c)(b)(0) & 1); c += 1 }
         b += 1
       }
-      flushBits()
+      ent.flush()
     }
     marker(0xd9) // EOI
     out.toByteArray
@@ -8872,20 +8373,20 @@ object Multimodal {
     val out = new java.io.ByteArrayOutputStream()
     entries.foreach { case (name, data) =>
       val hdr = new Array[Byte](512)
-      def put(off: Int, s: String): Unit = {
+      def putText(off: Int, s: String): Unit = {
         val b = s.getBytes("US-ASCII")
         System.arraycopy(b, 0, hdr, off, math.min(b.length, 99))
       }
       def putOctal(off: Int, len: Int, v: Long): Unit =
-        put(off, ("%0" + (len - 1) + "o").format(v))
-      put(0, name)
+        putText(off, ("%0" + (len - 1) + "o").format(v))
+      putText(0, name)
       putOctal(100, 8, 420)  // mode 0644
       putOctal(108, 8, 0); putOctal(116, 8, 0) // uid/gid
       putOctal(124, 12, data.length)
       putOctal(136, 12, 0)   // mtime
       hdr(156) = '0'         // regular file
-      put(257, "ustar"); hdr(262) = 0
-      put(263, "00")
+      putText(257, "ustar"); hdr(262) = 0
+      putText(263, "00")
       java.util.Arrays.fill(hdr, 148, 156, ' '.toByte)
       var sum = 0L
       (0 until 512).foreach(i => sum += hdr(i) & 0xff)

@@ -533,7 +533,7 @@ object Similarity {
     * cell → `(nid, nvec, cell)`. One linear pass (n·nCentroids fused
     * dots, no shuffle); at scale this runs ONCE and persists (parquet,
     * partitioned by cell) — query batches reuse it via [[ivfProbeTopK]]
-    * without re-assigning the corpus. ScratchAnnProbe measures the
+    * without re-assigning the corpus. A round-16 probe measured the
     * build/probe split across decades. */
   def ivfAssign(corpus: DataFrame, nCentroids: Int, dim: Int,
                 seed: Double = 2.7): DataFrame = {
@@ -597,7 +597,7 @@ object Similarity {
     * tracks cells-probed, not corpus size — and it is static pruning by
     * construction, not dependent on the optimizer electing dynamic
     * partition pruning (whose benefit heuristic can decline a
-    * filterless dimension side; measured in ScratchAnnProbe).
+    * filterless dimension side; measured in a round-16 probe).
     *
     * NOTE: construction is EAGER (round-16 advice) — calling this runs
     * two small Spark jobs (a localCheckpoint of the query batch and a
@@ -632,7 +632,7 @@ object Similarity {
     * the ADC lookup table — per-query cost = probes·occupancy·m
     * byte-lookups, no float math and no full scan in the hot loop. This
     * bounds the pqTopK linear ADC scan by the IVF cell structure
-    * (ScratchAnnProbe measured both halves of that claim). Same index
+    * (a round-16 probe measured both halves of that claim). Same index
     * persistence contract as [[ivfAssign]]: write partitionBy(cell)
     * once, probe many times. Output (qid, nid, rank, adist), adist
     * ascending approximate squared L2. */

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.pipeline.{Flac, Multimodal}
+import graft.pipeline.{BitWriter, Flac, Multimodal}
 import graft.pipeline.Flac._
 
 /** FLAC payload codec: independent CRC check-vector pins, a
@@ -88,7 +88,7 @@ class FlacSpec extends AnyFunSuite {
       0x1fffffL, 0x200000L, 0x3ffffffL, 0x4000000L, 0x7fffffffL,
       0x80000000L, (1L << 36) - 1)
     vals.foreach { v =>
-      val w = new Writer
+      val w = new BitWriter
       Flac.writeCodedNumber(w, v)
       val bytes = w.toBytes
       // decode through a 1-frame-header-free reader: use the public

@@ -304,4 +304,64 @@ class Mpeg1ResidualSpec extends AnyFunSuite {
     }
     assert(sawSixteen, "no seed exercised a magnitude-16 motion code")
   }
+
+  // ---- I/P/B motion-compensation round trips (uncoded residuals) ----
+
+  test("mpeg1 I->P round trip across 24 seeds") {
+    (0 until 24).foreach { id =>
+      val bytes = Multimodal.mpeg1IPBytes(id)
+      val decoded = Multimodal.mpeg1IPDecode(bytes)
+      assert(decoded.isDefined, s"id=$id decode failed")
+      val ((w, h), mbs) = decoded.get
+      assert(w == 64 && h == 32)
+      assert(mbs.size == 16, s"id=$id mbs=${mbs.size}")
+      val p = mbs.filter(_.pic == 1)
+      assert(p.map(_.kind) == Seq(0, 1, 1, 2, 1, 0, 1, 1),
+        s"id=$id kinds=${p.map(_.kind)}")
+      // MC vectors match the fixture closed forms
+      Seq(1, 2, 4, 6, 7).foreach { m =>
+        val (vx, vy) = Multimodal.mpeg1PVec(id, m)
+        val r = p.find(_.mb == m).get
+        assert(r.dx == vx && r.dy == vy,
+          s"id=$id mb=$m got (${r.dx},${r.dy}) want ($vx,$vy)")
+      }
+      // skipped macroblock equals the co-located reference block
+      val i3 = mbs.find(r => r.pic == 0 && r.mb == 3).get
+      val p3 = p.find(_.mb == 3).get
+      assert(p3.ySum == i3.ySum && p3.ySqSum == i3.ySqSum)
+      // a zero-vector MC block also equals its reference block
+      Seq(1, 2, 4, 6, 7).foreach { m =>
+        val (vx, vy) = Multimodal.mpeg1PVec(id, m)
+        if (vx == 0 && vy == 0) {
+          val ir = mbs.find(r => r.pic == 0 && r.mb == m).get
+          val pr = p.find(_.mb == m).get
+          assert(pr.ySum == ir.ySum, s"id=$id mb=$m zero-MV mismatch")
+        }
+      }
+    }
+  }
+
+  test("mpeg1 I->P->B round trip across 24 seeds") {
+    (0 until 24).foreach { id =>
+      val bytes = Multimodal.mpeg1IPBytes(id, withB = true)
+      val decoded = Multimodal.mpeg1IPDecode(bytes)
+      assert(decoded.isDefined, s"id=$id decode failed")
+      val (_, mbs) = decoded.get
+      assert(mbs.size == 24, s"id=$id mbs=${mbs.size}")
+      val b = mbs.filter(_.pic == 2)
+      // kinds: intra, fwd, skip(=fwd repeat), bwd, fwd, intra, interp, bwd
+      assert(b.map(_.kind) == Seq(0, 1, 2, 3, 1, 0, 4, 3),
+        s"id=$id b-kinds=${b.map(_.kind)}")
+      Seq(1, 2, 3, 4, 6, 7).foreach { m =>
+        val (fx, fy, bx, by) = Multimodal.mpeg1BVec(id, m)
+        val r = b.find(_.mb == m).get
+        assert((r.dx, r.dy, r.bdx, r.bdy) == ((fx, fy, bx, by)),
+          s"id=$id mb=$m got (${r.dx},${r.dy},${r.bdx},${r.bdy}) " +
+            s"want ($fx,$fy,$bx,$by)")
+      }
+      // I and P rows are byte-identical to the no-B stream's rows
+      val noB = Multimodal.mpeg1IPDecode(Multimodal.mpeg1IPBytes(id)).get._2
+      assert(mbs.filter(_.pic < 2) == noB)
+    }
+  }
 }
