@@ -13,7 +13,8 @@ import graft.score.{Embeddings, KGEModel, TransE}
 /** The user-facing library surface: everything a user of the reference
   * engine does — load a KG, parse and answer EFO-1 queries (exact or
   * scored), rank, evaluate metrics, run graph analytics — behind one
-  * object. All methods return lazy DataFrames.
+  * object. The methods return DataFrames; `Graft.fromTestdata` derives,
+  * stores and caches the edges table before it returns (see `KG.edges`).
   *
   * {{{
   * val kg = Graft.fromTestdata(spark, "/root/testdata/sf0.01")

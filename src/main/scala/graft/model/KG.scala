@@ -1,5 +1,12 @@
 package graft.model
 
+import java.io.File
+import java.util.UUID
+
+import scala.collection.concurrent.TrieMap
+
+import org.apache.spark.{SparkContext, SparkFiles}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -59,7 +66,35 @@ object KG {
     Seq("AUTOMOBILE" -> 0, "BUILDING" -> 1, "FURNITURE" -> 2,
         "HOUSEHOLD" -> 3, "MACHINERY" -> 4)
 
-  private val cache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  // Per-context state, keyed (applicationId, dir). Each context gets one
+  // listener that drops its entries when it stops: the edges files it
+  // points at are deleted with the context, and a stopped context's frames
+  // should not stay reachable.
+  private val cache = TrieMap.empty[(String, String), DataFrame]
+  private val statsCache = TrieMap.empty[(String, String), Map[Long, Long]]
+  private val owners = TrieMap.empty[String, SparkListener]
+
+  /** The cache key of `dir` in `spark`'s context; the first key of a
+    * context registers the listener that drops its entries. */
+  private def key(spark: SparkSession, dir: String): (String, String) = {
+    val sc = spark.sparkContext
+    val app = sc.applicationId
+    if (!owners.contains(app)) {
+      val end = new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
+          cache.keys.filter(_._1 == app).foreach(cache.remove)
+          statsCache.keys.filter(_._1 == app).foreach(statsCache.remove)
+          owners.remove(app)
+        }
+      }
+      if (owners.putIfAbsent(app, end).isEmpty) sc.addSparkListener(end)
+    }
+    (app, dir)
+  }
+
+  /** The listener that drops `sc`'s cache entries when it stops. */
+  private[graft] def owner(sc: SparkContext): Option[SparkListener] =
+    owners.get(sc.applicationId)
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     // events.parquet carries TIMESTAMP(NANOS) which Spark rejects unless the
@@ -185,11 +220,15 @@ object KG {
     branches.reduce(_ unionAll _)
   }
 
-  /** Full edges view: base plus inverse edges with `rel + 1` (S11
-    * inverse-edge augmentation, dataloader.py:16-61). Cached + persisted per
-    * data dir so the many per-query-type plans share one materialization. */
+  /** Full edges table: base plus inverse edges with `rel + 1` (S11
+    * inverse-edge augmentation, dataloader.py:16-61), derived once per
+    * (context, dir) and stored as parquet in a directory the SparkContext
+    * owns (under `SparkFiles.getRootDirectory()`, deleted when the context
+    * stops). The frame returned is a cached scan of that table: its plan is
+    * one parquet leaf and its cached RDD carries no derivation lineage, so
+    * a query over it analyzes, optimizes and schedules only its own work. */
   def edges(spark: SparkSession, dir: String): DataFrame =
-    cache.getOrElseUpdate(s"${spark.hashCode}|$dir", {
+    cache.getOrElseUpdate(key(spark, dir), {
       // Forward + inverse in ONE pass: each base edge explodes into
       // [fwd, inv] rows. The alternative — `base union base.select(swap)` —
       // references base twice, re-running the whole scan+join+aggregate
@@ -201,28 +240,34 @@ object KG {
                  col("src").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.rel").as("rel"),
                 col("e.dst").as("dst"))
-      // Cluster the cache by relation: every atom scan filters on `rel`, and
+      // Cluster the table by relation: every atom scan filters on `rel`, and
       // in-memory columnar batch stats then prune non-matching batches
-      // (the cached analog of partition pruning; at cluster scale this is
-      // a parquet table partitioned by rel). The repartition also COALESCES
-      // the union's ~22×32 branch partitions down to one set — without it,
-      // every cached scan schedules ~10× the tasks and the whole KG suite
-      // ran ~2× slower (measured; the ~3 s shuffle at load pays for itself
-      // many times over).
-      baseInv
-        .repartition(col("rel"))
+      // (the cached analog of partition pruning; at cluster scale the
+      // table would also be partitioned by rel on shared storage). The
+      // repartition also COALESCES the union's ~22×32 branch partitions
+      // down to one set — without it, every cached scan schedules ~10× the
+      // tasks and the whole KG suite ran ~2× slower (measured; the ~3 s
+      // shuffle at load pays for itself many times over). The partition
+      // count is fixed so AQE cannot coalesce the write into fewer files:
+      // the scan then reads each file back as one rel-clustered partition.
+      val derived = baseInv
+        .repartition(spark.sessionState.conf.numShufflePartitions, col("rel"))
         .sortWithinPartitions("rel", "src")
+      val path = new File(SparkFiles.getRootDirectory(),
+                          s"graft-edges-${UUID.randomUUID}").getPath
+      derived.write.parquet(path)
+      // The schema is given, so the read lists the files and starts no job.
+      val stored = spark.read.schema(derived.schema).parquet(path)
         .persist(StorageLevel.MEMORY_AND_DISK)
+      stored.count()
+      stored
     })
-
-  private val statsCache =
-    scala.collection.concurrent.TrieMap.empty[String, Map[Long, Long]]
 
   /** Relation cardinalities of the edges view — the (tiny) statistics table
     * behind the hard-logic planner's join ordering. One 22-row aggregate,
-    * cached per (session, dir). */
+    * cached per (context, dir). */
   def relStats(spark: SparkSession, dir: String): Map[Long, Long] =
-    statsCache.getOrElseUpdate(s"${spark.hashCode}|$dir", {
+    statsCache.getOrElseUpdate(key(spark, dir), {
       edges(spark, dir).groupBy("rel").count()
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     })

@@ -6,12 +6,13 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window}
 /** Plan-shape regression guard over the ENTIRE query registry: builds the
   * optimized logical plan of every SparkEntry query at sf0.001 (plan-only
   * — nothing executes except the driver-side loops some operators run to
-  * construct their frames) and asserts the one invariant the round-5/6
-  * audits fought for: no Window node without a partitionSpec. A global
-  * window funnels its whole input through ONE task — the single worst
-  * scale hazard class this repo has repeatedly removed (trainer entity
-  * index, Variadic re-keying, BM25/PMI/Zipf top-k rank). This spec keeps
-  * them gone. */
+  * construct their frames, and the one-time derivation of the edges table
+  * that the first KG row triggers through `KG.edges`) and asserts the one
+  * invariant the round-5/6 audits fought for: no Window node without a
+  * partitionSpec. A global window funnels its whole input through ONE
+  * task — the single worst scale hazard class this repo has repeatedly
+  * removed (trainer entity index, Variadic re-keying, BM25/PMI/Zipf top-k
+  * rank). This spec keeps them gone. */
 class PlanGuardSpec extends AnyFunSuite {
   import SparkTestSession.spark
 
