@@ -99,59 +99,36 @@ final class GraftKG(val spark: SparkSession, val edges: DataFrame,
   /** Relational SGD training entry — the reference trainer's surface
     * (lmpnn.py:218-288's per-model loop) over this KG's edges. `model` ∈
     * transe | distmult | complex | rotate; `steps` > 1 iterates the
-    * quantized-state loop (TransE/DistMult); `hashNeg` swaps the cyclic
-    * corruption for the portable md5 draw (TransE). Returns the long-form
-    * updated parameter frame (kind, id, pos, x). */
+    * quantized-state loop for every model; `hashNeg` swaps the cyclic
+    * corruption for the portable md5 draw (TransE, single step);
+    * `momentum` > 0 runs TransE with heavy-ball momentum. Returns the
+    * long-form updated parameter frame (kind, id, pos, x). */
   def train(model: String, dim: Int = 8,
             entSeed: Double = 0.3, relSeed: Double = 1.7,
             steps: Int = 1, gamma: Double = 1.0, lr: Double = 0.03125,
             hashNeg: Boolean = false, momentum: Double = 0.0): DataFrame = {
     import graft.score.Training
+    import graft.score.Training.Optimizer
     val ents = entities.select("id")
-    model.toLowerCase match {
-      case "transe" if hashNeg =>
-        require(steps == 1, "hashNeg currently supports a single step")
-        Training.transeSgdStepHashNeg(ents, edges, dim, entSeed, relSeed,
-                                      gamma, lr)
-      case "transe" if momentum > 0 =>
-        Training.transeSgdMomentum(ents, edges, dim, entSeed, relSeed, steps,
-                                   momentum, gamma, lr)
-      case "transe" =>
-        Training.transeSgd(ents, edges, dim, entSeed, relSeed, steps,
-                           gamma, lr)
-      case "distmult" =>
-        Training.distmultSgd(ents, edges, dim, entSeed, relSeed, steps,
-                             gamma, lr)
-      case "complex" =>
-        Training.complexSgd(ents, edges, dim, entSeed, relSeed, steps,
-                            gamma, lr)
-      case "rotate" =>
-        Training.rotateSgd(ents, edges, dim, entSeed, relSeed, steps,
-                           gamma, lr)
-      case other =>
-        throw new IllegalArgumentException(
-          s"unknown model '$other' (transe|distmult|complex|rotate)")
+    Training.Model.named(model) match {
+      case Training.Model.TransE =>
+        Training.transeSgd(ents, edges, dim, entSeed, relSeed, steps, gamma,
+          lr, if (momentum > 0 && !hashNeg) Optimizer.Momentum(momentum)
+              else Optimizer.Sgd, hashNeg)
+      case m =>
+        Training.sgd(m, ents, edges, dim, entSeed, relSeed, steps, gamma, lr)
     }
   }
 
-  /** In-training eval checkpoint: link-prediction MRR/Hits of a long-form
-    * TransE parameter frame (as returned by [[train]]) over this KG's
-    * edges — see [[graft.score.Training.transeRanks]]. */
+  /** In-training eval checkpoint: the link-prediction tail rank of every
+    * edge of this KG, (src, rel, dst, rank), under a long-form parameter
+    * frame of `model` (as returned by [[train]]). `candMod` > 1 samples
+    * the candidate pool (TransE only) — see
+    * [[graft.score.Training.ranks]]. */
   def trainEvalRanks(params: DataFrame, candMod: Int = 1,
                      model: String = "transe"): DataFrame =
-    model.toLowerCase match {
-      case "transe" =>
-        graft.score.Training.transeRanksSampled(params, edges, candMod)
-      case m =>
-        require(candMod == 1, s"sampled eval is transe-only, got $m")
-        m match {
-          case "distmult" => graft.score.Training.distmultRanks(params, edges)
-          case "complex"  => graft.score.Training.complexRanks(params, edges)
-          case "rotate"   => graft.score.Training.rotateRanks(params, edges)
-          case other => throw new IllegalArgumentException(
-            s"unknown model '$other' (transe|distmult|complex|rotate)")
-        }
-    }
+    graft.score.Training.ranks(graft.score.Training.Model.named(model),
+                               params, edges, candMod)
 
   def bfs(seedIds: Seq[Long], maxLevels: Int = 20): DataFrame = {
     import spark.implicits._

@@ -8,7 +8,7 @@ import graft.exec.CQDBeam
 import graft.metric.Ranking
 import graft.model.KG
 import graft.pipeline.{Dedup, Similarity, TextOps}
-import graft.score.{DistMult, Embeddings, TransE}
+import graft.score.{DistMult, Embeddings, Training, TransE}
 
 /** Non-KG-logic operator demos over the driver testdata: aggregations
   * (SURVEY §2.4), sorts/top-k/ranking (§2.5), scored executors (§2.3 soft,
@@ -49,7 +49,7 @@ object PipelineQueries {
   private val DIM = 8
   private val ENT_SEED = 0.3
   private val REL_SEED = 1.7
-  private val IM_OFF = graft.score.Training.IM_SEED_OFFSET
+  private val IM_OFF = Training.IM_SEED_OFFSET
 
   private def supplierEnts(s: SparkSession, dir: String): DataFrame =
     Embeddings.deterministic(
@@ -3144,7 +3144,7 @@ object PipelineQueries {
           .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
         val ents = edges.select(col("src").as("id"))
           .unionAll(edges.select(col("dst").as("id"))).distinct()
-        graft.score.Training.transeSgdStep(ents, edges, dim = DIM,
+        Training.transeSgd(ents, edges, dim = DIM,
           entSeed = ENT_SEED, relSeed = REL_SEED)
       },
       Some(KG.edgesCte.trim + ",\n" +
@@ -3196,8 +3196,9 @@ object PipelineQueries {
           .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
         val ents = edges.select(col("src").as("id"))
           .unionAll(edges.select(col("dst").as("id"))).distinct()
-        graft.score.Training.transeSgdAdagrad(ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED, steps = 1)
+        Training.transeSgd(ents, edges, dim = DIM,
+          entSeed = ENT_SEED, relSeed = REL_SEED, steps = 1,
+          optimizer = Training.Optimizer.Adagrad)
       },
       Some(KG.edgesCte.trim + ",\n" +
         s"""te AS (SELECT src, rel, dst FROM edges
@@ -3255,8 +3256,9 @@ object PipelineQueries {
           .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
         val ents = edges.select(col("src").as("id"))
           .unionAll(edges.select(col("dst").as("id"))).distinct()
-        graft.score.Training.transeSgdAdam(ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED, steps = 2)
+        Training.transeSgd(ents, edges, dim = DIM,
+          entSeed = ENT_SEED, relSeed = REL_SEED, steps = 2,
+          optimizer = Training.Optimizer.Adam)
       },
       Some {
         def stepCtes(k: Int): String = {
@@ -3334,8 +3336,8 @@ object PipelineQueries {
           .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
         val ents = edges.select(col("src").as("id"))
           .unionAll(edges.select(col("dst").as("id"))).distinct()
-        graft.score.Training.transeSgdStepHashNeg(ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED)
+        Training.transeSgd(ents, edges, dim = DIM,
+          entSeed = ENT_SEED, relSeed = REL_SEED, hashNeg = true)
       },
       Some {
         val negHash = graft.functions.PortableHash.md5Prefix60Sql(
@@ -3393,7 +3395,7 @@ object PipelineQueries {
           .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
         val ents = edges.select(col("src").as("id"))
           .unionAll(edges.select(col("dst").as("id"))).distinct()
-        graft.score.Training.transeSgd(ents, edges, dim = DIM,
+        Training.transeSgd(ents, edges, dim = DIM,
           entSeed = ENT_SEED, relSeed = REL_SEED, steps = 2)
       },
       Some {
@@ -3457,7 +3459,7 @@ object PipelineQueries {
           .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
         val ents = edges.select(col("src").as("id"))
           .unionAll(edges.select(col("dst").as("id"))).distinct()
-        graft.score.Training.distmultSgdStep(ents, edges, dim = DIM,
+        Training.sgd(Training.Model.DistMult, ents, edges, dim = DIM,
           entSeed = ENT_SEED, relSeed = REL_SEED)
       },
       Some(KG.edgesCte.trim + ",\n" +
@@ -3509,9 +3511,9 @@ object PipelineQueries {
           .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
         val ents = edges.select(col("src").as("id"))
           .unionAll(edges.select(col("dst").as("id"))).distinct()
-        val e1 = graft.score.Training.distmultSgdStep(ents, edges, dim = DIM,
+        val e1 = Training.sgd(Training.Model.DistMult, ents, edges, dim = DIM,
           entSeed = ENT_SEED, relSeed = REL_SEED)
-        graft.score.Training.distmultRanks(e1, edges)
+        Training.ranks(Training.Model.DistMult, e1, edges)
           .groupBy("rel")
           .agg(count(lit(1)).as("n"),
                round(sum(round(lit(1000000.0) / col("rank"), 0)) / 1e6
@@ -3588,7 +3590,7 @@ object PipelineQueries {
           .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
         val ents = edges.select(col("src").as("id"))
           .unionAll(edges.select(col("dst").as("id"))).distinct()
-        graft.score.Training.distmultSgd(ents, edges, dim = DIM,
+        Training.sgd(Training.Model.DistMult, ents, edges, dim = DIM,
           entSeed = ENT_SEED, relSeed = REL_SEED, steps = 2)
       },
       Some {
@@ -3652,7 +3654,7 @@ object PipelineQueries {
           .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
         val ents = edges.select(col("src").as("id"))
           .unionAll(edges.select(col("dst").as("id"))).distinct()
-        graft.score.Training.complexSgdStep(ents, edges, dim = DIM,
+        Training.sgd(Training.Model.ComplEx, ents, edges, dim = DIM,
           entSeed = ENT_SEED, relSeed = REL_SEED)
       },
       Some(KG.edgesCte.trim + ",\n" +
@@ -3716,9 +3718,9 @@ object PipelineQueries {
           .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
         val ents = edges.select(col("src").as("id"))
           .unionAll(edges.select(col("dst").as("id"))).distinct()
-        val e1 = graft.score.Training.complexSgdStep(ents, edges, dim = DIM,
+        val e1 = Training.sgd(Training.Model.ComplEx, ents, edges, dim = DIM,
           entSeed = ENT_SEED, relSeed = REL_SEED)
-        graft.score.Training.complexRanks(e1, edges)
+        Training.ranks(Training.Model.ComplEx, e1, edges)
           .groupBy("rel")
           .agg(count(lit(1)).as("n"),
                round(sum(round(lit(1000000.0) / col("rank"), 0)) / 1e6
@@ -3819,7 +3821,7 @@ object PipelineQueries {
           .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
         val ents = edges.select(col("src").as("id"))
           .unionAll(edges.select(col("dst").as("id"))).distinct()
-        graft.score.Training.complexSgd(ents, edges, dim = DIM,
+        Training.sgd(Training.Model.ComplEx, ents, edges, dim = DIM,
           entSeed = ENT_SEED, relSeed = REL_SEED, steps = 2)
       },
       Some {
@@ -3903,7 +3905,7 @@ object PipelineQueries {
           .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
         val ents = edges.select(col("src").as("id"))
           .unionAll(edges.select(col("dst").as("id"))).distinct()
-        graft.score.Training.rotateSgdStep(ents, edges, dim = DIM,
+        Training.sgd(Training.Model.RotatE, ents, edges, dim = DIM,
           entSeed = ENT_SEED, relSeed = REL_SEED)
       },
       Some {
@@ -3982,8 +3984,9 @@ object PipelineQueries {
           .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
         val ents = edges.select(col("src").as("id"))
           .unionAll(edges.select(col("dst").as("id"))).distinct()
-        graft.score.Training.transeSgdMomentum(ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED, steps = 2)
+        Training.transeSgd(ents, edges, dim = DIM,
+          entSeed = ENT_SEED, relSeed = REL_SEED, steps = 2,
+          optimizer = Training.Optimizer.Momentum())
       },
       Some {
         def gradCtes(k: Int): String = {
@@ -4048,9 +4051,9 @@ object PipelineQueries {
           .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
         val ents = edges.select(col("src").as("id"))
           .unionAll(edges.select(col("dst").as("id"))).distinct()
-        val e1 = graft.score.Training.rotateSgdStep(ents, edges, dim = DIM,
+        val e1 = Training.sgd(Training.Model.RotatE, ents, edges, dim = DIM,
           entSeed = ENT_SEED, relSeed = REL_SEED)
-        graft.score.Training.rotateRanks(e1, edges)
+        Training.ranks(Training.Model.RotatE, e1, edges)
           .groupBy("rel")
           .agg(count(lit(1)).as("n"),
                round(sum(round(lit(1000000.0) / col("rank"), 0)) / 1e6
@@ -4165,7 +4168,7 @@ object PipelineQueries {
           .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
         val ents = edges.select(col("src").as("id"))
           .unionAll(edges.select(col("dst").as("id"))).distinct()
-        graft.score.Training.rotateSgd(ents, edges, dim = DIM,
+        Training.sgd(Training.Model.RotatE, ents, edges, dim = DIM,
           entSeed = ENT_SEED, relSeed = REL_SEED, steps = 2)
       },
       Some {
@@ -4253,7 +4256,7 @@ object PipelineQueries {
           .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
         val ents = edges.select(col("src").as("id"))
           .unionAll(edges.select(col("dst").as("id"))).distinct()
-        graft.score.Training.transeSgdEpoch(ents, edges, dim = DIM,
+        Training.transeSgdEpoch(ents, edges, dim = DIM,
           entSeed = ENT_SEED, relSeed = REL_SEED, batches = 2)
       },
       Some {
@@ -4318,9 +4321,9 @@ object PipelineQueries {
           .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
         val ents = edges.select(col("src").as("id"))
           .unionAll(edges.select(col("dst").as("id"))).distinct()
-        val e1 = graft.score.Training.transeSgdStep(ents, edges, dim = DIM,
+        val e1 = Training.transeSgd(ents, edges, dim = DIM,
           entSeed = ENT_SEED, relSeed = REL_SEED)
-        graft.score.Training.transeRanks(e1, edges)
+        Training.ranks(Training.Model.TransE, e1, edges)
           .groupBy("rel")
           .agg(count(lit(1)).as("n"),
                round(sum(round(lit(1000000.0) / col("rank"), 0)) / 1e6
@@ -4400,9 +4403,10 @@ object PipelineQueries {
           .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
         val ents = edges.select(col("src").as("id"))
           .unionAll(edges.select(col("dst").as("id"))).distinct()
-        val e1 = graft.score.Training.transeSgdStep(ents, edges, dim = DIM,
+        val e1 = Training.transeSgd(ents, edges, dim = DIM,
           entSeed = ENT_SEED, relSeed = REL_SEED)
-        graft.score.Training.transeRanksFiltered(e1, edges, edges)
+        Training.ranks(Training.Model.TransE, e1, edges,
+          filter = Some(edges))
           .groupBy("rel")
           .agg(count(lit(1)).as("n"),
                round(sum(round(lit(1000000.0) / col("rank"), 0)) / 1e6
@@ -4484,9 +4488,9 @@ object PipelineQueries {
           .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
         val ents = edges.select(col("src").as("id"))
           .unionAll(edges.select(col("dst").as("id"))).distinct()
-        val e1 = graft.score.Training.transeSgdStep(ents, edges, dim = DIM,
+        val e1 = Training.transeSgd(ents, edges, dim = DIM,
           entSeed = ENT_SEED, relSeed = REL_SEED)
-        graft.score.Training.transeRanksSampled(e1, edges, candMod = 2)
+        Training.ranks(Training.Model.TransE, e1, edges, candMod = 2)
           .groupBy("rel")
           .agg(count(lit(1)).as("n"),
                round(sum(round(lit(1000000.0) / col("rank"), 0)) / 1e6

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{Cluster, CorpusStats, Dedup, Similarity}
+import graft.score.Training
+import graft.score.Training.Model
 
 /** Pipeline scale probe: replicate the documents corpus k× (salted ids,
   * mutated first token so replicas are near- not exact dups) and the
@@ -142,28 +144,28 @@ object ScaleProbe {
       .unionAll(kedges.select(col("dst").as("id"))).distinct()
       .localCheckpoint(true)
     println(s"[scale] kg: ${kents.count()} entities, ${kedges.count()} edges")
-    time("transe_step")(graft.score.Training.transeSgdStep(
+    time("transe_step")(Training.transeSgd(
       kents, kedges, dim = 8, entSeed = 0.3, relSeed = 1.7).count())
-    time("distmult_step")(graft.score.Training.distmultSgdStep(
+    time("distmult_step")(Training.sgd(Model.DistMult,
       kents, kedges, dim = 8, entSeed = 0.3, relSeed = 1.7).count())
-    time("rotate_step")(graft.score.Training.rotateSgdStep(
+    time("rotate_step")(Training.sgd(Model.RotatE,
       kents, kedges, dim = 8, entSeed = 0.3, relSeed = 1.7).count())
-    time("complex_2steps")(graft.score.Training.complexSgd(
+    time("complex_2steps")(Training.sgd(Model.ComplEx,
       kents, kedges, dim = 8, entSeed = 0.3, relSeed = 1.7, steps = 2).count())
-    time("rotate_2steps")(graft.score.Training.rotateSgd(
+    time("rotate_2steps")(Training.sgd(Model.RotatE,
       kents, kedges, dim = 8, entSeed = 0.3, relSeed = 1.7, steps = 2).count())
     time("train_eval_ranks") {
-      val p = graft.score.Training.transeSgdStep(kents, kedges, dim = 8,
+      val p = Training.transeSgd(kents, kedges, dim = 8,
         entSeed = 0.3, relSeed = 1.7)
-      graft.score.Training.transeRanks(p, kedges).count()
+      Training.ranks(Model.TransE, p, kedges).count()
     }
     // Sampled-candidate eval: the same plan over a 1/16 md5-drawn pool —
     // the (edges × entities) product drops 16×, which is the whole point
     // of the sampled protocol at a large entity set.
     time("train_eval_ranks_sampled16") {
-      val p = graft.score.Training.transeSgdStep(kents, kedges, dim = 8,
+      val p = Training.transeSgd(kents, kedges, dim = 8,
         entSeed = 0.3, relSeed = 1.7)
-      graft.score.Training.transeRanksSampled(p, kedges, candMod = 16).count()
+      Training.ranks(Model.TransE, p, kedges, candMod = 16).count()
     }
     spark.stop()
   }

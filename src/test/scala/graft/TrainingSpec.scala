@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.score.{Embeddings, Training}
+import graft.score.Training.{Model, Optimizer}
 
 /** Relational TransE SGD step: hinge activation, gradient flow, and the
   * exactness contract (every update an integer multiple of lr). */
@@ -14,7 +15,7 @@ class TrainingSpec extends AnyFunSuite {
   val edges = Seq((10L, 5L, 20L), (20L, 5L, 30L)).toDF("src", "rel", "dst")
 
   def step(gamma: Double) =
-    Training.transeSgdStep(ents, edges, dim = 4,
+    Training.transeSgd(ents, edges, dim = 4,
       entSeed = 0.3, relSeed = 1.7, gamma = gamma)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
@@ -78,8 +79,9 @@ class TrainingSpec extends AnyFunSuite {
   test("adagrad: integer accumulator, floor-quantized rate, threads across steps") {
     // Forced-active hinge: every parameter that moves must move by an
     // exact integer number of micro-units equal to g * floor(31250/sqrt(a)).
-    val one = Training.transeSgdAdagrad(ents, edges, dim = 4,
-      entSeed = 0.3, relSeed = 1.7, steps = 1, gamma = 1000.0)
+    val one = Training.transeSgd(ents, edges, dim = 4,
+      entSeed = 0.3, relSeed = 1.7, steps = 1, gamma = 1000.0,
+      optimizer = Optimizer.Adagrad)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
       .toMap
@@ -110,15 +112,17 @@ class TrainingSpec extends AnyFunSuite {
     // Two steps differ from one (the accumulator shrinks step 2's rate, so
     // a param hit twice moves LESS the second time than a fresh SGD step
     // would move it) and stay deterministic across partitionings.
-    val two = Training.transeSgdAdagrad(ents, edges, dim = 4,
-      entSeed = 0.3, relSeed = 1.7, steps = 2, gamma = 1000.0)
+    val two = Training.transeSgd(ents, edges, dim = 4,
+      entSeed = 0.3, relSeed = 1.7, steps = 2, gamma = 1000.0,
+      optimizer = Optimizer.Adagrad)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
       .toMap
     assert(two != one)
-    val twoAgain = Training.transeSgdAdagrad(
+    val twoAgain = Training.transeSgd(
       ents.repartition(3), edges.repartition(2), dim = 4,
-      entSeed = 0.3, relSeed = 1.7, steps = 2, gamma = 1000.0)
+      entSeed = 0.3, relSeed = 1.7, steps = 2, gamma = 1000.0,
+      optimizer = Optimizer.Adagrad)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
       .toMap
@@ -128,8 +132,9 @@ class TrainingSpec extends AnyFunSuite {
   test("adam: step 1 is a fixed ±lr move; step 2 adapts; partition-deterministic") {
     // With beta1 = beta2 = 1/2, step 1 has m-hat = g, v-hat = g² →
     // update = sign(g)·floor(lr·1e6) = ±31250 micro exactly.
-    val one = Training.transeSgdAdam(ents, edges, dim = 4,
-      entSeed = 0.3, relSeed = 1.7, steps = 1, gamma = 1000.0)
+    val one = Training.transeSgd(ents, edges, dim = 4,
+      entSeed = 0.3, relSeed = 1.7, steps = 1, gamma = 1000.0,
+      optimizer = Optimizer.Adam)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
       .toMap
@@ -151,8 +156,9 @@ class TrainingSpec extends AnyFunSuite {
     assert(moved > 0)
     // Step 2 differs from both one-step Adam and plain 2-step SGD (the
     // moments actually thread), and the trajectory is partition-invariant.
-    val two = Training.transeSgdAdam(ents, edges, dim = 4,
-      entSeed = 0.3, relSeed = 1.7, steps = 2, gamma = 1000.0)
+    val two = Training.transeSgd(ents, edges, dim = 4,
+      entSeed = 0.3, relSeed = 1.7, steps = 2, gamma = 1000.0,
+      optimizer = Optimizer.Adam)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
       .toMap
@@ -187,9 +193,10 @@ class TrainingSpec extends AnyFunSuite {
     assert(two == sgd2,
       "constant-gradient β=½ Adam must equal SGD exactly (the " +
       "bias-correction fixed point)")
-    val twoAgain = Training.transeSgdAdam(
+    val twoAgain = Training.transeSgd(
       ents.repartition(3), edges.repartition(2), dim = 4,
-      entSeed = 0.3, relSeed = 1.7, steps = 2, gamma = 1000.0)
+      entSeed = 0.3, relSeed = 1.7, steps = 2, gamma = 1000.0,
+      optimizer = Optimizer.Adam)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
       .toMap
@@ -197,7 +204,8 @@ class TrainingSpec extends AnyFunSuite {
   }
 
   test("cyclic-next map: no no-partition window, no forced broadcast hint") {
-    val nm = Training.cyclicNextMap(ents.select(col("id").cast("long").as("id")))
+    val nm = Training.cyclicNextMap(graft.metric.Ranking.globalIndexPacked(
+      ents.select(col("id").cast("long").as("id")), "id"))
     // the scale-safe shape: zipWithIndex (invisible LogicalRDD) + equi-join —
     // a Window node here would be the old single-partition funnel
     assert(!nm.queryExecution.optimizedPlan.toString.contains("Window"),
@@ -242,7 +250,7 @@ class TrainingSpec extends AnyFunSuite {
 
   test("distmultSgdStep: inactive hinge keeps init; active matches integer-exact reference") {
     def dstep(gamma: Double) =
-      Training.distmultSgdStep(ents, edges, dim = 4,
+      Training.sgd(Model.DistMult, ents, edges, dim = 4,
         entSeed = 0.3, relSeed = 1.7, gamma = gamma)
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
@@ -285,7 +293,7 @@ class TrainingSpec extends AnyFunSuite {
     def run(steps: Int, parts: Int = 1) = {
       val (en, ed) = if (parts == 1) (ents, edges)
         else (ents.repartition(parts), edges.repartition(parts))
-      Training.distmultSgd(en, ed, dim = 4,
+      Training.sgd(Model.DistMult, en, ed, dim = 4,
           entSeed = 0.3, relSeed = 1.7, steps = steps)
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
@@ -293,7 +301,7 @@ class TrainingSpec extends AnyFunSuite {
     }
     val one = run(1)
     val two = run(2)
-    assert(one == Training.distmultSgdStep(ents, edges, dim = 4,
+    assert(one == Training.sgd(Model.DistMult, ents, edges, dim = 4,
       entSeed = 0.3, relSeed = 1.7).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
       .toMap, "steps=1 must equal the single step")
@@ -306,7 +314,7 @@ class TrainingSpec extends AnyFunSuite {
 
   test("complexSgdStep: inactive hinge keeps init; active matches product-rule reference") {
     def cstep(gamma: Double) =
-      Training.complexSgdStep(ents, edges, dim = 4,
+      Training.sgd(Model.ComplEx, ents, edges, dim = 4,
         entSeed = 0.3, relSeed = 1.7, gamma = gamma)
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
@@ -353,7 +361,7 @@ class TrainingSpec extends AnyFunSuite {
     }
     assert(active.exists { case (k, x) => x != frozen(k) }, "no gradient flowed")
     // Deterministic across partitionings (scatter-add sums integers).
-    val b2 = Training.complexSgdStep(ents.repartition(3),
+    val b2 = Training.sgd(Model.ComplEx, ents.repartition(3),
         edges.repartition(2), dim = 4, entSeed = 0.3, relSeed = 1.7)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
@@ -364,7 +372,7 @@ class TrainingSpec extends AnyFunSuite {
 
   test("rotateSgdStep: inactive hinge keeps init; active matches rotation-derivative reference") {
     def rstep(gamma: Double) =
-      Training.rotateSgdStep(ents, edges, dim = 4,
+      Training.sgd(Model.RotatE, ents, edges, dim = 4,
         entSeed = 0.3, relSeed = 1.7, gamma = gamma)
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
@@ -418,7 +426,7 @@ class TrainingSpec extends AnyFunSuite {
     }
     assert(active.exists { case (k, x) => x != frozen(k) }, "no gradient flowed")
     // Deterministic across partitionings (scatter-add sums integers).
-    val b2 = Training.rotateSgdStep(ents.repartition(3),
+    val b2 = Training.sgd(Model.RotatE, ents.repartition(3),
         edges.repartition(2), dim = 4, entSeed = 0.3, relSeed = 1.7)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
@@ -431,20 +439,20 @@ class TrainingSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
       .toMap
     // forced-active hinge so both steps move parameters
-    val c1 = m(Training.complexSgd(ents, edges, dim = 4,
+    val c1 = m(Training.sgd(Model.ComplEx, ents, edges, dim = 4,
       entSeed = 0.3, relSeed = 1.7, steps = 1, gamma = 1e6))
-    val c2 = m(Training.complexSgd(ents, edges, dim = 4,
+    val c2 = m(Training.sgd(Model.ComplEx, ents, edges, dim = 4,
       entSeed = 0.3, relSeed = 1.7, steps = 2, gamma = 1e6))
     assert(c2 != c1, "complex second step changed nothing")
-    assert(c2 == m(Training.complexSgd(ents.repartition(3),
+    assert(c2 == m(Training.sgd(Model.ComplEx, ents.repartition(3),
       edges.repartition(2), dim = 4,
       entSeed = 0.3, relSeed = 1.7, steps = 2, gamma = 1e6)))
-    val r1 = m(Training.rotateSgd(ents, edges, dim = 4,
+    val r1 = m(Training.sgd(Model.RotatE, ents, edges, dim = 4,
       entSeed = 0.3, relSeed = 1.7, steps = 1, gamma = 1e6))
-    val r2 = m(Training.rotateSgd(ents, edges, dim = 4,
+    val r2 = m(Training.sgd(Model.RotatE, ents, edges, dim = 4,
       entSeed = 0.3, relSeed = 1.7, steps = 2, gamma = 1e6))
     assert(r2 != r1, "rotate second step changed nothing")
-    assert(r2 == m(Training.rotateSgd(ents.repartition(3),
+    assert(r2 == m(Training.sgd(Model.RotatE, ents.repartition(3),
       edges.repartition(2), dim = 4,
       entSeed = 0.3, relSeed = 1.7, steps = 2, gamma = 1e6)))
   }
@@ -454,12 +462,14 @@ class TrainingSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
       .toMap
     // v1 = g1, so one momentum step IS one plain step.
-    assert(m(Training.transeSgdMomentum(ents, edges, dim = 4,
-      entSeed = 0.3, relSeed = 1.7, steps = 1)) == step(gamma = 1.0))
+    assert(m(Training.transeSgd(ents, edges, dim = 4,
+      entSeed = 0.3, relSeed = 1.7, steps = 1,
+      optimizer = Optimizer.Momentum())) == step(gamma = 1.0))
     val p2 = m(Training.transeSgd(ents, edges, dim = 4,
       entSeed = 0.3, relSeed = 1.7, steps = 2))
-    val m2 = m(Training.transeSgdMomentum(ents, edges, dim = 4,
-      entSeed = 0.3, relSeed = 1.7, steps = 2))
+    val m2 = m(Training.transeSgd(ents, edges, dim = 4,
+      entSeed = 0.3, relSeed = 1.7, steps = 2,
+      optimizer = Optimizer.Momentum()))
     assert(m2 != p2, "momentum trajectory must diverge from plain SGD")
     // Every momentum update is an integer multiple of lr/2 (v is a
     // multiple of 1/2 after two steps: exact dyadic velocities).
@@ -469,9 +479,10 @@ class TrainingSpec extends AnyFunSuite {
       assert(math.abs(k - math.rint(k)) < 1e-3,
              s"momentum delta off the lr/2 grid at $kind $id $pos: $k")
     }
-    assert(m2 == m(Training.transeSgdMomentum(ents.repartition(3),
+    assert(m2 == m(Training.transeSgd(ents.repartition(3),
       edges.repartition(2), dim = 4,
-      entSeed = 0.3, relSeed = 1.7, steps = 2)))
+      entSeed = 0.3, relSeed = 1.7, steps = 2,
+      optimizer = Optimizer.Momentum())))
   }
 
   test("hashNegEdges draws the md5-indexed entity, dodging the true tail") {
@@ -486,8 +497,8 @@ class TrainingSpec extends AnyFunSuite {
       val cand = sorted(i)
       (h, r, t) -> (if (cand != t) cand else sorted((i + 1) % 3))
     }.toMap
-    val got = Training.hashNegEdges(
-        ents.select(col("id").cast("long").as("id")),
+    val got = Training.hashNegEdges(graft.metric.Ranking.globalIndexPacked(
+        ents.select(col("id").cast("long").as("id")), "id"),
         edges.select(col("src").cast("long").as("src"),
                      col("rel").cast("long").as("rel"),
                      col("dst").cast("long").as("dst")))
@@ -496,8 +507,8 @@ class TrainingSpec extends AnyFunSuite {
     assert(got == want, s"got $got want $want")
     assert(got.forall { case ((_, _, t), n) => n != t && sorted.contains(n) })
     // And the hash-neg step keeps the lr-grid exactness contract.
-    val out = Training.transeSgdStepHashNeg(ents, edges, dim = 4,
-        entSeed = 0.3, relSeed = 1.7, gamma = 1000.0)
+    val out = Training.transeSgd(ents, edges, dim = 4,
+        entSeed = 0.3, relSeed = 1.7, gamma = 1000.0, hashNeg = true)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
       .toMap
@@ -512,9 +523,9 @@ class TrainingSpec extends AnyFunSuite {
     // Freeze the step (gamma << 0) so params are the known init state,
     // then rank each edge's true tail against a Scala brute-force model
     // in the same micro-int units.
-    val params = Training.transeSgdStep(ents, edges, dim = 4,
+    val params = Training.transeSgd(ents, edges, dim = 4,
       entSeed = 0.3, relSeed = 1.7, gamma = -1000.0)
-    val got = Training.transeRanks(params, edges)
+    val got = Training.ranks(Model.TransE, params, edges)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getLong(3)).toMap
     def mi(id: Long, pos: Int, seed: Double): Long =
       math.round(math.sin((id % 9973 + 1) * (pos + 1) * 0.017 + seed) * 1e6)
@@ -531,11 +542,11 @@ class TrainingSpec extends AnyFunSuite {
   }
 
   test("transeRanksSampled: candMod=1 is exhaustive; sampled pool mirrors the md5 draw") {
-    val params = Training.transeSgdStep(ents, edges, dim = 4,
+    val params = Training.transeSgd(ents, edges, dim = 4,
       entSeed = 0.3, relSeed = 1.7, gamma = -1000.0)
-    def ranks(m: Int) = Training.transeRanksSampled(params, edges, candMod = m)
+    def ranks(m: Int) = Training.ranks(Model.TransE, params, edges, candMod = m)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getLong(3)).toMap
-    assert(ranks(1) == Training.transeRanks(params, edges)
+    assert(ranks(1) == Training.ranks(Model.TransE, params, edges)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getLong(3)).toMap)
     // Brute-force the md5-drawn half-pool in the same micro-int units.
     def md5p60(s: String): Long = {
@@ -561,7 +572,7 @@ class TrainingSpec extends AnyFunSuite {
   }
 
   test("transeRanksFiltered: known true tails leave the pool, others stay") {
-    val params = Training.transeSgdStep(ents, edges, dim = 4,
+    val params = Training.transeSgd(ents, edges, dim = 4,
       entSeed = 0.3, relSeed = 1.7, gamma = -1000.0)
     def m(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getLong(3)).toMap
@@ -578,17 +589,18 @@ class TrainingSpec extends AnyFunSuite {
       (h, r, t) -> (1L + pool.count(c =>
         dist(h, r, c) < dt || (dist(h, r, c) == dt && c < t)))
     }.toMap
-    assert(m(Training.transeRanksFiltered(params, edges, edges)) == want)
+    assert(m(Training.ranks(Model.TransE, params, edges,
+        filter = Some(edges))) == want)
     // An empty filter set reduces to the unfiltered ranks.
-    assert(m(Training.transeRanksFiltered(params, edges,
-        edges.filter(col("rel") < 0)))
-      == m(Training.transeRanks(params, edges)))
+    assert(m(Training.ranks(Model.TransE, params, edges,
+        filter = Some(edges.filter(col("rel") < 0))))
+      == m(Training.ranks(Model.TransE, params, edges)))
   }
 
   test("distmultRanks: descending bilinear score against a brute-force model") {
-    val params = Training.distmultSgdStep(ents, edges, dim = 4,
+    val params = Training.sgd(Model.DistMult, ents, edges, dim = 4,
       entSeed = 0.3, relSeed = 1.7, gamma = -1000.0)
-    val got = Training.distmultRanks(params, edges)
+    val got = Training.ranks(Model.DistMult, params, edges)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getLong(3)).toMap
     def mi(id: Long, pos: Int, seed: Double): Long =
       math.round(math.sin((id % 9973 + 1) * (pos + 1) * 0.017 + seed) * 1e6)
@@ -611,7 +623,7 @@ class TrainingSpec extends AnyFunSuite {
     def m(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getLong(3)).toMap
     // ComplEx: frozen step (init state), Re<h,r,conj(c)> descending.
-    val cp = Training.complexSgdStep(ents, edges, dim = 4,
+    val cp = Training.sgd(Model.ComplEx, ents, edges, dim = 4,
       entSeed = 0.3, relSeed = 1.7, gamma = -1e6)
     val im = Training.IM_SEED_OFFSET
     def cscore(h: Long, r: Long, t: Long): BigInt =
@@ -626,9 +638,9 @@ class TrainingSpec extends AnyFunSuite {
       (h, r, t) -> (1L + entIds.filter(_ != t).count(c =>
         cscore(h, r, c) > st || (cscore(h, r, c) == st && c < t)))
     }.toMap
-    assert(m(Training.complexRanks(cp, edges)) == cwant)
+    assert(m(Training.ranks(Model.ComplEx, cp, edges)) == cwant)
     // RotatE: frozen step, component-L1 rotation distance ascending.
-    val rp = Training.rotateSgdStep(ents, edges, dim = 4,
+    val rp = Training.sgd(Model.RotatE, ents, edges, dim = 4,
       entSeed = 0.3, relSeed = 1.7, gamma = -1e6)
     def rdist(h: Long, r: Long, t: Long): Long =
       (0 until 4).map { p =>
@@ -645,12 +657,46 @@ class TrainingSpec extends AnyFunSuite {
       (h, r, t) -> (1L + entIds.filter(_ != t).count(c =>
         rdist(h, r, c) < dt || (rdist(h, r, c) == dt && c < t)))
     }.toMap
-    assert(m(Training.rotateRanks(rp, edges)) == rwant)
+    assert(m(Training.ranks(Model.RotatE, rp, edges)) == rwant)
+  }
+
+  test("the loop releases its blocks: 6 steps hold no more than 2") {
+    val sc = spark.sparkContext
+    // (RDDs, bytes) a run made that still hold blocks once its result is
+    // collected — a delta around the call; the result stays referenced.
+    // Every RDD the run persists is pinned while it runs, so the
+    // ContextCleaner cannot drop one that became unreachable on a GC:
+    // what is gone is what the loop released itself.
+    def held(run: Int => org.apache.spark.sql.DataFrame, steps: Int) = {
+      val first = sc.emptyRDD[Int].id
+      val pinned = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
+      @volatile var running = true
+      val pinner = new Thread(() => while (running) {
+        sc.getPersistentRDDs.values.foreach(pinned.add)
+        Thread.sleep(2)
+      })
+      pinner.start()
+      val out = try { val df = run(steps); df.collect(); df }
+        finally { running = false; pinner.join() }
+      org.apache.spark.TestBus.drain(sc)
+      val mine = sc.getRDDStorageInfo.filter(_.id > first)
+      assert(out.columns.length == 4 && pinned.size > 0)
+      (mine.length, mine.map(r => r.memSize + r.diskSize).sum)
+    }
+    val transe = (n: Int) => Training.transeSgd(ents, edges, dim = 4,
+      entSeed = 0.3, relSeed = 1.7, steps = n)
+    val rotate = (n: Int) => Training.sgd(Model.RotatE, ents, edges, dim = 4,
+      entSeed = 0.3, relSeed = 1.7, steps = n)
+    for ((name, run) <- Seq("transe" -> transe, "rotate" -> rotate)) {
+      val (two, six) = (held(run, 2), held(run, 6))
+      assert(six._1 <= two._1 && six._2 <= two._2,
+        s"$name: 6 steps hold $six, 2 steps hold $two (RDDs, bytes)")
+    }
   }
 
   test("default margin: updated frame is deterministic across partitionings") {
     val a = step(gamma = 1.0)
-    val b = Training.transeSgdStep(ents.repartition(3),
+    val b = Training.transeSgd(ents.repartition(3),
         edges.repartition(2), dim = 4, entSeed = 0.3, relSeed = 1.7)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
