@@ -638,8 +638,8 @@ object Training {
     * `batches` = steps > 0 runs step k over mini-batch k−1. The loop owns
     * its blocks: once step k's state is materialized it releases step
     * k−1's state and optimizer state and step k's temporaries, and after
-    * the last step the entity set and the edge frame, so a run leaves
-    * only the returned state's blocks behind. */
+    * the last step the entity set, its index and the edge frame, so a run
+    * leaves only the returned state's blocks behind. */
   private def loop(model: Model, rule: Optimizer, entities: DataFrame,
                    edges: DataFrame, dim: Int, entSeed: Double,
                    relSeed: Double, steps: Int, gamma: Double, lr: Double,
