@@ -101,7 +101,8 @@ final class GraftKG(val spark: SparkSession, val edges: DataFrame,
     * transe | distmult | complex | rotate; `steps` > 1 iterates the
     * quantized-state loop for every model; `hashNeg` swaps the cyclic
     * corruption for the portable md5 draw (TransE, single step);
-    * `momentum` > 0 runs TransE with heavy-ball momentum. Returns the
+    * `momentum` > 0 runs TransE with heavy-ball momentum (not with
+    * `hashNeg`, which runs plain SGD). Returns the
     * long-form updated parameter frame (kind, id, pos, x). */
   def train(model: String, dim: Int = 8,
             entSeed: Double = 0.3, relSeed: Double = 1.7,
