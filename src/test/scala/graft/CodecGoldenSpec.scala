@@ -26,6 +26,13 @@ class CodecGoldenSpec extends AnyFunSuite {
     check(streams.map { case (k, b) => k -> sha(b) }, GeneratorDigests)
   }
 
+  test("Layer III generators over seeds 0-23 and 1-4 frames match the pinned digests") {
+    check(layer3Variants.map { case (k, gen) =>
+      k -> sha((for (seed <- 0L until 24L; n <- 1 to 4) yield gen(seed, n))
+        .flatten.toArray)
+    }, Layer3SweepDigests)
+  }
+
   test("decoded results on the generator streams match the pinned digests") {
     check(decoders.map { case (name, fn) =>
       name -> sha(streams.map { case (k, b) => k + "=" + outcome(fn, b) }
@@ -265,6 +272,43 @@ object CodecGoldenSpec {
           Array(ChannelPlan(PlanConstant, 0, ResidualPlan(0, 0)))))))
   }
 
+  /** Every Layer III generator variant of [[streams]], as a function of
+    * seed and frame count. */
+  val layer3Variants: Seq[(String, (Long, Int) => Array[Byte])] = {
+    val M = Multimodal
+    Seq(
+      "layer3Bytes" -> (M.layer3Bytes(_, _)),
+      "layer3BytesFull" -> (M.layer3BytesFull(_, _)),
+      "layer3BytesFull/crc" -> (M.layer3BytesFull(_, _, crc = true)),
+      "layer3ShortBytes" -> (M.layer3ShortBytes(_, _)),
+      "layer3StereoShortBytes" -> (M.layer3StereoShortBytes(_, _)),
+      "layer3StereoShortBytes/is" ->
+        (M.layer3StereoShortBytes(_, _, intensity = true)),
+      "layer3MixedBytes" -> (M.layer3MixedBytes(_, _)),
+      "layer3MixedStereoBytes" -> (M.layer3MixedStereoBytes(_, _)),
+      "layer3MixedStereoBytes/is" ->
+        (M.layer3MixedStereoBytes(_, _, intensity = true)),
+      "layer3LsfBytes" -> (M.layer3LsfBytes(_, _)),
+      "layer3LsfBytes/v25" -> (M.layer3LsfBytes(_, _, v25 = true)),
+      "layer3LsfShortBytes" -> (M.layer3LsfShortBytes(_, _)),
+      "layer3LsfShortBytes/mixed" -> (M.layer3LsfShortBytes(_, _, mixed = true)),
+      "layer3LsfIntensityBytes" -> (M.layer3LsfIntensityBytes(_, _)),
+      "layer3LsfIntensityBytes/short" ->
+        (M.layer3LsfIntensityBytes(_, _, shortBlocks = true)),
+      "layer3StartStopBytes" -> (M.layer3StartStopBytes(_, _)),
+      "layer3LinbitsBytes" -> (M.layer3LinbitsBytes(_, _)),
+      "layer3HuffRealBytes" -> (M.layer3HuffRealBytes(_, _)),
+      "layer3Huff12Bytes" -> (M.layer3Huff12Bytes(_, _)),
+      "layer3HuffLoadBytes" -> (M.layer3HuffLoadBytes(_, _, 13, 24,
+        L3IsoHuff.synthLoadEncode, 4)),
+      "layer3Bytes44k" -> (M.layer3Bytes44k(_, _)),
+      "layer3Bytes44k/sr32" -> (M.layer3Bytes44k(_, _, sr32 = true)),
+      "layer3StereoBytes" -> (M.layer3StereoBytes(_, _)),
+      "layer3StereoBytes/is" -> (M.layer3StereoBytes(_, _, intensity = true)),
+      "layer3StereoBytes/is67" ->
+        (M.layer3StereoBytes(_, _, intensity = true, isPos67 = true)))
+  }
+
   /** The codec-seam decoders that read bit fields, plus the dispatcher. */
   val decoders: Seq[(String, Array[Byte] => Any)] = Seq(
     "layer1Decode" -> (Multimodal.layer1Decode(_)),
@@ -285,6 +329,60 @@ object CodecGoldenSpec {
     "flacParseTags" -> (Flac.parseTags(_)),
     "dispatch" -> ((b: Array[Byte]) =>
       AudioDispatch.dispatch(b, allowSyntheticAac = true)))
+
+  // Recorded at the commit before the Layer III generators moved onto
+  // one stream writer.
+  val Layer3SweepDigests: Map[String, String] = Map(
+    "layer3Bytes" ->
+      "68aa3690d5658c10bd443f70a55621a63e72ec95afbef3b6cb4f0f7653687a09",
+    "layer3BytesFull" ->
+      "5a703d7105246ae2f061712edbb1af656eb322e6f3149a975fd46ee5b1b08000",
+    "layer3BytesFull/crc" ->
+      "7a8bd49942772a3f889c01646378f16b39ad2f91aa1e47a906b7b6771ff562f6",
+    "layer3ShortBytes" ->
+      "fb19564d43be882ee0a57d78600d4d55a6423f7dcadf12c610d67fa719d963ce",
+    "layer3StereoShortBytes" ->
+      "9e7eaa6b5d00fc90ea91be2e83a401fc2c2feb2c9217e70a8cb5cdf7f04f9b0e",
+    "layer3StereoShortBytes/is" ->
+      "0065cff416c6700fa355951d07942bfe329661f66d7efb1b61fa47c53dc6389e",
+    "layer3MixedBytes" ->
+      "5411d29cf5f1617a7b7177def443670bd94ecdd04db7ba34ef1de2a9a10a3a30",
+    "layer3MixedStereoBytes" ->
+      "381ffdb56c94b0f0d2b7d6d002f8e08ec3255b124f83f2cabfb41e9fb557fb4c",
+    "layer3MixedStereoBytes/is" ->
+      "04c45c875bf1eabdaca740871bb029827005ed337f7e5e58018e2858e677619a",
+    "layer3LsfBytes" ->
+      "b8dd4d5c9bb73a30753b61c1b3aacfcfd7d7a8ca94076d7d366cfc7a1c444654",
+    "layer3LsfBytes/v25" ->
+      "f7b4b08299e287748161419a6cf63440477bcceb1c7722b768a8c0dfa23b51be",
+    "layer3LsfShortBytes" ->
+      "b55bfb13d3981e8f7b73fbb099e7979f2196f7391c77c9476c47fc38e8a3a9f5",
+    "layer3LsfShortBytes/mixed" ->
+      "9a17d984b3a45538fee975bbe032e57c66accd064d2e4e2816e9e0fb6da9bd87",
+    "layer3LsfIntensityBytes" ->
+      "c429806ecb6430ca7b94869b5ac3deffbcaea6a902f0d8a3e21820949b312265",
+    "layer3LsfIntensityBytes/short" ->
+      "90b606a058a00528e80257724ca660277b8630ea11dc91da24e93ca42d479bc8",
+    "layer3StartStopBytes" ->
+      "2fac38d085d1ee4d9b9451e0c5a7c8bcce8f7789a0eb5ede68a58545b7f34253",
+    "layer3LinbitsBytes" ->
+      "a1447628423cdc984ae8d7c6c1212449b879451fe1abbbc9150214782a723883",
+    "layer3HuffRealBytes" ->
+      "06a087cc761abb11e985779c1c33bc27c0ee1767da0ee0040e45618e950f1438",
+    "layer3Huff12Bytes" ->
+      "075fca24c0828949a561dcc6c17935319f993681f0ebfa67f442c03b28d65904",
+    "layer3HuffLoadBytes" ->
+      "4ac71c3089e7ae0af080ac6ef1579028674b41baa0f6d453226b56e71db18c13",
+    "layer3Bytes44k" ->
+      "97dca58aaba9aa512816d08fe9d845deed879f837486da3849f339dba0a40355",
+    "layer3Bytes44k/sr32" ->
+      "2a6644aa1281d807d4f31562691282ad5f890a5d5369354beb6aedba38196949",
+    "layer3StereoBytes" ->
+      "71757efc474b8adf34fd1399160b2e458691a94776663ae7398a6629d434abe1",
+    "layer3StereoBytes/is" ->
+      "b3a34b0a344aa1b805650d4798acd4a63b171176ed31798c82b6b81d4e8d114a",
+    "layer3StereoBytes/is67" ->
+      "b13fbd24f5cb3c2fe9bb61d9d19f7d83c17785aa40bbb8cf0ed7864b4ec9f90f")
 
   // Recorded at the commit before the bit I/O moved into pipeline/Bits.
   val GeneratorDigests: Map[String, String] = Map(
