@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import L3Writer.{Gran, Table}
+
 /** Multimodal column plumbing: image/audio/video as opaque `BINARY` columns
   * with typed metadata, plus decode / feature-extraction / resize /
   * frame-sampling operators.
@@ -2115,51 +2117,13 @@ object Multimodal {
     * (scalefac_compress 0), no count1 region — part2_3_length is the
     * EXACT Huffman bit count, so the decoder's bit account must land
     * on it to the bit. */
-  def layer3Bytes(seed: Long, nFrames: Int): Array[Byte] = {
-    val frameLen = 576
-    val w = new BitWriter
-    (0 until nFrames).foreach { f =>
-      w.pos = f * frameLen * 8L
-      w.bits(0xff, 8); w.bits(0xfb, 8) // sync + MPEG1 + Layer III + no CRC
-      w.bits(0xb4, 8)                  // bitrate idx 11 (192), sr idx 1 (48k)
-      w.bits(0xc0, 8)                  // mono
-      def pairs(g: Int): Seq[(Int, Int)] = {
-        val n = 16 + ((seed + f + g) % 17).toInt
-        (0 until n).map(k =>
-          ((((seed * 3 + f * 7 + g * 11 + k * 5) % 3) - 1).toInt,
-           (((seed * 5 + f * 11 + g * 3 + k * 7) % 3) - 1).toInt))
-      }
-      def hlen(x: Int, y: Int): Int =
-        (if (x == 0 && y == 0) 1 else if (y == 0) 2 else 3) +
-          (if (x != 0) 1 else 0) + (if (y != 0) 1 else 0)
-      // side info (17 bytes, mono)
-      w.bits(0, 9); w.bits(0, 5); w.bits(0, 4) // main_data_begin, private, scfsi
-      (0 until 2).foreach { g =>
-        val p23 = pairs(g).map { case (x, y) => hlen(x.abs, y.abs) }.sum
-        w.bits(p23, 12)
-        w.bits(pairs(g).size, 9)
-        w.bits((seed * 13 + f * 19 + g * 29) % 256, 8)
-        w.bits(0, 4) // scalefac_compress 0 -> zero scalefactor bits
-        w.bits(0, 1) // no window switching
-        w.bits(1, 5); w.bits(1, 5); w.bits(1, 5) // table 1 for all three regions
-        w.bits(4, 4); w.bits(3, 3)               // region0_count, region1_count
-        w.bits(0, 1); w.bits(0, 1); w.bits(0, 1) // preflag, sf_scale, count1 sel
-      }
-      (0 until 2).foreach { g =>
-        pairs(g).foreach { case (x, y) =>
-          w.str(
-            if (x == 0 && y == 0) "1"
-            else if (y == 0) "01"
-            else if (x == 0) "001"
-            else "000")
-          if (x != 0) w.bits(if (x < 0) 1 else 0, 1)
-          if (y != 0) w.bits(if (y < 0) 1 else 0, 1)
-        }
+  def layer3Bytes(seed: Long, nFrames: Int): Array[Byte] =
+    L3Writer.stream(nFrames, _ => 576, _ => L3Mono48) { f =>
+      (0 until 2).map { g =>
+        Gran(((seed * 13 + f * 19 + g * 29) % 256).toInt, 0, Seq(1, 1, 1), Nil,
+          L3Salt(seed, f, g, 0).unitPairs(), sfScale = 0, count1B = false)
       }
     }
-    w.pos = nFrames * frameLen * 8L
-    w.toBytes
-  }
 
   // ---- Layer III full path: reservoir + count1 + scalefactors +
   // ---- requantization + alias reduction + IMDCT (11172-3 §2.4.3.4) ----
@@ -3141,6 +3105,130 @@ object Multimodal {
     (if (y >= 0) math.floor(y + 0.5) else math.ceil(y - 0.5)).toLong
   }
 
+  /** MPEG-1 Layer III header: 192 kbps, 48 kHz, mono, no CRC. */
+  private val L3Mono48 = 0xfffbb4c0
+
+  /** Content formulas the Layer III fixtures share. `g` and `ch` enter as
+    * salts: 0 for a mono channel and for an LSF frame's one granule. */
+  private final case class L3Salt(seed: Long, f: Int, g: Int, ch: Int) {
+    /** The usual big-values pair count, 16 to 32. */
+    def count: Int = 16 + ((seed + f + g + ch * 2) % 17).toInt
+    /** `n` table-1 pairs, x, y ∈ {−1, 0, 1}. */
+    def unitPairs(n: Int = count): Seq[(Int, Int)] = (0 until n).map(k =>
+      ((((seed * 3 + f * 7 + g * 11 + ch * 13 + k * 5) % 3) - 1).toInt,
+       (((seed * 5 + f * 11 + g * 3 + ch * 7 + k * 7) % 3) - 1).toInt))
+    /** `n` signed pairs; pair k's magnitudes are below `mod(k)`. */
+    def magPairs(n: Int)(mod: Int => Int): Seq[(Int, Int)] = (0 until n).map { k =>
+      val mx = ((seed * 3 + f * 7 + g * 11 + k * 5) % mod(k)).toInt
+      val my = ((seed * 5 + f * 11 + g * 3 + k * 7) % mod(k)).toInt
+      (if ((seed + f + k) % 2 == 1) -mx else mx,
+       if ((seed + g + k) % 2 == 1) -my else my)
+    }
+    /** 4 to 8 count1 quads of values in {−1, 0, 1}. */
+    def quads: Seq[Array[Int]] =
+      (0 until 4 + ((seed + f * 2 + g + ch) % 5).toInt).map { q =>
+        Array.tabulate(4) { j =>
+          val bit = ((seed * (j + 2) + f * 3 + g * 5 + q * 7 + ch * 11) % 2).toInt
+          if ((seed + f + j + q + ch) % 2 == 0) bit else -bit
+        }
+      }
+    /** global_gain 210 + 4k, k ∈ −2..5: requantized values stay dyadic. */
+    def gain: Int = 210 + 4 * (((seed + f * 2 + g + ch * 3) % 8).toInt - 2)
+    /** Scalefactor of slot `i` (a long band, or a short band + window). */
+    def sf(i: Int, mod: Int = 4): Long = (seed + f + i + g * 3 + ch * 5) % mod
+    /** Subblock gain of short window `w`. */
+    def sbg(w: Int): Int = ((seed + f * 2 + g + w * 3 + ch) % 5).toInt
+  }
+
+  /** The LSF 9-bit scalefac_compress, cycling the three 13818-3 long
+    * classes (< 400 / 400–499 / 500–511) by frame. */
+  private def l3LsfScomp(seed: Long, f: Int): Int = (f % 3) match {
+    case 0 => ((seed * 3 + f * 7) % 400).toInt
+    case 1 => 400 + ((seed * 5 + f * 11) % 100).toInt
+    case _ => 500 + ((seed * 7 + f * 13) % 12).toInt
+  }
+
+  /** LSF scalefactor slots through a (slens, partition counts) layout. */
+  private def l3LsfSf(seed: Long, f: Int,
+                      layout: (Array[Int], Array[Int])): Seq[(Long, Int)] = {
+    val (slens, parts) = layout
+    (0 until 4).flatMap(p => Seq.fill(parts(p))(slens(p))).zipWithIndex
+      .map { case (w, slot) => ((seed + f + slot * 3) % (1L << w), w) }
+  }
+
+  /** MPEG-1 48 kHz long-block granules with table 1, count1 table B,
+    * scfsi sharing and the reservoir: [[layer3BytesFull]] (mono) and
+    * [[layer3StereoBytes]] (joint stereo, MS or intensity). */
+  private def l3LongBytes(seed: Long, nFrames: Int, stereo: Boolean,
+                          crc: Boolean = false, intensity: Boolean = false,
+                          isPos67: Boolean = false): Array[Byte] = {
+    // intensity: scfsi off (the right channel's high-band slots carry
+    // is_pos), the right channel band-limited to lines < 16, no count1
+    def scfsiOf(f: Int, ch: Int): Int =
+      if (intensity) 0 else ((seed + f + ch) % 16).toInt
+    val hdr = if (!stereo) L3Mono48 else if (intensity) 0xfffbb450 else 0xfffbb460
+    L3Writer.stream(nFrames, _ => 576, _ => hdr, crc, L3Writer.reservoir(seed),
+                    scfsiOf) { f =>
+      for (g <- 0 until 2; ch <- 0 until (if (stereo) 2 else 1)) yield {
+        val s = L3Salt(seed, f, g, ch)
+        val right = intensity && ch == 1
+        // isPos67: the right channel sends 3-bit slots (scomp 13 → slen
+        // 3/3), so its is_pos reaches 6 (fully left) and 7 (no processing)
+        val slen = if (isPos67 && ch == 1) 3 else 2
+        // granule 1 resends a scfsi group's bands only where its bit is 0
+        val sent = (0 until 21).filter { b =>
+          val group = if (b < 6) 0 else if (b < 11) 1 else if (b < 16) 2 else 3
+          g == 0 || ((scfsiOf(f, ch) >> (3 - group)) & 1) == 0
+        }
+        Gran(s.gain, if (slen == 3) 13 else 9, Seq(1, 1, 1),
+          sent.map(b => (s.sf(b, 1 << slen), slen)),
+          s.unitPairs(if (right) 8 else s.count), if (right) Nil else s.quads,
+          preflag = if ((seed + f + g + ch) % 3 == 0) 1 else 0)
+      }
+    }
+  }
+
+  /** MPEG-1 48 kHz block_type 2 granules with table 1, count1 table B and
+    * the reservoir: pure short (12 bands × 3 windows of scalefactors) or
+    * mixed (8 long bands, then short bands 3–11), mono or joint stereo.
+    * Under intensity the right channel sends 9 pairs (mixed: 9 or 21 by
+    * granule) and no count1 quads. */
+  private def l3ShortBytes(seed: Long, nFrames: Int, stereo: Boolean,
+                           mixed: Boolean,
+                           intensity: Boolean = false): Array[Byte] = {
+    val hdr = if (!stereo) L3Mono48 else if (intensity) 0xfffbb450 else 0xfffbb460
+    val slots = (0 until (if (mixed) 8 else 0)) ++
+      ((if (mixed) 3 else 0) until 12).flatMap(b => (0 until 3).map(b + _))
+    L3Writer.stream(nFrames, _ => 576, _ => hdr,
+                    back = L3Writer.reservoir(seed)) { f =>
+      for (g <- 0 until 2; ch <- 0 until (if (stereo) 2 else 1)) yield {
+        val s = L3Salt(seed, f, g, ch)
+        val right = intensity && ch == 1
+        val n = if (!right) s.count
+                else if (!mixed || (seed + f + g) % 2 == 0) 9 else 21
+        Gran(s.gain, 9, Seq(1, 1), slots.map(i => (s.sf(i), 2)),
+          s.unitPairs(n), if (right) Nil else s.quads,
+          Some((2, if (mixed) 1 else 0, (0 until 3).map(s.sbg))))
+      }
+    }
+  }
+
+  /** MPEG-2 LSF mono 24 kHz / 64 kbps window-switched granules, one per
+    * frame, with table 1, count1 table B and the reservoir: `btn` 0 is
+    * start/stop by frame, 1 pure short, 2 mixed. `v25` re-emits the same
+    * payloads as MPEG-2.5 at 12 kHz. */
+  private def l3LsfBytes(seed: Long, nFrames: Int, btn: Int,
+                         v25: Boolean): Array[Byte] =
+    L3Writer.stream(nFrames, _ => if (v25) 384 else 192,
+      _ => if (v25) 0xffe384c0 else 0xfff384c0, back = L3Writer.reservoir(seed)) { f =>
+      val s = L3Salt(seed, f, 0, 0)
+      val sfc = l3LsfScomp(seed, f)
+      val blockType = if (btn > 0) 2 else if ((seed + f) % 2 == 0) 1 else 3
+      Seq(Gran(s.gain, sfc, Seq(1, 1), l3LsfSf(seed, f, lsfScale(sfc, btn)),
+        s.unitPairs(), s.quads, Some((blockType, if (btn == 2) 1 else 0,
+          (0 until 3).map(w => ((seed + f + w) % 8).toInt)))))
+    }
+
   /** The encode half of the [[layer3DecodeFull]] round trip: a real
     * MPEG-1 Layer III mono 48 kHz / 192 kbps stream that exercises the
     * whole structural chain — nonzero `main_data_begin` back-pointers
@@ -3157,135 +3245,8 @@ object Multimodal {
     * unchanged, so the protected stream decodes to the IDENTICAL rows
     * and shares the unprotected oracle. */
   def layer3BytesFull(seed: Long, nFrames: Int,
-                      crc: Boolean = false): Array[Byte] = {
-    val frameLen = 576
-    val hdrSide = if (crc) 23 else 21 // 4 header [+2 crc] + 17 side
-    val cap = frameLen - hdrSide // main-data bytes per frame
-    val out = new BitWriter
-    val pool = new BitWriter // the main-data reservoir
-
-    def sfBase(f: Int, g: Int, band: Int): Int =
-      ((seed + f + band + g * 3) % 4).toInt
-    def scfsiOf(f: Int): Int = ((seed + f) % 16).toInt
-    def sfOf(f: Int, g: Int, band: Int): Int = {
-      val group = if (band < 6) 0 else if (band < 11) 1
-                  else if (band < 16) 2 else 3
-      if (g == 1 && ((scfsiOf(f) >> (3 - group)) & 1) == 1) sfBase(f, 0, band)
-      else sfBase(f, g, band)
-    }
-    def pairs(f: Int, g: Int): Seq[(Int, Int)] = {
-      val n = 16 + ((seed + f + g) % 17).toInt
-      (0 until n).map(k =>
-        ((((seed * 3 + f * 7 + g * 11 + k * 5) % 3) - 1).toInt,
-         (((seed * 5 + f * 11 + g * 3 + k * 7) % 3) - 1).toInt))
-    }
-    def quads(f: Int, g: Int): Seq[Array[Int]] = {
-      val n = 4 + ((seed + f * 2 + g) % 5).toInt
-      (0 until n).map { q =>
-        Array.tabulate(4) { j =>
-          val bit = ((seed * (j + 2) + f * 3 + g * 5 + q * 7) % 2).toInt
-          val sgn = if ((seed + f + j + q) % 2 == 0) 1 else -1
-          bit * sgn
-        }
-      }
-    }
-    def gainOf(f: Int, g: Int): Int =
-      210 + 4 * (((seed + f * 2 + g) % 8).toInt - 2)
-    def preflagOf(f: Int, g: Int): Int =
-      if ((seed + f + g) % 3 == 0) 1 else 0
-    def sfBits(f: Int, g: Int): Int = {
-      var n = 0; var band = 0
-      while (band < 21) {
-        val group = if (band < 6) 0 else if (band < 11) 1
-                    else if (band < 16) 2 else 3
-        val transmitted = g == 0 || ((scfsiOf(f) >> (3 - group)) & 1) == 0
-        if (transmitted) n += 2 // slen1 = slen2 = 2 (scomp 9)
-        band += 1
-      }
-      n
-    }
-    def huffBits(f: Int, g: Int): Int = {
-      val pb = pairs(f, g).map { case (x, y) =>
-        (if (x == 0 && y == 0) 1 else if (y == 0) 2 else 3) +
-          (if (x != 0) 1 else 0) + (if (y != 0) 1 else 0)
-      }.sum
-      val qb = quads(f, g).map(q => 4 + q.count(_ != 0)).sum
-      pb + qb
-    }
-
-    val mdbs = new Array[Int](nFrames)
-    (0 until nFrames).foreach { f =>
-      // reservoir: frame f's granule data starts mdb bytes before its
-      // nominal pool position; stuff the gap left by the previous frame.
-      val nominal = f * cap
-      val want = if (f == 0) 0 else ((seed * 7 + f * 13) % 40).toInt
-      val avail = nominal - ((pool.pos + 7) / 8).toInt
-      val mdb = math.min(want, math.max(avail, 0))
-      mdbs(f) = mdb
-      val startBit = (nominal - mdb) * 8
-      pool.pos = math.max(pool.pos, startBit) // zero stuffing
-      (0 until 2).foreach { g =>
-        var band = 0
-        while (band < 21) {
-          val group = if (band < 6) 0 else if (band < 11) 1
-                      else if (band < 16) 2 else 3
-          if (g == 0 || ((scfsiOf(f) >> (3 - group)) & 1) == 0)
-            pool.bits(sfOf(f, g, band), 2)
-          band += 1
-        }
-        pairs(f, g).foreach { case (x, y) =>
-          val s = if (x == 0 && y == 0) "1"
-                  else if (y == 0) "01"
-                  else if (x == 0) "001" else "000"
-          pool.str(s)
-          if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
-          if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
-        }
-        quads(f, g).foreach { q =>
-          var code = 0
-          q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-          pool.bits(code, 4)
-          q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
-        }
-      }
-    }
-    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
-    // physical frames: header + side info, then the pool slice
-    (0 until nFrames).foreach { f =>
-      out.pos = f * frameLen * 8L
-      out.bits(0xff, 8); out.bits(if (crc) 0xfa else 0xfb, 8)
-      out.bits(0xb4, 8); out.bits(0xc0, 8)
-      if (crc) out.bits(0, 16) // CRC placeholder, patched after the side info
-      out.bits(mdbs(f), 9); out.bits(0, 5); out.bits(scfsiOf(f), 4)
-      (0 until 2).foreach { g =>
-        out.bits(sfBits(f, g) + huffBits(f, g), 12)
-        out.bits(pairs(f, g).size, 9)
-        out.bits(gainOf(f, g), 8)
-        out.bits(9, 4)                                 // scalefac_compress 9 → slen 2/2
-        out.bits(0, 1)                                 // no window switching
-        out.bits(1, 5); out.bits(1, 5); out.bits(1, 5) // table 1 everywhere
-        out.bits(4, 4); out.bits(3, 3)                 // region counts
-        out.bits(preflagOf(f, g), 1)
-        out.bits(1, 1) // scalefac_scale 1 (multiplier 1)
-        out.bits(1, 1) // count1 table B
-      }
-      if (crc) {
-        val base = f * frameLen
-        val head = out.toBytes
-        val protected_ = head.slice(base + 2, base + 4) ++
-          head.slice(base + 6, base + 23)
-        val c = mpegCrc16(protected_, 0, protected_.length)
-        val sideEnd = out.pos
-        out.pos = (base + 4) * 8L
-        out.bits(c, 16)
-        out.pos = sideEnd
-      }
-      // copy this frame's main-data area from the pool
-      out.bytes(main, f * cap, cap)
-    }
-    out.pos = nFrames * frameLen * 8L
-    out.toBytes
-  }
+                      crc: Boolean = false): Array[Byte] =
+    l3LongBytes(seed, nFrames, stereo = false, crc = crc)
 
   /** The encode half of the SHORT-BLOCK round trip: a real MPEG-1
     * Layer III mono 48 kHz / 192 kbps stream whose every granule uses
@@ -3297,96 +3258,8 @@ object Multimodal {
     * integral exponents keep every requantized value an exact dyadic
     * double. Short scalefactor-band GEOMETRY is the REAL ISO Table B.8
     * 48 kHz short column (round 14). */
-  def layer3ShortBytes(seed: Long, nFrames: Int): Array[Byte] = {
-    val frameLen = 576
-    val cap = frameLen - 21
-    val out = new BitWriter
-    val pool = new BitWriter // the main-data reservoir
-    def sfOf(f: Int, g: Int, b: Int, w: Int): Int =
-      ((seed + f + b + w + g * 3) % 4).toInt
-    def sbgOf(f: Int, g: Int, w: Int): Int =
-      ((seed + f * 2 + g + w * 3) % 5).toInt
-    def pairs(f: Int, g: Int): Seq[(Int, Int)] = {
-      val n = 16 + ((seed + f + g) % 17).toInt
-      (0 until n).map(k =>
-        ((((seed * 3 + f * 7 + g * 11 + k * 5) % 3) - 1).toInt,
-         (((seed * 5 + f * 11 + g * 3 + k * 7) % 3) - 1).toInt))
-    }
-    def quads(f: Int, g: Int): Seq[Array[Int]] = {
-      val n = 4 + ((seed + f * 2 + g) % 5).toInt
-      (0 until n).map { q =>
-        Array.tabulate(4) { j =>
-          val bit = ((seed * (j + 2) + f * 3 + g * 5 + q * 7) % 2).toInt
-          val sgn = if ((seed + f + j + q) % 2 == 0) 1 else -1
-          bit * sgn
-        }
-      }
-    }
-    def gainOf(f: Int, g: Int): Int =
-      210 + 4 * (((seed + f * 2 + g) % 8).toInt - 2)
-    def huffBits(f: Int, g: Int): Int = {
-      val pb = pairs(f, g).map { case (x, y) =>
-        (if (x == 0 && y == 0) 1 else if (y == 0) 2 else 3) +
-          (if (x != 0) 1 else 0) + (if (y != 0) 1 else 0)
-      }.sum
-      val qb = quads(f, g).map(q => 4 + q.count(_ != 0)).sum
-      pb + qb
-    }
-
-    val mdbs = new Array[Int](nFrames)
-    (0 until nFrames).foreach { f =>
-      val nominal = f * cap
-      val want = if (f == 0) 0 else ((seed * 7 + f * 13) % 40).toInt
-      val avail = nominal - ((pool.pos + 7) / 8).toInt
-      val mdb = math.min(want, math.max(avail, 0))
-      mdbs(f) = mdb
-      val startBit = (nominal - mdb) * 8
-      pool.pos = math.max(pool.pos, startBit)
-      (0 until 2).foreach { g =>
-        (0 until 12).foreach { b =>
-          (0 until 3).foreach(w => pool.bits(sfOf(f, g, b, w), 2))
-        }
-        pairs(f, g).foreach { case (x, y) =>
-          val s = if (x == 0 && y == 0) "1"
-                  else if (y == 0) "01"
-                  else if (x == 0) "001" else "000"
-          pool.str(s)
-          if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
-          if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
-        }
-        quads(f, g).foreach { q =>
-          var code = 0
-          q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-          pool.bits(code, 4)
-          q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
-        }
-      }
-    }
-    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
-    (0 until nFrames).foreach { f =>
-      out.pos = f * frameLen * 8L
-      out.bits(0xff, 8); out.bits(0xfb, 8)
-      out.bits(0xb4, 8); out.bits(0xc0, 8)
-      // scfsi 0: short always fresh
-      out.bits(mdbs(f), 9); out.bits(0, 5); out.bits(0, 4)
-      (0 until 2).foreach { g =>
-        out.bits(72 + huffBits(f, g), 12)        // part2 = 12 bands × 3 w × 2
-        out.bits(pairs(f, g).size, 9)
-        out.bits(gainOf(f, g), 8)
-        out.bits(9, 4)                 // scalefac_compress 9 → 2/2
-        out.bits(1, 1)                 // window switching
-        out.bits(2, 2); out.bits(0, 1) // block_type 2, not mixed
-        out.bits(1, 5); out.bits(1, 5) // table 1 in both regions
-        (0 until 3).foreach(w => out.bits(sbgOf(f, g, w), 3))
-        out.bits(0, 1) // preflag (not used w/ short)
-        out.bits(1, 1) // scalefac_scale 1
-        out.bits(1, 1) // count1 table B
-      }
-      out.bytes(main, f * cap, cap)
-    }
-    out.pos = nFrames * frameLen * 8L
-    out.toBytes
-  }
+  def layer3ShortBytes(seed: Long, nFrames: Int): Array[Byte] =
+    l3ShortBytes(seed, nFrames, stereo = false, mixed = false)
 
   /** The encode half of the MS-STEREO SHORT-BLOCK round trip: a real
     * MPEG-1 Layer III joint-stereo (MS extension) 48 kHz stream whose
@@ -3406,104 +3279,8 @@ object Multimodal {
     * channel's short scalefactor slots (fixture values 0–3, all inside
     * the tan(is_pos·π/12) table). */
   def layer3StereoShortBytes(seed: Long, nFrames: Int,
-                             intensity: Boolean = false): Array[Byte] = {
-    val frameLen = 576
-    val cap = frameLen - 36 // 4 header + 32 side info
-    val out = new BitWriter
-    val pool = new BitWriter // the main-data reservoir
-    def sfOf(f: Int, g: Int, b: Int, w: Int, ch: Int): Int =
-      ((seed + f + b + w + g * 3 + ch * 5) % 4).toInt
-    def sbgOf(f: Int, g: Int, w: Int, ch: Int): Int =
-      ((seed + f * 2 + g + w * 3 + ch) % 5).toInt
-    def pairs(f: Int, g: Int, ch: Int): Seq[(Int, Int)] = {
-      val n = if (intensity && ch == 1) 9
-              else 16 + ((seed + f + g + ch * 2) % 17).toInt
-      (0 until n).map(k =>
-        ((((seed * 3 + f * 7 + g * 11 + ch * 13 + k * 5) % 3) - 1).toInt,
-         (((seed * 5 + f * 11 + g * 3 + ch * 7 + k * 7) % 3) - 1).toInt))
-    }
-    def quads(f: Int, g: Int, ch: Int): Seq[Array[Int]] = {
-      val n = if (intensity && ch == 1) 0
-              else 4 + ((seed + f * 2 + g + ch) % 5).toInt
-      (0 until n).map { q =>
-        Array.tabulate(4) { j =>
-          val bit =
-            ((seed * (j + 2) + f * 3 + g * 5 + q * 7 + ch * 11) % 2).toInt
-          val sgn = if ((seed + f + j + q + ch) % 2 == 0) 1 else -1
-          bit * sgn
-        }
-      }
-    }
-    def gainOf(f: Int, g: Int, ch: Int): Int =
-      210 + 4 * (((seed + f * 2 + g + ch * 3) % 8).toInt - 2)
-    def huffBits(f: Int, g: Int, ch: Int): Int = {
-      val pb = pairs(f, g, ch).map { case (x, y) =>
-        (if (x == 0 && y == 0) 1 else if (y == 0) 2 else 3) +
-          (if (x != 0) 1 else 0) + (if (y != 0) 1 else 0)
-      }.sum
-      val qb = quads(f, g, ch).map(q => 4 + q.count(_ != 0)).sum
-      pb + qb
-    }
-    val mdbs = new Array[Int](nFrames)
-    (0 until nFrames).foreach { f =>
-      val nominal = f * cap
-      val want = if (f == 0) 0 else ((seed * 7 + f * 13) % 40).toInt
-      val avail = nominal - ((pool.pos + 7) / 8).toInt
-      val mdb = math.min(want, math.max(avail, 0))
-      mdbs(f) = mdb
-      val startBit = (nominal - mdb) * 8
-      pool.pos = math.max(pool.pos, startBit)
-      (0 until 2).foreach { g =>
-        (0 until 2).foreach { ch =>
-          (0 until 12).foreach { b =>
-            (0 until 3).foreach(w => pool.bits(sfOf(f, g, b, w, ch), 2))
-          }
-          pairs(f, g, ch).foreach { case (x, y) =>
-            val str = if (x == 0 && y == 0) "1"
-                      else if (y == 0) "01"
-                      else if (x == 0) "001" else "000"
-            pool.str(str)
-            if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
-            if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
-          }
-          quads(f, g, ch).foreach { q =>
-            var code = 0
-            q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-            pool.bits(code, 4)
-            q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
-          }
-        }
-      }
-    }
-    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
-    (0 until nFrames).foreach { f =>
-      out.pos = f * frameLen * 8L
-      out.bits(0xff, 8); out.bits(0xfb, 8)
-      out.bits(0xb4, 8)
-      // joint stereo; mode_extension 10 = MS, 01 = intensity
-      out.bits(if (intensity) 0x50 else 0x60, 8)
-      out.bits(mdbs(f), 9); out.bits(0, 3)
-      out.bits(0, 4); out.bits(0, 4) // scfsi 0 both channels
-      (0 until 2).foreach { g =>
-        (0 until 2).foreach { ch =>
-          out.bits(72 + huffBits(f, g, ch), 12)
-          out.bits(pairs(f, g, ch).size, 9)
-          out.bits(gainOf(f, g, ch), 8)
-          out.bits(9, 4)                 // scalefac_compress 9 → 2/2
-          out.bits(1, 1)                 // window switching
-          out.bits(2, 2); out.bits(0, 1) // block_type 2, not mixed
-          out.bits(1, 5); out.bits(1, 5) // table 1 in both regions
-          (0 until 3).foreach(w => out.bits(sbgOf(f, g, w, ch), 3))
-          out.bits(0, 1) // preflag
-          out.bits(1, 1) // scalefac_scale 1
-          out.bits(1, 1) // count1 table B
-        }
-      }
-      out.bytes(main, f * cap, cap)
-    }
-    out.pos = nFrames * frameLen * 8L
-    out.toBytes
-  }
+                             intensity: Boolean = false): Array[Byte] =
+    l3ShortBytes(seed, nFrames, stereo = true, mixed = false, intensity)
 
   /** The encode half of the MIXED-BLOCK round trip: a real MPEG-1
     * Layer III mono 48 kHz / 192 kbps stream whose every granule uses
@@ -3516,98 +3293,8 @@ object Multimodal {
     * slots, 17·slen1 + 18·slen2 = 70 bits at scomp 9), subblock gains
     * apply to the short region only, alias reduction to the single long
     * boundary. Gains 210 + 4k and |is| ≤ 1 keep values dyadic. */
-  def layer3MixedBytes(seed: Long, nFrames: Int): Array[Byte] = {
-    val frameLen = 576
-    val cap = frameLen - 21
-    val out = new BitWriter
-    val pool = new BitWriter // the main-data reservoir
-    def sfLOf(f: Int, g: Int, band: Int): Int =
-      ((seed + f + band + g * 3) % 4).toInt
-    def sfSOf(f: Int, g: Int, b: Int, w: Int): Int =
-      ((seed + f + b + w + g * 3) % 4).toInt
-    def sbgOf(f: Int, g: Int, w: Int): Int =
-      ((seed + f * 2 + g + w * 3) % 5).toInt
-    def pairs(f: Int, g: Int): Seq[(Int, Int)] = {
-      val n = 16 + ((seed + f + g) % 17).toInt
-      (0 until n).map(k =>
-        ((((seed * 3 + f * 7 + g * 11 + k * 5) % 3) - 1).toInt,
-         (((seed * 5 + f * 11 + g * 3 + k * 7) % 3) - 1).toInt))
-    }
-    def quads(f: Int, g: Int): Seq[Array[Int]] = {
-      val n = 4 + ((seed + f * 2 + g) % 5).toInt
-      (0 until n).map { q =>
-        Array.tabulate(4) { j =>
-          val bit = ((seed * (j + 2) + f * 3 + g * 5 + q * 7) % 2).toInt
-          val sgn = if ((seed + f + j + q) % 2 == 0) 1 else -1
-          bit * sgn
-        }
-      }
-    }
-    def gainOf(f: Int, g: Int): Int =
-      210 + 4 * (((seed + f * 2 + g) % 8).toInt - 2)
-    def huffBits(f: Int, g: Int): Int = {
-      val pb = pairs(f, g).map { case (x, y) =>
-        (if (x == 0 && y == 0) 1 else if (y == 0) 2 else 3) +
-          (if (x != 0) 1 else 0) + (if (y != 0) 1 else 0)
-      }.sum
-      val qb = quads(f, g).map(q => 4 + q.count(_ != 0)).sum
-      pb + qb
-    }
-
-    val mdbs = new Array[Int](nFrames)
-    (0 until nFrames).foreach { f =>
-      val nominal = f * cap
-      val want = if (f == 0) 0 else ((seed * 7 + f * 13) % 40).toInt
-      val avail = nominal - ((pool.pos + 7) / 8).toInt
-      val mdb = math.min(want, math.max(avail, 0))
-      mdbs(f) = mdb
-      val startBit = (nominal - mdb) * 8
-      pool.pos = math.max(pool.pos, startBit)
-      (0 until 2).foreach { g =>
-        (0 until 8).foreach(band => pool.bits(sfLOf(f, g, band), 2))
-        (3 until 12).foreach { b =>
-          (0 until 3).foreach(w => pool.bits(sfSOf(f, g, b, w), 2))
-        }
-        pairs(f, g).foreach { case (x, y) =>
-          val str = if (x == 0 && y == 0) "1"
-                    else if (y == 0) "01"
-                    else if (x == 0) "001" else "000"
-          pool.str(str)
-          if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
-          if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
-        }
-        quads(f, g).foreach { q =>
-          var code = 0
-          q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-          pool.bits(code, 4)
-          q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
-        }
-      }
-    }
-    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
-    (0 until nFrames).foreach { f =>
-      out.pos = f * frameLen * 8L
-      out.bits(0xff, 8); out.bits(0xfb, 8)
-      out.bits(0xb4, 8); out.bits(0xc0, 8)
-      out.bits(mdbs(f), 9); out.bits(0, 5); out.bits(0, 4) // scfsi 0
-      (0 until 2).foreach { g =>
-        out.bits(70 + huffBits(f, g), 12)        // part2: 17·2 + 18·2
-        out.bits(pairs(f, g).size, 9)
-        out.bits(gainOf(f, g), 8)
-        out.bits(9, 4)                 // scalefac_compress 9 → 2/2
-        out.bits(1, 1)                 // window switching
-        out.bits(2, 2); out.bits(1, 1) // block_type 2, MIXED
-        out.bits(1, 5); out.bits(1, 5) // table 1 in both regions
-        (0 until 3).foreach(w => out.bits(sbgOf(f, g, w), 3))
-        out.bits(0, 1) // preflag
-        out.bits(1, 1) // scalefac_scale 1
-        out.bits(1, 1) // count1 table B
-      }
-      out.bytes(main, f * cap, cap)
-    }
-    out.pos = nFrames * frameLen * 8L
-    out.toBytes
-  }
+  def layer3MixedBytes(seed: Long, nFrames: Int): Array[Byte] =
+    l3ShortBytes(seed, nFrames, stereo = false, mixed = true)
 
   /** STEREO MIXED-BLOCK fixture (round 15): a real MPEG-1 Layer III
     * JOINT-STEREO 48 kHz / 192 kbps stream whose every granule uses
@@ -3626,108 +3313,8 @@ object Multimodal {
     * the right channel's long/short scalefactor slots. Gains 210 + 4k
     * and |is| ≤ 1 keep requantized values dyadic. */
   def layer3MixedStereoBytes(seed: Long, nFrames: Int,
-                             intensity: Boolean = false): Array[Byte] = {
-    val frameLen = 576
-    val cap = frameLen - 36 // 4 header + 32 side info
-    val out = new BitWriter
-    val pool = new BitWriter // the main-data reservoir
-    def sfLOf(f: Int, g: Int, band: Int, ch: Int): Int =
-      ((seed + f + band + g * 3 + ch * 5) % 4).toInt
-    def sfSOf(f: Int, g: Int, b: Int, w: Int, ch: Int): Int =
-      ((seed + f + b + w + g * 3 + ch * 5) % 4).toInt
-    def sbgOf(f: Int, g: Int, w: Int, ch: Int): Int =
-      ((seed + f * 2 + g + w * 3 + ch) % 5).toInt
-    def pairs(f: Int, g: Int, ch: Int): Seq[(Int, Int)] = {
-      val n = if (intensity && ch == 1) {
-        if ((seed + f + g) % 2 == 0) 9 else 21
-      } else 16 + ((seed + f + g + ch * 2) % 17).toInt
-      (0 until n).map(k =>
-        ((((seed * 3 + f * 7 + g * 11 + ch * 13 + k * 5) % 3) - 1).toInt,
-         (((seed * 5 + f * 11 + g * 3 + ch * 7 + k * 7) % 3) - 1).toInt))
-    }
-    def quads(f: Int, g: Int, ch: Int): Seq[Array[Int]] = {
-      val n = if (intensity && ch == 1) 0
-              else 4 + ((seed + f * 2 + g + ch) % 5).toInt
-      (0 until n).map { q =>
-        Array.tabulate(4) { j =>
-          val bit =
-            ((seed * (j + 2) + f * 3 + g * 5 + q * 7 + ch * 11) % 2).toInt
-          val sgn = if ((seed + f + j + q + ch) % 2 == 0) 1 else -1
-          bit * sgn
-        }
-      }
-    }
-    def gainOf(f: Int, g: Int, ch: Int): Int =
-      210 + 4 * (((seed + f * 2 + g + ch * 3) % 8).toInt - 2)
-    def huffBits(f: Int, g: Int, ch: Int): Int = {
-      val pb = pairs(f, g, ch).map { case (x, y) =>
-        (if (x == 0 && y == 0) 1 else if (y == 0) 2 else 3) +
-          (if (x != 0) 1 else 0) + (if (y != 0) 1 else 0)
-      }.sum
-      val qb = quads(f, g, ch).map(q => 4 + q.count(_ != 0)).sum
-      pb + qb
-    }
-    val mdbs = new Array[Int](nFrames)
-    (0 until nFrames).foreach { f =>
-      val nominal = f * cap
-      val want = if (f == 0) 0 else ((seed * 7 + f * 13) % 40).toInt
-      val avail = nominal - ((pool.pos + 7) / 8).toInt
-      val mdb = math.min(want, math.max(avail, 0))
-      mdbs(f) = mdb
-      val startBit = (nominal - mdb) * 8
-      pool.pos = math.max(pool.pos, startBit)
-      (0 until 2).foreach { g =>
-        (0 until 2).foreach { ch =>
-          (0 until 8).foreach(band => pool.bits(sfLOf(f, g, band, ch), 2))
-          (3 until 12).foreach { b =>
-            (0 until 3).foreach(w => pool.bits(sfSOf(f, g, b, w, ch), 2))
-          }
-          pairs(f, g, ch).foreach { case (x, y) =>
-            val str = if (x == 0 && y == 0) "1"
-                      else if (y == 0) "01"
-                      else if (x == 0) "001" else "000"
-            pool.str(str)
-            if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
-            if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
-          }
-          quads(f, g, ch).foreach { q =>
-            var code = 0
-            q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-            pool.bits(code, 4)
-            q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
-          }
-        }
-      }
-    }
-    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
-    (0 until nFrames).foreach { f =>
-      out.pos = f * frameLen * 8L
-      out.bits(0xff, 8); out.bits(0xfb, 8)
-      out.bits(0xb4, 8)
-      // joint stereo; mode_extension 10 = MS, 01 = intensity
-      out.bits(if (intensity) 0x50 else 0x60, 8)
-      out.bits(mdbs(f), 9); out.bits(0, 3)
-      out.bits(0, 4); out.bits(0, 4) // scfsi 0 both channels
-      (0 until 2).foreach { g =>
-        (0 until 2).foreach { ch =>
-          out.bits(70 + huffBits(f, g, ch), 12) // part2: 17·2 + 18·2 (mixed)
-          out.bits(pairs(f, g, ch).size, 9)
-          out.bits(gainOf(f, g, ch), 8)
-          out.bits(9, 4)                 // scalefac_compress 9 → 2/2
-          out.bits(1, 1)                 // window switching
-          out.bits(2, 2); out.bits(1, 1) // block_type 2, MIXED
-          out.bits(1, 5); out.bits(1, 5) // table 1 in both regions
-          (0 until 3).foreach(w => out.bits(sbgOf(f, g, w, ch), 3))
-          out.bits(0, 1) // preflag
-          out.bits(1, 1) // scalefac_scale 1
-          out.bits(1, 1) // count1 table B
-        }
-      }
-      out.bytes(main, f * cap, cap)
-    }
-    out.pos = nFrames * frameLen * 8L
-    out.toBytes
-  }
+                             intensity: Boolean = false): Array[Byte] =
+    l3ShortBytes(seed, nFrames, stereo = true, mixed = true, intensity)
 
   /** MPEG-2 LSF (ISO 13818-3) Layer III fixture (round 15): a mono
     * 24 kHz / 64 kbps stream — ONE granule per frame (576 samples,
@@ -3744,7 +3331,7 @@ object Multimodal {
     * table data declared. Gains 210 + 4k with integer scalefactor
     * exponents keep every requantized value dyadic. */
   def layer3LsfBytes(seed: Long, nFrames: Int,
-                     v25: Boolean = false): Array[Byte] = {
+                     v25: Boolean = false): Array[Byte] =
     // v25 = true emits the identical granule payloads as MPEG-2.5 at
     // 12 kHz (version bits 00, frame length 72·64000/12000 = 384):
     // the decoded values are IDENTICAL by construction (the synthetic
@@ -3752,103 +3339,7 @@ object Multimodal {
     // (seed, f)), so the V2.5 row reuses this fixture's oracle verbatim
     // and a spec asserts row-for-row decode equality — the
     // re-encode-equivalence verification shape.
-    val frameLen = if (v25) 384 else 192
-    val cap = frameLen - 13 // 4 header + 9 LSF mono side info
-    val out = new BitWriter
-    val pool = new BitWriter // the main-data reservoir
-    def sfcOf(f: Int): Int = (f % 3) match {
-      case 0 => ((seed * 3 + f * 7) % 400).toInt
-      case 1 => 400 + ((seed * 5 + f * 11) % 100).toInt
-      case _ => 500 + ((seed * 7 + f * 13) % 12).toInt
-    }
-    def pairs(f: Int): Seq[(Int, Int)] = {
-      val n = 16 + ((seed + f) % 17).toInt
-      (0 until n).map(k =>
-        ((((seed * 3 + f * 7 + k * 5) % 3) - 1).toInt,
-         (((seed * 5 + f * 11 + k * 7) % 3) - 1).toInt))
-    }
-    def quads(f: Int): Seq[Array[Int]] = {
-      val n = 4 + ((seed + f * 2) % 5).toInt
-      (0 until n).map { q =>
-        Array.tabulate(4) { j =>
-          val bit = ((seed * (j + 2) + f * 3 + q * 7) % 2).toInt
-          val sgn = if ((seed + f + j + q) % 2 == 0) 1 else -1
-          bit * sgn
-        }
-      }
-    }
-    def gainOf(f: Int): Int = 210 + 4 * (((seed + f * 2) % 8).toInt - 2)
-    def btOf(f: Int): Int = if ((seed + f) % 2 == 0) 1 else 3
-    def sfBits(f: Int): Int = {
-      val (slens, parts) = lsfScaleLong(sfcOf(f))
-      (0 until 4).map(i => slens(i) * parts(i)).sum
-    }
-    def huffBits(f: Int): Int = {
-      val pb = pairs(f).map { case (x, y) =>
-        (if (x == 0 && y == 0) 1 else if (y == 0) 2 else 3) +
-          (if (x != 0) 1 else 0) + (if (y != 0) 1 else 0)
-      }.sum
-      val qb = quads(f).map(q => 4 + q.count(_ != 0)).sum
-      pb + qb
-    }
-    val mdbs = new Array[Int](nFrames)
-    (0 until nFrames).foreach { f =>
-      val nominal = f * cap
-      val want = if (f == 0) 0 else ((seed * 7 + f * 13) % 40).toInt
-      val avail = nominal - ((pool.pos + 7) / 8).toInt
-      val mdb = math.min(want, math.max(avail, 0))
-      mdbs(f) = mdb
-      val startBit = (nominal - mdb) * 8
-      pool.pos = math.max(pool.pos, startBit)
-      val (slens, parts) = lsfScaleLong(sfcOf(f))
-      var band = 0
-      (0 until 4).foreach { pi =>
-        (0 until parts(pi)).foreach { _ =>
-          if (slens(pi) > 0)
-            pool.bits((seed + f + band * 3) % (1L << slens(pi)), slens(pi))
-          band += 1
-        }
-      }
-      pairs(f).foreach { case (x, y) =>
-        val str = if (x == 0 && y == 0) "1"
-                  else if (y == 0) "01"
-                  else if (x == 0) "001" else "000"
-        pool.str(str)
-        if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
-        if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
-      }
-      quads(f).foreach { q =>
-        var code = 0
-        q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-        pool.bits(code, 4)
-        q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
-      }
-    }
-    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
-    (0 until nFrames).foreach { f =>
-      out.pos = f * frameLen * 8L
-      // V2 LSF header: sync + version 10 (V2.5: 00) + Layer III + no
-      // CRC; 64 kbps (LSF bitrate index 8), 24 kHz / 12 kHz (sr index
-      // 1), no padding, mono
-      out.bits(0xff, 8); out.bits(if (v25) 0xe3 else 0xf3, 8)
-      out.bits(0x84, 8); out.bits(0xc0, 8)
-      out.bits(mdbs(f), 8); out.bits(0, 1) // 8-bit main_data_begin + 1 private bit
-      out.bits(sfBits(f) + huffBits(f), 12)
-      out.bits(pairs(f).size, 9)
-      out.bits(gainOf(f), 8)
-      out.bits(sfcOf(f), 9)                // 9-bit scalefac_compress
-      out.bits(1, 1)                       // window switching
-      out.bits(btOf(f), 2); out.bits(0, 1) // block_type 1/3, not mixed
-      out.bits(1, 5); out.bits(1, 5)       // table 1 in both regions
-      (0 until 3).foreach(w =>             // inert for long forms
-        out.bits((seed + f + w) % 8, 3))
-      out.bits(1, 1) // scalefac_scale 1 (no preflag bit)
-      out.bits(1, 1) // count1 table B
-      out.bytes(main, f * cap, cap)
-    }
-    out.pos = nFrames * frameLen * 8L
-    out.toBytes
-  }
+    l3LsfBytes(seed, nFrames, btn = 0, v25)
 
   /** MPEG-2 LSF SHORT/MIXED-block fixture (round 16): the same mono
     * 24 kHz / 64 kbps one-granule-per-frame stream as [[layer3LsfBytes]]
@@ -3866,100 +3357,8 @@ object Multimodal {
     * value dyadic (class-C preflag is inert: pretab is 0 on bands 0–5,
     * the only long bands a mixed granule has). */
   def layer3LsfShortBytes(seed: Long, nFrames: Int,
-                          mixed: Boolean = false): Array[Byte] = {
-    val frameLen = 192
-    val cap = frameLen - 13
-    val out = new BitWriter
-    val pool = new BitWriter // the main-data reservoir
-    val btn = if (mixed) 2 else 1
-    def sfcOf(f: Int): Int = (f % 3) match {
-      case 0 => ((seed * 3 + f * 7) % 400).toInt
-      case 1 => 400 + ((seed * 5 + f * 11) % 100).toInt
-      case _ => 500 + ((seed * 7 + f * 13) % 12).toInt
-    }
-    def pairs(f: Int): Seq[(Int, Int)] = {
-      val n = 16 + ((seed + f) % 17).toInt
-      (0 until n).map(k =>
-        ((((seed * 3 + f * 7 + k * 5) % 3) - 1).toInt,
-         (((seed * 5 + f * 11 + k * 7) % 3) - 1).toInt))
-    }
-    def quads(f: Int): Seq[Array[Int]] = {
-      val n = 4 + ((seed + f * 2) % 5).toInt
-      (0 until n).map { q =>
-        Array.tabulate(4) { j =>
-          val bit = ((seed * (j + 2) + f * 3 + q * 7) % 2).toInt
-          val sgn = if ((seed + f + j + q) % 2 == 0) 1 else -1
-          bit * sgn
-        }
-      }
-    }
-    def gainOf(f: Int): Int = 210 + 4 * (((seed + f * 2) % 8).toInt - 2)
-    def sbgOf(f: Int, w: Int): Int = ((seed + f + w) % 8).toInt
-    def sfBits(f: Int): Int = {
-      val (slens, parts) = lsfScale(sfcOf(f), btn)
-      (0 until 4).map(i => slens(i) * parts(i)).sum
-    }
-    def huffBits(f: Int): Int = {
-      val pb = pairs(f).map { case (x, y) =>
-        (if (x == 0 && y == 0) 1 else if (y == 0) 2 else 3) +
-          (if (x != 0) 1 else 0) + (if (y != 0) 1 else 0)
-      }.sum
-      val qb = quads(f).map(q => 4 + q.count(_ != 0)).sum
-      pb + qb
-    }
-    val mdbs = new Array[Int](nFrames)
-    (0 until nFrames).foreach { f =>
-      val nominal = f * cap
-      val want = if (f == 0) 0 else ((seed * 7 + f * 13) % 40).toInt
-      val avail = nominal - ((pool.pos + 7) / 8).toInt
-      val mdb = math.min(want, math.max(avail, 0))
-      mdbs(f) = mdb
-      val startBit = (nominal - mdb) * 8
-      pool.pos = math.max(pool.pos, startBit)
-      val (slens, parts) = lsfScale(sfcOf(f), btn)
-      var slot = 0
-      (0 until 4).foreach { pi =>
-        (0 until parts(pi)).foreach { _ =>
-          if (slens(pi) > 0)
-            pool.bits((seed + f + slot * 3) % (1L << slens(pi)), slens(pi))
-          slot += 1
-        }
-      }
-      pairs(f).foreach { case (x, y) =>
-        val str = if (x == 0 && y == 0) "1"
-                  else if (y == 0) "01"
-                  else if (x == 0) "001" else "000"
-        pool.str(str)
-        if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
-        if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
-      }
-      quads(f).foreach { q =>
-        var code = 0
-        q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-        pool.bits(code, 4)
-        q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
-      }
-    }
-    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
-    (0 until nFrames).foreach { f =>
-      out.pos = f * frameLen * 8L
-      out.bits(0xff, 8); out.bits(0xf3, 8); out.bits(0x84, 8); out.bits(0xc0, 8)
-      out.bits(mdbs(f), 8); out.bits(0, 1)
-      out.bits(sfBits(f) + huffBits(f), 12)
-      out.bits(pairs(f).size, 9)
-      out.bits(gainOf(f), 8)
-      out.bits(sfcOf(f), 9)
-      out.bits(1, 1)                                     // window switching
-      out.bits(2, 2); out.bits(if (mixed) 1 else 0, 1)   // block_type 2, mixed flag
-      out.bits(1, 5); out.bits(1, 5)                     // table 1 in both regions
-      (0 until 3).foreach(w => out.bits(sbgOf(f, w), 3)) // APPLIED this time
-      out.bits(1, 1)                                     // scalefac_scale 1
-      out.bits(1, 1)                                     // count1 table B
-      out.bytes(main, f * cap, cap)
-    }
-    out.pos = nFrames * frameLen * 8L
-    out.toBytes
-  }
+                          mixed: Boolean = false): Array[Byte] =
+    l3LsfBytes(seed, nFrames, btn = if (mixed) 2 else 1, v25 = false)
 
   /** MPEG-2 LSF INTENSITY-STEREO fixture (round 16): joint stereo
     * 24 kHz / 64 kbps, mode_extension 01 (intensity on, MS off), one
@@ -3983,127 +3382,32 @@ object Multimodal {
     * combination, spec-exercised by L3LsfSpec. */
   def layer3LsfIntensityBytes(seed: Long, nFrames: Int,
                               shortBlocks: Boolean = false): Array[Byte] = {
-    val frameLen = 192
-    val cap = frameLen - 21 // 4 header + 17 LSF stereo side info
-    val out = new BitWriter
-    val pool = new BitWriter // the main-data reservoir
-    def sfcOf(f: Int): Int = (f % 3) match { // left channel, long classes
-      case 0 => ((seed * 3 + f * 7) % 400).toInt
-      case 1 => 400 + ((seed * 5 + f * 11) % 100).toInt
-      case _ => 500 + ((seed * 7 + f * 13) % 12).toInt
-    }
     def isfcOf(f: Int): Int = (f % 3) match { // right channel classes
       case 0 => ((seed * 3 + f * 7) % 180).toInt
       case 1 => 180 + ((seed * 5 + f * 11) % 64).toInt
       case _ => 244 + ((seed * 7 + f * 13) % 11).toInt
     }
-    def scompOf(f: Int, ch: Int): Int =
-      if (ch == 0) sfcOf(f) else 2 * isfcOf(f) + ((seed + f) % 2).toInt
     val btn = if (shortBlocks) 1 else 0
-    def scaleParts(f: Int, ch: Int): (Array[Int], Array[Int]) =
-      if (ch == 0) lsfScale(sfcOf(f), btn)
-      else lsfScaleIntensity(isfcOf(f), btn)
-    def pairs(f: Int, ch: Int): Seq[(Int, Int)] = {
-      val n = if (ch == 1) 8 else 16 + ((seed + f) % 17).toInt
-      (0 until n).map(k =>
-        ((((seed * 3 + f * 7 + ch * 13 + k * 5) % 3) - 1).toInt,
-         (((seed * 5 + f * 11 + ch * 7 + k * 7) % 3) - 1).toInt))
-    }
-    def quads(f: Int, ch: Int): Seq[Array[Int]] = {
-      val n = if (ch == 1) 0 else 4 + ((seed + f * 2) % 5).toInt
-      (0 until n).map { q =>
-        Array.tabulate(4) { j =>
-          val bit = ((seed * (j + 2) + f * 3 + q * 7) % 2).toInt
-          val sgn = if ((seed + f + j + q) % 2 == 0) 1 else -1
-          bit * sgn
-        }
+    // V2 LSF header: 64 kbps, 24 kHz, joint stereo, mode_ext 01
+    // (intensity on, MS off)
+    L3Writer.stream(nFrames, _ => 192, _ => 0xfff38450,
+                    back = L3Writer.reservoir(seed)) { f =>
+      (0 until 2).map { ch =>
+        val s = L3Salt(seed, f, 0, ch)
+        val (scomp, layout) =
+          if (ch == 0) (l3LsfScomp(seed, f), lsfScale(l3LsfScomp(seed, f), btn))
+          else (2 * isfcOf(f) + ((seed + f) % 2).toInt,
+                lsfScaleIntensity(isfcOf(f), btn))
+        Gran(s.gain, scomp, if (shortBlocks) Seq(1, 1) else Seq(1, 1, 1),
+          l3LsfSf(seed, f, layout), s.unitPairs(if (ch == 1) 8 else s.count),
+          if (ch == 1) Nil else s.quads,
+          // short form: intensity over LSF short blocks, per-window bound,
+          // subblock gains applied
+          if (shortBlocks)
+            Some((2, 0, (0 until 3).map(w => ((seed + f + w + ch) % 8).toInt)))
+          else None)
       }
     }
-    def gainOf(f: Int, ch: Int): Int =
-      210 + 4 * (((seed + f * 2 + ch * 3) % 8).toInt - 2)
-    def sfBits(f: Int, ch: Int): Int = {
-      val (slens, parts) = scaleParts(f, ch)
-      (0 until 4).map(i => slens(i) * parts(i)).sum
-    }
-    def huffBits(f: Int, ch: Int): Int = {
-      val pb = pairs(f, ch).map { case (x, y) =>
-        (if (x == 0 && y == 0) 1 else if (y == 0) 2 else 3) +
-          (if (x != 0) 1 else 0) + (if (y != 0) 1 else 0)
-      }.sum
-      val qb = quads(f, ch).map(q => 4 + q.count(_ != 0)).sum
-      pb + qb
-    }
-    val mdbs = new Array[Int](nFrames)
-    (0 until nFrames).foreach { f =>
-      val nominal = f * cap
-      val want = if (f == 0) 0 else ((seed * 7 + f * 13) % 40).toInt
-      val avail = nominal - ((pool.pos + 7) / 8).toInt
-      val mdb = math.min(want, math.max(avail, 0))
-      mdbs(f) = mdb
-      val startBit = (nominal - mdb) * 8
-      pool.pos = math.max(pool.pos, startBit)
-      (0 until 2).foreach { ch =>
-        val (slens, parts) = scaleParts(f, ch)
-        var slot = 0
-        (0 until 4).foreach { pi =>
-          (0 until parts(pi)).foreach { _ =>
-            if (slens(pi) > 0)
-              pool.bits((seed + f + slot * 3) % (1L << slens(pi)), slens(pi))
-            slot += 1
-          }
-        }
-        pairs(f, ch).foreach { case (x, y) =>
-          val str = if (x == 0 && y == 0) "1"
-                    else if (y == 0) "01"
-                    else if (x == 0) "001" else "000"
-          pool.str(str)
-          if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
-          if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
-        }
-        quads(f, ch).foreach { q =>
-          var code = 0
-          q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-          pool.bits(code, 4)
-          q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
-        }
-      }
-    }
-    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
-    (0 until nFrames).foreach { f =>
-      out.pos = f * frameLen * 8L
-      // V2 LSF header: 64 kbps, 24 kHz, joint stereo, mode_ext 01
-      // (intensity on, MS off)
-      out.bits(0xff, 8); out.bits(0xf3, 8); out.bits(0x84, 8); out.bits(0x50, 8)
-      out.bits(mdbs(f), 8); out.bits(0, 2) // 8-bit main_data_begin + 2 private
-      (0 until 2).foreach { ch =>
-        out.bits(sfBits(f, ch) + huffBits(f, ch), 12)
-        out.bits(pairs(f, ch).size, 9)
-        out.bits(gainOf(f, ch), 8)
-        out.bits(scompOf(f, ch), 9)
-        if (shortBlocks) {
-          // window-switched short form (both channels block_type 2):
-          // intensity over LSF SHORT blocks — per-window bound +
-          // btn-1 intensity classes; subblock gains applied
-          out.bits(1, 1)                 // window switching
-          out.bits(2, 2); out.bits(0, 1) // block_type 2, not mixed
-          out.bits(1, 5); out.bits(1, 5) // table 1 in both regions
-          (0 until 3).foreach(w => out.bits((seed + f + w + ch) % 8, 3))
-          out.bits(1, 1) // scalefac_scale 1 (no preflag bit)
-          out.bits(1, 1) // count1 table B
-        } else {
-          out.bits(0, 1)           // no window switching (long block)
-          // table 1 in all three regions
-          out.bits(1, 5); out.bits(1, 5); out.bits(1, 5)
-          // region0/region1 counts (inert: one table)
-          out.bits(4, 4); out.bits(3, 3)
-          out.bits(1, 1) // scalefac_scale 1 (no preflag bit)
-          out.bits(1, 1) // count1 table B
-        }
-      }
-      out.bytes(main, f * cap, cap)
-    }
-    out.pos = nFrames * frameLen * 8L
-    out.toBytes
   }
 
   /** The encode half of the START/STOP-WINDOW round trip: a real MPEG-1
@@ -4115,96 +3419,19 @@ object Multimodal {
     * forms — their correct skipping is part of the bit account), the
     * implicit line-36 region boundary, and reservoir back-pointers.
     * Gains 210 + 4k and |is| ≤ 1 keep requantized values dyadic. */
-  def layer3StartStopBytes(seed: Long, nFrames: Int): Array[Byte] = {
-    val frameLen = 576
-    val cap = frameLen - 21
-    val out = new BitWriter
-    val pool = new BitWriter // the main-data reservoir
-    def sfOf(f: Int, g: Int, band: Int): Int =
-      ((seed + f + band + g * 3) % 4).toInt
-    def pairs(f: Int, g: Int): Seq[(Int, Int)] = {
-      val n = 16 + ((seed + f + g) % 17).toInt
-      (0 until n).map(k =>
-        ((((seed * 3 + f * 7 + g * 11 + k * 5) % 3) - 1).toInt,
-         (((seed * 5 + f * 11 + g * 3 + k * 7) % 3) - 1).toInt))
-    }
-    def quads(f: Int, g: Int): Seq[Array[Int]] = {
-      val n = 4 + ((seed + f * 2 + g) % 5).toInt
-      (0 until n).map { q =>
-        Array.tabulate(4) { j =>
-          val bit = ((seed * (j + 2) + f * 3 + g * 5 + q * 7) % 2).toInt
-          val sgn = if ((seed + f + j + q) % 2 == 0) 1 else -1
-          bit * sgn
-        }
+  def layer3StartStopBytes(seed: Long, nFrames: Int): Array[Byte] =
+    L3Writer.stream(nFrames, _ => 576, _ => L3Mono48,
+                    back = L3Writer.reservoir(seed)) { f =>
+      (0 until 2).map { g =>
+        val s = L3Salt(seed, f, g, 0)
+        val blockType = if ((seed + f + g) % 2 == 0) 1 else 3
+        // subblock gains are inert for long forms
+        val sbg = (0 until 3).map(w => ((seed + f + g + w) % 8).toInt)
+        Gran(s.gain, 9, Seq(1, 1), (0 until 21).map(b => (s.sf(b), 2)),
+          s.unitPairs(), s.quads, Some((blockType, 0, sbg)),
+          preflag = if ((seed + f + g) % 3 == 0) 1 else 0)
       }
     }
-    def gainOf(f: Int, g: Int): Int =
-      210 + 4 * (((seed + f * 2 + g) % 8).toInt - 2)
-    def preflagOf(f: Int, g: Int): Int =
-      if ((seed + f + g) % 3 == 0) 1 else 0
-    def btOf(f: Int, g: Int): Int =
-      if ((seed + f + g) % 2 == 0) 1 else 3
-    def huffBits(f: Int, g: Int): Int = {
-      val pb = pairs(f, g).map { case (x, y) =>
-        (if (x == 0 && y == 0) 1 else if (y == 0) 2 else 3) +
-          (if (x != 0) 1 else 0) + (if (y != 0) 1 else 0)
-      }.sum
-      val qb = quads(f, g).map(q => 4 + q.count(_ != 0)).sum
-      pb + qb
-    }
-
-    val mdbs = new Array[Int](nFrames)
-    (0 until nFrames).foreach { f =>
-      val nominal = f * cap
-      val want = if (f == 0) 0 else ((seed * 7 + f * 13) % 40).toInt
-      val avail = nominal - ((pool.pos + 7) / 8).toInt
-      val mdb = math.min(want, math.max(avail, 0))
-      mdbs(f) = mdb
-      val startBit = (nominal - mdb) * 8
-      pool.pos = math.max(pool.pos, startBit)
-      (0 until 2).foreach { g =>
-        (0 until 21).foreach(band => pool.bits(sfOf(f, g, band), 2))
-        pairs(f, g).foreach { case (x, y) =>
-          val str = if (x == 0 && y == 0) "1"
-                    else if (y == 0) "01"
-                    else if (x == 0) "001" else "000"
-          pool.str(str)
-          if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
-          if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
-        }
-        quads(f, g).foreach { q =>
-          var code = 0
-          q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-          pool.bits(code, 4)
-          q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
-        }
-      }
-    }
-    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
-    (0 until nFrames).foreach { f =>
-      out.pos = f * frameLen * 8L
-      out.bits(0xff, 8); out.bits(0xfb, 8)
-      out.bits(0xb4, 8); out.bits(0xc0, 8)
-      out.bits(mdbs(f), 9); out.bits(0, 5); out.bits(0, 4) // scfsi 0
-      (0 until 2).foreach { g =>
-        out.bits(42 + huffBits(f, g), 12)        // part2 = 21 bands × 2 bits
-        out.bits(pairs(f, g).size, 9)
-        out.bits(gainOf(f, g), 8)
-        out.bits(9, 4)                          // scalefac_compress 9 → 2/2
-        out.bits(1, 1)                          // window switching
-        out.bits(btOf(f, g), 2); out.bits(0, 1) // block_type 1/3, not mixed
-        out.bits(1, 5); out.bits(1, 5)          // table 1 in both regions
-        (0 until 3).foreach(w =>                // inert for long forms
-          out.bits((seed + f + g + w) % 8, 3))
-        out.bits(preflagOf(f, g), 1)
-        out.bits(1, 1) // scalefac_scale 1
-        out.bits(1, 1) // count1 table B
-      }
-      out.bytes(main, f * cap, cap)
-    }
-    out.pos = nFrames * frameLen * 8L
-    out.toBytes
-  }
 
   /** The encode half of the generalized-table/linbits round trip: a
     * real mono 48 kHz / 192 kbps Layer III stream whose big-values
@@ -4217,82 +3444,15 @@ object Multimodal {
     * Zero scalefactor bits (scalefac_compress 0), gain 210+4k,
     * no reservoir (that path is proven by [[layer3BytesFull]]). */
   def layer3LinbitsBytes(seed: Long, nFrames: Int): Array[Byte] = {
-    val frameLen = 576
-    val cap = frameLen - 21
-    val out = new BitWriter
-    val pool = new BitWriter // the main-data reservoir
-    def pairs(f: Int, g: Int): Seq[(Int, Int)] = {
-      val n = 10 + ((seed + f + g) % 7).toInt
-      (0 until n).map { k =>
-        val mx = ((seed * 3 + f * 7 + g * 11 + k * 5) % 31).toInt
-        val my = ((seed * 5 + f * 11 + g * 3 + k * 7) % 31).toInt
-        val x = if ((seed + f + k) % 2 == 1) -mx else mx
-        val y = if ((seed + g + k) % 2 == 1) -my else my
-        (x, y)
+    val t4 = Table(L3Tables(4).codes.map(_.swap), 4) // synthetic linbits slot
+    L3Writer.stream(nFrames, _ => 576, _ => L3Mono48) { f =>
+      (0 until 2).map { g =>
+        val s = L3Salt(seed, f, g, 0)
+        Gran(s.gain, 0, Seq(4, 4, 4), Nil,
+          s.magPairs(10 + ((seed + f + g) % 7).toInt)(_ => 31), s.quads,
+          code = _ => t4)
       }
     }
-    def quads(f: Int, g: Int): Seq[Array[Int]] = {
-      val n = 4 + ((seed + f * 2 + g) % 5).toInt
-      (0 until n).map { q =>
-        Array.tabulate(4) { j =>
-          val bit = ((seed * (j + 2) + f * 3 + g * 5 + q * 7) % 2).toInt
-          val sgn = if ((seed + f + j + q) % 2 == 0) 1 else -1
-          bit * sgn
-        }
-      }
-    }
-    def gainOf(f: Int, g: Int): Int =
-      210 + 4 * (((seed + f * 2 + g) % 8).toInt - 2)
-    def huffBits(f: Int, g: Int): Int = {
-      val pb = pairs(f, g).map { case (x, y) =>
-        8 + (if (math.abs(x) >= 15) 4 else 0) + (if (x != 0) 1 else 0) +
-            (if (math.abs(y) >= 15) 4 else 0) + (if (y != 0) 1 else 0)
-      }.sum
-      val qb = quads(f, g).map(q => 4 + q.count(_ != 0)).sum
-      pb + qb
-    }
-    (0 until nFrames).foreach { f =>
-      pool.pos = f * cap * 8L // no reservoir: nominal, byte-aligned starts
-      (0 until 2).foreach { g =>
-        pairs(f, g).foreach { case (x, y) =>
-          val mx = math.abs(x); val my = math.abs(y)
-          pool.bits(math.min(mx, 15) * 16 + math.min(my, 15), 8)
-          if (mx >= 15) pool.bits(mx - 15, 4)
-          if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
-          if (my >= 15) pool.bits(my - 15, 4)
-          if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
-        }
-        quads(f, g).foreach { q =>
-          var code = 0
-          q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-          pool.bits(code, 4)
-          q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
-        }
-      }
-    }
-    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
-    (0 until nFrames).foreach { f =>
-      out.pos = f * frameLen * 8L
-      out.bits(0xff, 8); out.bits(0xfb, 8)
-      out.bits(0xb4, 8); out.bits(0xc0, 8)
-      out.bits(0, 9); out.bits(0, 5); out.bits(0, 4) // mdb 0, private, scfsi 0
-      (0 until 2).foreach { g =>
-        out.bits(huffBits(f, g), 12)       // scomp 0 → zero scalefactor bits
-        out.bits(pairs(f, g).size, 9)
-        out.bits(gainOf(f, g), 8)
-        out.bits(0, 4) // scalefac_compress 0
-        out.bits(0, 1) // no window switching
-        // table 4 (synthetic linbits slot)
-        out.bits(4, 5); out.bits(4, 5); out.bits(4, 5)
-        out.bits(4, 4); out.bits(3, 3) // region counts
-        out.bits(0, 1)                 // preflag 0
-        out.bits(1, 1)                 // scalefac_scale 1
-        out.bits(1, 1)                 // count1 table B
-      }
-      out.bytes(main, f * cap, cap)
-    }
-    out.pos = nFrames * frameLen * 8L
-    out.toBytes
   }
 
   /** The encode half of the REAL-ISO-table round trip
@@ -4312,87 +3472,18 @@ object Multimodal {
     * (scalefac_compress 0), no reservoir (proven by
     * [[layer3BytesFull]]). */
   def layer3HuffRealBytes(seed: Long, nFrames: Int): Array[Byte] = {
-    val frameLen = 576
-    val cap = frameLen - 21
-    val out = new BitWriter
-    val pool = new BitWriter // the main-data reservoir
     // region of pair k: 0 (lines 0-19, table 7), 1 (lines 20-41,
     // table 10), 2 (table 9) — value range 0..5 / 0..7 / 0..5
     def tabOf(k: Int): Int = if (k < 10) 7 else if (k < 21) 10 else 9
-    def modOf(k: Int): Int = if (k >= 10 && k < 21) 8 else 6
-    def pairs(f: Int, g: Int): Seq[(Int, Int)] = {
-      val n = 22 + ((seed + f + g) % 5).toInt
-      (0 until n).map { k =>
-        val m = modOf(k)
-        val mx = ((seed * 3 + f * 7 + g * 11 + k * 5) % m).toInt
-        val my = ((seed * 5 + f * 11 + g * 3 + k * 7) % m).toInt
-        val x = if ((seed + f + k) % 2 == 1) -mx else mx
-        val y = if ((seed + g + k) % 2 == 1) -my else my
-        (x, y)
+    L3Writer.stream(nFrames, _ => 576, _ => L3Mono48) { f =>
+      (0 until 2).map { g =>
+        val s = L3Salt(seed, f, g, 0)
+        Gran(s.gain, 0, Seq(7, 10, 9), Nil,
+          s.magPairs(22 + ((seed + f + g) % 5).toInt)(k =>
+            if (tabOf(k) == 10) 8 else 6),
+          s.quads, count1B = false, code = k => L3Writer.iso(tabOf(k)))
       }
     }
-    def quads(f: Int, g: Int): Seq[Array[Int]] = {
-      val n = 4 + ((seed + f * 2 + g) % 5).toInt
-      (0 until n).map { q =>
-        Array.tabulate(4) { j =>
-          val bit = ((seed * (j + 2) + f * 3 + g * 5 + q * 7) % 2).toInt
-          val sgn = if ((seed + f + j + q) % 2 == 0) 1 else -1
-          bit * sgn
-        }
-      }
-    }
-    def gainOf(f: Int, g: Int): Int =
-      210 + 4 * (((seed + f * 2 + g) % 8).toInt - 2)
-    def huffBits(f: Int, g: Int): Int = {
-      val pb = pairs(f, g).zipWithIndex.map { case ((x, y), k) =>
-        L3IsoHuff.encode(tabOf(k))((math.abs(x), math.abs(y))).length +
-          (if (x != 0) 1 else 0) + (if (y != 0) 1 else 0)
-      }.sum
-      val qb = quads(f, g).map { q =>
-        var idx = 0
-        q.foreach(v => idx = (idx << 1) | (if (v != 0) 1 else 0))
-        L3IsoHuff.quadABits(idx) + q.count(_ != 0)
-      }.sum
-      pb + qb
-    }
-    (0 until nFrames).foreach { f =>
-      pool.pos = f * cap * 8L // no reservoir: byte-aligned nominal starts
-      (0 until 2).foreach { g =>
-        pairs(f, g).zipWithIndex.foreach { case ((x, y), k) =>
-          pool.str(L3IsoHuff.encode(tabOf(k))((math.abs(x), math.abs(y))))
-          if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
-          if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
-        }
-        quads(f, g).foreach { q =>
-          var idx = 0
-          q.foreach(v => idx = (idx << 1) | (if (v != 0) 1 else 0))
-          pool.str(L3IsoHuff.quadAEncode(idx))
-          q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
-        }
-      }
-    }
-    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
-    (0 until nFrames).foreach { f =>
-      out.pos = f * frameLen * 8L
-      out.bits(0xff, 8); out.bits(0xfb, 8)
-      out.bits(0xb4, 8); out.bits(0xc0, 8)
-      out.bits(0, 9); out.bits(0, 5); out.bits(0, 4) // mdb 0, private, scfsi 0
-      (0 until 2).foreach { g =>
-        out.bits(huffBits(f, g), 12)       // scomp 0 → zero scalefactor bits
-        out.bits(pairs(f, g).size, 9)
-        out.bits(gainOf(f, g), 8)
-        out.bits(0, 4)                                  // scalefac_compress 0
-        out.bits(0, 1)                                  // no window switching
-        out.bits(7, 5); out.bits(10, 5); out.bits(9, 5) // REAL tables 7 / 10 / 9
-        out.bits(4, 4); out.bits(3, 3)                  // region0_count 4, region1_count 3
-        out.bits(0, 1)                                  // preflag 0
-        out.bits(1, 1)                                  // scalefac_scale 1
-        out.bits(0, 1)                                  // count1 table A (REAL)
-      }
-      out.bytes(main, f * cap, cap)
-    }
-    out.pos = nFrames * frameLen * 8L
-    out.toBytes
   }
 
   /** The TABLE-12 twin of [[layer3HuffRealBytes]] (round 15 — exercises
@@ -4405,85 +3496,15 @@ object Multimodal {
     * over table 12's REAL code lengths — one wrong hlen anywhere in the
     * 64-entry table breaks the account and refuses the stream. Zero
     * scalefactor bits, no reservoir. */
-  def layer3Huff12Bytes(seed: Long, nFrames: Int): Array[Byte] = {
-    val frameLen = 576
-    val cap = frameLen - 21
-    val out = new BitWriter
-    val pool = new BitWriter // the main-data reservoir
-    def pairs(f: Int, g: Int): Seq[(Int, Int)] = {
-      val n = 22 + ((seed + f + g) % 5).toInt
-      (0 until n).map { k =>
-        val mx = ((seed * 3 + f * 7 + g * 11 + k * 5) % 8).toInt
-        val my = ((seed * 5 + f * 11 + g * 3 + k * 7) % 8).toInt
-        val x = if ((seed + f + k) % 2 == 1) -mx else mx
-        val y = if ((seed + g + k) % 2 == 1) -my else my
-        (x, y)
+  def layer3Huff12Bytes(seed: Long, nFrames: Int): Array[Byte] =
+    L3Writer.stream(nFrames, _ => 576, _ => L3Mono48) { f =>
+      (0 until 2).map { g =>
+        val s = L3Salt(seed, f, g, 0)
+        Gran(s.gain, 0, Seq(12, 12, 12), Nil,
+          s.magPairs(22 + ((seed + f + g) % 5).toInt)(_ => 8), s.quads,
+          count1B = false, code = _ => L3Writer.iso(12))
       }
     }
-    def quads(f: Int, g: Int): Seq[Array[Int]] = {
-      val n = 4 + ((seed + f * 2 + g) % 5).toInt
-      (0 until n).map { q =>
-        Array.tabulate(4) { j =>
-          val bit = ((seed * (j + 2) + f * 3 + g * 5 + q * 7) % 2).toInt
-          val sgn = if ((seed + f + j + q) % 2 == 0) 1 else -1
-          bit * sgn
-        }
-      }
-    }
-    def gainOf(f: Int, g: Int): Int =
-      210 + 4 * (((seed + f * 2 + g) % 8).toInt - 2)
-    def huffBits(f: Int, g: Int): Int = {
-      val pb = pairs(f, g).map { case (x, y) =>
-        L3IsoHuff.encode(12)((math.abs(x), math.abs(y))).length +
-          (if (x != 0) 1 else 0) + (if (y != 0) 1 else 0)
-      }.sum
-      val qb = quads(f, g).map { q =>
-        var idx = 0
-        q.foreach(v => idx = (idx << 1) | (if (v != 0) 1 else 0))
-        L3IsoHuff.quadABits(idx) + q.count(_ != 0)
-      }.sum
-      pb + qb
-    }
-    (0 until nFrames).foreach { f =>
-      pool.pos = f * cap * 8L
-      (0 until 2).foreach { g =>
-        pairs(f, g).foreach { case (x, y) =>
-          pool.str(L3IsoHuff.encode(12)((math.abs(x), math.abs(y))))
-          if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
-          if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
-        }
-        quads(f, g).foreach { q =>
-          var idx = 0
-          q.foreach(v => idx = (idx << 1) | (if (v != 0) 1 else 0))
-          pool.str(L3IsoHuff.quadAEncode(idx))
-          q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
-        }
-      }
-    }
-    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
-    (0 until nFrames).foreach { f =>
-      out.pos = f * frameLen * 8L
-      out.bits(0xff, 8); out.bits(0xfb, 8)
-      out.bits(0xb4, 8); out.bits(0xc0, 8)
-      out.bits(0, 9); out.bits(0, 5); out.bits(0, 4)
-      (0 until 2).foreach { g =>
-        out.bits(huffBits(f, g), 12)
-        out.bits(pairs(f, g).size, 9)
-        out.bits(gainOf(f, g), 8)
-        out.bits(0, 4) // scalefac_compress 0
-        out.bits(0, 1) // no window switching
-        // REAL table 12, all regions
-        out.bits(12, 5); out.bits(12, 5); out.bits(12, 5)
-        out.bits(4, 4); out.bits(3, 3) // region0_count 4, region1_count 3
-        out.bits(0, 1)                 // preflag 0
-        out.bits(1, 1)                 // scalefac_scale 1
-        out.bits(0, 1)                 // count1 table A (REAL)
-      }
-      out.bytes(main, f * cap, cap)
-    }
-    out.pos = nFrames * frameLen * 8L
-    out.toBytes
-  }
 
   /** Fixture for the RUNTIME-LOADED table path ([[L3IsoHuff.load]],
     * round 16): a mono 48 kHz / 192 kbps stream whose big-values
@@ -4499,96 +3520,21 @@ object Multimodal {
   def layer3HuffLoadBytes(seed: Long, nFrames: Int, t0: Int, t1: Int,
                           enc: Map[(Int, Int), String],
                           linbits1: Int): Array[Byte] = {
-    val frameLen = 576
-    val cap = frameLen - 21
-    val out = new BitWriter
-    val pool = new BitWriter // the main-data reservoir
     val sfb48 = L3IsoSynth.sfbLong(48000)
-    val b0 = sfb48(5)  // region0_count 4 → boundary line 20
-    val b1 = sfb48(9)  // region1_count 3 → boundary line 42
-    // region1 pairs travel the ESC path: magnitudes 0..30 (symbol
-    // min(m,15) + 4 linbits magnitude bits when m >= 15); regions 0/2
-    // stay plain 0..15 (t0 has no linbits: symbol 15 IS magnitude 15)
-    def pairs(f: Int, g: Int): Seq[(Int, Int)] = {
-      val n = 23 + ((seed + f + g) % 5).toInt
-      (0 until n).map { k =>
-        val m = if (2 * k >= b0 && 2 * k < b1) 31 else 16
-        val mx = ((seed * 3 + f * 7 + g * 11 + k * 5) % m).toInt
-        val my = ((seed * 5 + f * 11 + g * 3 + k * 7) % m).toInt
-        val x = if ((seed + f + k) % 2 == 1) -mx else mx
-        val y = if ((seed + g + k) % 2 == 1) -my else my
-        (x, y)
+    // region1 (lines 20-41: region0_count 4, region1_count 3) travels the
+    // ESC path with magnitudes 0..30; regions 0/2 stay plain 0..15 (t0
+    // has no linbits: symbol 15 IS magnitude 15)
+    def region1(k: Int): Boolean = 2 * k >= sfb48(5) && 2 * k < sfb48(9)
+    L3Writer.stream(nFrames, _ => 576, _ => L3Mono48) { f =>
+      (0 until 2).map { g =>
+        val s = L3Salt(seed, f, g, 0)
+        Gran(s.gain, 0, Seq(t0, t1, t0), Nil,
+          s.magPairs(23 + ((seed + f + g) % 5).toInt)(k =>
+            if (region1(k)) 31 else 16),
+          s.quads, count1B = false,
+          code = k => Table(enc, if (region1(k)) linbits1 else 0))
       }
     }
-    def quads(f: Int, g: Int): Seq[Array[Int]] = {
-      val n = 4 + ((seed + f * 2 + g) % 5).toInt
-      (0 until n).map { q =>
-        Array.tabulate(4) { j =>
-          val bit = ((seed * (j + 2) + f * 3 + g * 5 + q * 7) % 2).toInt
-          val sgn = if ((seed + f + j + q) % 2 == 0) 1 else -1
-          bit * sgn
-        }
-      }
-    }
-    def gainOf(f: Int, g: Int): Int =
-      210 + 4 * (((seed + f * 2 + g) % 8).toInt - 2)
-    def escBits(k: Int, m: Int): Int =
-      if (2 * k >= b0 && 2 * k < b1 && m >= 15) linbits1 else 0
-    def huffBits(f: Int, g: Int): Int = {
-      val pb = pairs(f, g).zipWithIndex.map { case ((x, y), k) =>
-        val ax = math.abs(x); val ay = math.abs(y)
-        enc((math.min(ax, 15), math.min(ay, 15))).length +
-          escBits(k, ax) + escBits(k, ay) +
-          (if (x != 0) 1 else 0) + (if (y != 0) 1 else 0)
-      }.sum
-      val qb = quads(f, g).map { q =>
-        var idx = 0
-        q.foreach(v => idx = (idx << 1) | (if (v != 0) 1 else 0))
-        L3IsoHuff.quadABits(idx) + q.count(_ != 0)
-      }.sum
-      pb + qb
-    }
-    (0 until nFrames).foreach { f =>
-      pool.pos = f * cap * 8L
-      (0 until 2).foreach { g =>
-        pairs(f, g).zipWithIndex.foreach { case ((x, y), k) =>
-          val ax = math.abs(x); val ay = math.abs(y)
-          pool.str(enc((math.min(ax, 15), math.min(ay, 15))))
-          if (escBits(k, ax) > 0) pool.bits(ax - 15, linbits1)
-          if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
-          if (escBits(k, ay) > 0) pool.bits(ay - 15, linbits1)
-          if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
-        }
-        quads(f, g).foreach { q =>
-          var idx = 0
-          q.foreach(v => idx = (idx << 1) | (if (v != 0) 1 else 0))
-          pool.str(L3IsoHuff.quadAEncode(idx))
-          q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
-        }
-      }
-    }
-    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
-    (0 until nFrames).foreach { f =>
-      out.pos = f * frameLen * 8L
-      out.bits(0xff, 8); out.bits(0xfb, 8)
-      out.bits(0xb4, 8); out.bits(0xc0, 8)
-      out.bits(0, 9); out.bits(0, 5); out.bits(0, 4)
-      (0 until 2).foreach { g =>
-        out.bits(huffBits(f, g), 12)
-        out.bits(pairs(f, g).size, 9)
-        out.bits(gainOf(f, g), 8)
-        out.bits(0, 4)                                    // scalefac_compress 0
-        out.bits(0, 1)                                    // no window switching
-        out.bits(t0, 5); out.bits(t1, 5); out.bits(t0, 5) // LOADED table ids
-        out.bits(4, 4); out.bits(3, 3)                    // region0_count 4, region1_count 3
-        out.bits(0, 1)                                    // preflag 0
-        out.bits(1, 1)                                    // scalefac_scale 1
-        out.bits(0, 1)                                    // count1 table A (REAL)
-      }
-      out.bytes(main, f * cap, cap)
-    }
-    out.pos = nFrames * frameLen * 8L
-    out.toBytes
   }
 
   /** The 44.1 kHz twin of [[layer3HuffRealBytes]] (round 14): a mono
@@ -4611,86 +3557,20 @@ object Multimodal {
   def layer3Bytes44k(seed: Long, nFrames: Int,
                      sr32: Boolean = false): Array[Byte] = {
     def tabOf(k: Int): Int = if (k < 10) 7 else if (k < 22) 10 else 9
-    def modOf(k: Int): Int = if (k >= 10 && k < 22) 8 else 6
-    def pairs(f: Int, g: Int): Seq[(Int, Int)] = {
-      val n = 23 + ((seed + f + g) % 5).toInt
-      (0 until n).map { k =>
-        val m = modOf(k)
-        val mx = ((seed * 3 + f * 7 + g * 11 + k * 5) % m).toInt
-        val my = ((seed * 5 + f * 11 + g * 3 + k * 7) % m).toInt
-        val x = if ((seed + f + k) % 2 == 1) -mx else mx
-        val y = if ((seed + g + k) % 2 == 1) -my else my
-        (x, y)
+    // 32 kHz: 144·192000/32000 = 864, integral; 44.1 kHz: the padding
+    // bit alternates, frame lengths 626/627
+    L3Writer.stream(nFrames, f => if (sr32) 864 else 626 + f % 2,
+      f => if (sr32) 0xfffbb8c0 else 0xfffbb0c0 | (f % 2) << 9) { f =>
+      (0 until 2).map { g =>
+        val s = L3Salt(seed, f, g, 0)
+        // scalefac_compress 5 → slen 1/1: 21 one-bit scalefactors
+        Gran(s.gain, 5, Seq(7, 10, 9),
+          (0 until 21).map(b => ((seed + f + g + b) % 2, 1)),
+          s.magPairs(23 + ((seed + f + g) % 5).toInt)(k =>
+            if (tabOf(k) == 10) 8 else 6),
+          s.quads, count1B = false, code = k => L3Writer.iso(tabOf(k)))
       }
     }
-    def quads(f: Int, g: Int): Seq[Array[Int]] = {
-      val n = 4 + ((seed + f * 2 + g) % 5).toInt
-      (0 until n).map { q =>
-        Array.tabulate(4) { j =>
-          val bit = ((seed * (j + 2) + f * 3 + g * 5 + q * 7) % 2).toInt
-          val sgn = if ((seed + f + j + q) % 2 == 0) 1 else -1
-          bit * sgn
-        }
-      }
-    }
-    def sfOf(f: Int, g: Int, b: Int): Int = ((seed + f + g + b) % 2).toInt
-    def gainOf(f: Int, g: Int): Int =
-      210 + 4 * (((seed + f * 2 + g) % 8).toInt - 2)
-    def huffBits(f: Int, g: Int): Int = {
-      val pb = pairs(f, g).zipWithIndex.map { case ((x, y), k) =>
-        L3IsoHuff.encode(tabOf(k))((math.abs(x), math.abs(y))).length +
-          (if (x != 0) 1 else 0) + (if (y != 0) 1 else 0)
-      }.sum
-      val qb = quads(f, g).map { q =>
-        var idx = 0
-        q.foreach(v => idx = (idx << 1) | (if (v != 0) 1 else 0))
-        L3IsoHuff.quadABits(idx) + q.count(_ != 0)
-      }.sum
-      pb + qb
-    }
-    val lens =
-      if (sr32) Array.fill(nFrames)(864) // 144·192000/32000, integral
-      else Array.tabulate(nFrames)(f => 626 + f % 2)
-    val out = new BitWriter
-    var base = 0
-    (0 until nFrames).foreach { f =>
-      out.pos = base * 8L
-      out.bits(0xff, 8); out.bits(0xfb, 8)
-      // br idx 11 (192k); sr idx 0 (44.1, padding alternates) or 2 (32k)
-      out.bits(if (sr32) 0xb8 else 0xb0 | ((f % 2) << 1), 8)
-      out.bits(0xc0, 8)             // mono
-      out.bits(0, 9); out.bits(0, 5); out.bits(0, 4) // mdb 0, private, scfsi 0
-      (0 until 2).foreach { g =>
-        out.bits(21 + huffBits(f, g), 12) // 21 scalefactor bits + entropy
-        out.bits(pairs(f, g).size, 9)
-        out.bits(gainOf(f, g), 8)
-        out.bits(5, 4) // scalefac_compress 5 → slen 1/1
-        out.bits(0, 1) // no window switching
-        out.bits(7, 5); out.bits(10, 5); out.bits(9, 5) // REAL tables 7 / 10 / 9
-        out.bits(4, 4); out.bits(3, 3) // region0_count 4, region1_count 3
-        out.bits(0, 1)                 // preflag 0
-        out.bits(1, 1)                 // scalefac_scale 1
-        out.bits(0, 1)                 // count1 table A
-      }
-      // main data immediately after side info (mdb 0, no reservoir)
-      (0 until 2).foreach { g =>
-        (0 until 21).foreach(b => out.bits(sfOf(f, g, b), 1))
-        pairs(f, g).zipWithIndex.foreach { case ((x, y), k) =>
-          out.str(L3IsoHuff.encode(tabOf(k))((math.abs(x), math.abs(y))))
-          if (x != 0) out.bits(if (x < 0) 1 else 0, 1)
-          if (y != 0) out.bits(if (y < 0) 1 else 0, 1)
-        }
-        quads(f, g).foreach { q =>
-          var idx = 0
-          q.foreach(v => idx = (idx << 1) | (if (v != 0) 1 else 0))
-          out.str(L3IsoHuff.quadAEncode(idx))
-          q.foreach(v => if (v != 0) out.bits(if (v < 0) 1 else 0, 1))
-        }
-      }
-      base += lens(f)
-    }
-    out.pos = lens.sum * 8L
-    out.toBytes
   }
 
   /** Joint-stereo (MS) twin of [[layer3BytesFull]]: 48 kHz / 192 kbps
@@ -4702,131 +3582,9 @@ object Multimodal {
     * matrix after requantizing both channels of each granule. */
   def layer3StereoBytes(seed: Long, nFrames: Int,
                         intensity: Boolean = false,
-                        isPos67: Boolean = false): Array[Byte] = {
-    val frameLen = 576
-    val cap = frameLen - 36 // 4 header + 32 side info
-    val out = new BitWriter
-    val pool = new BitWriter // the main-data reservoir
-    // intensity fixture: scfsi off (all scalefactors transmitted — the
-    // right channel's high-band slots carry is_pos), right channel
-    // band-limited to lines < 16 with no count1 region.
-    def scfsiOf(f: Int, ch: Int): Int =
-      if (intensity) 0 else ((seed + f + ch) % 16).toInt
-    // isPos67 (round 15): the RIGHT channel transmits 3-bit slots
-    // (scomp 13 -> slen 3/3), so its high-band is_pos values span 0..7
-    // and exercise the fully-left (6) and no-processing (7) cases.
-    def slenOf(ch: Int): Int = if (isPos67 && ch == 1) 3 else 2
-    def sfBase(f: Int, g: Int, band: Int, ch: Int): Int =
-      if (isPos67 && ch == 1)
-        ((seed + f + band + g * 3 + ch * 5) % 8).toInt
-      else ((seed + f + band + g * 3 + ch * 5) % 4).toInt
-    def pairs(f: Int, g: Int, ch: Int): Seq[(Int, Int)] = {
-      val n = if (intensity && ch == 1) 8
-              else 16 + ((seed + f + g + ch * 2) % 17).toInt
-      (0 until n).map(k =>
-        ((((seed * 3 + f * 7 + g * 11 + ch * 13 + k * 5) % 3) - 1).toInt,
-         (((seed * 5 + f * 11 + g * 3 + ch * 7 + k * 7) % 3) - 1).toInt))
-    }
-    def quads(f: Int, g: Int, ch: Int): Seq[Array[Int]] = {
-      val n = if (intensity && ch == 1) 0
-              else 4 + ((seed + f * 2 + g + ch) % 5).toInt
-      (0 until n).map { q =>
-        Array.tabulate(4) { j =>
-          val bit =
-            ((seed * (j + 2) + f * 3 + g * 5 + q * 7 + ch * 11) % 2).toInt
-          val sgn = if ((seed + f + j + q + ch) % 2 == 0) 1 else -1
-          bit * sgn
-        }
-      }
-    }
-    def gainOf(f: Int, g: Int, ch: Int): Int =
-      210 + 4 * (((seed + f * 2 + g + ch * 3) % 8).toInt - 2)
-    def preflagOf(f: Int, g: Int, ch: Int): Int =
-      if ((seed + f + g + ch) % 3 == 0) 1 else 0
-    def sfBits(f: Int, g: Int, ch: Int): Int = {
-      var n = 0; var band = 0
-      while (band < 21) {
-        val group = if (band < 6) 0 else if (band < 11) 1
-                    else if (band < 16) 2 else 3
-        if (g == 0 || ((scfsiOf(f, ch) >> (3 - group)) & 1) == 0)
-          n += slenOf(ch)
-        band += 1
-      }
-      n
-    }
-    def huffBits(f: Int, g: Int, ch: Int): Int = {
-      val pb = pairs(f, g, ch).map { case (x, y) =>
-        (if (x == 0 && y == 0) 1 else if (y == 0) 2 else 3) +
-          (if (x != 0) 1 else 0) + (if (y != 0) 1 else 0)
-      }.sum
-      val qb = quads(f, g, ch).map(q => 4 + q.count(_ != 0)).sum
-      pb + qb
-    }
-    val mdbs = new Array[Int](nFrames)
-    (0 until nFrames).foreach { f =>
-      val nominal = f * cap
-      val want = if (f == 0) 0 else ((seed * 7 + f * 13) % 40).toInt
-      val avail = nominal - ((pool.pos + 7) / 8).toInt
-      val mdb = math.min(want, math.max(avail, 0))
-      mdbs(f) = mdb
-      val startBit = (nominal - mdb) * 8
-      pool.pos = math.max(pool.pos, startBit)
-      (0 until 2).foreach { g =>
-        (0 until 2).foreach { ch =>
-          var band = 0
-          while (band < 21) {
-            val group = if (band < 6) 0 else if (band < 11) 1
-                        else if (band < 16) 2 else 3
-            if (g == 0 || ((scfsiOf(f, ch) >> (3 - group)) & 1) == 0)
-              pool.bits(sfBase(f, if (g == 1 &&
-                ((scfsiOf(f, ch) >> (3 - group)) & 1) == 1) 0 else g,
-                band, ch), slenOf(ch))
-            band += 1
-          }
-          pairs(f, g, ch).foreach { case (x, y) =>
-            val c = if (x == 0 && y == 0) "1"
-                    else if (y == 0) "01"
-                    else if (x == 0) "001" else "000"
-            pool.str(c)
-            if (x != 0) pool.bits(if (x < 0) 1 else 0, 1)
-            if (y != 0) pool.bits(if (y < 0) 1 else 0, 1)
-          }
-          quads(f, g, ch).foreach { q =>
-            var code = 0
-            q.foreach(v => code = (code << 1) | (if (v != 0) 0 else 1))
-            pool.bits(code, 4)
-            q.foreach(v => if (v != 0) pool.bits(if (v < 0) 1 else 0, 1))
-          }
-        }
-      }
-    }
-    val main = java.util.Arrays.copyOf(pool.toBytes, cap * nFrames)
-    (0 until nFrames).foreach { f =>
-      out.pos = f * frameLen * 8L
-      out.bits(0xff, 8); out.bits(0xfb, 8)
-      out.bits(0xb4, 8)
-      out.bits(if (intensity) 0x50 else 0x60, 8) // joint stereo + MS/intensity
-      out.bits(mdbs(f), 9); out.bits(0, 3)
-      (0 until 2).foreach(ch => out.bits(scfsiOf(f, ch), 4))
-      (0 until 2).foreach { g =>
-        (0 until 2).foreach { ch =>
-          out.bits(sfBits(f, g, ch) + huffBits(f, g, ch), 12)
-          out.bits(pairs(f, g, ch).size, 9)
-          out.bits(gainOf(f, g, ch), 8)
-          out.bits(if (isPos67 && ch == 1) 13 else 9, 4)
-          out.bits(0, 1)
-          out.bits(1, 5); out.bits(1, 5); out.bits(1, 5)
-          out.bits(4, 4); out.bits(3, 3)
-          out.bits(preflagOf(f, g, ch), 1)
-          out.bits(1, 1)
-          out.bits(1, 1)
-        }
-      }
-      out.bytes(main, f * cap, cap)
-    }
-    out.pos = nFrames * frameLen * 8L
-    out.toBytes
-  }
+                        isPos67: Boolean = false): Array[Byte] =
+    l3LongBytes(seed, nFrames, stereo = true, intensity = intensity,
+                isPos67 = isPos67)
 
   /** One entropy-decoded MPEG-1 intra block: macroblock index, block
     * index within the macroblock (0–3 luma, 4 Cb, 5 Cr), the dequantized
