@@ -101,8 +101,10 @@ final class GraftKG(val spark: SparkSession, val edges: DataFrame,
     * transe | distmult | complex | rotate; `steps` > 1 iterates the
     * quantized-state loop for every model; `hashNeg` swaps the cyclic
     * corruption for the portable md5 draw (TransE, single step);
-    * `momentum` > 0 runs TransE with heavy-ball momentum (not with
-    * `hashNeg`, which runs plain SGD). Returns the
+    * `momentum` > 0 runs TransE with heavy-ball momentum. `hashNeg` and
+    * `momentum` are TransE-only and exclusive of each other: any other
+    * model with either, `hashNeg` with `momentum` > 0, or a negative
+    * `momentum` throws `IllegalArgumentException`. Returns the
     * long-form updated parameter frame (kind, id, pos, x). */
   def train(model: String, dim: Int = 8,
             entSeed: Double = 0.3, relSeed: Double = 1.7,
@@ -110,12 +112,17 @@ final class GraftKG(val spark: SparkSession, val edges: DataFrame,
             hashNeg: Boolean = false, momentum: Double = 0.0): DataFrame = {
     import graft.score.Training
     import graft.score.Training.Optimizer
+    val family = Training.Model.named(model)
+    require(momentum >= 0, s"momentum must be non-negative, got $momentum")
+    require(family == Training.Model.TransE || (!hashNeg && momentum == 0),
+      s"hashNeg and momentum are TransE-only, got model $model")
+    require(!(hashNeg && momentum > 0), "hashNeg runs plain SGD, no momentum")
     val ents = entities.select("id")
-    Training.Model.named(model) match {
+    family match {
       case Training.Model.TransE =>
         Training.transeSgd(ents, edges, dim, entSeed, relSeed, steps, gamma,
-          lr, if (momentum > 0 && !hashNeg) Optimizer.Momentum(momentum)
-              else Optimizer.Sgd, hashNeg)
+          lr, if (momentum > 0) Optimizer.Momentum(momentum) else Optimizer.Sgd,
+          hashNeg)
       case m =>
         Training.sgd(m, ents, edges, dim, entSeed, relSeed, steps, gamma, lr)
     }

@@ -158,6 +158,18 @@ class GraftFacadeSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](kg.train("unknown"))
   }
 
+  test("facade train refuses options the chosen trainer would ignore") {
+    val kg = Graft.fromTriples(spark,
+      Seq((10L, 0L, 20L), (20L, 2L, 30L)).toDF("src", "rel", "dst"))
+    intercept[IllegalArgumentException](
+      kg.train("transe", dim = 4, hashNeg = true, momentum = 0.9))
+    for (m <- Seq("distmult", "complex", "rotate")) {
+      intercept[IllegalArgumentException](kg.train(m, dim = 4, hashNeg = true))
+      intercept[IllegalArgumentException](kg.train(m, dim = 4, momentum = 0.9))
+    }
+    intercept[IllegalArgumentException](kg.train("transe", dim = 4, momentum = -0.5))
+  }
+
   test("facade evaluate: per-type filtered metrics in [0,1]") {
     val kg = Graft.fromTestdata(spark, dir)
     val rows = kg.evaluate(dir, Seq(
