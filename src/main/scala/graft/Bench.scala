@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query at SPARK_GRAFT_SF_DIR.
   *
   * Output contract (two sinks, one stdout line):
@@ -129,20 +127,7 @@ object Bench {
     val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val loadStart = loadAvg
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The suite executes 215 queries × repeat medians in ONE JVM —
-      // far past the default 100-entry whole-stage-codegen cache, so
-      // late-alphabet queries were re-compiling every generated class
-      // on every repeat (measured: kg_* at 1.4-4 s in-suite vs
-      // 0.3-0.9 s solo, identical plans). Size the cache to the suite.
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
 
     val tLoad = System.nanoTime()
     graft.model.KG.edges(spark, sfDir)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: prints the formatted physical plan and timed count of one
   * named SparkEntry query. Usage: runMain graft.tools.Explain <query> [dir]. */
 object Explain {
@@ -9,12 +7,7 @@ object Explain {
     val dir = args(0)
     val names = args.drop(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus.toInt)
     names.foreach { name =>
       val t0 = System.nanoTime()
       val df = graft.SparkEntry.queries(name)(spark, dir)

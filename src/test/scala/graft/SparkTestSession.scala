@@ -4,15 +4,5 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared local session for specs (one JVM-wide session, local[4]). */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4, logLevel = "ERROR")
 }
