@@ -2,8 +2,8 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query job/stage/task profiler for optimization work: runs each named
   * SparkEntry query `repeat` times and prints, per query, the Spark JOB and
@@ -20,15 +20,7 @@ object JobProfile {
     val names = args.drop(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val repeat = sys.env.getOrElse("SPARK_GRAFT_PROFILE_REPEAT", "5").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus.toInt)
 
     val jobs = new AtomicInteger
     val stages = new AtomicInteger
@@ -46,16 +38,14 @@ object JobProfile {
 
     names.foreach { name =>
       val runs = (1 to repeat).map { _ =>
-        // Listener events are async (the bus is private); a short settle
-        // sleep before reading the counters keeps each run's window
-        // honest — job counts are deterministic, so min-over-repeats
-        // washes out any straggling event.
-        Thread.sleep(300)
+        // Listener events arrive asynchronously: drain the bus before
+        // each counter read so a run's window holds exactly its events.
+        ListenerBus.drain(spark.sparkContext)
         val (j0, s0, t0) = (jobs.get, stages.get, tasks.get)
         val w0 = System.nanoTime()
         val n = graft.SparkEntry.queries(name)(spark, dir).count()
         val wall = (System.nanoTime() - w0) / 1e9
-        Thread.sleep(300)
+        ListenerBus.drain(spark.sparkContext)
         (wall, jobs.get - j0, stages.get - s0, tasks.get - t0, n)
       }
       val walls = runs.map(_._1).sorted
