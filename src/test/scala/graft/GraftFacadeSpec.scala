@@ -158,16 +158,25 @@ class GraftFacadeSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](kg.train("unknown"))
   }
 
-  test("facade train refuses options the chosen trainer would ignore") {
-    val kg = Graft.fromTriples(spark,
-      Seq((10L, 0L, 20L), (20L, 2L, 30L)).toDF("src", "rel", "dst"))
+  private def tinyKg = Graft.fromTriples(spark,
+    Seq((10L, 0L, 20L), (20L, 2L, 30L)).toDF("src", "rel", "dst"))
+
+  test("facade train refuses TransE hashNeg with momentum") {
     intercept[IllegalArgumentException](
-      kg.train("transe", dim = 4, hashNeg = true, momentum = 0.9))
+      tinyKg.train("transe", dim = 4, hashNeg = true, momentum = 0.9))
+  }
+
+  test("facade train refuses hashNeg and momentum for non-TransE models") {
+    val kg = tinyKg
     for (m <- Seq("distmult", "complex", "rotate")) {
       intercept[IllegalArgumentException](kg.train(m, dim = 4, hashNeg = true))
       intercept[IllegalArgumentException](kg.train(m, dim = 4, momentum = 0.9))
     }
-    intercept[IllegalArgumentException](kg.train("transe", dim = 4, momentum = -0.5))
+  }
+
+  test("facade train refuses a negative momentum") {
+    intercept[IllegalArgumentException](
+      tinyKg.train("transe", dim = 4, momentum = -0.5))
   }
 
   test("facade evaluate: per-type filtered metrics in [0,1]") {
