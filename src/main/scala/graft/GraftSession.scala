@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * recompiled every generated class on every repeat (26% of bench wall
   * when measured). */
 object GraftSession {
-  def local(cpus: Int, logLevel: String = "WARN"): SparkSession = {
+  def local(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft")
@@ -20,7 +20,7 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "4000")
       .getOrCreate()
-    spark.sparkContext.setLogLevel(logLevel)
+    spark.sparkContext.setLogLevel("WARN")
     spark
   }
 }

@@ -4,5 +4,5 @@ package org.apache.spark
   * `org.apache.spark`: listener state read after the call reflects every
   * event posted before it. */
 object ListenerBus {
-  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(30000L)
 }

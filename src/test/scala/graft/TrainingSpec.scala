@@ -678,7 +678,7 @@ class TrainingSpec extends AnyFunSuite {
       pinner.start()
       val out = try { val df = run(steps); df.collect(); df }
         finally { running = false; pinner.join() }
-      org.apache.spark.TestBus.drain(sc)
+      org.apache.spark.ListenerBus.drain(sc)
       val mine = sc.getRDDStorageInfo.filter(_.id > first)
       assert(out.columns.length == 4 && pinned.size > 0)
       (mine.length, mine.map(r => r.memSize + r.diskSize).sum)
