@@ -3108,6 +3108,11 @@ object Multimodal {
   /** MPEG-1 Layer III header: 192 kbps, 48 kHz, mono, no CRC. */
   private val L3Mono48 = 0xfffbb4c0
 
+  /** The same header in mono or joint stereo, mode_extension MS (10) or
+    * intensity (01). */
+  private def l3Header48(stereo: Boolean, intensity: Boolean): Int =
+    if (!stereo) L3Mono48 else if (intensity) 0xfffbb450 else 0xfffbb460
+
   /** Content formulas the Layer III fixtures share. `g` and `ch` enter as
     * salts: 0 for a mono channel and for an LSF frame's one granule. */
   private final case class L3Salt(seed: Long, f: Int, g: Int, ch: Int) {
@@ -3166,9 +3171,8 @@ object Multimodal {
     // is_pos), the right channel band-limited to lines < 16, no count1
     def scfsiOf(f: Int, ch: Int): Int =
       if (intensity) 0 else ((seed + f + ch) % 16).toInt
-    val hdr = if (!stereo) L3Mono48 else if (intensity) 0xfffbb450 else 0xfffbb460
-    L3Writer.stream(nFrames, _ => 576, _ => hdr, crc, L3Writer.reservoir(seed),
-                    scfsiOf) { f =>
+    L3Writer.stream(nFrames, _ => 576, _ => l3Header48(stereo, intensity), crc,
+                    L3Writer.reservoir(seed), scfsiOf) { f =>
       for (g <- 0 until 2; ch <- 0 until (if (stereo) 2 else 1)) yield {
         val s = L3Salt(seed, f, g, ch)
         val right = intensity && ch == 1
@@ -3196,10 +3200,9 @@ object Multimodal {
   private def l3ShortBytes(seed: Long, nFrames: Int, stereo: Boolean,
                            mixed: Boolean,
                            intensity: Boolean = false): Array[Byte] = {
-    val hdr = if (!stereo) L3Mono48 else if (intensity) 0xfffbb450 else 0xfffbb460
     val slots = (0 until (if (mixed) 8 else 0)) ++
       ((if (mixed) 3 else 0) until 12).flatMap(b => (0 until 3).map(b + _))
-    L3Writer.stream(nFrames, _ => 576, _ => hdr,
+    L3Writer.stream(nFrames, _ => 576, _ => l3Header48(stereo, intensity),
                     back = L3Writer.reservoir(seed)) { f =>
       for (g <- 0 until 2; ch <- 0 until (if (stereo) 2 else 1)) yield {
         val s = L3Salt(seed, f, g, ch)
