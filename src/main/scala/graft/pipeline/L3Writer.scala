@@ -63,12 +63,15 @@ private[graft] object L3Writer {
       val placed = ((pool.pos + 7) / 8).toInt
       mdbs(f) = math.min(back(f), math.max(starts(f) - placed, 0))
       pool.pos = math.max(pool.pos, (starts(f) - mdbs(f)) * 8L)
-      content(f).map { gr =>
+      val lens = content(f).map { gr =>
         val from = pool.pos
         gr.sf.foreach { case (v, w) => pool.bits(v, w) }
         writeEntropy(pool, gr)
         (pool.pos - from).toInt
       }
+      // the next frame's back-pointer can only reach data that ends here
+      require(pool.pos <= starts(f + 1) * 8L, s"frame $f's main data overflows")
+      lens
     }
     val main = java.util.Arrays.copyOf(pool.toBytes, starts(nFrames))
 
