@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -9,6 +9,8 @@ import graft.metric.Ranking
 import graft.model.KG
 import graft.pipeline.{Dedup, Similarity, TextOps}
 import graft.score.{DistMult, Embeddings, Training, TransE}
+import graft.score.Training.{Model, Optimizer}
+import graft.TrainingOracle.Eval
 
 /** Non-KG-logic operator demos over the driver testdata: aggregations
   * (SURVEY §2.4), sorts/top-k/ranking (§2.5), scored executors (§2.3 soft,
@@ -49,7 +51,26 @@ object PipelineQueries {
   private val DIM = 8
   private val ENT_SEED = 0.3
   private val REL_SEED = 1.7
-  private val IM_OFF = Training.IM_SEED_OFFSET
+  private val trainOracle = new TrainingOracle(DIM, ENT_SEED, REL_SEED)
+
+  /** The training rows' entity set and edges: the supplier/nation/region
+    * containment subgraph. */
+  private def trainSet(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val edges = KG.edges(s, dir)
+      .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
+    (edges.select(col("src").as("id"))
+       .unionAll(edges.select(col("dst").as("id"))).distinct(), edges)
+  }
+
+  /** Per-relation summary of tail ranks: n, the micro-reciprocal MRR
+    * (SUM(ROUND(1e6/rank)), engine-exact) and hits@k for each k. */
+  private def rankSummary(ranks: DataFrame, hits: Int*): DataFrame = {
+    def share(c: Column) = round(c / count(lit(1)), 6)
+    ranks.groupBy("rel").agg(count(lit(1)).as("n"),
+      share(sum(round(lit(1000000.0) / col("rank"), 0)) / 1e6).as("mrr") +:
+        hits.map(k => share(sum(when(col("rank") <= k, 1).otherwise(0)) * 1.0)
+          .as(s"hits$k")): _*)
+  }
 
   private def supplierEnts(s: SparkSession, dir: String): DataFrame =
     Embeddings.deterministic(
@@ -3140,49 +3161,10 @@ object PipelineQueries {
     // as joins + posexplode + scatter-add, bit-exactly oracle-replayed.
     ("train_transe_step",
       (s, dir) => {
-        val edges = KG.edges(s, dir)
-          .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
-        val ents = edges.select(col("src").as("id"))
-          .unionAll(edges.select(col("dst").as("id"))).distinct()
-        Training.transeSgd(ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED)
+        val (ents, edges) = trainSet(s, dir)
+        Training.transeSgd(ents, edges, DIM, ENT_SEED, REL_SEED)
       },
-      Some(KG.edgesCte.trim + ",\n" +
-        s"""te AS (SELECT src, rel, dst FROM edges
-           |       WHERE rel IN (${KG.REL_SUPP_NATION}, ${KG.REL_NATION_REGION})),
-           |en AS (SELECT DISTINCT id FROM (SELECT src AS id FROM te UNION SELECT dst FROM te) u),
-           |ix AS (SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS i FROM en),
-           |neg AS (SELECT a.id AS dst, b.id AS neg FROM ix a JOIN ix b
-           |        ON a.i % (SELECT COUNT(*) FROM en) + 1 = b.i),
-           |ed AS (SELECT src, rel, dst, neg FROM te JOIN neg USING (dst)),
-           |dm AS (SELECT src, rel, dst, neg, i,
-           |         SIN((src % 9973 + 1) * i * 0.017 + $ENT_SEED) AS h,
-           |         SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED) AS r,
-           |         SIN((dst % 9973 + 1) * i * 0.017 + $ENT_SEED) AS t,
-           |         SIN((neg % 9973 + 1) * i * 0.017 + $ENT_SEED) AS tn
-           |       FROM ed CROSS JOIN generate_series(1, $DIM) g(i)),
-           |sc AS (SELECT src, rel, dst, neg,
-           |         SUM(ABS(h + r - t)) AS dp, SUM(ABS(h + r - tn)) AS dn
-           |       FROM dm GROUP BY 1, 2, 3, 4),
-           |vd AS (SELECT dm.*, SIGN(h + r - t) AS s, SIGN(h + r - tn) AS sp
-           |       FROM dm JOIN (SELECT src, rel, dst, neg FROM sc
-           |                     WHERE 1.0 + dp - dn > 0) vi
-           |         USING (src, rel, dst, neg)),
-           |contrib AS (SELECT 'ent' AS kind, src AS id, i, s - sp AS g FROM vd
-           |  UNION ALL SELECT 'ent', dst, i, -s FROM vd
-           |  UNION ALL SELECT 'ent', neg, i, sp FROM vd
-           |  UNION ALL SELECT 'rel', rel, i, s - sp FROM vd),
-           |gsum AS (SELECT kind, id, i, SUM(g) AS g FROM contrib GROUP BY 1, 2, 3),
-           |base AS (SELECT 'ent' AS kind, id, i,
-           |           SIN((id % 9973 + 1) * i * 0.017 + $ENT_SEED) AS x0
-           |         FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-           |         UNION ALL
-           |         SELECT 'rel', rel AS id, i,
-           |           SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED)
-           |         FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i))
-           |SELECT kind, id, CAST(i - 1 AS BIGINT) AS pos,
-           |       ROUND(x0 - 0.03125 * COALESCE(g, 0), 6) AS x
-           |FROM base LEFT JOIN gsum USING (kind, id, i)""".stripMargin)),
+      Some(trainOracle.sql(Model.TransE))),
 
     // ADAGRAD step (Duchi 2011): per-parameter adaptive rate lr/sqrt(sum g^2).
     // Exactness: sign gradients are integers, so the accumulator is an
@@ -3192,56 +3174,11 @@ object PipelineQueries {
     // decimal rounding (and hence no .5-micro tie class) exists at all.
     ("train_transe_adagrad",
       (s, dir) => {
-        val edges = KG.edges(s, dir)
-          .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
-        val ents = edges.select(col("src").as("id"))
-          .unionAll(edges.select(col("dst").as("id"))).distinct()
-        Training.transeSgd(ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED, steps = 1,
-          optimizer = Training.Optimizer.Adagrad)
+        val (ents, edges) = trainSet(s, dir)
+        Training.transeSgd(ents, edges, DIM, ENT_SEED, REL_SEED,
+          optimizer = Optimizer.Adagrad)
       },
-      Some(KG.edgesCte.trim + ",\n" +
-        s"""te AS (SELECT src, rel, dst FROM edges
-           |       WHERE rel IN (${KG.REL_SUPP_NATION}, ${KG.REL_NATION_REGION})),
-           |en AS (SELECT DISTINCT id FROM (SELECT src AS id FROM te UNION SELECT dst FROM te) u),
-           |ix AS (SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS i FROM en),
-           |neg AS (SELECT a.id AS dst, b.id AS neg FROM ix a JOIN ix b
-           |        ON a.i % (SELECT COUNT(*) FROM en) + 1 = b.i),
-           |ed AS (SELECT src, rel, dst, neg FROM te JOIN neg USING (dst)),
-           |dm AS (SELECT src, rel, dst, neg, i,
-           |         SIN((src % 9973 + 1) * i * 0.017 + $ENT_SEED) AS h,
-           |         SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED) AS r,
-           |         SIN((dst % 9973 + 1) * i * 0.017 + $ENT_SEED) AS t,
-           |         SIN((neg % 9973 + 1) * i * 0.017 + $ENT_SEED) AS tn
-           |       FROM ed CROSS JOIN generate_series(1, $DIM) g(i)),
-           |sc AS (SELECT src, rel, dst, neg,
-           |         SUM(ABS(h + r - t)) AS dp, SUM(ABS(h + r - tn)) AS dn
-           |       FROM dm GROUP BY 1, 2, 3, 4),
-           |vd AS (SELECT dm.*, SIGN(h + r - t) AS s, SIGN(h + r - tn) AS sp
-           |       FROM dm JOIN (SELECT src, rel, dst, neg FROM sc
-           |                     WHERE 1.0 + dp - dn > 0) vi
-           |         USING (src, rel, dst, neg)),
-           |contrib AS (SELECT 'ent' AS kind, src AS id, i, s - sp AS g FROM vd
-           |  UNION ALL SELECT 'ent', dst, i, -s FROM vd
-           |  UNION ALL SELECT 'ent', neg, i, sp FROM vd
-           |  UNION ALL SELECT 'rel', rel, i, s - sp AS g FROM vd),
-           |gsum AS (SELECT kind, id, i, SUM(g) AS g FROM contrib GROUP BY 1, 2, 3),
-           |base AS (SELECT 'ent' AS kind, id, i,
-           |           SIN((id % 9973 + 1) * i * 0.017 + $ENT_SEED) AS x0
-           |         FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-           |         UNION ALL
-           |         SELECT 'rel', rel AS id, i,
-           |           SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED)
-           |         FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i))
-           |SELECT kind, id, CAST(i - 1 AS BIGINT) AS pos,
-           |       CASE WHEN COALESCE(g, 0) = 0 THEN
-           |              CAST(CAST(ROUND(x0 * 1000000, 0) AS BIGINT)
-           |                   AS DOUBLE) / 1000000
-           |            ELSE CAST(CAST(ROUND(x0 * 1000000, 0) AS BIGINT)
-           |                      - CAST(g AS BIGINT) *
-           |                        CAST(FLOOR(31250.0 / SQRT(g * g)) AS BIGINT)
-           |                   AS DOUBLE) / 1000000 END AS x
-           |FROM base LEFT JOIN gsum USING (kind, id, i)""".stripMargin)),
+      Some(trainOracle.sql(Model.TransE, Optimizer.Adagrad))),
 
     // TWO ADAM steps (Kingma & Ba 2015, beta1 = beta2 = 1/2): both moment
     // states are exact dyadic rationals (halving = IEEE exponent shift,
@@ -3252,79 +3189,11 @@ object PipelineQueries {
     // v-hat = g^2), so only a second step proves the adaptive state.
     ("train_transe_adam",
       (s, dir) => {
-        val edges = KG.edges(s, dir)
-          .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
-        val ents = edges.select(col("src").as("id"))
-          .unionAll(edges.select(col("dst").as("id"))).distinct()
-        Training.transeSgd(ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED, steps = 2,
-          optimizer = Training.Optimizer.Adam)
+        val (ents, edges) = trainSet(s, dir)
+        Training.transeSgd(ents, edges, DIM, ENT_SEED, REL_SEED, steps = 2,
+          optimizer = Optimizer.Adam)
       },
-      Some {
-        def stepCtes(k: Int): String = {
-          val (p, c) = (s"e${k - 1}", s"e$k")
-          val bc = if (k == 1) "0.5" else "0.75" // 1 - 2^-k, exact dyadics
-          val mvPrev =
-            if (k == 1)
-              s"""mv$k AS MATERIALIZED (SELECT kind, id, i,
-                 |          0.5 * g AS m, 0.5 * g * g AS w FROM gs$k)"""
-                .stripMargin
-            else
-              s"""mv$k AS MATERIALIZED (SELECT kind, id, i,
-                 |          COALESCE(m, 0) * 0.5 + COALESCE(g, 0) * 0.5 AS m,
-                 |          COALESCE(w, 0) * 0.5 + COALESCE(g, 0) * COALESCE(g, 0) * 0.5 AS w
-                 |        FROM mv${k - 1} FULL JOIN gs$k USING (kind, id, i))"""
-                .stripMargin
-          s"""dm$k AS MATERIALIZED (SELECT ed.src, ed.rel, ed.dst, ed.neg, h.i,
-             |           h.x AS h, r.x AS r, t.x AS t, tn.x AS tn
-             |         FROM ed
-             |         JOIN $p h ON h.kind = 'ent' AND h.id = ed.src
-             |         JOIN $p r ON r.kind = 'rel' AND r.id = ed.rel AND r.i = h.i
-             |         JOIN $p t ON t.kind = 'ent' AND t.id = ed.dst AND t.i = h.i
-             |         JOIN $p tn ON tn.kind = 'ent' AND tn.id = ed.neg AND tn.i = h.i),
-             |sc$k AS (SELECT src, rel, dst, neg,
-             |           SUM(ABS(h + r - t)) AS dp, SUM(ABS(h + r - tn)) AS dn
-             |         FROM dm$k GROUP BY 1, 2, 3, 4),
-             |vd$k AS (SELECT dm$k.*, SIGN(h + r - t) AS s, SIGN(h + r - tn) AS sp
-             |         FROM dm$k JOIN (SELECT src, rel, dst, neg FROM sc$k
-             |                         WHERE 1.0 + dp - dn > 0) vi$k
-             |           USING (src, rel, dst, neg)),
-             |ct$k AS (SELECT 'ent' AS kind, src AS id, i, s - sp AS g FROM vd$k
-             |  UNION ALL SELECT 'ent', dst, i, -s FROM vd$k
-             |  UNION ALL SELECT 'ent', neg, i, sp FROM vd$k
-             |  UNION ALL SELECT 'rel', rel, i, s - sp FROM vd$k),
-             |gs$k AS (SELECT kind, id, i, SUM(g) AS g FROM ct$k GROUP BY 1, 2, 3),
-             |$mvPrev,
-             |$c AS MATERIALIZED (SELECT kind, id, i,
-             |         CASE WHEN COALESCE(m, 0) = 0 THEN
-             |                CAST(CAST(ROUND(x * 1000000, 0) AS BIGINT)
-             |                     AS DOUBLE) / 1000000
-             |              ELSE CAST(CAST(ROUND(x * 1000000, 0) AS BIGINT)
-             |                        - CAST(SIGN(m) AS BIGINT) *
-             |                          CAST(FLOOR(31250.0 * ABS(m) / $bc /
-             |                                     SQRT(w / $bc)) AS BIGINT)
-             |                     AS DOUBLE) / 1000000 END AS x
-             |       FROM $p LEFT JOIN mv$k USING (kind, id, i))""".stripMargin
-        }
-        KG.edgesCte.trim + ",\n" +
-          s"""te AS (SELECT src, rel, dst FROM edges
-             |       WHERE rel IN (${KG.REL_SUPP_NATION}, ${KG.REL_NATION_REGION})),
-             |en AS (SELECT DISTINCT id FROM (SELECT src AS id FROM te UNION SELECT dst FROM te) u),
-             |ix AS (SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS i FROM en),
-             |neg AS (SELECT a.id AS dst, b.id AS neg FROM ix a JOIN ix b
-             |        ON a.i % (SELECT COUNT(*) FROM en) + 1 = b.i),
-             |ed AS MATERIALIZED (SELECT src, rel, dst, neg FROM te JOIN neg USING (dst)),
-             |e0 AS MATERIALIZED (SELECT 'ent' AS kind, id, i,
-             |         SIN((id % 9973 + 1) * i * 0.017 + $ENT_SEED) AS x
-             |       FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-             |       UNION ALL
-             |       SELECT 'rel', rel AS id, i,
-             |         SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED)
-             |       FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i)),
-             |${stepCtes(1)},
-             |${stepCtes(2)}
-             |SELECT kind, id, CAST(i - 1 AS BIGINT) AS pos, x FROM e2""".stripMargin
-      }),
+      Some(trainOracle.sql(Model.TransE, Optimizer.Adam, steps = 2))),
 
     // TransE SGD step under deterministic-HASH corruption: the reference's
     // uniform negative sampling made portable — the corrupting tail is the
@@ -3332,121 +3201,25 @@ object PipelineQueries {
     // true-tail collision), so any engine replays the same draw.
     ("train_transe_hashneg",
       (s, dir) => {
-        val edges = KG.edges(s, dir)
-          .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
-        val ents = edges.select(col("src").as("id"))
-          .unionAll(edges.select(col("dst").as("id"))).distinct()
-        Training.transeSgd(ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED, hashNeg = true)
+        val (ents, edges) = trainSet(s, dir)
+        Training.transeSgd(ents, edges, DIM, ENT_SEED, REL_SEED, hashNeg = true)
       },
-      Some {
-        val negHash = graft.functions.PortableHash.md5Prefix60Sql(
-          "CAST(src AS VARCHAR) || '|' || CAST(rel AS VARCHAR) || '|' || " +
-            "CAST(dst AS VARCHAR)")
-        KG.edgesCte.trim + ",\n" +
-          s"""te AS (SELECT src, rel, dst FROM edges
-             |       WHERE rel IN (${KG.REL_SUPP_NATION}, ${KG.REL_NATION_REGION})),
-             |en AS (SELECT DISTINCT id FROM (SELECT src AS id FROM te UNION SELECT dst FROM te) u),
-             |ix AS (SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS i FROM en),
-             |cnt AS (SELECT COUNT(*) AS n FROM en),
-             |hx AS (SELECT src, rel, dst, $negHash % n AS h
-             |       FROM te CROSS JOIN cnt),
-             |ed AS (SELECT hx.src, hx.rel, hx.dst,
-             |         CASE WHEN b1.id <> hx.dst THEN b1.id ELSE b2.id END AS neg
-             |       FROM hx CROSS JOIN cnt
-             |       JOIN ix b1 ON b1.i - 1 = hx.h
-             |       JOIN ix b2 ON b2.i - 1 = (hx.h + 1) % cnt.n),
-             |dm AS (SELECT src, rel, dst, neg, i,
-             |         SIN((src % 9973 + 1) * i * 0.017 + $ENT_SEED) AS h,
-             |         SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED) AS r,
-             |         SIN((dst % 9973 + 1) * i * 0.017 + $ENT_SEED) AS t,
-             |         SIN((neg % 9973 + 1) * i * 0.017 + $ENT_SEED) AS tn
-             |       FROM ed CROSS JOIN generate_series(1, $DIM) g(i)),
-             |sc AS (SELECT src, rel, dst, neg,
-             |         SUM(ABS(h + r - t)) AS dp, SUM(ABS(h + r - tn)) AS dn
-             |       FROM dm GROUP BY 1, 2, 3, 4),
-             |vd AS (SELECT dm.*, SIGN(h + r - t) AS s, SIGN(h + r - tn) AS sp
-             |       FROM dm JOIN (SELECT src, rel, dst, neg FROM sc
-             |                     WHERE 1.0 + dp - dn > 0) vi
-             |         USING (src, rel, dst, neg)),
-             |contrib AS (SELECT 'ent' AS kind, src AS id, i, s - sp AS g FROM vd
-             |  UNION ALL SELECT 'ent', dst, i, -s FROM vd
-             |  UNION ALL SELECT 'ent', neg, i, sp FROM vd
-             |  UNION ALL SELECT 'rel', rel, i, s - sp FROM vd),
-             |gsum AS (SELECT kind, id, i, SUM(g) AS g FROM contrib GROUP BY 1, 2, 3),
-             |base AS (SELECT 'ent' AS kind, id, i,
-             |           SIN((id % 9973 + 1) * i * 0.017 + $ENT_SEED) AS x0
-             |         FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-             |         UNION ALL
-             |         SELECT 'rel', rel AS id, i,
-             |           SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED)
-             |         FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i))
-             |SELECT kind, id, CAST(i - 1 AS BIGINT) AS pos,
-             |       ROUND(x0 - 0.03125 * COALESCE(g, 0), 6) AS x
-             |FROM base LEFT JOIN gsum USING (kind, id, i)""".stripMargin
-      }),
+      Some(trainOracle.sql(Model.TransE, hashNeg = true))),
 
     // TWO SGD steps: the training LOOP (not just its body) — parameter
     // state is 6-dp-quantized between steps so both engines walk the
     // identical trajectory (the k-means unrolled-CTE pattern).
     ("train_transe_2steps",
       (s, dir) => {
-        val edges = KG.edges(s, dir)
-          .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
-        val ents = edges.select(col("src").as("id"))
-          .unionAll(edges.select(col("dst").as("id"))).distinct()
-        Training.transeSgd(ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED, steps = 2)
+        val (ents, edges) = trainSet(s, dir)
+        Training.transeSgd(ents, edges, DIM, ENT_SEED, REL_SEED, steps = 2)
       },
-      Some {
-        def stepCtes(k: Int): String = {
-          val (p, c) = (s"e${k - 1}", s"e$k")
+      Some(trainOracle.sql(Model.TransE, steps = 2))),
+
           // dm references the state CTE four times and the next state
           // references this step's whole chain: without MATERIALIZED,
           // DuckDB inlines CTEs and the expansion is exponential in
           // steps (hundreds of parquet re-opens -> EMFILE).
-          s"""dm$k AS MATERIALIZED (SELECT ed.src, ed.rel, ed.dst, ed.neg, h.i,
-             |           h.x AS h, r.x AS r, t.x AS t, tn.x AS tn
-             |         FROM ed
-             |         JOIN $p h ON h.kind = 'ent' AND h.id = ed.src
-             |         JOIN $p r ON r.kind = 'rel' AND r.id = ed.rel AND r.i = h.i
-             |         JOIN $p t ON t.kind = 'ent' AND t.id = ed.dst AND t.i = h.i
-             |         JOIN $p tn ON tn.kind = 'ent' AND tn.id = ed.neg AND tn.i = h.i),
-             |sc$k AS (SELECT src, rel, dst, neg,
-             |           SUM(ABS(h + r - t)) AS dp, SUM(ABS(h + r - tn)) AS dn
-             |         FROM dm$k GROUP BY 1, 2, 3, 4),
-             |vd$k AS (SELECT dm$k.*, SIGN(h + r - t) AS s, SIGN(h + r - tn) AS sp
-             |         FROM dm$k JOIN (SELECT src, rel, dst, neg FROM sc$k
-             |                         WHERE 1.0 + dp - dn > 0) vi$k
-             |           USING (src, rel, dst, neg)),
-             |ct$k AS (SELECT 'ent' AS kind, src AS id, i, s - sp AS g FROM vd$k
-             |  UNION ALL SELECT 'ent', dst, i, -s FROM vd$k
-             |  UNION ALL SELECT 'ent', neg, i, sp FROM vd$k
-             |  UNION ALL SELECT 'rel', rel, i, s - sp FROM vd$k),
-             |gs$k AS (SELECT kind, id, i, SUM(g) AS g FROM ct$k GROUP BY 1, 2, 3),
-             |$c AS MATERIALIZED (SELECT kind, id, i, ROUND(x - 0.03125 * COALESCE(g, 0), 6) AS x
-             |       FROM $p LEFT JOIN gs$k USING (kind, id, i))""".stripMargin
-        }
-        KG.edgesCte.trim + ",\n" +
-          s"""te AS (SELECT src, rel, dst FROM edges
-             |       WHERE rel IN (${KG.REL_SUPP_NATION}, ${KG.REL_NATION_REGION})),
-             |en AS (SELECT DISTINCT id FROM (SELECT src AS id FROM te UNION SELECT dst FROM te) u),
-             |ix AS (SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS i FROM en),
-             |neg AS (SELECT a.id AS dst, b.id AS neg FROM ix a JOIN ix b
-             |        ON a.i % (SELECT COUNT(*) FROM en) + 1 = b.i),
-             |ed AS MATERIALIZED (SELECT src, rel, dst, neg FROM te JOIN neg USING (dst)),
-             |e0 AS MATERIALIZED (SELECT 'ent' AS kind, id, i,
-             |         SIN((id % 9973 + 1) * i * 0.017 + $ENT_SEED) AS x
-             |       FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-             |       UNION ALL
-             |       SELECT 'rel', rel AS id, i,
-             |         SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED)
-             |       FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i)),
-             |${stepCtes(1)},
-             |${stepCtes(2)}
-             |SELECT kind, id, CAST(i - 1 AS BIGINT) AS pos, x FROM e2""".stripMargin
-      }),
-
     // One DistMult SGD step (bilinear-diagonal score, margin loss, cyclic
     // corruption). Multiplicative gradients can't use TransE's L1 sign
     // trick; exactness comes from INTEGER MICRO-UNITS: state quantized to
@@ -3455,50 +3228,10 @@ object PipelineQueries {
     // exact HUGEINT/decimal score sums.
     ("train_distmult_step",
       (s, dir) => {
-        val edges = KG.edges(s, dir)
-          .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
-        val ents = edges.select(col("src").as("id"))
-          .unionAll(edges.select(col("dst").as("id"))).distinct()
-        Training.sgd(Training.Model.DistMult, ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED)
+        val (ents, edges) = trainSet(s, dir)
+        Training.sgd(Model.DistMult, ents, edges, DIM, ENT_SEED, REL_SEED)
       },
-      Some(KG.edgesCte.trim + ",\n" +
-        s"""te AS (SELECT src, rel, dst FROM edges
-           |       WHERE rel IN (${KG.REL_SUPP_NATION}, ${KG.REL_NATION_REGION})),
-           |en AS (SELECT DISTINCT id FROM (SELECT src AS id FROM te UNION SELECT dst FROM te) u),
-           |ix AS (SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS i FROM en),
-           |neg AS (SELECT a.id AS dst, b.id AS neg FROM ix a JOIN ix b
-           |        ON a.i % (SELECT COUNT(*) FROM en) + 1 = b.i),
-           |ed AS (SELECT src, rel, dst, neg FROM te JOIN neg USING (dst)),
-           |dm AS (SELECT src, rel, dst, neg, i,
-           |         CAST(ROUND(SIN((src % 9973 + 1) * i * 0.017 + $ENT_SEED) * 1000000, 0) AS BIGINT) AS hi,
-           |         CAST(ROUND(SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED) * 1000000, 0) AS BIGINT) AS ri,
-           |         CAST(ROUND(SIN((dst % 9973 + 1) * i * 0.017 + $ENT_SEED) * 1000000, 0) AS BIGINT) AS ti,
-           |         CAST(ROUND(SIN((neg % 9973 + 1) * i * 0.017 + $ENT_SEED) * 1000000, 0) AS BIGINT) AS tni
-           |       FROM ed CROSS JOIN generate_series(1, $DIM) g(i)),
-           |sc AS (SELECT src, rel, dst, neg,
-           |         SUM(CAST(hi * ri AS HUGEINT) * ti) AS sp,
-           |         SUM(CAST(hi * ri AS HUGEINT) * tni) AS sn
-           |       FROM dm GROUP BY 1, 2, 3, 4),
-           |vd AS (SELECT dm.* FROM dm JOIN
-           |         (SELECT src, rel, dst, neg FROM sc
-           |          WHERE 1000000000000000000 - sp + sn > 0) vi
-           |         USING (src, rel, dst, neg)),
-           |contrib AS (SELECT 'ent' AS kind, src AS id, i, ri * (tni - ti) AS g FROM vd
-           |  UNION ALL SELECT 'rel', rel, i, hi * (tni - ti) FROM vd
-           |  UNION ALL SELECT 'ent', dst, i, -hi * ri FROM vd
-           |  UNION ALL SELECT 'ent', neg, i, hi * ri FROM vd),
-           |gsum AS (SELECT kind, id, i, SUM(g) AS g FROM contrib GROUP BY 1, 2, 3),
-           |base AS (SELECT 'ent' AS kind, id, i,
-           |           SIN((id % 9973 + 1) * i * 0.017 + $ENT_SEED) AS x0
-           |         FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-           |         UNION ALL
-           |         SELECT 'rel', rel AS id, i,
-           |           SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED)
-           |         FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i))
-           |SELECT kind, id, CAST(i - 1 AS BIGINT) AS pos,
-           |       CAST(CAST(SIGN((CAST(ROUND(x0 * 1000000, 0) AS BIGINT) * 100000000000 - COALESCE(g, 0) * 3125)) AS BIGINT) * ((ABS((CAST(ROUND(x0 * 1000000, 0) AS BIGINT) * 100000000000 - COALESCE(g, 0) * 3125)) + 50000000000) // 100000000000) AS DOUBLE) / 1000000 AS x
-           |FROM base LEFT JOIN gsum USING (kind, id, i)""".stripMargin)),
+      Some(trainOracle.sql(Model.DistMult))),
 
     // DistMult train-then-evaluate: one SGD step, then link-prediction
     // ranking under the BILINEAR score (descending — the multiplicative
@@ -3507,78 +3240,11 @@ object PipelineQueries {
     // engine-exact.
     ("train_eval_mrr_distmult",
       (s, dir) => {
-        val edges = KG.edges(s, dir)
-          .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
-        val ents = edges.select(col("src").as("id"))
-          .unionAll(edges.select(col("dst").as("id"))).distinct()
-        val e1 = Training.sgd(Training.Model.DistMult, ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED)
-        Training.ranks(Training.Model.DistMult, e1, edges)
-          .groupBy("rel")
-          .agg(count(lit(1)).as("n"),
-               round(sum(round(lit(1000000.0) / col("rank"), 0)) / 1e6
-                     / count(lit(1)), 6).as("mrr"),
-               round(sum(when(col("rank") <= 10, 1).otherwise(0)) * 1.0
-                     / count(lit(1)), 6).as("hits10"))
+        val (ents, edges) = trainSet(s, dir)
+        val e1 = Training.sgd(Model.DistMult, ents, edges, DIM, ENT_SEED, REL_SEED)
+        rankSummary(Training.ranks(Model.DistMult, e1, edges), 10)
       },
-      Some(KG.edgesCte.trim + ",\n" +
-        s"""te AS (SELECT src, rel, dst FROM edges
-           |       WHERE rel IN (${KG.REL_SUPP_NATION}, ${KG.REL_NATION_REGION})),
-           |en AS (SELECT DISTINCT id FROM (SELECT src AS id FROM te UNION SELECT dst FROM te) u),
-           |ix AS (SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS i FROM en),
-           |neg AS (SELECT a.id AS dst, b.id AS neg FROM ix a JOIN ix b
-           |        ON a.i % (SELECT COUNT(*) FROM en) + 1 = b.i),
-           |ed AS (SELECT src, rel, dst, neg FROM te JOIN neg USING (dst)),
-           |dm AS (SELECT src, rel, dst, neg, i,
-           |         CAST(ROUND(SIN((src % 9973 + 1) * i * 0.017 + $ENT_SEED) * 1000000, 0) AS BIGINT) AS hi,
-           |         CAST(ROUND(SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED) * 1000000, 0) AS BIGINT) AS ri,
-           |         CAST(ROUND(SIN((dst % 9973 + 1) * i * 0.017 + $ENT_SEED) * 1000000, 0) AS BIGINT) AS ti,
-           |         CAST(ROUND(SIN((neg % 9973 + 1) * i * 0.017 + $ENT_SEED) * 1000000, 0) AS BIGINT) AS tni
-           |       FROM ed CROSS JOIN generate_series(1, $DIM) g(i)),
-           |sc AS (SELECT src, rel, dst, neg,
-           |         SUM(CAST(hi * ri AS HUGEINT) * ti) AS sp,
-           |         SUM(CAST(hi * ri AS HUGEINT) * tni) AS sn
-           |       FROM dm GROUP BY 1, 2, 3, 4),
-           |vd AS (SELECT dm.* FROM dm JOIN
-           |         (SELECT src, rel, dst, neg FROM sc
-           |          WHERE 1000000000000000000 - sp + sn > 0) vi
-           |         USING (src, rel, dst, neg)),
-           |contrib AS (SELECT 'ent' AS kind, src AS id, i, ri * (tni - ti) AS g FROM vd
-           |  UNION ALL SELECT 'rel', rel, i, hi * (tni - ti) FROM vd
-           |  UNION ALL SELECT 'ent', dst, i, -hi * ri FROM vd
-           |  UNION ALL SELECT 'ent', neg, i, hi * ri FROM vd),
-           |gsum AS (SELECT kind, id, i, SUM(g) AS g FROM contrib GROUP BY 1, 2, 3),
-           |base AS (SELECT 'ent' AS kind, id, i,
-           |           SIN((id % 9973 + 1) * i * 0.017 + $ENT_SEED) AS x0
-           |         FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-           |         UNION ALL
-           |         SELECT 'rel', rel AS id, i,
-           |           SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED)
-           |         FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i)),
-           |e1 AS MATERIALIZED (SELECT kind, id, i,
-           |         CAST(CAST(SIGN((CAST(ROUND(x0 * 1000000, 0) AS BIGINT) * 100000000000 - COALESCE(g, 0) * 3125)) AS BIGINT) * ((ABS((CAST(ROUND(x0 * 1000000, 0) AS BIGINT) * 100000000000 - COALESCE(g, 0) * 3125)) + 50000000000) // 100000000000) AS DOUBLE) / 1000000 AS x
-           |       FROM base LEFT JOIN gsum USING (kind, id, i)),
-           |ei AS (SELECT id, i, CAST(ROUND(x * 1000000, 0) AS BIGINT) AS xi
-           |       FROM e1 WHERE kind = 'ent'),
-           |ri2 AS (SELECT id AS rel, i, CAST(ROUND(x * 1000000, 0) AS BIGINT) AS rxi
-           |       FROM e1 WHERE kind = 'rel'),
-           |dd AS MATERIALIZED (SELECT te.src, te.rel, te.dst, c.id AS cand,
-           |         SUM(CAST(h.xi * r.rxi AS HUGEINT) * c.xi) AS s
-           |       FROM te JOIN ei h ON h.id = te.src
-           |               JOIN ri2 r ON r.rel = te.rel AND r.i = h.i
-           |               JOIN ei c ON c.i = h.i
-           |       GROUP BY 1, 2, 3, 4),
-           |tr2 AS (SELECT src, rel, dst, s AS st FROM dd WHERE cand = dst),
-           |rk AS (SELECT q.src, q.rel, q.dst,
-           |         1 + SUM(CASE WHEN q.s > tr2.st
-           |                       OR (q.s = tr2.st AND q.cand < q.dst)
-           |                      THEN 1 ELSE 0 END) AS rank
-           |       FROM dd q JOIN tr2 USING (src, rel, dst)
-           |       WHERE q.cand <> q.dst GROUP BY 1, 2, 3)
-           |SELECT rel, COUNT(*) AS n,
-           |       ROUND(SUM(ROUND(1000000.0 / rank, 0)) / 1e6 / COUNT(*), 6) AS mrr,
-           |       ROUND(SUM(CASE WHEN rank <= 10 THEN 1 ELSE 0 END) * 1.0 / COUNT(*), 6) AS hits10
-           |FROM rk GROUP BY rel""".stripMargin)),
+      Some(trainOracle.sql(Model.DistMult, eval = Some(Eval(Seq(10)))))),
 
     // TWO DistMult SGD steps: the multiplicative-gradient LOOP — state
     // 6-dp-quantized between steps (so both engines re-derive the same
@@ -3586,62 +3252,10 @@ object PipelineQueries {
     // micro-units, trajectory unrolled as MATERIALIZED CTEs.
     ("train_distmult_2steps",
       (s, dir) => {
-        val edges = KG.edges(s, dir)
-          .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
-        val ents = edges.select(col("src").as("id"))
-          .unionAll(edges.select(col("dst").as("id"))).distinct()
-        Training.sgd(Training.Model.DistMult, ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED, steps = 2)
+        val (ents, edges) = trainSet(s, dir)
+        Training.sgd(Model.DistMult, ents, edges, DIM, ENT_SEED, REL_SEED, steps = 2)
       },
-      Some {
-        def stepCtes(k: Int): String = {
-          val (p, c) = (s"e${k - 1}", s"e$k")
-          s"""dm$k AS MATERIALIZED (SELECT ed.src, ed.rel, ed.dst, ed.neg, h.i,
-             |    CAST(ROUND(h.x * 1000000, 0) AS BIGINT) AS hi,
-             |    CAST(ROUND(r.x * 1000000, 0) AS BIGINT) AS ri,
-             |    CAST(ROUND(t.x * 1000000, 0) AS BIGINT) AS ti,
-             |    CAST(ROUND(tn.x * 1000000, 0) AS BIGINT) AS tni
-             |  FROM ed
-             |  JOIN $p h ON h.kind = 'ent' AND h.id = ed.src
-             |  JOIN $p r ON r.kind = 'rel' AND r.id = ed.rel AND r.i = h.i
-             |  JOIN $p t ON t.kind = 'ent' AND t.id = ed.dst AND t.i = h.i
-             |  JOIN $p tn ON tn.kind = 'ent' AND tn.id = ed.neg AND tn.i = h.i),
-             |sc$k AS (SELECT src, rel, dst, neg,
-             |    SUM(CAST(hi * ri AS HUGEINT) * ti) AS sp,
-             |    SUM(CAST(hi * ri AS HUGEINT) * tni) AS sn
-             |  FROM dm$k GROUP BY 1, 2, 3, 4),
-             |vd$k AS (SELECT dm$k.* FROM dm$k JOIN
-             |    (SELECT src, rel, dst, neg FROM sc$k
-             |     WHERE 1000000000000000000 - sp + sn > 0) vi$k
-             |    USING (src, rel, dst, neg)),
-             |ct$k AS (SELECT 'ent' AS kind, src AS id, i, ri * (tni - ti) AS g FROM vd$k
-             |  UNION ALL SELECT 'rel', rel, i, hi * (tni - ti) FROM vd$k
-             |  UNION ALL SELECT 'ent', dst, i, -hi * ri FROM vd$k
-             |  UNION ALL SELECT 'ent', neg, i, hi * ri FROM vd$k),
-             |gs$k AS (SELECT kind, id, i, SUM(g) AS g FROM ct$k GROUP BY 1, 2, 3),
-             |$c AS MATERIALIZED (SELECT kind, id, i,
-             |    CAST(CAST(SIGN((CAST(ROUND(x * 1000000, 0) AS BIGINT) * 100000000000 - COALESCE(g, 0) * 3125)) AS BIGINT) * ((ABS((CAST(ROUND(x * 1000000, 0) AS BIGINT) * 100000000000 - COALESCE(g, 0) * 3125)) + 50000000000) // 100000000000) AS DOUBLE) / 1000000 AS x
-             |  FROM $p LEFT JOIN gs$k USING (kind, id, i))""".stripMargin
-        }
-        KG.edgesCte.trim + ",\n" +
-          s"""te AS (SELECT src, rel, dst FROM edges
-             |       WHERE rel IN (${KG.REL_SUPP_NATION}, ${KG.REL_NATION_REGION})),
-             |en AS (SELECT DISTINCT id FROM (SELECT src AS id FROM te UNION SELECT dst FROM te) u),
-             |ix AS (SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS i FROM en),
-             |neg AS (SELECT a.id AS dst, b.id AS neg FROM ix a JOIN ix b
-             |        ON a.i % (SELECT COUNT(*) FROM en) + 1 = b.i),
-             |ed AS MATERIALIZED (SELECT src, rel, dst, neg FROM te JOIN neg USING (dst)),
-             |e0 AS MATERIALIZED (SELECT 'ent' AS kind, id, i,
-             |         SIN((id % 9973 + 1) * i * 0.017 + $ENT_SEED) AS x
-             |       FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-             |       UNION ALL
-             |       SELECT 'rel', rel AS id, i,
-             |         SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED)
-             |       FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i)),
-             |${stepCtes(1)},
-             |${stepCtes(2)}
-             |SELECT kind, id, CAST(i - 1 AS BIGINT) AS pos, x FROM e2""".stripMargin
-      }),
+      Some(trainOracle.sql(Model.DistMult, steps = 2))),
 
     // One ComplEx SGD step (complex.py): Re<h, r, conj(t)> margin loss,
     // same integer micro-unit exactness discipline as DistMult — the
@@ -3650,63 +3264,10 @@ object PipelineQueries {
     // longs via the product rule on the real-part expansion.
     ("train_complex_step",
       (s, dir) => {
-        val edges = KG.edges(s, dir)
-          .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
-        val ents = edges.select(col("src").as("id"))
-          .unionAll(edges.select(col("dst").as("id"))).distinct()
-        Training.sgd(Training.Model.ComplEx, ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED)
+        val (ents, edges) = trainSet(s, dir)
+        Training.sgd(Model.ComplEx, ents, edges, DIM, ENT_SEED, REL_SEED)
       },
-      Some(KG.edgesCte.trim + ",\n" +
-        s"""te AS (SELECT src, rel, dst FROM edges
-           |       WHERE rel IN (${KG.REL_SUPP_NATION}, ${KG.REL_NATION_REGION})),
-           |en AS (SELECT DISTINCT id FROM (SELECT src AS id FROM te UNION SELECT dst FROM te) u),
-           |ix AS (SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS i FROM en),
-           |neg AS (SELECT a.id AS dst, b.id AS neg FROM ix a JOIN ix b
-           |        ON a.i % (SELECT COUNT(*) FROM en) + 1 = b.i),
-           |ed AS (SELECT src, rel, dst, neg FROM te JOIN neg USING (dst)),
-           |dm AS MATERIALIZED (SELECT src, rel, dst, neg, i,
-           |    CAST(ROUND(SIN((src % 9973 + 1) * i * 0.017 + $ENT_SEED) * 1000000, 0) AS BIGINT) AS a,
-           |    CAST(ROUND(SIN((src % 9973 + 1) * i * 0.017 + ${ENT_SEED + IM_OFF}) * 1000000, 0) AS BIGINT) AS b,
-           |    CAST(ROUND(SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED) * 1000000, 0) AS BIGINT) AS c,
-           |    CAST(ROUND(SIN((rel % 9973 + 1) * i * 0.017 + ${REL_SEED + IM_OFF}) * 1000000, 0) AS BIGINT) AS d,
-           |    CAST(ROUND(SIN((dst % 9973 + 1) * i * 0.017 + $ENT_SEED) * 1000000, 0) AS BIGINT) AS e,
-           |    CAST(ROUND(SIN((dst % 9973 + 1) * i * 0.017 + ${ENT_SEED + IM_OFF}) * 1000000, 0) AS BIGINT) AS f,
-           |    CAST(ROUND(SIN((neg % 9973 + 1) * i * 0.017 + $ENT_SEED) * 1000000, 0) AS BIGINT) AS ep,
-           |    CAST(ROUND(SIN((neg % 9973 + 1) * i * 0.017 + ${ENT_SEED + IM_OFF}) * 1000000, 0) AS BIGINT) AS fp
-           |  FROM ed CROSS JOIN generate_series(1, $DIM) g(i)),
-           |sc AS (SELECT src, rel, dst, neg,
-           |    SUM(CAST(a * c - b * d AS HUGEINT) * e + CAST(a * d + b * c AS HUGEINT) * f) AS sp,
-           |    SUM(CAST(a * c - b * d AS HUGEINT) * ep + CAST(a * d + b * c AS HUGEINT) * fp) AS sn
-           |  FROM dm GROUP BY 1, 2, 3, 4),
-           |vd AS (SELECT dm.*, ep - e AS de, fp - f AS dfv FROM dm JOIN
-           |    (SELECT src, rel, dst, neg FROM sc
-           |     WHERE 1000000000000000000 - sp + sn > 0) vi
-           |    USING (src, rel, dst, neg)),
-           |contrib AS (SELECT 'ent_re' AS kind, src AS id, i, c * de + d * dfv AS g FROM vd
-           |  UNION ALL SELECT 'ent_im', src, i, -d * de + c * dfv FROM vd
-           |  UNION ALL SELECT 'rel_re', rel, i, a * de + b * dfv FROM vd
-           |  UNION ALL SELECT 'rel_im', rel, i, -b * de + a * dfv FROM vd
-           |  UNION ALL SELECT 'ent_re', dst, i, -(a * c - b * d) FROM vd
-           |  UNION ALL SELECT 'ent_im', dst, i, -(a * d + b * c) FROM vd
-           |  UNION ALL SELECT 'ent_re', neg, i, a * c - b * d FROM vd
-           |  UNION ALL SELECT 'ent_im', neg, i, a * d + b * c FROM vd),
-           |gsum AS (SELECT kind, id, i, SUM(g) AS g FROM contrib GROUP BY 1, 2, 3),
-           |base AS (SELECT 'ent_re' AS kind, id, i,
-           |      SIN((id % 9973 + 1) * i * 0.017 + $ENT_SEED) AS x0
-           |    FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-           |  UNION ALL SELECT 'ent_im', id, i,
-           |      SIN((id % 9973 + 1) * i * 0.017 + ${ENT_SEED + IM_OFF})
-           |    FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-           |  UNION ALL SELECT 'rel_re', rel AS id, i,
-           |      SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED)
-           |    FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i)
-           |  UNION ALL SELECT 'rel_im', rel AS id, i,
-           |      SIN((rel % 9973 + 1) * i * 0.017 + ${REL_SEED + IM_OFF})
-           |    FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i))
-           |SELECT kind, id, CAST(i - 1 AS BIGINT) AS pos,
-           |       CAST(CAST(SIGN((CAST(ROUND(x0 * 1000000, 0) AS BIGINT) * 100000000000 - COALESCE(g, 0) * 3125)) AS BIGINT) * ((ABS((CAST(ROUND(x0 * 1000000, 0) AS BIGINT) * 100000000000 - COALESCE(g, 0) * 3125)) + 50000000000) // 100000000000) AS DOUBLE) / 1000000 AS x
-           |FROM base LEFT JOIN gsum USING (kind, id, i)""".stripMargin)),
+      Some(trainOracle.sql(Model.ComplEx))),
 
     // ComplEx train-then-evaluate: one SGD step, then ranking by the real
     // trilinear score Re<h,r,conj(c)> DESCENDING. The per-edge complex
@@ -3714,102 +3275,11 @@ object PipelineQueries {
     // scores are HUGEINT/decimal sums of micro^3 terms — engine-exact.
     ("train_eval_mrr_complex",
       (s, dir) => {
-        val edges = KG.edges(s, dir)
-          .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
-        val ents = edges.select(col("src").as("id"))
-          .unionAll(edges.select(col("dst").as("id"))).distinct()
-        val e1 = Training.sgd(Training.Model.ComplEx, ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED)
-        Training.ranks(Training.Model.ComplEx, e1, edges)
-          .groupBy("rel")
-          .agg(count(lit(1)).as("n"),
-               round(sum(round(lit(1000000.0) / col("rank"), 0)) / 1e6
-                     / count(lit(1)), 6).as("mrr"),
-               round(sum(when(col("rank") <= 10, 1).otherwise(0)) * 1.0
-                     / count(lit(1)), 6).as("hits10"))
+        val (ents, edges) = trainSet(s, dir)
+        val e1 = Training.sgd(Model.ComplEx, ents, edges, DIM, ENT_SEED, REL_SEED)
+        rankSummary(Training.ranks(Model.ComplEx, e1, edges), 10)
       },
-      Some(KG.edgesCte.trim + ",\n" +
-        s"""te AS (SELECT src, rel, dst FROM edges
-           |       WHERE rel IN (${KG.REL_SUPP_NATION}, ${KG.REL_NATION_REGION})),
-           |en AS (SELECT DISTINCT id FROM (SELECT src AS id FROM te UNION SELECT dst FROM te) u),
-           |ix AS (SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS i FROM en),
-           |neg AS (SELECT a.id AS dst, b.id AS neg FROM ix a JOIN ix b
-           |        ON a.i % (SELECT COUNT(*) FROM en) + 1 = b.i),
-           |ed AS (SELECT src, rel, dst, neg FROM te JOIN neg USING (dst)),
-           |dm AS MATERIALIZED (SELECT src, rel, dst, neg, i,
-           |    CAST(ROUND(SIN((src % 9973 + 1) * i * 0.017 + $ENT_SEED) * 1000000, 0) AS BIGINT) AS a,
-           |    CAST(ROUND(SIN((src % 9973 + 1) * i * 0.017 + ${ENT_SEED + IM_OFF}) * 1000000, 0) AS BIGINT) AS b,
-           |    CAST(ROUND(SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED) * 1000000, 0) AS BIGINT) AS c,
-           |    CAST(ROUND(SIN((rel % 9973 + 1) * i * 0.017 + ${REL_SEED + IM_OFF}) * 1000000, 0) AS BIGINT) AS d,
-           |    CAST(ROUND(SIN((dst % 9973 + 1) * i * 0.017 + $ENT_SEED) * 1000000, 0) AS BIGINT) AS e,
-           |    CAST(ROUND(SIN((dst % 9973 + 1) * i * 0.017 + ${ENT_SEED + IM_OFF}) * 1000000, 0) AS BIGINT) AS f,
-           |    CAST(ROUND(SIN((neg % 9973 + 1) * i * 0.017 + $ENT_SEED) * 1000000, 0) AS BIGINT) AS ep,
-           |    CAST(ROUND(SIN((neg % 9973 + 1) * i * 0.017 + ${ENT_SEED + IM_OFF}) * 1000000, 0) AS BIGINT) AS fp
-           |  FROM ed CROSS JOIN generate_series(1, $DIM) g(i)),
-           |sc AS (SELECT src, rel, dst, neg,
-           |    SUM(CAST(a * c - b * d AS HUGEINT) * e + CAST(a * d + b * c AS HUGEINT) * f) AS sp,
-           |    SUM(CAST(a * c - b * d AS HUGEINT) * ep + CAST(a * d + b * c AS HUGEINT) * fp) AS sn
-           |  FROM dm GROUP BY 1, 2, 3, 4),
-           |vd AS (SELECT dm.*, ep - e AS de, fp - f AS dfv FROM dm JOIN
-           |    (SELECT src, rel, dst, neg FROM sc
-           |     WHERE 1000000000000000000 - sp + sn > 0) vi
-           |    USING (src, rel, dst, neg)),
-           |contrib AS (SELECT 'ent_re' AS kind, src AS id, i, c * de + d * dfv AS g FROM vd
-           |  UNION ALL SELECT 'ent_im', src, i, -d * de + c * dfv FROM vd
-           |  UNION ALL SELECT 'rel_re', rel, i, a * de + b * dfv FROM vd
-           |  UNION ALL SELECT 'rel_im', rel, i, -b * de + a * dfv FROM vd
-           |  UNION ALL SELECT 'ent_re', dst, i, -(a * c - b * d) FROM vd
-           |  UNION ALL SELECT 'ent_im', dst, i, -(a * d + b * c) FROM vd
-           |  UNION ALL SELECT 'ent_re', neg, i, a * c - b * d FROM vd
-           |  UNION ALL SELECT 'ent_im', neg, i, a * d + b * c FROM vd),
-           |gsum AS (SELECT kind, id, i, SUM(g) AS g FROM contrib GROUP BY 1, 2, 3),
-           |base AS (SELECT 'ent_re' AS kind, id, i,
-           |      SIN((id % 9973 + 1) * i * 0.017 + $ENT_SEED) AS x0
-           |    FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-           |  UNION ALL SELECT 'ent_im', id, i,
-           |      SIN((id % 9973 + 1) * i * 0.017 + ${ENT_SEED + IM_OFF})
-           |    FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-           |  UNION ALL SELECT 'rel_re', rel AS id, i,
-           |      SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED)
-           |    FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i)
-           |  UNION ALL SELECT 'rel_im', rel AS id, i,
-           |      SIN((rel % 9973 + 1) * i * 0.017 + ${REL_SEED + IM_OFF})
-           |    FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i)),
-           |e1 AS MATERIALIZED (SELECT kind, id, i,
-           |    CAST(CAST(SIGN((CAST(ROUND(x0 * 1000000, 0) AS BIGINT) * 100000000000 - COALESCE(g, 0) * 3125)) AS BIGINT) * ((ABS((CAST(ROUND(x0 * 1000000, 0) AS BIGINT) * 100000000000 - COALESCE(g, 0) * 3125)) + 50000000000) // 100000000000) AS DOUBLE) / 1000000 AS x
-           |  FROM base LEFT JOIN gsum USING (kind, id, i)),
-           |er AS (SELECT id, i, CAST(ROUND(x * 1000000, 0) AS BIGINT) AS xi
-           |       FROM e1 WHERE kind = 'ent_re'),
-           |em AS (SELECT id, i, CAST(ROUND(x * 1000000, 0) AS BIGINT) AS xi
-           |       FROM e1 WHERE kind = 'ent_im'),
-           |rr AS (SELECT id AS rel, i, CAST(ROUND(x * 1000000, 0) AS BIGINT) AS xi
-           |       FROM e1 WHERE kind = 'rel_re'),
-           |rm AS (SELECT id AS rel, i, CAST(ROUND(x * 1000000, 0) AS BIGINT) AS xi
-           |       FROM e1 WHERE kind = 'rel_im'),
-           |hx AS MATERIALIZED (SELECT te.src, te.rel, te.dst, hre.i,
-           |         hre.xi * rr.xi - him.xi * rm.xi AS re,
-           |         hre.xi * rm.xi + him.xi * rr.xi AS im
-           |       FROM te JOIN er hre ON hre.id = te.src
-           |               JOIN em him ON him.id = te.src AND him.i = hre.i
-           |               JOIN rr ON rr.rel = te.rel AND rr.i = hre.i
-           |               JOIN rm ON rm.rel = te.rel AND rm.i = hre.i),
-           |dd AS MATERIALIZED (SELECT hx.src, hx.rel, hx.dst, ce.id AS cand,
-           |         SUM(CAST(hx.re AS HUGEINT) * ce.xi
-           |             + CAST(hx.im AS HUGEINT) * cf.xi) AS s
-           |       FROM hx JOIN er ce ON ce.i = hx.i
-           |               JOIN em cf ON cf.id = ce.id AND cf.i = hx.i
-           |       GROUP BY 1, 2, 3, 4),
-           |tr2 AS (SELECT src, rel, dst, s AS st FROM dd WHERE cand = dst),
-           |rk AS (SELECT q.src, q.rel, q.dst,
-           |         1 + SUM(CASE WHEN q.s > tr2.st
-           |                       OR (q.s = tr2.st AND q.cand < q.dst)
-           |                      THEN 1 ELSE 0 END) AS rank
-           |       FROM dd q JOIN tr2 USING (src, rel, dst)
-           |       WHERE q.cand <> q.dst GROUP BY 1, 2, 3)
-           |SELECT rel, COUNT(*) AS n,
-           |       ROUND(SUM(ROUND(1000000.0 / rank, 0)) / 1e6 / COUNT(*), 6) AS mrr,
-           |       ROUND(SUM(CASE WHEN rank <= 10 THEN 1 ELSE 0 END) * 1.0 / COUNT(*), 6) AS hits10
-           |FROM rk GROUP BY rel""".stripMargin)),
+      Some(trainOracle.sql(Model.ComplEx, eval = Some(Eval(Seq(10)))))),
 
     // TWO ComplEx SGD steps: the product-rule LOOP over the four-kind
     // complex state — 6-dp quantize between steps, per-step integer
@@ -3817,79 +3287,10 @@ object PipelineQueries {
     // (eight state joins per step: re+im for each of the four roles).
     ("train_complex_2steps",
       (s, dir) => {
-        val edges = KG.edges(s, dir)
-          .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
-        val ents = edges.select(col("src").as("id"))
-          .unionAll(edges.select(col("dst").as("id"))).distinct()
-        Training.sgd(Training.Model.ComplEx, ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED, steps = 2)
+        val (ents, edges) = trainSet(s, dir)
+        Training.sgd(Model.ComplEx, ents, edges, DIM, ENT_SEED, REL_SEED, steps = 2)
       },
-      Some {
-        def stepCtes(k: Int): String = {
-          val (p, c) = (s"e${k - 1}", s"e$k")
-          s"""dm$k AS MATERIALIZED (SELECT ed.src, ed.rel, ed.dst, ed.neg, hre.i,
-             |    CAST(ROUND(hre.x * 1000000, 0) AS BIGINT) AS a,
-             |    CAST(ROUND(him.x * 1000000, 0) AS BIGINT) AS b,
-             |    CAST(ROUND(rre.x * 1000000, 0) AS BIGINT) AS c,
-             |    CAST(ROUND(rim.x * 1000000, 0) AS BIGINT) AS d,
-             |    CAST(ROUND(tre.x * 1000000, 0) AS BIGINT) AS e,
-             |    CAST(ROUND(tim.x * 1000000, 0) AS BIGINT) AS f,
-             |    CAST(ROUND(nre.x * 1000000, 0) AS BIGINT) AS ep,
-             |    CAST(ROUND(nim.x * 1000000, 0) AS BIGINT) AS fp
-             |  FROM ed
-             |  JOIN $p hre ON hre.kind = 'ent_re' AND hre.id = ed.src
-             |  JOIN $p him ON him.kind = 'ent_im' AND him.id = ed.src AND him.i = hre.i
-             |  JOIN $p rre ON rre.kind = 'rel_re' AND rre.id = ed.rel AND rre.i = hre.i
-             |  JOIN $p rim ON rim.kind = 'rel_im' AND rim.id = ed.rel AND rim.i = hre.i
-             |  JOIN $p tre ON tre.kind = 'ent_re' AND tre.id = ed.dst AND tre.i = hre.i
-             |  JOIN $p tim ON tim.kind = 'ent_im' AND tim.id = ed.dst AND tim.i = hre.i
-             |  JOIN $p nre ON nre.kind = 'ent_re' AND nre.id = ed.neg AND nre.i = hre.i
-             |  JOIN $p nim ON nim.kind = 'ent_im' AND nim.id = ed.neg AND nim.i = hre.i),
-             |sc$k AS (SELECT src, rel, dst, neg,
-             |    SUM(CAST(a * c - b * d AS HUGEINT) * e + CAST(a * d + b * c AS HUGEINT) * f) AS sp,
-             |    SUM(CAST(a * c - b * d AS HUGEINT) * ep + CAST(a * d + b * c AS HUGEINT) * fp) AS sn
-             |  FROM dm$k GROUP BY 1, 2, 3, 4),
-             |vd$k AS (SELECT dm$k.*, ep - e AS de, fp - f AS dfv FROM dm$k JOIN
-             |    (SELECT src, rel, dst, neg FROM sc$k
-             |     WHERE 1000000000000000000 - sp + sn > 0) vi$k
-             |    USING (src, rel, dst, neg)),
-             |ct$k AS (SELECT 'ent_re' AS kind, src AS id, i, c * de + d * dfv AS g FROM vd$k
-             |  UNION ALL SELECT 'ent_im', src, i, -d * de + c * dfv FROM vd$k
-             |  UNION ALL SELECT 'rel_re', rel, i, a * de + b * dfv FROM vd$k
-             |  UNION ALL SELECT 'rel_im', rel, i, -b * de + a * dfv FROM vd$k
-             |  UNION ALL SELECT 'ent_re', dst, i, -(a * c - b * d) FROM vd$k
-             |  UNION ALL SELECT 'ent_im', dst, i, -(a * d + b * c) FROM vd$k
-             |  UNION ALL SELECT 'ent_re', neg, i, a * c - b * d FROM vd$k
-             |  UNION ALL SELECT 'ent_im', neg, i, a * d + b * c FROM vd$k),
-             |gs$k AS (SELECT kind, id, i, SUM(g) AS g FROM ct$k GROUP BY 1, 2, 3),
-             |$c AS MATERIALIZED (SELECT kind, id, i,
-             |    CAST(CAST(SIGN((CAST(ROUND(x * 1000000, 0) AS BIGINT) * 100000000000 - COALESCE(g, 0) * 3125)) AS BIGINT) * ((ABS((CAST(ROUND(x * 1000000, 0) AS BIGINT) * 100000000000 - COALESCE(g, 0) * 3125)) + 50000000000) // 100000000000) AS DOUBLE) / 1000000 AS x
-             |  FROM $p LEFT JOIN gs$k USING (kind, id, i))""".stripMargin
-        }
-        KG.edgesCte.trim + ",\n" +
-          s"""te AS (SELECT src, rel, dst FROM edges
-             |       WHERE rel IN (${KG.REL_SUPP_NATION}, ${KG.REL_NATION_REGION})),
-             |en AS (SELECT DISTINCT id FROM (SELECT src AS id FROM te UNION SELECT dst FROM te) u),
-             |ix AS (SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS i FROM en),
-             |neg AS (SELECT a.id AS dst, b.id AS neg FROM ix a JOIN ix b
-             |        ON a.i % (SELECT COUNT(*) FROM en) + 1 = b.i),
-             |ed AS MATERIALIZED (SELECT src, rel, dst, neg FROM te JOIN neg USING (dst)),
-             |e0 AS MATERIALIZED (SELECT 'ent_re' AS kind, id, i,
-             |      SIN((id % 9973 + 1) * i * 0.017 + $ENT_SEED) AS x
-             |    FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-             |  UNION ALL SELECT 'ent_im', id, i,
-             |      SIN((id % 9973 + 1) * i * 0.017 + ${ENT_SEED + IM_OFF})
-             |    FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-             |  UNION ALL SELECT 'rel_re', rel AS id, i,
-             |      SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED)
-             |    FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i)
-             |  UNION ALL SELECT 'rel_im', rel AS id, i,
-             |      SIN((rel % 9973 + 1) * i * 0.017 + ${REL_SEED + IM_OFF})
-             |    FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i)),
-             |${stepCtes(1)},
-             |${stepCtes(2)}
-             |SELECT kind, id, CAST(i - 1 AS BIGINT) AS pos, x FROM e2""".stripMargin
-      }),
+      Some(trainOracle.sql(Model.ComplEx, steps = 2))),
 
     // One RotatE SGD step (rotate.py estimate semantics: complex entities,
     // phase-vector relation) with component-wise-L1 training distance —
@@ -3901,76 +3302,10 @@ object PipelineQueries {
     // (∂Re/∂θ = −Im_est, ∂Im/∂θ = +Re_est).
     ("train_rotate_step",
       (s, dir) => {
-        val edges = KG.edges(s, dir)
-          .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
-        val ents = edges.select(col("src").as("id"))
-          .unionAll(edges.select(col("dst").as("id"))).distinct()
-        Training.sgd(Training.Model.RotatE, ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED)
+        val (ents, edges) = trainSet(s, dir)
+        Training.sgd(Model.RotatE, ents, edges, DIM, ENT_SEED, REL_SEED)
       },
-      Some {
-        val th = s"CAST(ROUND(SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED)" +
-          " * 1000000, 0) AS BIGINT)"
-        KG.edgesCte.trim + ",\n" +
-          s"""te AS (SELECT src, rel, dst FROM edges
-             |       WHERE rel IN (${KG.REL_SUPP_NATION}, ${KG.REL_NATION_REGION})),
-             |en AS (SELECT DISTINCT id FROM (SELECT src AS id FROM te UNION SELECT dst FROM te) u),
-             |ix AS (SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS i FROM en),
-             |neg AS (SELECT a.id AS dst, b.id AS neg FROM ix a JOIN ix b
-             |        ON a.i % (SELECT COUNT(*) FROM en) + 1 = b.i),
-             |ed AS (SELECT src, rel, dst, neg FROM te JOIN neg USING (dst)),
-             |dm0 AS (SELECT src, rel, dst, neg, i,
-             |    CAST(ROUND(SIN((src % 9973 + 1) * i * 0.017 + $ENT_SEED) * 1000000, 0) AS BIGINT) AS a,
-             |    CAST(ROUND(SIN((src % 9973 + 1) * i * 0.017 + ${ENT_SEED + IM_OFF}) * 1000000, 0) AS BIGINT) AS b,
-             |    CAST(ROUND(COS($th / 1000000.0) * 1000000, 0) AS BIGINT) AS c,
-             |    CAST(ROUND(SIN($th / 1000000.0) * 1000000, 0) AS BIGINT) AS sn,
-             |    CAST(ROUND(SIN((dst % 9973 + 1) * i * 0.017 + $ENT_SEED) * 1000000, 0) AS BIGINT) AS e,
-             |    CAST(ROUND(SIN((dst % 9973 + 1) * i * 0.017 + ${ENT_SEED + IM_OFF}) * 1000000, 0) AS BIGINT) AS f,
-             |    CAST(ROUND(SIN((neg % 9973 + 1) * i * 0.017 + $ENT_SEED) * 1000000, 0) AS BIGINT) AS ep,
-             |    CAST(ROUND(SIN((neg % 9973 + 1) * i * 0.017 + ${ENT_SEED + IM_OFF}) * 1000000, 0) AS BIGINT) AS fp
-             |  FROM ed CROSS JOIN generate_series(1, $DIM) g(i)),
-             |dm AS MATERIALIZED (SELECT *,
-             |    a * c - b * sn - e * 1000000 AS u,
-             |    a * sn + b * c - f * 1000000 AS v,
-             |    a * c - b * sn - ep * 1000000 AS up,
-             |    a * sn + b * c - fp * 1000000 AS vp
-             |  FROM dm0),
-             |sc AS (SELECT src, rel, dst, neg,
-             |    SUM(CAST(ABS(u) + ABS(v) AS HUGEINT)) AS dp,
-             |    SUM(CAST(ABS(up) + ABS(vp) AS HUGEINT)) AS dn
-             |  FROM dm GROUP BY 1, 2, 3, 4),
-             |vd AS (SELECT dm.*,
-             |    CAST(SIGN(u) AS BIGINT) AS su, CAST(SIGN(v) AS BIGINT) AS sv,
-             |    CAST(SIGN(up) AS BIGINT) AS sup, CAST(SIGN(vp) AS BIGINT) AS svp
-             |  FROM dm JOIN
-             |    (SELECT src, rel, dst, neg FROM sc
-             |     WHERE 1000000000000 + dp - dn > 0) vi
-             |    USING (src, rel, dst, neg)),
-             |contrib AS (SELECT 'ent_re' AS kind, src AS id, i,
-             |      ((su - sup) * c + (sv - svp) * sn) * 1000000 AS g FROM vd
-             |  UNION ALL SELECT 'ent_im', src, i,
-             |      (-(su - sup) * sn + (sv - svp) * c) * 1000000 FROM vd
-             |  UNION ALL SELECT 'ent_re', dst, i, -su * 1000000000000 FROM vd
-             |  UNION ALL SELECT 'ent_im', dst, i, -sv * 1000000000000 FROM vd
-             |  UNION ALL SELECT 'ent_re', neg, i, sup * 1000000000000 FROM vd
-             |  UNION ALL SELECT 'ent_im', neg, i, svp * 1000000000000 FROM vd
-             |  UNION ALL SELECT 'rel_ph', rel, i,
-             |      (sv - svp) * (a * c - b * sn)
-             |        - (su - sup) * (a * sn + b * c) FROM vd),
-             |gsum AS (SELECT kind, id, i, SUM(g) AS g FROM contrib GROUP BY 1, 2, 3),
-             |base AS (SELECT 'ent_re' AS kind, id, i,
-             |      SIN((id % 9973 + 1) * i * 0.017 + $ENT_SEED) AS x0
-             |    FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-             |  UNION ALL SELECT 'ent_im', id, i,
-             |      SIN((id % 9973 + 1) * i * 0.017 + ${ENT_SEED + IM_OFF})
-             |    FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-             |  UNION ALL SELECT 'rel_ph', rel AS id, i,
-             |      SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED)
-             |    FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i))
-             |SELECT kind, id, CAST(i - 1 AS BIGINT) AS pos,
-             |       CAST(CAST(SIGN((CAST(ROUND(x0 * 1000000, 0) AS BIGINT) * 100000000000 - COALESCE(g, 0) * 3125)) AS BIGINT) * ((ABS((CAST(ROUND(x0 * 1000000, 0) AS BIGINT) * 100000000000 - COALESCE(g, 0) * 3125)) + 50000000000) // 100000000000) AS DOUBLE) / 1000000 AS x
-             |FROM base LEFT JOIN gsum USING (kind, id, i)""".stripMargin
-      }),
+      Some(trainOracle.sql(Model.RotatE))),
 
     // TWO TransE SGD steps with classical momentum (Polyak heavy ball,
     // mu = 1/2): v_k = mu*v_{k-1} + g_k, x_k = x_{k-1} - lr*v_k. A
@@ -3980,66 +3315,11 @@ object PipelineQueries {
     // bit-for-bit — the momentum analogue of the L1 sign trick.
     ("train_transe_momentum",
       (s, dir) => {
-        val edges = KG.edges(s, dir)
-          .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
-        val ents = edges.select(col("src").as("id"))
-          .unionAll(edges.select(col("dst").as("id"))).distinct()
-        Training.transeSgd(ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED, steps = 2,
-          optimizer = Training.Optimizer.Momentum())
+        val (ents, edges) = trainSet(s, dir)
+        Training.transeSgd(ents, edges, DIM, ENT_SEED, REL_SEED, steps = 2,
+          optimizer = Optimizer.Momentum())
       },
-      Some {
-        def gradCtes(k: Int): String = {
-          val p = s"e${k - 1}"
-          s"""dm$k AS MATERIALIZED (SELECT ed.src, ed.rel, ed.dst, ed.neg, h.i,
-             |           h.x AS h, r.x AS r, t.x AS t, tn.x AS tn
-             |         FROM ed
-             |         JOIN $p h ON h.kind = 'ent' AND h.id = ed.src
-             |         JOIN $p r ON r.kind = 'rel' AND r.id = ed.rel AND r.i = h.i
-             |         JOIN $p t ON t.kind = 'ent' AND t.id = ed.dst AND t.i = h.i
-             |         JOIN $p tn ON tn.kind = 'ent' AND tn.id = ed.neg AND tn.i = h.i),
-             |sc$k AS (SELECT src, rel, dst, neg,
-             |           SUM(ABS(h + r - t)) AS dp, SUM(ABS(h + r - tn)) AS dn
-             |         FROM dm$k GROUP BY 1, 2, 3, 4),
-             |vd$k AS (SELECT dm$k.*, SIGN(h + r - t) AS s, SIGN(h + r - tn) AS sp
-             |         FROM dm$k JOIN (SELECT src, rel, dst, neg FROM sc$k
-             |                         WHERE 1.0 + dp - dn > 0) vi$k
-             |           USING (src, rel, dst, neg)),
-             |ct$k AS (SELECT 'ent' AS kind, src AS id, i, s - sp AS g FROM vd$k
-             |  UNION ALL SELECT 'ent', dst, i, -s FROM vd$k
-             |  UNION ALL SELECT 'ent', neg, i, sp FROM vd$k
-             |  UNION ALL SELECT 'rel', rel, i, s - sp FROM vd$k),
-             |gs$k AS (SELECT kind, id, i, SUM(g) AS g FROM ct$k GROUP BY 1, 2, 3)""".stripMargin
-        }
-        KG.edgesCte.trim + ",\n" +
-          s"""te AS (SELECT src, rel, dst FROM edges
-             |       WHERE rel IN (${KG.REL_SUPP_NATION}, ${KG.REL_NATION_REGION})),
-             |en AS (SELECT DISTINCT id FROM (SELECT src AS id FROM te UNION SELECT dst FROM te) u),
-             |ix AS (SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS i FROM en),
-             |neg AS (SELECT a.id AS dst, b.id AS neg FROM ix a JOIN ix b
-             |        ON a.i % (SELECT COUNT(*) FROM en) + 1 = b.i),
-             |ed AS MATERIALIZED (SELECT src, rel, dst, neg FROM te JOIN neg USING (dst)),
-             |e0 AS MATERIALIZED (SELECT 'ent' AS kind, id, i,
-             |         SIN((id % 9973 + 1) * i * 0.017 + $ENT_SEED) AS x
-             |       FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-             |       UNION ALL
-             |       SELECT 'rel', rel AS id, i,
-             |         SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED)
-             |       FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i)),
-             |${gradCtes(1)},
-             |v1 AS MATERIALIZED (SELECT kind, id, i, CAST(g AS DOUBLE) AS v FROM gs1),
-             |e1 AS MATERIALIZED (SELECT kind, id, i,
-             |         ROUND(x - 0.03125 * COALESCE(v, 0), 6) AS x
-             |       FROM e0 LEFT JOIN v1 USING (kind, id, i)),
-             |${gradCtes(2)},
-             |v2 AS MATERIALIZED (SELECT kind, id, i,
-             |         COALESCE(v, 0) * 0.5 + COALESCE(g, 0) AS v
-             |       FROM v1 FULL JOIN gs2 USING (kind, id, i)),
-             |e2 AS (SELECT kind, id, i,
-             |         ROUND(x - 0.03125 * COALESCE(v, 0), 6) AS x
-             |       FROM e1 LEFT JOIN v2 USING (kind, id, i))
-             |SELECT kind, id, CAST(i - 1 AS BIGINT) AS pos, x FROM e2""".stripMargin
-      }),
+      Some(trainOracle.sql(Model.TransE, Optimizer.Momentum(0.5), steps = 2))),
 
     // RotatE train-then-evaluate: one SGD step, then ranking by the
     // component-L1 rotation distance ASCENDING (the same training
@@ -4047,114 +3327,11 @@ object PipelineQueries {
     // state, cos/sin micro ints). All distances exact longs.
     ("train_eval_mrr_rotate",
       (s, dir) => {
-        val edges = KG.edges(s, dir)
-          .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
-        val ents = edges.select(col("src").as("id"))
-          .unionAll(edges.select(col("dst").as("id"))).distinct()
-        val e1 = Training.sgd(Training.Model.RotatE, ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED)
-        Training.ranks(Training.Model.RotatE, e1, edges)
-          .groupBy("rel")
-          .agg(count(lit(1)).as("n"),
-               round(sum(round(lit(1000000.0) / col("rank"), 0)) / 1e6
-                     / count(lit(1)), 6).as("mrr"),
-               round(sum(when(col("rank") <= 10, 1).otherwise(0)) * 1.0
-                     / count(lit(1)), 6).as("hits10"))
+        val (ents, edges) = trainSet(s, dir)
+        val e1 = Training.sgd(Model.RotatE, ents, edges, DIM, ENT_SEED, REL_SEED)
+        rankSummary(Training.ranks(Model.RotatE, e1, edges), 10)
       },
-      Some {
-        val th = s"CAST(ROUND(SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED)" +
-          " * 1000000, 0) AS BIGINT)"
-        KG.edgesCte.trim + ",\n" +
-          s"""te AS (SELECT src, rel, dst FROM edges
-             |       WHERE rel IN (${KG.REL_SUPP_NATION}, ${KG.REL_NATION_REGION})),
-             |en AS (SELECT DISTINCT id FROM (SELECT src AS id FROM te UNION SELECT dst FROM te) u),
-             |ix AS (SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS i FROM en),
-             |neg AS (SELECT a.id AS dst, b.id AS neg FROM ix a JOIN ix b
-             |        ON a.i % (SELECT COUNT(*) FROM en) + 1 = b.i),
-             |ed AS (SELECT src, rel, dst, neg FROM te JOIN neg USING (dst)),
-             |dm0 AS (SELECT src, rel, dst, neg, i,
-             |    CAST(ROUND(SIN((src % 9973 + 1) * i * 0.017 + $ENT_SEED) * 1000000, 0) AS BIGINT) AS a,
-             |    CAST(ROUND(SIN((src % 9973 + 1) * i * 0.017 + ${ENT_SEED + IM_OFF}) * 1000000, 0) AS BIGINT) AS b,
-             |    CAST(ROUND(COS($th / 1000000.0) * 1000000, 0) AS BIGINT) AS c,
-             |    CAST(ROUND(SIN($th / 1000000.0) * 1000000, 0) AS BIGINT) AS sn,
-             |    CAST(ROUND(SIN((dst % 9973 + 1) * i * 0.017 + $ENT_SEED) * 1000000, 0) AS BIGINT) AS e,
-             |    CAST(ROUND(SIN((dst % 9973 + 1) * i * 0.017 + ${ENT_SEED + IM_OFF}) * 1000000, 0) AS BIGINT) AS f,
-             |    CAST(ROUND(SIN((neg % 9973 + 1) * i * 0.017 + $ENT_SEED) * 1000000, 0) AS BIGINT) AS ep,
-             |    CAST(ROUND(SIN((neg % 9973 + 1) * i * 0.017 + ${ENT_SEED + IM_OFF}) * 1000000, 0) AS BIGINT) AS fp
-             |  FROM ed CROSS JOIN generate_series(1, $DIM) g(i)),
-             |dm AS MATERIALIZED (SELECT *,
-             |    a * c - b * sn - e * 1000000 AS u,
-             |    a * sn + b * c - f * 1000000 AS v,
-             |    a * c - b * sn - ep * 1000000 AS up,
-             |    a * sn + b * c - fp * 1000000 AS vp
-             |  FROM dm0),
-             |sc AS (SELECT src, rel, dst, neg,
-             |    SUM(CAST(ABS(u) + ABS(v) AS HUGEINT)) AS dp,
-             |    SUM(CAST(ABS(up) + ABS(vp) AS HUGEINT)) AS dn
-             |  FROM dm GROUP BY 1, 2, 3, 4),
-             |vd AS (SELECT dm.*,
-             |    CAST(SIGN(u) AS BIGINT) AS su, CAST(SIGN(v) AS BIGINT) AS sv,
-             |    CAST(SIGN(up) AS BIGINT) AS sup, CAST(SIGN(vp) AS BIGINT) AS svp
-             |  FROM dm JOIN
-             |    (SELECT src, rel, dst, neg FROM sc
-             |     WHERE 1000000000000 + dp - dn > 0) vi
-             |    USING (src, rel, dst, neg)),
-             |contrib AS (SELECT 'ent_re' AS kind, src AS id, i,
-             |      ((su - sup) * c + (sv - svp) * sn) * 1000000 AS g FROM vd
-             |  UNION ALL SELECT 'ent_im', src, i,
-             |      (-(su - sup) * sn + (sv - svp) * c) * 1000000 FROM vd
-             |  UNION ALL SELECT 'ent_re', dst, i, -su * 1000000000000 FROM vd
-             |  UNION ALL SELECT 'ent_im', dst, i, -sv * 1000000000000 FROM vd
-             |  UNION ALL SELECT 'ent_re', neg, i, sup * 1000000000000 FROM vd
-             |  UNION ALL SELECT 'ent_im', neg, i, svp * 1000000000000 FROM vd
-             |  UNION ALL SELECT 'rel_ph', rel, i,
-             |      (sv - svp) * (a * c - b * sn)
-             |        - (su - sup) * (a * sn + b * c) FROM vd),
-             |gsum AS (SELECT kind, id, i, SUM(g) AS g FROM contrib GROUP BY 1, 2, 3),
-             |base AS (SELECT 'ent_re' AS kind, id, i,
-             |      SIN((id % 9973 + 1) * i * 0.017 + $ENT_SEED) AS x0
-             |    FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-             |  UNION ALL SELECT 'ent_im', id, i,
-             |      SIN((id % 9973 + 1) * i * 0.017 + ${ENT_SEED + IM_OFF})
-             |    FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-             |  UNION ALL SELECT 'rel_ph', rel AS id, i,
-             |      SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED)
-             |    FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i)),
-             |e1 AS MATERIALIZED (SELECT kind, id, i,
-             |    CAST(CAST(SIGN((CAST(ROUND(x0 * 1000000, 0) AS BIGINT) * 100000000000 - COALESCE(g, 0) * 3125)) AS BIGINT) * ((ABS((CAST(ROUND(x0 * 1000000, 0) AS BIGINT) * 100000000000 - COALESCE(g, 0) * 3125)) + 50000000000) // 100000000000) AS DOUBLE) / 1000000 AS x
-             |  FROM base LEFT JOIN gsum USING (kind, id, i)),
-             |er AS (SELECT id, i, CAST(ROUND(x * 1000000, 0) AS BIGINT) AS xi
-             |       FROM e1 WHERE kind = 'ent_re'),
-             |em AS (SELECT id, i, CAST(ROUND(x * 1000000, 0) AS BIGINT) AS xi
-             |       FROM e1 WHERE kind = 'ent_im'),
-             |rp AS (SELECT id AS rel, i,
-             |         CAST(ROUND(COS(CAST(ROUND(x * 1000000, 0) AS BIGINT) / 1000000.0) * 1000000, 0) AS BIGINT) AS c,
-             |         CAST(ROUND(SIN(CAST(ROUND(x * 1000000, 0) AS BIGINT) / 1000000.0) * 1000000, 0) AS BIGINT) AS sn
-             |       FROM e1 WHERE kind = 'rel_ph'),
-             |hx AS MATERIALIZED (SELECT te.src, te.rel, te.dst, hre.i,
-             |         hre.xi * rp.c - him.xi * rp.sn AS re,
-             |         hre.xi * rp.sn + him.xi * rp.c AS im
-             |       FROM te JOIN er hre ON hre.id = te.src
-             |               JOIN em him ON him.id = te.src AND him.i = hre.i
-             |               JOIN rp ON rp.rel = te.rel AND rp.i = hre.i),
-             |dd AS MATERIALIZED (SELECT hx.src, hx.rel, hx.dst, ce.id AS cand,
-             |         SUM(ABS(hx.re - ce.xi * 1000000)
-             |             + ABS(hx.im - cf.xi * 1000000)) AS d
-             |       FROM hx JOIN er ce ON ce.i = hx.i
-             |               JOIN em cf ON cf.id = ce.id AND cf.i = hx.i
-             |       GROUP BY 1, 2, 3, 4),
-             |tr2 AS (SELECT src, rel, dst, d AS dt FROM dd WHERE cand = dst),
-             |rk AS (SELECT q.src, q.rel, q.dst,
-             |         1 + SUM(CASE WHEN q.d < tr2.dt
-             |                       OR (q.d = tr2.dt AND q.cand < q.dst)
-             |                      THEN 1 ELSE 0 END) AS rank
-             |       FROM dd q JOIN tr2 USING (src, rel, dst)
-             |       WHERE q.cand <> q.dst GROUP BY 1, 2, 3)
-             |SELECT rel, COUNT(*) AS n,
-             |       ROUND(SUM(ROUND(1000000.0 / rank, 0)) / 1e6 / COUNT(*), 6) AS mrr,
-             |       ROUND(SUM(CASE WHEN rank <= 10 THEN 1 ELSE 0 END) * 1.0 / COUNT(*), 6) AS hits10
-             |FROM rk GROUP BY rel""".stripMargin
-      }),
+      Some(trainOracle.sql(Model.RotatE, eval = Some(Eval(Seq(10)))))),
 
     // TWO RotatE SGD steps: the rotation-derivative LOOP over the
     // three-kind state (ent_re, ent_im, rel_ph) — 6-dp quantize between
@@ -4164,87 +3341,10 @@ object PipelineQueries {
     // trajectory is engine-identical.
     ("train_rotate_2steps",
       (s, dir) => {
-        val edges = KG.edges(s, dir)
-          .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
-        val ents = edges.select(col("src").as("id"))
-          .unionAll(edges.select(col("dst").as("id"))).distinct()
-        Training.sgd(Training.Model.RotatE, ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED, steps = 2)
+        val (ents, edges) = trainSet(s, dir)
+        Training.sgd(Model.RotatE, ents, edges, DIM, ENT_SEED, REL_SEED, steps = 2)
       },
-      Some {
-        def stepCtes(k: Int): String = {
-          val (p, c) = (s"e${k - 1}", s"e$k")
-          s"""dm$k AS (SELECT ed.src, ed.rel, ed.dst, ed.neg, hre.i,
-             |    CAST(ROUND(hre.x * 1000000, 0) AS BIGINT) AS a,
-             |    CAST(ROUND(him.x * 1000000, 0) AS BIGINT) AS b,
-             |    CAST(ROUND(COS(CAST(ROUND(rph.x * 1000000, 0) AS BIGINT) / 1000000.0) * 1000000, 0) AS BIGINT) AS c,
-             |    CAST(ROUND(SIN(CAST(ROUND(rph.x * 1000000, 0) AS BIGINT) / 1000000.0) * 1000000, 0) AS BIGINT) AS sn,
-             |    CAST(ROUND(tre.x * 1000000, 0) AS BIGINT) AS e,
-             |    CAST(ROUND(tim.x * 1000000, 0) AS BIGINT) AS f,
-             |    CAST(ROUND(nre.x * 1000000, 0) AS BIGINT) AS ep,
-             |    CAST(ROUND(nim.x * 1000000, 0) AS BIGINT) AS fp
-             |  FROM ed
-             |  JOIN $p hre ON hre.kind = 'ent_re' AND hre.id = ed.src
-             |  JOIN $p him ON him.kind = 'ent_im' AND him.id = ed.src AND him.i = hre.i
-             |  JOIN $p rph ON rph.kind = 'rel_ph' AND rph.id = ed.rel AND rph.i = hre.i
-             |  JOIN $p tre ON tre.kind = 'ent_re' AND tre.id = ed.dst AND tre.i = hre.i
-             |  JOIN $p tim ON tim.kind = 'ent_im' AND tim.id = ed.dst AND tim.i = hre.i
-             |  JOIN $p nre ON nre.kind = 'ent_re' AND nre.id = ed.neg AND nre.i = hre.i
-             |  JOIN $p nim ON nim.kind = 'ent_im' AND nim.id = ed.neg AND nim.i = hre.i),
-             |du$k AS MATERIALIZED (SELECT *,
-             |    a * c - b * sn - e * 1000000 AS u,
-             |    a * sn + b * c - f * 1000000 AS v,
-             |    a * c - b * sn - ep * 1000000 AS up,
-             |    a * sn + b * c - fp * 1000000 AS vp
-             |  FROM dm$k),
-             |sc$k AS (SELECT src, rel, dst, neg,
-             |    SUM(CAST(ABS(u) + ABS(v) AS HUGEINT)) AS dp,
-             |    SUM(CAST(ABS(up) + ABS(vp) AS HUGEINT)) AS dn
-             |  FROM du$k GROUP BY 1, 2, 3, 4),
-             |vd$k AS (SELECT du$k.*,
-             |    CAST(SIGN(u) AS BIGINT) AS su, CAST(SIGN(v) AS BIGINT) AS sv,
-             |    CAST(SIGN(up) AS BIGINT) AS sup, CAST(SIGN(vp) AS BIGINT) AS svp
-             |  FROM du$k JOIN
-             |    (SELECT src, rel, dst, neg FROM sc$k
-             |     WHERE 1000000000000 + dp - dn > 0) vi$k
-             |    USING (src, rel, dst, neg)),
-             |ct$k AS (SELECT 'ent_re' AS kind, src AS id, i,
-             |      ((su - sup) * c + (sv - svp) * sn) * 1000000 AS g FROM vd$k
-             |  UNION ALL SELECT 'ent_im', src, i,
-             |      (-(su - sup) * sn + (sv - svp) * c) * 1000000 FROM vd$k
-             |  UNION ALL SELECT 'ent_re', dst, i, -su * 1000000000000 FROM vd$k
-             |  UNION ALL SELECT 'ent_im', dst, i, -sv * 1000000000000 FROM vd$k
-             |  UNION ALL SELECT 'ent_re', neg, i, sup * 1000000000000 FROM vd$k
-             |  UNION ALL SELECT 'ent_im', neg, i, svp * 1000000000000 FROM vd$k
-             |  UNION ALL SELECT 'rel_ph', rel, i,
-             |      (sv - svp) * (a * c - b * sn)
-             |        - (su - sup) * (a * sn + b * c) FROM vd$k),
-             |gs$k AS (SELECT kind, id, i, SUM(g) AS g FROM ct$k GROUP BY 1, 2, 3),
-             |$c AS MATERIALIZED (SELECT kind, id, i,
-             |    CAST(CAST(SIGN((CAST(ROUND(x * 1000000, 0) AS BIGINT) * 100000000000 - COALESCE(g, 0) * 3125)) AS BIGINT) * ((ABS((CAST(ROUND(x * 1000000, 0) AS BIGINT) * 100000000000 - COALESCE(g, 0) * 3125)) + 50000000000) // 100000000000) AS DOUBLE) / 1000000 AS x
-             |  FROM $p LEFT JOIN gs$k USING (kind, id, i))""".stripMargin
-        }
-        KG.edgesCte.trim + ",\n" +
-          s"""te AS (SELECT src, rel, dst FROM edges
-             |       WHERE rel IN (${KG.REL_SUPP_NATION}, ${KG.REL_NATION_REGION})),
-             |en AS (SELECT DISTINCT id FROM (SELECT src AS id FROM te UNION SELECT dst FROM te) u),
-             |ix AS (SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS i FROM en),
-             |neg AS (SELECT a.id AS dst, b.id AS neg FROM ix a JOIN ix b
-             |        ON a.i % (SELECT COUNT(*) FROM en) + 1 = b.i),
-             |ed AS MATERIALIZED (SELECT src, rel, dst, neg FROM te JOIN neg USING (dst)),
-             |e0 AS MATERIALIZED (SELECT 'ent_re' AS kind, id, i,
-             |      SIN((id % 9973 + 1) * i * 0.017 + $ENT_SEED) AS x
-             |    FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-             |  UNION ALL SELECT 'ent_im', id, i,
-             |      SIN((id % 9973 + 1) * i * 0.017 + ${ENT_SEED + IM_OFF})
-             |    FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-             |  UNION ALL SELECT 'rel_ph', rel AS id, i,
-             |      SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED)
-             |    FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i)),
-             |${stepCtes(1)},
-             |${stepCtes(2)}
-             |SELECT kind, id, CAST(i - 1 AS BIGINT) AS pos, x FROM e2""".stripMargin
-      }),
+      Some(trainOracle.sql(Model.RotatE, steps = 2))),
 
     // One mini-batched TransE EPOCH: the edge set hash-partitions into two
     // disjoint mini-batches (portable md5 split), one SGD step per batch —
@@ -4252,62 +3352,10 @@ object PipelineQueries {
     // replaced by a deterministic hash partition.
     ("train_transe_epoch",
       (s, dir) => {
-        val edges = KG.edges(s, dir)
-          .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
-        val ents = edges.select(col("src").as("id"))
-          .unionAll(edges.select(col("dst").as("id"))).distinct()
-        Training.transeSgdEpoch(ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED, batches = 2)
+        val (ents, edges) = trainSet(s, dir)
+        Training.transeSgdEpoch(ents, edges, DIM, ENT_SEED, REL_SEED, batches = 2)
       },
-      Some {
-        val batchHash = graft.functions.PortableHash.md5Prefix60Sql(
-          "CAST(src AS VARCHAR) || '|' || CAST(rel AS VARCHAR) || '|' || " +
-            "CAST(dst AS VARCHAR)")
-        def stepCtes(k: Int): String = {
-          val (p, c) = (s"e${k - 1}", s"e$k")
-          s"""dm$k AS MATERIALIZED (SELECT ed.src, ed.rel, ed.dst, ed.neg, h.i,
-             |           h.x AS h, r.x AS r, t.x AS t, tn.x AS tn
-             |         FROM ed
-             |         JOIN $p h ON h.kind = 'ent' AND h.id = ed.src
-             |         JOIN $p r ON r.kind = 'rel' AND r.id = ed.rel AND r.i = h.i
-             |         JOIN $p t ON t.kind = 'ent' AND t.id = ed.dst AND t.i = h.i
-             |         JOIN $p tn ON tn.kind = 'ent' AND tn.id = ed.neg AND tn.i = h.i
-             |         WHERE ed.mb = ${k - 1}),
-             |sc$k AS (SELECT src, rel, dst, neg,
-             |           SUM(ABS(h + r - t)) AS dp, SUM(ABS(h + r - tn)) AS dn
-             |         FROM dm$k GROUP BY 1, 2, 3, 4),
-             |vd$k AS (SELECT dm$k.*, SIGN(h + r - t) AS s, SIGN(h + r - tn) AS sp
-             |         FROM dm$k JOIN (SELECT src, rel, dst, neg FROM sc$k
-             |                         WHERE 1.0 + dp - dn > 0) vi$k
-             |           USING (src, rel, dst, neg)),
-             |ct$k AS (SELECT 'ent' AS kind, src AS id, i, s - sp AS g FROM vd$k
-             |  UNION ALL SELECT 'ent', dst, i, -s FROM vd$k
-             |  UNION ALL SELECT 'ent', neg, i, sp FROM vd$k
-             |  UNION ALL SELECT 'rel', rel, i, s - sp FROM vd$k),
-             |gs$k AS (SELECT kind, id, i, SUM(g) AS g FROM ct$k GROUP BY 1, 2, 3),
-             |$c AS MATERIALIZED (SELECT kind, id, i, ROUND(x - 0.03125 * COALESCE(g, 0), 6) AS x
-             |       FROM $p LEFT JOIN gs$k USING (kind, id, i))""".stripMargin
-        }
-        KG.edgesCte.trim + ",\n" +
-          s"""te AS (SELECT src, rel, dst FROM edges
-             |       WHERE rel IN (${KG.REL_SUPP_NATION}, ${KG.REL_NATION_REGION})),
-             |en AS (SELECT DISTINCT id FROM (SELECT src AS id FROM te UNION SELECT dst FROM te) u),
-             |ix AS (SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS i FROM en),
-             |neg AS (SELECT a.id AS dst, b.id AS neg FROM ix a JOIN ix b
-             |        ON a.i % (SELECT COUNT(*) FROM en) + 1 = b.i),
-             |ed AS MATERIALIZED (SELECT src, rel, dst, neg,
-             |         $batchHash % 2 AS mb FROM te JOIN neg USING (dst)),
-             |e0 AS MATERIALIZED (SELECT 'ent' AS kind, id, i,
-             |         SIN((id % 9973 + 1) * i * 0.017 + $ENT_SEED) AS x
-             |       FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-             |       UNION ALL
-             |       SELECT 'rel', rel AS id, i,
-             |         SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED)
-             |       FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i)),
-             |${stepCtes(1)},
-             |${stepCtes(2)}
-             |SELECT kind, id, CAST(i - 1 AS BIGINT) AS pos, x FROM e2""".stripMargin
-      }),
+      Some(trainOracle.sql(Model.TransE, steps = 2, batches = 2))),
 
     // Train THEN evaluate, both relationally: one TransE SGD step followed
     // by unfiltered link-prediction ranking of the UPDATED parameters over
@@ -4317,80 +3365,11 @@ object PipelineQueries {
     // is engine-exact — no float-route exposure anywhere in train OR eval.
     ("train_eval_mrr",
       (s, dir) => {
-        val edges = KG.edges(s, dir)
-          .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
-        val ents = edges.select(col("src").as("id"))
-          .unionAll(edges.select(col("dst").as("id"))).distinct()
-        val e1 = Training.transeSgd(ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED)
-        Training.ranks(Training.Model.TransE, e1, edges)
-          .groupBy("rel")
-          .agg(count(lit(1)).as("n"),
-               round(sum(round(lit(1000000.0) / col("rank"), 0)) / 1e6
-                     / count(lit(1)), 6).as("mrr"),
-               round(sum(when(col("rank") <= 1, 1).otherwise(0)) * 1.0
-                     / count(lit(1)), 6).as("hits1"),
-               round(sum(when(col("rank") <= 10, 1).otherwise(0)) * 1.0
-                     / count(lit(1)), 6).as("hits10"))
+        val (ents, edges) = trainSet(s, dir)
+        val e1 = Training.transeSgd(ents, edges, DIM, ENT_SEED, REL_SEED)
+        rankSummary(Training.ranks(Model.TransE, e1, edges), 1, 10)
       },
-      Some(KG.edgesCte.trim + ",\n" +
-        s"""te AS (SELECT src, rel, dst FROM edges
-           |       WHERE rel IN (${KG.REL_SUPP_NATION}, ${KG.REL_NATION_REGION})),
-           |en AS (SELECT DISTINCT id FROM (SELECT src AS id FROM te UNION SELECT dst FROM te) u),
-           |ix AS (SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS i FROM en),
-           |neg AS (SELECT a.id AS dst, b.id AS neg FROM ix a JOIN ix b
-           |        ON a.i % (SELECT COUNT(*) FROM en) + 1 = b.i),
-           |ed AS (SELECT src, rel, dst, neg FROM te JOIN neg USING (dst)),
-           |dm AS MATERIALIZED (SELECT src, rel, dst, neg, i,
-           |         SIN((src % 9973 + 1) * i * 0.017 + $ENT_SEED) AS h,
-           |         SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED) AS r,
-           |         SIN((dst % 9973 + 1) * i * 0.017 + $ENT_SEED) AS t,
-           |         SIN((neg % 9973 + 1) * i * 0.017 + $ENT_SEED) AS tn
-           |       FROM ed CROSS JOIN generate_series(1, $DIM) g(i)),
-           |sc AS (SELECT src, rel, dst, neg,
-           |         SUM(ABS(h + r - t)) AS dp, SUM(ABS(h + r - tn)) AS dn
-           |       FROM dm GROUP BY 1, 2, 3, 4),
-           |vd AS (SELECT dm.*, SIGN(h + r - t) AS s, SIGN(h + r - tn) AS sp
-           |       FROM dm JOIN (SELECT src, rel, dst, neg FROM sc
-           |                     WHERE 1.0 + dp - dn > 0) vi
-           |         USING (src, rel, dst, neg)),
-           |contrib AS (SELECT 'ent' AS kind, src AS id, i, s - sp AS g FROM vd
-           |  UNION ALL SELECT 'ent', dst, i, -s FROM vd
-           |  UNION ALL SELECT 'ent', neg, i, sp FROM vd
-           |  UNION ALL SELECT 'rel', rel, i, s - sp FROM vd),
-           |gsum AS (SELECT kind, id, i, SUM(g) AS g FROM contrib GROUP BY 1, 2, 3),
-           |basee AS (SELECT 'ent' AS kind, id, i,
-           |           SIN((id % 9973 + 1) * i * 0.017 + $ENT_SEED) AS x0
-           |         FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-           |         UNION ALL
-           |         SELECT 'rel', rel AS id, i,
-           |           SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED)
-           |         FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i)),
-           |e1 AS MATERIALIZED (SELECT kind, id, i,
-           |         ROUND(x0 - 0.03125 * COALESCE(g, 0), 6) AS x
-           |       FROM basee LEFT JOIN gsum USING (kind, id, i)),
-           |ei AS (SELECT id, i, CAST(ROUND(x * 1000000, 0) AS BIGINT) AS xi
-           |       FROM e1 WHERE kind = 'ent'),
-           |ri AS (SELECT id AS rel, i, CAST(ROUND(x * 1000000, 0) AS BIGINT) AS rxi
-           |       FROM e1 WHERE kind = 'rel'),
-           |dd AS MATERIALIZED (SELECT te.src, te.rel, te.dst, c.id AS cand,
-           |         SUM(ABS(h.xi + r.rxi - c.xi)) AS d
-           |       FROM te JOIN ei h ON h.id = te.src
-           |               JOIN ri r ON r.rel = te.rel AND r.i = h.i
-           |               JOIN ei c ON c.i = h.i
-           |       GROUP BY 1, 2, 3, 4),
-           |tr2 AS (SELECT src, rel, dst, d AS dt FROM dd WHERE cand = dst),
-           |rk AS (SELECT s.src, s.rel, s.dst,
-           |         1 + SUM(CASE WHEN s.d < tr2.dt
-           |                       OR (s.d = tr2.dt AND s.cand < s.dst)
-           |                      THEN 1 ELSE 0 END) AS rank
-           |       FROM dd s JOIN tr2 USING (src, rel, dst)
-           |       WHERE s.cand <> s.dst GROUP BY 1, 2, 3)
-           |SELECT rel, COUNT(*) AS n,
-           |       ROUND(SUM(ROUND(1000000.0 / rank, 0)) / 1e6 / COUNT(*), 6) AS mrr,
-           |       ROUND(SUM(CASE WHEN rank <= 1 THEN 1 ELSE 0 END) * 1.0 / COUNT(*), 6) AS hits1,
-           |       ROUND(SUM(CASE WHEN rank <= 10 THEN 1 ELSE 0 END) * 1.0 / COUNT(*), 6) AS hits10
-           |FROM rk GROUP BY rel""".stripMargin)),
+      Some(trainOracle.sql(Model.TransE, eval = Some(Eval(Seq(1, 10)))))),
 
     // FILTERED eval checkpoint (Bordes et al. protocol): candidates that
     // are themselves true tails for the same (src, rel) are excluded from
@@ -4399,81 +3378,13 @@ object PipelineQueries {
     // never a second pass over the full candidate product.
     ("train_eval_mrr_filtered",
       (s, dir) => {
-        val edges = KG.edges(s, dir)
-          .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
-        val ents = edges.select(col("src").as("id"))
-          .unionAll(edges.select(col("dst").as("id"))).distinct()
-        val e1 = Training.transeSgd(ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED)
-        Training.ranks(Training.Model.TransE, e1, edges,
-          filter = Some(edges))
-          .groupBy("rel")
-          .agg(count(lit(1)).as("n"),
-               round(sum(round(lit(1000000.0) / col("rank"), 0)) / 1e6
-                     / count(lit(1)), 6).as("mrr"),
-               round(sum(when(col("rank") <= 1, 1).otherwise(0)) * 1.0
-                     / count(lit(1)), 6).as("hits1"))
+        val (ents, edges) = trainSet(s, dir)
+        val e1 = Training.transeSgd(ents, edges, DIM, ENT_SEED, REL_SEED)
+        rankSummary(
+          Training.ranks(Model.TransE, e1, edges, filter = Some(edges)), 1)
       },
-      Some(KG.edgesCte.trim + ",\n" +
-        s"""te AS (SELECT src, rel, dst FROM edges
-           |       WHERE rel IN (${KG.REL_SUPP_NATION}, ${KG.REL_NATION_REGION})),
-           |en AS (SELECT DISTINCT id FROM (SELECT src AS id FROM te UNION SELECT dst FROM te) u),
-           |ix AS (SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS i FROM en),
-           |neg AS (SELECT a.id AS dst, b.id AS neg FROM ix a JOIN ix b
-           |        ON a.i % (SELECT COUNT(*) FROM en) + 1 = b.i),
-           |ed AS (SELECT src, rel, dst, neg FROM te JOIN neg USING (dst)),
-           |dm AS MATERIALIZED (SELECT src, rel, dst, neg, i,
-           |         SIN((src % 9973 + 1) * i * 0.017 + $ENT_SEED) AS h,
-           |         SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED) AS r,
-           |         SIN((dst % 9973 + 1) * i * 0.017 + $ENT_SEED) AS t,
-           |         SIN((neg % 9973 + 1) * i * 0.017 + $ENT_SEED) AS tn
-           |       FROM ed CROSS JOIN generate_series(1, $DIM) g(i)),
-           |sc AS (SELECT src, rel, dst, neg,
-           |         SUM(ABS(h + r - t)) AS dp, SUM(ABS(h + r - tn)) AS dn
-           |       FROM dm GROUP BY 1, 2, 3, 4),
-           |vd AS (SELECT dm.*, SIGN(h + r - t) AS s, SIGN(h + r - tn) AS sp
-           |       FROM dm JOIN (SELECT src, rel, dst, neg FROM sc
-           |                     WHERE 1.0 + dp - dn > 0) vi
-           |         USING (src, rel, dst, neg)),
-           |contrib AS (SELECT 'ent' AS kind, src AS id, i, s - sp AS g FROM vd
-           |  UNION ALL SELECT 'ent', dst, i, -s FROM vd
-           |  UNION ALL SELECT 'ent', neg, i, sp FROM vd
-           |  UNION ALL SELECT 'rel', rel, i, s - sp FROM vd),
-           |gsum AS (SELECT kind, id, i, SUM(g) AS g FROM contrib GROUP BY 1, 2, 3),
-           |basee AS (SELECT 'ent' AS kind, id, i,
-           |           SIN((id % 9973 + 1) * i * 0.017 + $ENT_SEED) AS x0
-           |         FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-           |         UNION ALL
-           |         SELECT 'rel', rel AS id, i,
-           |           SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED)
-           |         FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i)),
-           |e1 AS MATERIALIZED (SELECT kind, id, i,
-           |         ROUND(x0 - 0.03125 * COALESCE(g, 0), 6) AS x
-           |       FROM basee LEFT JOIN gsum USING (kind, id, i)),
-           |ei AS (SELECT id, i, CAST(ROUND(x * 1000000, 0) AS BIGINT) AS xi
-           |       FROM e1 WHERE kind = 'ent'),
-           |ri AS (SELECT id AS rel, i, CAST(ROUND(x * 1000000, 0) AS BIGINT) AS rxi
-           |       FROM e1 WHERE kind = 'rel'),
-           |dd AS MATERIALIZED (SELECT te.src, te.rel, te.dst, c.id AS cand,
-           |         SUM(ABS(h.xi + r.rxi - c.xi)) AS d
-           |       FROM te JOIN ei h ON h.id = te.src
-           |               JOIN ri r ON r.rel = te.rel AND r.i = h.i
-           |               JOIN ei c ON c.i = h.i
-           |       GROUP BY 1, 2, 3, 4),
-           |tr2 AS (SELECT src, rel, dst, d AS dt FROM dd WHERE cand = dst),
-           |rk AS (SELECT s.src, s.rel, s.dst,
-           |         1 + SUM(CASE WHEN (s.d < tr2.dt
-           |                       OR (s.d = tr2.dt AND s.cand < s.dst))
-           |                      AND NOT EXISTS (SELECT 1 FROM te
-           |                        WHERE te.src = s.src AND te.rel = s.rel
-           |                          AND te.dst = s.cand)
-           |                      THEN 1 ELSE 0 END) AS rank
-           |       FROM dd s JOIN tr2 USING (src, rel, dst)
-           |       WHERE s.cand <> s.dst GROUP BY 1, 2, 3)
-           |SELECT rel, COUNT(*) AS n,
-           |       ROUND(SUM(ROUND(1000000.0 / rank, 0)) / 1e6 / COUNT(*), 6) AS mrr,
-           |       ROUND(SUM(CASE WHEN rank <= 1 THEN 1 ELSE 0 END) * 1.0 / COUNT(*), 6) AS hits1
-           |FROM rk GROUP BY rel""".stripMargin)),
+      Some(trainOracle.sql(Model.TransE,
+        eval = Some(Eval(Seq(1), filtered = true))))),
 
     // Sampled-candidate eval checkpoint: the same train-then-rank pass but
     // against the hash-drawn HALF of the entity universe (md5(id) % 2 = 0)
@@ -4484,84 +3395,12 @@ object PipelineQueries {
     // identical candidate slice.
     ("train_eval_mrr_sampled",
       (s, dir) => {
-        val edges = KG.edges(s, dir)
-          .filter(col("rel").isin(KG.REL_SUPP_NATION, KG.REL_NATION_REGION))
-        val ents = edges.select(col("src").as("id"))
-          .unionAll(edges.select(col("dst").as("id"))).distinct()
-        val e1 = Training.transeSgd(ents, edges, dim = DIM,
-          entSeed = ENT_SEED, relSeed = REL_SEED)
-        Training.ranks(Training.Model.TransE, e1, edges, candMod = 2)
-          .groupBy("rel")
-          .agg(count(lit(1)).as("n"),
-               round(sum(round(lit(1000000.0) / col("rank"), 0)) / 1e6
-                     / count(lit(1)), 6).as("mrr"),
-               round(sum(when(col("rank") <= 10, 1).otherwise(0)) * 1.0
-                     / count(lit(1)), 6).as("hits10"))
+        val (ents, edges) = trainSet(s, dir)
+        val e1 = Training.transeSgd(ents, edges, DIM, ENT_SEED, REL_SEED)
+        rankSummary(Training.ranks(Model.TransE, e1, edges, candMod = 2), 10)
       },
-      Some(KG.edgesCte.trim + ",\n" +
-        s"""te AS (SELECT src, rel, dst FROM edges
-           |       WHERE rel IN (${KG.REL_SUPP_NATION}, ${KG.REL_NATION_REGION})),
-           |en AS (SELECT DISTINCT id FROM (SELECT src AS id FROM te UNION SELECT dst FROM te) u),
-           |ix AS (SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS i FROM en),
-           |neg AS (SELECT a.id AS dst, b.id AS neg FROM ix a JOIN ix b
-           |        ON a.i % (SELECT COUNT(*) FROM en) + 1 = b.i),
-           |ed AS (SELECT src, rel, dst, neg FROM te JOIN neg USING (dst)),
-           |dm AS MATERIALIZED (SELECT src, rel, dst, neg, i,
-           |         SIN((src % 9973 + 1) * i * 0.017 + $ENT_SEED) AS h,
-           |         SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED) AS r,
-           |         SIN((dst % 9973 + 1) * i * 0.017 + $ENT_SEED) AS t,
-           |         SIN((neg % 9973 + 1) * i * 0.017 + $ENT_SEED) AS tn
-           |       FROM ed CROSS JOIN generate_series(1, $DIM) g(i)),
-           |sc AS (SELECT src, rel, dst, neg,
-           |         SUM(ABS(h + r - t)) AS dp, SUM(ABS(h + r - tn)) AS dn
-           |       FROM dm GROUP BY 1, 2, 3, 4),
-           |vd AS (SELECT dm.*, SIGN(h + r - t) AS s, SIGN(h + r - tn) AS sp
-           |       FROM dm JOIN (SELECT src, rel, dst, neg FROM sc
-           |                     WHERE 1.0 + dp - dn > 0) vi
-           |         USING (src, rel, dst, neg)),
-           |contrib AS (SELECT 'ent' AS kind, src AS id, i, s - sp AS g FROM vd
-           |  UNION ALL SELECT 'ent', dst, i, -s FROM vd
-           |  UNION ALL SELECT 'ent', neg, i, sp FROM vd
-           |  UNION ALL SELECT 'rel', rel, i, s - sp FROM vd),
-           |gsum AS (SELECT kind, id, i, SUM(g) AS g FROM contrib GROUP BY 1, 2, 3),
-           |basee AS (SELECT 'ent' AS kind, id, i,
-           |           SIN((id % 9973 + 1) * i * 0.017 + $ENT_SEED) AS x0
-           |         FROM en CROSS JOIN generate_series(1, $DIM) g(i)
-           |         UNION ALL
-           |         SELECT 'rel', rel AS id, i,
-           |           SIN((rel % 9973 + 1) * i * 0.017 + $REL_SEED)
-           |         FROM (SELECT DISTINCT rel FROM te) tr CROSS JOIN generate_series(1, $DIM) g(i)),
-           |e1 AS MATERIALIZED (SELECT kind, id, i,
-           |         ROUND(x0 - 0.03125 * COALESCE(g, 0), 6) AS x
-           |       FROM basee LEFT JOIN gsum USING (kind, id, i)),
-           |ei AS (SELECT id, i, CAST(ROUND(x * 1000000, 0) AS BIGINT) AS xi
-           |       FROM e1 WHERE kind = 'ent'),
-           |ri AS (SELECT id AS rel, i, CAST(ROUND(x * 1000000, 0) AS BIGINT) AS rxi
-           |       FROM e1 WHERE kind = 'rel'),
-           |tt AS (SELECT te.src, te.rel, te.dst,
-           |         SUM(ABS(h.xi + r.rxi - t.xi)) AS dt
-           |       FROM te JOIN ei h ON h.id = te.src
-           |               JOIN ri r ON r.rel = te.rel AND r.i = h.i
-           |               JOIN ei t ON t.id = te.dst AND t.i = h.i
-           |       GROUP BY 1, 2, 3),
-           |dd AS MATERIALIZED (SELECT te.src, te.rel, te.dst, c.id AS cand,
-           |         SUM(ABS(h.xi + r.rxi - c.xi)) AS d
-           |       FROM te JOIN ei h ON h.id = te.src
-           |               JOIN ri r ON r.rel = te.rel AND r.i = h.i
-           |               JOIN ei c ON c.i = h.i
-           |       WHERE ${graft.functions.PortableHash.md5Prefix60Sql(
-                       "CAST(c.id AS VARCHAR)")} % 2 = 0
-           |       GROUP BY 1, 2, 3, 4),
-           |rk AS (SELECT s.src, s.rel, s.dst,
-           |         1 + SUM(CASE WHEN s.d < tt.dt
-           |                       OR (s.d = tt.dt AND s.cand < s.dst)
-           |                      THEN 1 ELSE 0 END) AS rank
-           |       FROM dd s JOIN tt USING (src, rel, dst)
-           |       WHERE s.cand <> s.dst GROUP BY 1, 2, 3)
-           |SELECT rel, COUNT(*) AS n,
-           |       ROUND(SUM(ROUND(1000000.0 / rank, 0)) / 1e6 / COUNT(*), 6) AS mrr,
-           |       ROUND(SUM(CASE WHEN rank <= 10 THEN 1 ELSE 0 END) * 1.0 / COUNT(*), 6) AS hits10
-           |FROM rk GROUP BY rel""".stripMargin)),
+      Some(trainOracle.sql(Model.TransE,
+        eval = Some(Eval(Seq(10), candMod = 2))))),
 
     // Temperature-flattened language mixture (alpha = 0.5 over the skewed
     // lang column): tail languages keep everything, the en head
