@@ -60,7 +60,7 @@ object KGIndex {
     val badSrc = edges.join(entities.select(col("id").as("src")), Seq("src"), "left_anti")
     val badDst = edges.join(entities.select(col("id").as("dst")), Seq("dst"), "left_anti")
     val badRel = edges.join(relations.select(col("id").as("rel")), Seq("rel"), "left_anti")
-    badSrc.unionAll(badDst).unionAll(badRel).distinct()
+    badSrc.unionByName(badDst).unionByName(badRel).distinct()
   }
 
   /** S6: the reference's 9 eager hash multimaps as lazy grouped views.

@@ -100,6 +100,17 @@ class SystemSpec extends AnyFunSuite {
     assert(good.isEmpty)
   }
 
+  test("S5 validate returns each violating edge with its columns in place") {
+    val ents = Seq(0L, 1L, 2L).toDF("id")
+    val rels = Seq(0L).toDF("id")
+    val edges = Seq((7L, 0L, 1L), (0L, 0L, 9L), (1L, 5L, 2L), (0L, 0L, 2L))
+      .toDF("src", "rel", "dst")
+    val bad = KGIndex.validate(edges, ents, rels)
+      .select("src", "rel", "dst").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(bad == Set((7L, 0L, 1L), (0L, 0L, 9L), (1L, 5L, 2L)))
+  }
+
   test("S1 TSV triple scan") {
     val dir = java.nio.file.Files.createTempDirectory("tsv")
     val f = dir.resolve("t.tsv")
