@@ -33,8 +33,6 @@ final class GraftCorpus(val frame: DataFrame,
     TextOps.qualityScore(col(textCol)).as("quality"))
   def filterCascade(): DataFrame =
     TextOps.filterCascade(frame, idCol, textCol)
-  def classifierScore(buckets: Int = 256): DataFrame =
-    TextOps.linearQualityScore(frame, idCol, textCol, buckets)
   def langIdEval(labelCol: String = "lang"): DataFrame =
     TextOps.langIdEval(frame, labelCol, textCol)
   def lengthProfile(groupCol: String = "source"): DataFrame =
@@ -63,8 +61,6 @@ final class GraftCorpus(val frame: DataFrame,
       .join(exactDropIds().withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
       .join(dupGroups(threshold).filter(col("id") =!= col("keep_id"))
               .select(col("id").as(idCol)), Seq(idCol), "left_anti")
-  def decontaminate(bench: DataFrame): DataFrame =
-    Cluster.contamination(frame, bench, idCol, textCol)
   /** Maximal duplicated token spans (Lee et al. substring dedup). */
   def duplicatedSpans(n: Int = 8): DataFrame =
     Dedup.duplicatedSpans(frame, idCol, textCol, n)
@@ -107,8 +103,6 @@ final class GraftCorpus(val frame: DataFrame,
   // --- fingerprints / keywords / retrieval ---
   def winnow(k: Int = 4, w: Int = 4): DataFrame =
     TextOps.winnow(frame, idCol, textCol, k, w)
-  def tfidfKeywords(k: Int = 3): DataFrame =
-    CorpusStats.tfidfTopK(frame, idCol, textCol, k)
   def collocations(k: Int = 25, minCount: Long = 10): DataFrame =
     CorpusStats.pmiTopK(frame, idCol, textCol, k, minCount)
   def search(query: String, k: Int = 10): DataFrame =
@@ -132,8 +126,6 @@ final class GraftCorpus(val frame: DataFrame,
     Sampling.assignSplits(frame, idCol, weights)
   def temperatureSample(groupCol: String, alpha: Double = 0.5): DataFrame =
     Sampling.temperatureSample(frame, idCol, groupCol, alpha)
-  def sampleK(weight: org.apache.spark.sql.Column, k: Int): DataFrame =
-    Sampling.weightedSampleK(frame, idCol, weight, k)
 
   // --- SQL surface ---
   /** Register the corpus and its most composable pipeline stages as temp
@@ -155,37 +147,11 @@ final class GraftCorpus(val frame: DataFrame,
     Sampling.hashSample(frame, idCol, sampleFraction)
       .createOrReplaceTempView(prefix + "sample")
   }
-
-  // --- sketches ---
-  def heavyHitters(k: Int = 50, depth: Int = 4,
-                   width: Int = 1 << 16): DataFrame = {
-    val toks = frame
-      .select(explode(split(col(textCol), " ")).as("tok"))
-      .filter(col("tok") =!= "")
-    val sketch = graft.pipeline.Sketch.cmSketch(toks, "tok", depth, width)
-    graft.pipeline.Sketch.cmsEstimate(
-        sketch, toks.select("tok").distinct(), "tok", depth, width)
-      .orderBy(col("cms_est").desc, col("tok").asc).limit(k)
-  }
 }
 
 final class GraftVectors(val frame: DataFrame) {
   def topK(queries: DataFrame, k: Int): DataFrame =
     Similarity.bruteTopK(frame, queries, k)
-  def topKApprox(queries: DataFrame, k: Int): DataFrame =
-    Similarity.lshTopK(frame, queries, k)
-  /** IVF-PQ top-k — the composed index for corpora where even the IVF
-    * cells are too big to scan as floats (round 16). */
-  def topKIvfPq(queries: DataFrame, k: Int, nCentroids: Int,
-                dim: Int, probes: Int = 2): DataFrame =
-    Similarity.ivfPqTopK(frame, queries, k, nCentroids, dim, probes)
-  /** IVF index build (persist `partitionBy("cell")`) + the statically-
-    * pruned probe over it — the standing-index serving shape. */
-  def buildIvfIndex(nCentroids: Int, dim: Int): DataFrame =
-    Similarity.ivfAssign(frame, nCentroids, dim)
-  def probeIvfIndex(index: DataFrame, queries: DataFrame, k: Int,
-                    nCentroids: Int, dim: Int, probes: Int = 2): DataFrame =
-    Similarity.ivfProbeTopKPruned(index, queries, k, nCentroids, dim, probes)
   def hardNegatives(queries: DataFrame, k: Int): DataFrame =
     Similarity.hardNegatives(frame, queries, k)
   def classify(queries: DataFrame, k: Int = 10): DataFrame =
@@ -234,11 +200,6 @@ object GraftPipeline {
                 k: Int): DataFrame =
     Sampling.domainCap(docs, idCol, urlCol, k)
 
-  /** Z-order-vs-linear clustering study under min/max-statistics pruning
-    * (operators/DataLayout): one row per layout with scan/match counts. */
-  def zorderStudy(df: DataFrame, xCol: String, yCol: String): DataFrame =
-    graft.operators.DataLayout.zorderCompare(df, xCol, yCol)
-
   /** Snapshot CDC diff by content fingerprint: (id, status) for every
     * added/removed/changed row between two snapshots. */
   def snapshotDiff(base: DataFrame, cur: DataFrame, idCol: String,
@@ -255,18 +216,6 @@ object GraftPipeline {
   def scd2(base: DataFrame, cur: DataFrame, idCol: String,
            fingerprint: org.apache.spark.sql.Column): DataFrame =
     graft.operators.DataLayout.scd2(base, cur, idCol, fingerprint)
-
-  /** Daily time-series resampling with gap fill + LOCF over the
-    * canonical events frame. */
-  def resampleDaily(events: DataFrame): DataFrame =
-    graft.streaming.EventStreams.resampleDailyLocf(events)
-
-  /** Mergeable HyperLogLog distinct-count registers (register-wise-MAX
-    * merge ≡ union stream). */
-  def distinctSketch(items: DataFrame, keyCol: String,
-                     shardCol: org.apache.spark.sql.Column,
-                     m: Int = 256): DataFrame =
-    graft.pipeline.Sketch.hllRegisters(items, keyCol, shardCol, m)
 
   /** The driver-testdata corpus + vectors for a scale-factor dir. */
   def fromTestdata(spark: SparkSession, dir: String)

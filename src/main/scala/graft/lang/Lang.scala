@@ -34,7 +34,6 @@ sealed trait Formula {
     case Or(l, r)  => l.atoms ++ r.atoms
   }
   def terms: Vector[Term] = atoms.flatMap(a => Vector(a.head, a.tail)).distinct
-  def freeVars: Vector[Term] = terms.filter(_.isFree)
 }
 
 final case class Atomic(rel: String, head: Term, tail: Term) extends Formula {

@@ -66,14 +66,6 @@ object QAA {
     parseJson(new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8))
 
-  def toDataFrames(spark: SparkSession, w: Workload):
-      (DataFrame, DataFrame, DataFrame) = {
-    import spark.implicits._
-    (w.instances.toDF(), w.bindings.toDF(),
-     w.answers.map(a => (a.qid, a.varName, a.entity, a.is_hard))
-       .toDF("qid", "var", "entity", "is_hard"))
-  }
-
   /** Compile every instance's DNF conjuncts to batched query graphs
     * (dataloader.py:144-179 pipeline; one (qnodes, qedges) pair batching
     * all instances via qid). Disjunctive formulas contribute one graph per

@@ -109,17 +109,6 @@ object Dedup {
       .select(col("i"), col("j"), round(col("jaccard"), 6).as("jaccard"))
   }
 
-  /** MinHash signature: sig[i] = min over shingles of xxhash64(i, shingle).
-    * Pure expression — no shuffle to build signatures.
-    *
-    * IMPORTANT: pass a *column reference* to an already-projected shingle
-    * array, not the shingle-construction expression itself — the collection
-    * argument sits inside the outer lambda and is re-evaluated once per hash
-    * function (32x string building, measured 50x slowdown at 5k docs). */
-  def minhashSignature(shingleArr: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-              i => array_min(transform(shingleArr, s => xxhash64(i, s))))
-
   /** Hash families for the LSH signatures.
     *  - [[XxHash]] (default): xxhash64 — fastest (codegen'd, no string
     *    building); the choice at 100 TB scale.

@@ -21,10 +21,6 @@ object Sketch {
     PortableHash.md5Prefix60(concat(key.cast("string"), lit(s"#cms$row"))) %
       width
 
-  /** DuckDB rendering of [[cmsBucket]] for oracle SQL. */
-  def cmsBucketSql(expr: String, row: Int, width: Int): String =
-    s"${PortableHash.md5Prefix60Sql(s"$expr || '#cms' || $row")} % $width"
-
   /** Build the d×w sketch: (row, bucket, cnt). */
   def cmSketch(items: DataFrame, keyCol: String, depth: Int,
                width: Int): DataFrame =

@@ -25,6 +25,15 @@ class GraftFacadeSpec extends AnyFunSuite {
     assert(kg.validate(rels).isEmpty)
   }
 
+  test("fromTsv: base triples from TSV plus their inverse edges") {
+    val f = java.nio.file.Files.createTempFile("graft", ".tsv")
+    java.nio.file.Files.writeString(f, "0\t4\t2\n1\t4\t2\n")
+    val kg = Graft.fromTsv(spark, f.toString)
+    val got = kg.edges.select("src", "rel", "dst").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(got == Set((0L, 4L, 2L), (1L, 4L, 2L), (2L, 5L, 0L), (2L, 5L, 1L)))
+  }
+
   test("fromTestdata answer matches HardExec.run for a declared type") {
     val dir = "/root/testdata/sf0.001"
     val (_, lstr, b) = KGQueries.all.find(_._1 == "kg_2i").get

@@ -78,6 +78,16 @@ class RankingSpec extends AnyFunSuite {
     assert(got == Map(2L -> 1L, 1L -> 2L, 3L -> 3L, 4L -> 4L))
   }
 
+  test("averageByType averages each metric within a query type") {
+    val perQuery = Seq(("1p", 1.0, 1.0, 1.0, 1.0), ("1p", 0.5, 0.0, 1.0, 1.0),
+                       ("2p", 0.25, 0.0, 0.0, 1.0))
+      .toDF("type", "mrr", "hits1", "hits3", "hits10")
+    val got = Ranking.averageByType(perQuery, "type").collect()
+      .map(r => r.getString(0) -> (1 to 4).map(r.getDouble)).toMap
+    assert(got == Map("1p" -> Seq(0.75, 0.5, 1.0, 1.0),
+                      "2p" -> Seq(0.25, 0.0, 0.0, 1.0)))
+  }
+
   test("mrrHits computes MRR and Hits@k") {
     val m = Ranking.mrrHits(
       Ranking.filteredRanks(Ranking.rankAll(scores), answers))
