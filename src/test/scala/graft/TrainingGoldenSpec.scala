@@ -7,35 +7,47 @@ import scala.concurrent.duration.Duration
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Value pins for the 19 KGE training and eval rows. Each row runs
+/** Value pins for the 19 KGE training and eval rows and the 25 scored
+  * executor rows (`cqd_*`, `lmpnn_*`, `eval_cqd_mrr`). Each row runs
   * through [[SparkEntry.queries]] on the sf0.001 testdata, and the
   * SHA-256 of its sorted, rendered rows (column names first) is compared
   * with the pinned digest. The DuckDB oracle checks these rows only in
   * the `graft.Verify` sweep; this is the fast in-suite check that a
-  * refactor of `score/Training` moves no value. */
+  * refactor of `score/Training`, of the scorers or of the rows' own
+  * bodies moves no value. */
 class TrainingGoldenSpec extends AnyFunSuite {
   import SparkTestSession.spark
   import CodecGoldenSpec.{render, sha}
 
   private val dir = "/root/testdata/sf0.001"
 
-  test("the 19 train_* / train_eval_* rows match the pinned digests") {
-    // The rows run four at a time: each is a chain of small jobs, so the
-    // session's cores are mostly idle while one row plans its next job.
+  /** The rows of `pinned` whose digest differs, rendered as map entries
+    * carrying the digest they produced. The rows run four at a time: each
+    * is a chain of small jobs, so the session's cores are mostly idle
+    * while one row plans its next job. */
+  private def moved(pinned: Map[String, String]): String = {
     graft.model.KG.edges(spark, dir) // derived once, before the rows race
     val pool = Executors.newFixedThreadPool(4)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val got = try Await.result(Future.traverse(
-      TrainingGoldenSpec.Digests.keys.toSeq.sorted) { name =>
+    val got = try Await.result(Future.traverse(pinned.keys.toSeq.sorted) { name =>
       Future {
         val df = SparkEntry.queries(name)(spark, dir)
         val rows = df.collect().map(r => r.toSeq.map(render).mkString("|")).sorted
         name -> sha((df.columns.mkString("|") +: rows).mkString("\n"))
       }
     }, Duration.Inf) finally pool.shutdown()
-    val diff = got.filter { case (k, d) => TrainingGoldenSpec.Digests(k) != d }
-    assert(diff.isEmpty,
-      diff.map { case (k, d) => s"""\n    "$k" -> "$d",""" }.mkString)
+    got.filter { case (k, d) => pinned(k) != d }
+      .map { case (k, d) => s"""\n    "$k" -> "$d",""" }.mkString
+  }
+
+  test("the 19 train_* / train_eval_* rows match the pinned digests") {
+    val diff = moved(TrainingGoldenSpec.Digests)
+    assert(diff.isEmpty, diff)
+  }
+
+  test("the 25 cqd_* / lmpnn_* / eval_cqd_mrr rows match the pinned digests") {
+    val diff = moved(TrainingGoldenSpec.ScoredDigests)
+    assert(diff.isEmpty, diff)
   }
 }
 
@@ -79,5 +91,59 @@ object TrainingGoldenSpec {
       "46c872e1cfc78e43714112ea77cbf67a48aebc9072bf498e2e53370209428abd",
     "train_transe_step" ->
       "3f549faebc57fba753249d484fa177d3ab5d5436ad5c4eb74643afe51316ef53",
+  )
+
+  /** The scored executor rows: 20 `cqd_*`, 4 `lmpnn_*` and `eval_cqd_mrr`. */
+  val ScoredDigests: Map[String, String] = Map(
+    "cqd_1p_complex" ->
+      "a33003031c9321fbf1a88c1d16aed1f5ee13614f50347226037c71c2bd467f8e",
+    "cqd_1p_conve" ->
+      "49742ad3e59bf3d42f2f2e2b35233fafd733303366485eaf99a6a73be74d4757",
+    "cqd_1p_distmult" ->
+      "e717cb087e873d850d7d69d0fb178d584113631f8c1025c17b73e9ba1d70c970",
+    "cqd_1p_rescal" ->
+      "121e88f2b6a60c0688469cb5129494e1034f3b3be5d9d070693deb7f9a9d99bb",
+    "cqd_1p_rotate" ->
+      "2975ad240cb9879a0e7d59a62f9f5e3b47cfe316e07178c5c658a3b5b04016ea",
+    "cqd_1p_swtranse" ->
+      "1cf3d2455f3d00cce0940cce2beb2267b878957c76bd8ee8e17d64d1c9dc18ee",
+    "cqd_1p_transe" ->
+      "878d64026bcfc2ca7fddeb405803ba34db79764b6393548cba3c99102bd8f126",
+    "cqd_2i_godel" ->
+      "c613088eb576a32cc9d4bb57bc7dea6c20b40332181707a75d842f540be00e38",
+    "cqd_2in_transe" ->
+      "aa87a3d2d93cd027ee001482266f7f51e5e75c626914c5edb56460925e28d1a5",
+    "cqd_2p_complex" ->
+      "28e3aabf030114088d35632ccb0498df7a98cb61f841b92cf00ebf418d29f7df",
+    "cqd_2p_conve" ->
+      "d17c06477a32d3c938301ee2973b601a362a7b998cf6d555478eb781f997ed0c",
+    "cqd_2p_distmult" ->
+      "f06e6780356613c3e252d0310ea87c0c278e36355b75b6830386e9f31f97377a",
+    "cqd_2p_rescal" ->
+      "58e4d18eeb0b9b6bb491439fab34bd886185f1a54d17cc65047de10fef3a6f17",
+    "cqd_2p_rotate" ->
+      "67305f4c047917a15e3f35fdfe75dc95b108d606e1f6acfd06789e9df8238ef7",
+    "cqd_2p_swtranse" ->
+      "a1735e7b361fae2d97f3bf9ce6b75c17bb8b7c8eec314a061c2a8b3fb008fa7b",
+    "cqd_2p_transe" ->
+      "05d57cc48c2a4821f98653b90507ac1a96046170c6ba29b12da0096217c59023",
+    "cqd_2u_transe" ->
+      "878d64026bcfc2ca7fddeb405803ba34db79764b6393548cba3c99102bd8f126",
+    "cqd_3c_beam" ->
+      "7779bf1df4494cc1c52be740aace91b7402a5f765936692154fee9918056cafe",
+    "cqd_3p_transe" ->
+      "9cef9641ebbf04fe202168661521b10f357f4d0e60ca5fde046918fa5b2e88cb",
+    "cqd_batch_2p" ->
+      "d6ad47763dba3f38d065782c07a58fe16582412a2f1dbf1ba1b4b663d9569443",
+    "eval_cqd_mrr" ->
+      "53812afbe5c53cee3b3ea16640ca4e22525abf833bfd3d78a7eb486ba2d4037b",
+    "lmpnn_1p_bias" ->
+      "7e59971bd02ff544692509fa6d2565e57407236888633cfb827e454297c5168c",
+    "lmpnn_1p_mlp" ->
+      "40f672f85280a9b4b7e5a2f1b6b550b751b3c1c9de51ead4b60e45918716876a",
+    "lmpnn_2in" ->
+      "ad50d144e854d02039e4c617e38863621e6021e6bf99ee8872f658999a3ae098",
+    "lmpnn_2p" ->
+      "655323542c156d3d833a1778587c0a06fbb3d5f76f73e0bf73e794c64968cbad",
   )
 }
