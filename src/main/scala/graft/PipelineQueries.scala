@@ -4,12 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.exec.CQDBeam
+import graft.exec.{CQDBeam, CQDBeamBatched, LMPNN}
+import graft.lang.{Normalize, Parser, QueryGraph}
 import graft.metric.Ranking
 import graft.model.KG
 import graft.pipeline.{Dedup, Similarity, TextOps}
-import graft.score.{DistMult, Embeddings, Training, TransE}
+import graft.score.{ConvE, Embeddings, KGEModel, NativeComplEx,
+  NativeDistMult, NativeRescal, NativeRotatE, NativeSWTransE, NativeTransE,
+  Training, TransE}
 import graft.score.Training.{Model, Optimizer}
+import graft.ScoredOracle.Net
 import graft.TrainingOracle.Eval
 
 /** Non-KG-logic operator demos over the driver testdata: aggregations
@@ -72,42 +76,68 @@ object PipelineQueries {
           .as(s"hits$k")): _*)
   }
 
-  private def supplierEnts(s: SparkSession, dir: String): DataFrame =
-    Embeddings.deterministic(
-      t(s, dir, "supplier").select(
-        (lit(KG.TAG_SUPPLIER * KG.TAG_BASE) + col("s_suppkey")).cast("long").as("id")),
-      "id", DIM, ENT_SEED)
-
-  private def relEmb(s: SparkSession): DataFrame =
-    Embeddings.deterministic(s.range(22).toDF("id"), "id", DIM, REL_SEED)
-
-  /** Top-10 by rounded score: orderBy+limit plans as TakeOrderedAndProject
-    * (per-partition heaps + driver merge) — no single-partition global
-    * window, which would serialize the whole frame through one task. */
-  private def top10Rounded(scores: DataFrame): DataFrame =
-    scores.withColumn("score", round(col("score"), 5))
-      .orderBy(col("score").desc, col("entity").asc).limit(10)
-      .select(col("entity"), col("score"))
-
-  /** TransE score in DuckDB SQL over the deterministic embedding space. */
-  private def transeSql(h: String, r: String, tl: String): String =
-    "-SQRT(" + (0 until DIM).map { i =>
-      s"POWER(${Embeddings.sqlVecElem(h, i, ENT_SEED)} + " +
-        s"${Embeddings.sqlVecElem(r, i, REL_SEED)} - " +
-        s"${Embeddings.sqlVecElem(tl, i, ENT_SEED)}, 2)"
-    }.mkString(" + ") + ")"
-
-  private val supplierEntsSql =
-    "SELECT CAST(400000000 + s_suppkey AS BIGINT) AS id FROM supplier"
-
-  private def top10Sql(scoresCte: String): String =
-    s"""SELECT entity, score FROM (
-       |  SELECT entity, ROUND(score, 5) AS score,
-       |         ROW_NUMBER() OVER (ORDER BY ROUND(score, 5) DESC, entity) AS rn
-       |  FROM ($scoresCte) sc) t
-       |WHERE rn <= 10""".stripMargin
-
   private val S0 = KG.ent(KG.TAG_SUPPLIER, 0)
+  private val S1 = KG.ent(KG.TAG_SUPPLIER, 1)
+  private val scored = new ScoredOracle(DIM, ENT_SEED, REL_SEED)
+
+  /** The binding r1, r2, … → `rels` and s1, s2, … → `anchors`. */
+  private def bind(anchors: Long*)(rels: Long*): Map[String, Long] =
+    (rels.zipWithIndex.map { case (r, i) => s"r${i + 1}" -> r } ++
+      anchors.zipWithIndex.map { case (a, i) => s"s${i + 1}" -> a }).toMap
+
+  /** A scored row: the fused kernels registered, then `run` over the
+    * supplier entities and relations 0–21 with seeded vectors at `model`'s
+    * widths (relations: RotatE's DIM/2 phases, SWTransE's DIM/particles
+    * translations, RESCAL's DIM × DIM matrix; ConvE is 9 wide throughout). */
+  private def scoredRow(model: KGEModel)(
+      run: (SparkSession, DataFrame, DataFrame) => DataFrame): QFn = (s, dir) => {
+    graft.functions.ArrayKernels.register(s)
+    val (entDim, relDim) = model match {
+      case c: ConvE           => (c.dim, c.dim)
+      case NativeRotatE       => (DIM, DIM / 2)
+      case sw: NativeSWTransE => (DIM, DIM / sw.particles)
+      case NativeRescal       => (DIM, DIM * DIM)
+      case _                  => (DIM, DIM)
+    }
+    val ents = t(s, dir, "supplier").select(
+      (lit(KG.TAG_SUPPLIER * KG.TAG_BASE) + col("s_suppkey")).cast("long").as("id"))
+    run(s, Embeddings.deterministic(ents, "id", entDim, ENT_SEED),
+      Embeddings.deterministic(s.range(22).toDF("id"), "id", relDim, REL_SEED))
+  }
+
+  /** CQD beam search over one query; the top 10 by rounded score.
+    * orderBy+limit plans as TakeOrderedAndProject (per-partition heaps +
+    * driver merge) — no single-partition global window, which would
+    * serialize the whole frame through one task. */
+  private def cqd(lstr: String, b: Map[String, Long], model: KGEModel,
+                  beam: Int = Int.MaxValue, godel: Boolean = false): QFn =
+    scoredRow(model) { (_, ents, rels) =>
+      CQDBeam.answer(lstr, b, ents, rels, model, beam, godel)
+        .withColumn("score", round(col("score"), 5))
+        .orderBy(col("score").desc, col("entity").asc).limit(10)
+        .select(col("entity"), col("score"))
+    }
+
+  /** Batched CQD: query q of five runs `lstr` from supplier q in one plan;
+    * `tail` gets its (qid, entity, score) rows and the suppliers. */
+  private def cqdBatch(lstr: String, model: KGEModel, rels: Long*)(
+      tail: (DataFrame, DataFrame) => DataFrame): QFn =
+    scoredRow(model) { (s, ents, relEmb) =>
+      val bindings = (0L until 5L).map(q => q -> bind(KG.ent(KG.TAG_SUPPLIER, q))(rels: _*))
+      tail(CQDBeamBatched.answerBatch(s, Normalize.toDnf(Parser.parse(lstr)).head,
+        bindings, ents, relEmb, model, beam = Int.MaxValue), ents)
+    }
+
+  /** LMPNN over TransE: query q answers `lstr` under `bindings(q)`; every
+    * entity's score, rounded to 5 decimals. */
+  private def lmpnn(lstr: String, bindings: Seq[Map[String, Long]], rounds: Int,
+                    useMlp: Boolean = false, useBiasNet: Boolean = false): QFn =
+    scoredRow(TransE(2)) { (s, ents, rels) =>
+      val cq = Normalize.toDnf(Parser.parse(lstr)).head
+      val (qn, qe) = QueryGraph.compile(s, bindings.map(cq -> _))
+      LMPNN.answer(qn, qe, ents, rels, TransE(2), rounds, useMlp, useBiasNet)
+        .select(col("qid"), col("entity"), round(col("score"), 5).as("score"))
+    }
 
   /** DuckDB rendering of Similarity.hyperplaneBucket for a DOUBLE[] expr:
     * fold j = 0..planes-1 of acc*2 + (dot(v, plane_j) > 0). DuckDB lambda
@@ -177,113 +207,6 @@ object PipelineQueries {
 
   private def cosSql(a: String, b: String): String =
     s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))"
-
-  private def ev(idExpr: String, i: Int) = Embeddings.sqlVecElem(idExpr, i, ENT_SEED)
-  private def rv(idExpr: String, i: Int) = Embeddings.sqlVecElem(idExpr, i, REL_SEED)
-
-  /** ConvE 1p oracle (dim 9, hgt 2, wid 4, oc 32 → convH×convW = 2×2,
-    * flatN = 128): the full seeded forward pass in DuckDB lambdas. Weight
-    * formulas mirror [[graft.score.ConvE.weights]] segment-for-segment. */
-  private def conveOracleSql: String = {
-    import graft.score.ConvE._
-    def vec9(idExpr: String, seed: Double) =
-      s"list_transform(generate_series(0, 8), i -> SIN((($idExpr) % 9973 + 1) * (i + 1) * 0.017 + $seed))"
-    // flat index fi in 0..127: oc = fi//4, oy = (fi%4)//2, ox = fi%2;
-    // kernel index kk in 0..8: ky = kk//3, kx = kk%3; input row y = oy+ky
-    // reads the h plane when y < 2 else the r plane (1-based list index).
-    val inp = "CASE WHEN ((fi % 4) // 2 + kk // 3) < 2 " +
-      "THEN h[2 + ((fi % 4) // 2 + kk // 3) * 4 + (fi % 2 + kk % 3)] " +
-      "ELSE r[2 + ((fi % 4) // 2 + kk // 3 - 2) * 4 + (fi % 2 + kk % 3)] END"
-    s"""WITH hv AS (SELECT ${vec9("400000000", ENT_SEED)} AS h),
-       |rv AS (SELECT ${vec9("9", REL_SEED)} AS r),
-       |fl AS (SELECT list_transform(generate_series(0, 127), fi ->
-       |    GREATEST(SIN((fi // 4 + 1) * 0.013 + $ConvBSeed) * $ConvBScale +
-       |      list_sum(list_transform(generate_series(0, 8), kk ->
-       |        SIN(((fi // 4) * 9 + kk + 1) * 0.013 + $ConvWSeed) * $ConvWScale * ($inp))),
-       |      0)) AS f
-       |  FROM hv, rv),
-       |es AS (SELECT list_concat([CAST(1 AS DOUBLE)],
-       |    list_transform(generate_series(0, 7), j ->
-       |      GREATEST(SIN((j + 1) * 0.013 + $ProjBSeed) * $ProjBScale +
-       |        list_sum(list_transform(generate_series(0, 127), i ->
-       |          SIN((j * 128 + i + 1) * 0.013 + $ProjWSeed) * $ProjWScale * f[i + 1])),
-       |        0))) AS e
-       |  FROM fl),
-       |ents AS ($supplierEntsSql)
-       |${top10Sql(
-         s"SELECT id AS entity, 1 + list_dot_product(e, ${vec9("id", ENT_SEED)}) AS score FROM ents, es")}""".stripMargin
-  }
-
-  /** ConvE 2p oracle: hop 1 is the constant forward (as
-    * [[conveOracleSql]]); hop 2 re-runs the seeded forward pass PER e1
-    * (the `es2` CTE is correlated on the e1 vector) and the final score
-    * is the existential max over e1 of `sc1(e1) + ⟨est2(e1), f⟩`. */
-  private def conve2pOracleSql: String = {
-    import graft.score.ConvE._
-    def vec9(idExpr: String, seed: Double) =
-      s"list_transform(generate_series(0, 8), i -> SIN((($idExpr) % 9973 + 1) * (i + 1) * 0.017 + $seed))"
-    def inp(h: String, r: String) =
-      "CASE WHEN ((fi % 4) // 2 + kk // 3) < 2 " +
-        s"THEN $h[2 + ((fi % 4) // 2 + kk // 3) * 4 + (fi % 2 + kk % 3)] " +
-        s"ELSE $r[2 + ((fi % 4) // 2 + kk // 3 - 2) * 4 + (fi % 2 + kk % 3)] END"
-    def flatten(h: String, r: String) =
-      s"""list_transform(generate_series(0, 127), fi ->
-         |    GREATEST(SIN((fi // 4 + 1) * 0.013 + $ConvBSeed) * $ConvBScale +
-         |      list_sum(list_transform(generate_series(0, 8), kk ->
-         |        SIN(((fi // 4) * 9 + kk + 1) * 0.013 + $ConvWSeed) * $ConvWScale * (${inp(h, r)}))),
-         |      0))""".stripMargin
-    val project =
-      s"""list_concat([CAST(1 AS DOUBLE)],
-         |    list_transform(generate_series(0, 7), j ->
-         |      GREATEST(SIN((j + 1) * 0.013 + $ProjBSeed) * $ProjBScale +
-         |        list_sum(list_transform(generate_series(0, 127), i ->
-         |          SIN((j * 128 + i + 1) * 0.013 + $ProjWSeed) * $ProjWScale * f[i + 1])),
-         |        0)))""".stripMargin
-    s"""WITH ents AS ($supplierEntsSql),
-       |ev AS (SELECT id, ${vec9("id", ENT_SEED)} AS v FROM ents),
-       |hv AS (SELECT ${vec9("400000000", ENT_SEED)} AS h),
-       |rv1 AS (SELECT ${vec9("9", REL_SEED)} AS r),
-       |rv2 AS (SELECT ${vec9("8", REL_SEED)} AS r),
-       |fl1 AS (SELECT ${flatten("h", "r")} AS f FROM hv, rv1),
-       |es1 AS (SELECT $project AS e FROM fl1),
-       |s1 AS (SELECT b.id AS e1, 1 + list_dot_product(es1.e, b.v) AS sc
-       |       FROM ev b, es1),
-       |fl2 AS (SELECT b.id AS e1, ${flatten("b.v", "r")} AS f FROM ev b, rv2),
-       |es2 AS (SELECT e1, $project AS e FROM fl2)
-       |${top10Sql(
-         "SELECT f.id AS entity, MAX(s1.sc + list_dot_product(es2.e, f.v)) AS score " +
-         "FROM s1 JOIN es2 ON s1.e1 = es2.e1 CROSS JOIN ev f GROUP BY f.id")}""".stripMargin
-  }
-
-  /** DistMult 1p score in SQL: -Σ h_i·r_i·t_i (distmult.py:36-41). */
-  private def distmultSql(h: String, r: String, tl: String): String =
-    "-(" + (0 until DIM).map(i => s"${ev(h, i)} * ${rv(r, i)} * ${ev(tl, i)}")
-      .mkString(" + ") + ")"
-
-  /** ComplEx 1p score in SQL: Σ (re·re−im·im)·t_re + (re·im+im·re)·t_im
-    * over the d = DIM/2 split (complex.py:99-122). */
-  private def complexSql(h: String, r: String, tl: String): String = {
-    val d = DIM / 2
-    (0 until d).map { i =>
-      val (hr, hi) = (ev(h, i), ev(h, i + d))
-      val (rr, ri) = (rv(r, i), rv(r, i + d))
-      s"($hr * $rr - $hi * $ri) * ${ev(tl, i)} + " +
-        s"($hr * $ri + $hi * $rr) * ${ev(tl, i + d)}"
-    }.mkString(" + ")
-  }
-
-  /** RotatE 1p score in SQL (positive L2 as written, rotate.py:104-106);
-    * relation embeddings are d = DIM/2 phases. */
-  private def rotateSql(h: String, r: String, tl: String): String = {
-    val d = DIM / 2
-    "SQRT(" + (0 until d).map { i =>
-      val (hr, hi) = (ev(h, i), ev(h, i + d))
-      val ph = rv(r, i)
-      val re = s"($hr * COS($ph) - $hi * SIN($ph) - ${ev(tl, i)})"
-      val im = s"($hr * SIN($ph) + $hi * COS($ph) - ${ev(tl, i + d)})"
-      s"POWER($re, 2) + POWER($im, 2)"
-    }.mkString(" + ") + ")"
-  }
 
   /** DuckDB CTE chain reproducing Dedup.minhashLshPairs with the
     * PortableMd5 family (greatest(len-2, 1) mirrors TextOps.shingles'
@@ -975,29 +898,12 @@ object PipelineQueries {
 
     // R6+F1: CQD 1-hop full-entity ranking, TransE, exact (beam > |E|).
     // Uses the native fused kernel (identical math to TransE(2)).
-    ("cqd_1p_transe",
-      (s, dir) => {
-        graft.functions.ArrayKernels.register(s)
-        top10Rounded(CQDBeam.answer("r1(s1,f)",
-          Map("r1" -> 9L, "s1" -> S0), supplierEnts(s, dir), relEmb(s),
-          graft.score.NativeTransE, beam = Int.MaxValue))
-      },
-      Some(s"""WITH ents AS ($supplierEntsSql)
-              |${top10Sql(s"SELECT id AS entity, 1 + ${transeSql("400000000", "9", "id")} AS score FROM ents")}""".stripMargin)),
+    ("cqd_1p_transe", cqd("r1(s1,f)", bind(S0)(9), NativeTransE),
+      Some(scored.chain(NativeTransE, S0, 9))),
 
     // R5+R7: 2-hop with existential max over the intermediate variable.
-    ("cqd_2p_transe",
-      (s, dir) => {
-        graft.functions.ArrayKernels.register(s)
-        top10Rounded(CQDBeam.answer("r1(s1,e1)&r2(e1,f)",
-          Map("r1" -> 9L, "r2" -> 8L, "s1" -> S0), supplierEnts(s, dir),
-          relEmb(s), graft.score.NativeTransE, beam = Int.MaxValue))
-      },
-      Some(s"""WITH ents AS ($supplierEntsSql),
-              |s1 AS (SELECT id AS e1, 1 + ${transeSql("400000000", "9", "id")} AS sc FROM ents)
-              |${top10Sql(
-                s"SELECT f.id AS entity, MAX(s1.sc + ${transeSql("s1.e1", "8", "f.id")}) AS score " +
-                "FROM s1, ents f GROUP BY f.id")}""".stripMargin)),
+    ("cqd_2p_transe", cqd("r1(s1,e1)&r2(e1,f)", bind(S0)(9, 8), NativeTransE),
+      Some(scored.chain(NativeTransE, S0, 9, 8))),
 
     // R5 composed TWICE: the scored 3-chain (3p shape, cqd.py's
     // projection applied at two levels) — the one reference plan shape
@@ -1005,231 +911,75 @@ object PipelineQueries {
     // Two existential maxes: e1 collapses into the e2 frontier, e2 into
     // the free-variable ranking.
     ("cqd_3p_transe",
-      (s, dir) => {
-        graft.functions.ArrayKernels.register(s)
-        top10Rounded(CQDBeam.answer("r1(s1,e1)&r2(e1,e2)&r3(e2,f)",
-          Map("r1" -> 9L, "r2" -> 8L, "r3" -> 7L, "s1" -> S0),
-          supplierEnts(s, dir), relEmb(s), graft.score.NativeTransE,
-          beam = Int.MaxValue))
-      },
-      Some(s"""WITH ents AS ($supplierEntsSql),
-              |s1 AS (SELECT id AS e1, 1 + ${transeSql("400000000", "9", "id")} AS sc FROM ents),
-              |s2 AS (SELECT f.id AS e2, MAX(s1.sc + ${transeSql("s1.e1", "8", "f.id")}) AS sc
-              |       FROM s1, ents f GROUP BY f.id)
-              |${top10Sql(
-                s"SELECT f.id AS entity, MAX(s2.sc + ${transeSql("s2.e2", "7", "f.id")}) AS score " +
-                "FROM s2, ents f GROUP BY f.id")}""".stripMargin)),
+      cqd("r1(s1,e1)&r2(e1,e2)&r3(e2,f)", bind(S0)(9, 8, 7), NativeTransE),
+      Some(scored.chain(NativeTransE, S0, 9, 8, 7))),
 
     // F4 composed over two hops: ComplEx estimate-tail chaining — the
     // multi-hop frontier composition oracle-proven beyond TransE (r8
     // verdict ask: scored-path oracle depth).
-    ("cqd_2p_complex",
-      (s, dir) => {
-        graft.functions.ArrayKernels.register(s)
-        top10Rounded(CQDBeam.answer("r1(s1,e1)&r2(e1,f)",
-          Map("r1" -> 9L, "r2" -> 8L, "s1" -> S0), supplierEnts(s, dir),
-          relEmb(s), graft.score.NativeComplEx, beam = Int.MaxValue))
-      },
-      Some(s"""WITH ents AS ($supplierEntsSql),
-              |s1 AS (SELECT id AS e1, 1 + ${complexSql("400000000", "9", "id")} AS sc FROM ents)
-              |${top10Sql(
-                s"SELECT f.id AS entity, MAX(s1.sc + ${complexSql("s1.e1", "8", "f.id")}) AS score " +
-                "FROM s1, ents f GROUP BY f.id")}""".stripMargin)),
+    ("cqd_2p_complex", cqd("r1(s1,e1)&r2(e1,f)", bind(S0)(9, 8), NativeComplEx),
+      Some(scored.chain(NativeComplEx, S0, 9, 8))),
 
     // R4/F13 on the SCORED path: `!r2` flips the edge score sign
     // (abstract_kge.py:160-163) before the conjunction sum — previously
     // spec-covered only; this row proves it against a closed-form oracle:
     // score = (1 + transe(s1,r1,f)) + (1 - transe(s2,r2,f)).
-    ("cqd_2in_transe",
-      (s, dir) => {
-        graft.functions.ArrayKernels.register(s)
-        top10Rounded(CQDBeam.answer("r1(s1,f)&!r2(s2,f)",
-          Map("r1" -> 9L, "r2" -> 8L, "s1" -> S0,
-              "s2" -> KG.ent(KG.TAG_SUPPLIER, 1)),
-          supplierEnts(s, dir), relEmb(s), graft.score.NativeTransE,
-          beam = Int.MaxValue))
-      },
-      Some(s"""WITH ents AS ($supplierEntsSql)
-              |${top10Sql(
-                s"SELECT id AS entity, 2 + ${transeSql("400000000", "9", "id")} " +
-                s"- (${transeSql("400000001", "8", "id")}) AS score FROM ents")}""".stripMargin)),
+    ("cqd_2in_transe", cqd("r1(s1,f)&!r2(s2,f)", bind(S0, S1)(9, 8), NativeTransE),
+      Some(scored.negated(NativeTransE, (S0, 9), (S1, 8)))),
 
     // F3/F4/F7: the other KGE scorers as full-ranking queries, each
     // oracle-checked against its formula recomputed in SQL.
-    ("cqd_1p_distmult",
-      (s, dir) => {
-        graft.functions.ArrayKernels.register(s)
-        top10Rounded(CQDBeam.answer("r1(s1,f)",
-          Map("r1" -> 9L, "s1" -> S0), supplierEnts(s, dir), relEmb(s),
-          graft.score.NativeDistMult, beam = Int.MaxValue))
-      },
-      Some(s"""WITH ents AS ($supplierEntsSql)
-              |${top10Sql(s"SELECT id AS entity, 1 + ${distmultSql("400000000", "9", "id")} AS score FROM ents")}""".stripMargin)),
+    ("cqd_1p_distmult", cqd("r1(s1,f)", bind(S0)(9), NativeDistMult),
+      Some(scored.chain(NativeDistMult, S0, 9))),
 
-    ("cqd_1p_complex",
-      (s, dir) => {
-        graft.functions.ArrayKernels.register(s)
-        top10Rounded(CQDBeam.answer("r1(s1,f)",
-          Map("r1" -> 9L, "s1" -> S0), supplierEnts(s, dir), relEmb(s),
-          graft.score.NativeComplEx, beam = Int.MaxValue))
-      },
-      Some(s"""WITH ents AS ($supplierEntsSql)
-              |${top10Sql(s"SELECT id AS entity, 1 + ${complexSql("400000000", "9", "id")} AS score FROM ents")}""".stripMargin)),
+    ("cqd_1p_complex", cqd("r1(s1,f)", bind(S0)(9), NativeComplEx),
+      Some(scored.chain(NativeComplEx, S0, 9))),
 
-    ("cqd_1p_rotate",
-      (s, dir) => {
-        graft.functions.ArrayKernels.register(s)
-        top10Rounded(CQDBeam.answer("r1(s1,f)",
-          Map("r1" -> 9L, "s1" -> S0), supplierEnts(s, dir),
-          Embeddings.deterministic(s.range(22).toDF("id"), "id", DIM / 2,
-                                   REL_SEED),
-          graft.score.NativeRotatE, beam = Int.MaxValue))
-      },
-      Some(s"""WITH ents AS ($supplierEntsSql)
-              |${top10Sql(s"SELECT id AS entity, 1 + ${rotateSql("400000000", "9", "id")} AS score FROM ents")}""".stripMargin)),
+    ("cqd_1p_rotate", cqd("r1(s1,f)", bind(S0)(9), NativeRotatE),
+      Some(scored.chain(NativeRotatE, S0, 9))),
 
     // F7/F8 composed over two hops: the rotate estimate/score chained
     // through the existential max — multi-hop oracle depth beyond
     // TransE/ComplEx (r9 verdict ask: the remaining scorers'
     // composition was spec-only past one hop).
-    ("cqd_2p_rotate",
-      (s, dir) => {
-        graft.functions.ArrayKernels.register(s)
-        top10Rounded(CQDBeam.answer("r1(s1,e1)&r2(e1,f)",
-          Map("r1" -> 9L, "r2" -> 8L, "s1" -> S0), supplierEnts(s, dir),
-          Embeddings.deterministic(s.range(22).toDF("id"), "id", DIM / 2,
-                                   REL_SEED),
-          graft.score.NativeRotatE, beam = Int.MaxValue))
-      },
-      Some(s"""WITH ents AS ($supplierEntsSql),
-              |s1 AS (SELECT id AS e1, 1 + ${rotateSql("400000000", "9", "id")} AS sc FROM ents)
-              |${top10Sql(
-                s"SELECT f.id AS entity, MAX(s1.sc + ${rotateSql("s1.e1", "8", "f.id")}) AS score " +
-                "FROM s1, ents f GROUP BY f.id")}""".stripMargin)),
+    ("cqd_2p_rotate", cqd("r1(s1,e1)&r2(e1,f)", bind(S0)(9, 8), NativeRotatE),
+      Some(scored.chain(NativeRotatE, S0, 9, 8))),
 
     // F3 composed over two hops — completes the multi-hop oracle family
     // for the multiplicative scorer alongside transe/complex/rotate.
-    ("cqd_2p_distmult",
-      (s, dir) => {
-        graft.functions.ArrayKernels.register(s)
-        top10Rounded(CQDBeam.answer("r1(s1,e1)&r2(e1,f)",
-          Map("r1" -> 9L, "r2" -> 8L, "s1" -> S0), supplierEnts(s, dir),
-          relEmb(s), graft.score.NativeDistMult, beam = Int.MaxValue))
-      },
-      Some(s"""WITH ents AS ($supplierEntsSql),
-              |s1 AS (SELECT id AS e1, 1 + ${distmultSql("400000000", "9", "id")} AS sc FROM ents)
-              |${top10Sql(
-                s"SELECT f.id AS entity, MAX(s1.sc + ${distmultSql("s1.e1", "8", "f.id")}) AS score " +
-                "FROM s1, ents f GROUP BY f.id")}""".stripMargin)),
+    ("cqd_2p_distmult", cqd("r1(s1,e1)&r2(e1,f)", bind(S0)(9, 8), NativeDistMult),
+      Some(scored.chain(NativeDistMult, S0, 9, 8))),
 
     // F10: RESCAL bilinear h^T W_r t (intended semantics; the reference's
     // own scorer is latently broken, rescal.py:32-36). Relation embedding =
     // flattened 8x8 matrix. Oracle: the double contraction in SQL lambdas,
     // same fold nesting (inner over i, outer over j).
-    ("cqd_1p_rescal",
-      (s, dir) => {
-        graft.functions.ArrayKernels.register(s)
-        top10Rounded(CQDBeam.answer("r1(s1,f)",
-          Map("r1" -> 9L, "s1" -> S0), supplierEnts(s, dir),
-          Embeddings.deterministic(s.range(22).toDF("id"), "id", DIM * DIM,
-                                   REL_SEED),
-          graft.score.NativeRescal, beam = Int.MaxValue))
-      },
-      Some {
-        val h = "SIN((400000000 % 9973 + 1) * (i + 1) * 0.017 + " + ENT_SEED + ")"
-        val w = s"SIN((9 % 9973 + 1) * (i * $DIM + j + 1) * 0.017 + $REL_SEED)"
-        val t = "SIN((id % 9973 + 1) * (j + 1) * 0.017 + " + ENT_SEED + ")"
-        s"""WITH ents AS ($supplierEntsSql)
-           |${top10Sql(
-             s"SELECT id AS entity, 1 + list_sum(list_transform(generate_series(0, ${DIM - 1}), j -> " +
-             s"list_sum(list_transform(generate_series(0, ${DIM - 1}), i -> $h * $w)) * $t)) AS score FROM ents")}""".stripMargin
-      }),
+    ("cqd_1p_rescal", cqd("r1(s1,f)", bind(S0)(9), NativeRescal),
+      Some(scored.chain(NativeRescal, S0, 9))),
 
     // F10 composed over two hops: the bilinear double contraction
     // chained through the existential max — with cqd_2p_{transe,complex,
     // rotate,distmult,rescal,swtranse} every non-ConvE scorer now has a
     // multi-hop oracle row (ConvE's reference scorer cannot chain: its
     // estimate_tail call is the documented broken path, conve.py:143).
-    ("cqd_2p_rescal",
-      (s, dir) => {
-        graft.functions.ArrayKernels.register(s)
-        top10Rounded(CQDBeam.answer("r1(s1,e1)&r2(e1,f)",
-          Map("r1" -> 9L, "r2" -> 8L, "s1" -> S0), supplierEnts(s, dir),
-          Embeddings.deterministic(s.range(22).toDF("id"), "id", DIM * DIM,
-                                   REL_SEED),
-          graft.score.NativeRescal, beam = Int.MaxValue))
-      },
-      Some {
-        def rescalE(h: String, r: String, t: String): String = {
-          val hv = s"SIN((($h) % 9973 + 1) * (i + 1) * 0.017 + $ENT_SEED)"
-          val w = s"SIN((($r) % 9973 + 1) * (i * $DIM + j + 1) * 0.017 + $REL_SEED)"
-          val tv = s"SIN((($t) % 9973 + 1) * (j + 1) * 0.017 + $ENT_SEED)"
-          s"list_sum(list_transform(generate_series(0, ${DIM - 1}), j -> " +
-            s"list_sum(list_transform(generate_series(0, ${DIM - 1}), i -> $hv * $w)) * $tv))"
-        }
-        s"""WITH ents AS ($supplierEntsSql),
-           |s1 AS (SELECT id AS e1, 1 + ${rescalE("400000000", "9", "id")} AS sc FROM ents)
-           |${top10Sql(
-             s"SELECT f.id AS entity, MAX(s1.sc + ${rescalE("s1.e1", "8", "f.id")}) AS score " +
-             "FROM s1, ents f GROUP BY f.id")}""".stripMargin
-      }),
+    ("cqd_2p_rescal", cqd("r1(s1,e1)&r2(e1,f)", bind(S0)(9, 8), NativeRescal),
+      Some(scored.chain(NativeRescal, S0, 9, 8))),
 
     // F11 composed over two hops: the sliced-Wasserstein particle
     // distance chained through the existential max; per hop the oracle
     // re-sorts the translated particle slices per dimension exactly as
     // swtranse.py:40-68 does.
     ("cqd_2p_swtranse",
-      (s, dir) => {
-        graft.functions.ArrayKernels.register(s)
-        top10Rounded(CQDBeam.answer("r1(s1,e1)&r2(e1,f)",
-          Map("r1" -> 9L, "r2" -> 8L, "s1" -> S0), supplierEnts(s, dir),
-          Embeddings.deterministic(s.range(22).toDF("id"), "id", DIM / 2,
-                                   REL_SEED),
-          graft.score.NativeSWTransE(particles = 2), beam = Int.MaxValue))
-      },
-      Some(s"""WITH ents AS ($supplierEntsSql),
-              |ev AS (SELECT id, list_transform(generate_series(1, $DIM),
-              |         k -> SIN((id % 9973 + 1) * k * 0.017 + $ENT_SEED)) AS v FROM ents),
-              |d1 AS (SELECT e.id, di.i,
-              |   list_sort(list_transform(h.v[di.i * 2 + 1 : di.i * 2 + 2],
-              |     x -> x + SIN((9 % 9973 + 1) * (di.i + 1) * 0.017 + $REL_SEED))) AS est,
-              |   list_sort(e.v[di.i * 2 + 1 : di.i * 2 + 2]) AS tl
-              |   FROM ev e CROSS JOIN (SELECT v FROM ev WHERE id = 400000000) h
-              |   CROSS JOIN (SELECT UNNEST(GENERATE_SERIES(0, 3)) AS i) di),
-              |s1 AS (SELECT id AS e1, 1 - SUM(POWER(list_sum(list_transform(generate_series(1, 2),
-              |         k -> POWER(ABS(est[k] - tl[k]), 2))), 0.5)) AS sc
-              |       FROM d1 GROUP BY id),
-              |d2 AS (SELECT a.id AS e1, f.id AS fid, di.i,
-              |   list_sort(list_transform(a.v[di.i * 2 + 1 : di.i * 2 + 2],
-              |     x -> x + SIN((8 % 9973 + 1) * (di.i + 1) * 0.017 + $REL_SEED))) AS est,
-              |   list_sort(f.v[di.i * 2 + 1 : di.i * 2 + 2]) AS tl
-              |   FROM ev a CROSS JOIN ev f
-              |   CROSS JOIN (SELECT UNNEST(GENERATE_SERIES(0, 3)) AS i) di),
-              |h2 AS (SELECT e1, fid, -SUM(POWER(list_sum(list_transform(generate_series(1, 2),
-              |         k -> POWER(ABS(est[k] - tl[k]), 2))), 0.5)) AS sc2
-              |       FROM d2 GROUP BY e1, fid)
-              |${top10Sql(
-                "SELECT h2.fid AS entity, MAX(s1.sc + h2.sc2) AS score " +
-                "FROM s1 JOIN h2 ON s1.e1 = h2.e1 GROUP BY h2.fid")}""".stripMargin)),
+      cqd("r1(s1,e1)&r2(e1,f)", bind(S0)(9, 8), NativeSWTransE(particles = 2)),
+      Some(scored.chain(NativeSWTransE(particles = 2), S0, 9, 8))),
 
     // F12: ConvE inference with fixed seeded parameters (dim 9 → 2×4
     // planes, 32 3×3 filters; score = est·t, conve.py:74-96,140-144 with
     // the estimte_tail_emb typo repaired). The oracle replays the entire
     // forward pass — stack, convolve, ReLU, project, ReLU, bias dim — in
     // SQL lambdas over the same sin-seeded weight formulas.
-    ("cqd_1p_conve",
-      (s, dir) => {
-        graft.functions.ArrayKernels.register(s)
-        top10Rounded(CQDBeam.answer("r1(s1,f)",
-        Map("r1" -> 9L, "s1" -> S0),
-        Embeddings.deterministic(
-          t(s, dir, "supplier").select(
-            (lit(KG.TAG_SUPPLIER * KG.TAG_BASE) + col("s_suppkey"))
-              .cast("long").as("id")), "id", 9, ENT_SEED),
-        Embeddings.deterministic(s.range(22).toDF("id"), "id", 9, REL_SEED),
-        graft.score.ConvE(dim = 9), beam = Int.MaxValue))
-      },
-      Some(conveOracleSql)),
+    ("cqd_1p_conve", cqd("r1(s1,f)", bind(S0)(9), ConvE(dim = 9)),
+      Some(scored.chain(ConvE(dim = 9), S0, 9))),
 
     // F12 composed over two hops: the REPAIRED ConvE estimate path
     // (conve.py:143's estimte_tail_emb typo fixed to the evident intent)
@@ -1237,109 +987,38 @@ object PipelineQueries {
     // PER e1 in the oracle (stack e1‖r planes, convolve, ReLU, project,
     // ReLU, bias dim), so all seven scorers now have multi-hop oracle
     // rows.
-    ("cqd_2p_conve",
-      (s, dir) => {
-        graft.functions.ArrayKernels.register(s)
-        top10Rounded(CQDBeam.answer("r1(s1,e1)&r2(e1,f)",
-        Map("r1" -> 9L, "r2" -> 8L, "s1" -> S0),
-        Embeddings.deterministic(
-          t(s, dir, "supplier").select(
-            (lit(KG.TAG_SUPPLIER * KG.TAG_BASE) + col("s_suppkey"))
-              .cast("long").as("id")), "id", 9, ENT_SEED),
-        Embeddings.deterministic(s.range(22).toDF("id"), "id", 9, REL_SEED),
-        graft.score.ConvE(dim = 9), beam = Int.MaxValue))
-      },
-      Some(conve2pOracleSql)),
+    ("cqd_2p_conve", cqd("r1(s1,e1)&r2(e1,f)", bind(S0)(9, 8), ConvE(dim = 9)),
+      Some(scored.chain(ConvE(dim = 9), S0, 9, 8))),
 
     // F11: SWTransE sliced-Wasserstein (d=4 dims x m=2 particles in the
     // 8-wide entity space; relation embeddings are d-dimensional). Oracle
     // sorts both particle sets per dimension with list_sort and sums the
     // per-dimension L2 distances.
-    ("cqd_1p_swtranse",
-      (s, dir) => {
-        graft.functions.ArrayKernels.register(s)
-        top10Rounded(CQDBeam.answer("r1(s1,f)",
-          Map("r1" -> 9L, "s1" -> S0), supplierEnts(s, dir),
-          Embeddings.deterministic(s.range(22).toDF("id"), "id", DIM / 2,
-                                   REL_SEED),
-          graft.score.NativeSWTransE(particles = 2), beam = Int.MaxValue))
-      },
-      Some(s"""WITH ents AS ($supplierEntsSql),
-              |ev AS (SELECT id, list_transform(generate_series(1, $DIM),
-              |         k -> SIN((id % 9973 + 1) * k * 0.017 + $ENT_SEED)) AS v FROM ents),
-              |hv AS (SELECT v AS h FROM ev WHERE id = 400000000),
-              |dims AS (SELECT e.id, di.i,
-              |   list_sort(list_transform(hv.h[di.i * 2 + 1 : di.i * 2 + 2],
-              |     x -> x + SIN((9 % 9973 + 1) * (di.i + 1) * 0.017 + $REL_SEED))) AS est,
-              |   list_sort(e.v[di.i * 2 + 1 : di.i * 2 + 2]) AS tl
-              |   FROM ev e CROSS JOIN hv CROSS JOIN (SELECT UNNEST(GENERATE_SERIES(0, 3)) AS i) di),
-              |dd AS (SELECT id, POWER(list_sum(list_transform(generate_series(1, 2),
-              |         k -> POWER(ABS(est[k] - tl[k]), 2))), 0.5) AS dist FROM dims),
-              |sc0 AS (SELECT id AS entity, 1 - SUM(dist) AS score FROM dd GROUP BY id)
-              |${top10Sql("SELECT entity, score FROM sc0")}""".stripMargin)),
+    ("cqd_1p_swtranse", cqd("r1(s1,f)", bind(S0)(9), NativeSWTransE(particles = 2)),
+      Some(scored.chain(NativeSWTransE(particles = 2), S0, 9))),
 
     // R3 on the SCORED path: disjunction = DNF split, one beam search
     // per conjunct, combined with MAX (Gödel t-conorm on log-space
     // scores, tnorm.py:22-28 via CQDBeam.answer's union+groupBy-max) —
     // previously only the hard-set analog (kg_2u) had an oracle row.
-    ("cqd_2u_transe",
-      (s, dir) => {
-        graft.functions.ArrayKernels.register(s)
-        top10Rounded(CQDBeam.answer("r1(s1,f)|r2(s2,f)",
-          Map("r1" -> 9L, "r2" -> 8L, "s1" -> S0,
-              "s2" -> KG.ent(KG.TAG_SUPPLIER, 1)),
-          supplierEnts(s, dir), relEmb(s), graft.score.NativeTransE,
-          beam = Int.MaxValue))
-      },
-      Some(s"""WITH ents AS ($supplierEntsSql)
-              |${top10Sql(
-                s"SELECT id AS entity, GREATEST(1 + ${transeSql("400000000", "9", "id")}, " +
-                s"1 + ${transeSql("400000001", "8", "id")}) AS score FROM ents")}""".stripMargin)),
+    ("cqd_2u_transe", cqd("r1(s1,f)|r2(s2,f)", bind(S0, S1)(9, 8), NativeTransE),
+      Some(scored.union(NativeTransE, (S0, 9), (S1, 8)))),
 
     // F16 Godel t-norm: conjunction = min over edges instead of the
     // log-space sum (tnorm.py:31-33 vs cqd.py:344-355).
     ("cqd_2i_godel",
-      (s, dir) => top10Rounded(CQDBeam.answer("r1(s1,f)&r2(s2,f)",
-        Map("r1" -> 9L, "r2" -> 8L, "s1" -> S0,
-            "s2" -> KG.ent(KG.TAG_SUPPLIER, 1)),
-        supplierEnts(s, dir), relEmb(s), TransE(2), beam = Int.MaxValue,
-        godel = true)),
-      Some(s"""WITH ents AS ($supplierEntsSql)
-              |${top10Sql(
-                s"SELECT id AS entity, LEAST(LEAST(1.0, ${transeSql("400000000", "9", "id")}), " +
-                s"LEAST(1.0, ${transeSql("400000001", "8", "id")})) AS score FROM ents")}""".stripMargin)),
+      cqd("r1(s1,f)&r2(s2,f)", bind(S0, S1)(9, 8), TransE(2), godel = true),
+      Some(scored.godel(TransE(2), (S0, 9), (S1, 8)))),
 
     // Batched CQD: 5 instances of 2p in ONE plan (qid column = PyG batch).
     ("cqd_batch_2p",
-      (s, dir) => {
-        graft.functions.ArrayKernels.register(s)
-        val cq = graft.lang.Normalize.toDnf(
-          graft.lang.Parser.parse("r1(s1,e1)&r2(e1,f)")).head
-        val bindings = (0L until 5L).map(q =>
-          q -> Map("r1" -> 9L, "r2" -> 8L,
-                   "s1" -> KG.ent(KG.TAG_SUPPLIER, q)))
-        val out = graft.exec.CQDBeamBatched.answerBatch(s, cq, bindings,
-          supplierEnts(s, dir), relEmb(s), graft.score.NativeTransE,
-          beam = Int.MaxValue)
-          .withColumn("score", round(col("score"), 5))
-        val w = Window.partitionBy("qid")
-          .orderBy(col("score").desc, col("entity").asc)
-        out.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+      cqdBatch("r1(s1,e1)&r2(e1,f)", NativeTransE, 9, 8) { (out, _) =>
+        val w = Window.partitionBy("qid").orderBy(col("score").desc, col("entity").asc)
+        out.withColumn("score", round(col("score"), 5))
+          .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
           .select(col("qid"), col("entity"), col("score"))
       },
-      Some {
-        val perQ = (0 until 5).map { q =>
-          s"""SELECT $q AS qid, entity, score FROM (
-             |  SELECT entity, ROUND(score, 5) AS score,
-             |         ROW_NUMBER() OVER (ORDER BY ROUND(score, 5) DESC, entity) AS rn
-             |  FROM (SELECT f.id AS entity,
-             |               MAX(1 + ${transeSql(s"${400000000 + q}", "9", "e.id")} +
-             |                   ${transeSql("e.id", "8", "f.id")}) AS score
-             |        FROM ents e, ents f GROUP BY f.id) sc$q) t$q
-             |WHERE rn <= 3""".stripMargin
-        }
-        s"WITH ents AS ($supplierEntsSql)\n" + perQ.mkString(" UNION ALL ")
-      }),
+      Some(scored.chainTop3(NativeTransE, (0L until 5L).map(KG.ent(KG.TAG_SUPPLIER, _)), 9, 8))),
 
     // Beam-pruned cyclic query. The oracle replays the exact elimination
     // schedule (varOrder = e1, e2, f) with window top-8 beams: e1 from the
@@ -1347,32 +1026,9 @@ object PipelineQueries {
     // beam; f sums the two path edges. Validates the beam *as an algorithm*,
     // not just the final ranking.
     ("cqd_3c_beam",
-      (s, dir) => top10Rounded(CQDBeam.answer(
-        "((((r1(s1,e1))&(r2(e1,f)))&(r3(s2,e2)))&(r4(e2,f)))&(r5(e1,e2))",
-        Map("r1" -> 9L, "r2" -> 8L, "r3" -> 9L, "r4" -> 8L, "r5" -> 16L,
-            "s1" -> S0, "s2" -> KG.ent(KG.TAG_SUPPLIER, 1)),
-        supplierEnts(s, dir), relEmb(s), TransE(2), beam = 8)),
-      Some {
-        val t1 = transeSql("400000000", "9", "id")
-        val t3 = transeSql("400000001", "9", "id")
-        s"""WITH ents AS ($supplierEntsSql),
-           |e1f AS (SELECT id AS e1, sc FROM (
-           |  SELECT id, 1 + $t1 AS sc,
-           |         ROW_NUMBER() OVER (ORDER BY 1 + $t1 DESC, id) AS rn FROM ents) t
-           |  WHERE rn <= 8),
-           |e2a AS (SELECT id AS e2, 1 + $t3 AS sc1 FROM ents),
-           |e2b AS (SELECT c.id AS e2, MAX(e1f.sc + ${transeSql("e1f.e1", "16", "c.id")}) AS sc2
-           |        FROM e1f, ents c GROUP BY c.id),
-           |e2f AS (SELECT e2, sc FROM (
-           |  SELECT e2a.e2 AS e2, sc1 + sc2 AS sc,
-           |         ROW_NUMBER() OVER (ORDER BY sc1 + sc2 DESC, e2a.e2) AS rn
-           |  FROM e2a JOIN e2b ON e2a.e2 = e2b.e2) t WHERE rn <= 8),
-           |fa AS (SELECT c.id AS entity, MAX(e1f.sc + ${transeSql("e1f.e1", "8", "c.id")}) AS sa
-           |       FROM e1f, ents c GROUP BY c.id),
-           |fb AS (SELECT c.id AS entity, MAX(e2f.sc + ${transeSql("e2f.e2", "8", "c.id")}) AS sb
-           |       FROM e2f, ents c GROUP BY c.id)
-           |${top10Sql("SELECT fa.entity AS entity, sa + sb AS score FROM fa JOIN fb ON fa.entity = fb.entity")}""".stripMargin
-      }),
+      cqd("((((r1(s1,e1))&(r2(e1,f)))&(r3(s2,e2)))&(r4(e2,f)))&(r5(e1,e2))",
+        bind(S0, S1)(9, 8, 9, 8, 16), TransE(2), beam = 8),
+      Some(scored.cycle(TransE(2), 8, (S0, S1), 9, 8, 9, 8, 16))),
 
     // G4-G6: LMPNN message passing. The oracle is the analytically expanded
     // closed form of two TransE supersteps on the (inverse-augmented) 2p
@@ -1383,35 +1039,12 @@ object PipelineQueries {
     // rel^1 = r2^1 = r1). An independent derivation — if the superstep
     // plumbing mis-aggregates, this mismatches.
     ("lmpnn_2p",
-      (s, dir) => {
-        val cq = graft.lang.Normalize.toDnf(
-          graft.lang.Parser.parse("r1(s1,e1)&r2(e1,f)")).head
-        val (qn, qe) = graft.lang.QueryGraph.compile(s, Seq(
-          (cq, Map("r1" -> 9L, "r2" -> 8L, "s1" -> S0)),
-          (cq, Map("r1" -> 8L, "r2" -> 9L, "s1" -> KG.ent(KG.TAG_SUPPLIER, 1)))))
-        graft.exec.LMPNN.answer(qn, qe, supplierEnts(s, dir), relEmb(s),
-          TransE(2), rounds = 2)
-          .select(col("qid"), col("entity"), round(col("score"), 5).as("score"))
-      },
-      Some {
-        def freeState(s1: Long, r1: Int, r2: Int): String =
-          s"""list_transform(generate_series(1, $DIM), k ->
-             |    1.21 * SIN(0.5)
-             |    + SIN(($s1 % 9973 + 1) * k * 0.017 + $ENT_SEED)
-             |    + 2 * SIN(($r1 % 9973 + 1) * k * 0.017 + $REL_SEED)
-             |    + 1.1 * SIN(($r2 % 9973 + 1) * k * 0.017 + $REL_SEED))""".stripMargin
-        s"""WITH ents AS ($supplierEntsSql),
-           |fv AS (
-           |  SELECT CAST(0 AS BIGINT) AS qid, ${freeState(400000000L, 9, 8)} AS v
-           |  UNION ALL
-           |  SELECT CAST(1 AS BIGINT), ${freeState(400000001L, 8, 9)}),
-           |ev AS (SELECT id, list_transform(generate_series(1, $DIM),
-           |         k -> SIN((id % 9973 + 1) * k * 0.017 + $ENT_SEED)) AS v FROM ents)
-           |SELECT fv.qid, ev.id AS entity,
-           |  ROUND(list_dot_product(fv.v, ev.v) /
-           |        (SQRT(list_dot_product(fv.v, fv.v)) * SQRT(list_dot_product(ev.v, ev.v))), 5) AS score
-           |FROM fv CROSS JOIN ev""".stripMargin
-      }),
+      lmpnn("r1(s1,e1)&r2(e1,f)", Seq(bind(S0)(9, 8), bind(S1)(8, 9)), rounds = 2),
+      Some(scored.lmpnn(Net.Plain,
+        scored.state(1.21, "+" -> scored.ent(S0), "+ 2 *" -> scored.rel(9),
+                     "+ 1.1 *" -> scored.rel(8)),
+        scored.state(1.21, "+" -> scored.ent(S1), "+ 2 *" -> scored.rel(8),
+                     "+ 1.1 *" -> scored.rel(9))))),
 
     // G4 negation message on the ORACLE path (r9 verdict ask: the
     // `1−2·neg` coefficient, exec/LMPNN.scala superstep / lmpnn.py:49-51,
@@ -1420,59 +1053,17 @@ object PipelineQueries {
     // node with coefficient −1, so after one superstep
     // x1(f) = 0.1·vv + (ev(s1) + rv(r1)) − (ev(s2) + rv(r2)), and the
     // oracle states that closed form verbatim.
-    ("lmpnn_2in",
-      (s, dir) => {
-        val cq = graft.lang.Normalize.toDnf(
-          graft.lang.Parser.parse("r1(s1,f)&!r2(s2,f)")).head
-        val (qn, qe) = graft.lang.QueryGraph.compile(s, Seq(
-          (cq, Map("r1" -> 9L, "r2" -> 8L, "s1" -> S0,
-                   "s2" -> KG.ent(KG.TAG_SUPPLIER, 1)))))
-        graft.exec.LMPNN.answer(qn, qe, supplierEnts(s, dir), relEmb(s),
-          TransE(2), rounds = 1)
-          .select(col("qid"), col("entity"), round(col("score"), 5).as("score"))
-      },
-      Some(s"""WITH ents AS ($supplierEntsSql),
-              |x1 AS (SELECT list_transform(generate_series(1, $DIM), k ->
-              |    0.1 * SIN(0.5)
-              |    + SIN((400000000 % 9973 + 1) * k * 0.017 + $ENT_SEED)
-              |    + SIN((9 % 9973 + 1) * k * 0.017 + $REL_SEED)
-              |    - SIN((400000001 % 9973 + 1) * k * 0.017 + $ENT_SEED)
-              |    - SIN((8 % 9973 + 1) * k * 0.017 + $REL_SEED)) AS v),
-              |ev AS (SELECT id, list_transform(generate_series(1, $DIM),
-              |         k -> SIN((id % 9973 + 1) * k * 0.017 + $ENT_SEED)) AS v FROM ents)
-              |SELECT CAST(0 AS BIGINT) AS qid, ev.id AS entity,
-              |  ROUND(list_dot_product(x1.v, ev.v) /
-              |        (SQRT(list_dot_product(x1.v, x1.v)) * SQRT(list_dot_product(ev.v, ev.v))), 5) AS score
-              |FROM x1 CROSS JOIN ev""".stripMargin)),
+    ("lmpnn_2in", lmpnn("r1(s1,f)&!r2(s2,f)", Seq(bind(S0, S1)(9, 8)), rounds = 1),
+      Some(scored.lmpnn(Net.Plain, scored.state(0.1, "+" -> scored.ent(S0),
+        "+" -> scored.rel(9), "-" -> scored.ent(S1), "-" -> scored.rel(8))))),
 
     // G5 update net: one superstep through the deterministic ReLU MLP
     // (layers/mlp.py:3-18). Oracle: closed form of the single round —
     // x1(f) = 0.1·vv + ev(s1) + rv(r1) — pushed through the same weight
     // matrix w(i,j) = sin((i·dim+j+1)·0.013 + 2.2) in SQL list lambdas.
-    ("lmpnn_1p_mlp",
-      (s, dir) => {
-        val cq = graft.lang.Normalize.toDnf(
-          graft.lang.Parser.parse("r1(s1,f)")).head
-        val (qn, qe) = graft.lang.QueryGraph.compile(s, Seq(
-          (cq, Map("r1" -> 9L, "s1" -> S0))))
-        graft.exec.LMPNN.answer(qn, qe, supplierEnts(s, dir), relEmb(s),
-          TransE(2), rounds = 1, useMlp = true)
-          .select(col("qid"), col("entity"), round(col("score"), 5).as("score"))
-      },
-      Some(s"""WITH ents AS ($supplierEntsSql),
-              |x1 AS (SELECT list_transform(generate_series(1, $DIM), k ->
-              |    0.1 * SIN(0.5)
-              |    + SIN((400000000 % 9973 + 1) * k * 0.017 + $ENT_SEED)
-              |    + SIN((9 % 9973 + 1) * k * 0.017 + $REL_SEED)) AS v),
-              |m AS (SELECT list_transform(generate_series(0, ${DIM - 1}), j -> greatest(0.0,
-              |    list_sum(list_transform(generate_series(0, ${DIM - 1}), i ->
-              |      v[i + 1] * SIN((i * $DIM + j + 1) * 0.013 + 2.2))))) AS v FROM x1),
-              |ev AS (SELECT id, list_transform(generate_series(1, $DIM),
-              |         k -> SIN((id % 9973 + 1) * k * 0.017 + $ENT_SEED)) AS v FROM ents)
-              |SELECT CAST(0 AS BIGINT) AS qid, ev.id AS entity,
-              |  ROUND(list_dot_product(m.v, ev.v) /
-              |        (SQRT(list_dot_product(m.v, m.v)) * SQRT(list_dot_product(ev.v, ev.v))), 5) AS score
-              |FROM m CROSS JOIN ev""".stripMargin)),
+    ("lmpnn_1p_mlp", lmpnn("r1(s1,f)", Seq(bind(S0)(9)), rounds = 1, useMlp = true),
+      Some(scored.lmpnn(Net.Mlp,
+        scored.state(0.1, "+" -> scored.ent(S0), "+" -> scored.rel(9))))),
 
     // G5 second update-net variant: the bias-only entity-projection net
     // (LMPLayerBiasOnly, reasoner/lmpnn.py:21-42) — one superstep, then
@@ -1480,50 +1071,16 @@ object PipelineQueries {
     // scale = 0.05, bias = 0.01. The oracle expands the same closed-form
     // x1 as lmpnn_1p_mlp and replays the projection per list position.
     ("lmpnn_1p_bias",
-      (s, dir) => {
-        val cq = graft.lang.Normalize.toDnf(
-          graft.lang.Parser.parse("r1(s1,f)")).head
-        val (qn, qe) = graft.lang.QueryGraph.compile(s, Seq(
-          (cq, Map("r1" -> 9L, "s1" -> S0))))
-        graft.exec.LMPNN.answer(qn, qe, supplierEnts(s, dir), relEmb(s),
-          TransE(2), rounds = 1, useBiasNet = true)
-          .select(col("qid"), col("entity"), round(col("score"), 5).as("score"))
-      },
-      Some(s"""WITH ents AS ($supplierEntsSql),
-              |x1 AS (SELECT list_transform(generate_series(1, $DIM), k ->
-              |    0.1 * SIN(0.5)
-              |    + SIN((400000000 % 9973 + 1) * k * 0.017 + $ENT_SEED)
-              |    + SIN((9 % 9973 + 1) * k * 0.017 + $REL_SEED)) AS v),
-              |ev AS (SELECT id, list_transform(generate_series(1, $DIM),
-              |         k -> SIN((id % 9973 + 1) * k * 0.017 + $ENT_SEED)) AS v FROM ents),
-              |sc AS (SELECT ev.id AS id,
-              |         GREATEST(0.0, 0.05 * list_dot_product(x1.v, ev.v) + 0.01) AS s
-              |       FROM x1 CROSS JOIN ev),
-              |mk AS (SELECT ks.k AS k, SUM(sc.s * ev.v[ks.k]) AS mv
-              |       FROM sc JOIN ev ON sc.id = ev.id,
-              |            (SELECT UNNEST(generate_series(1, $DIM)) AS k) ks
-              |       GROUP BY ks.k),
-              |m AS (SELECT LIST(mv ORDER BY k) AS v FROM mk)
-              |SELECT CAST(0 AS BIGINT) AS qid, ev.id AS entity,
-              |  ROUND(list_dot_product(m.v, ev.v) /
-              |        (SQRT(list_dot_product(m.v, m.v)) * SQRT(list_dot_product(ev.v, ev.v))), 5) AS score
-              |FROM m CROSS JOIN ev""".stripMargin)),
+      lmpnn("r1(s1,f)", Seq(bind(S0)(9)), rounds = 1, useBiasNet = true),
+      Some(scored.lmpnn(Net.Bias,
+        scored.state(0.1, "+" -> scored.ent(S0), "+" -> scored.rel(9))))),
 
     // Scored executor -> metric pipeline end-to-end: batched CQD rankings
     // of 5 query instances scored by TransE, evaluated with the filtered
     // MRR/Hits setting against hash-partitioned easy/hard answer sets.
     ("eval_cqd_mrr",
-      (s, dir) => {
-        graft.functions.ArrayKernels.register(s)
-        val cq = graft.lang.Normalize.toDnf(
-          graft.lang.Parser.parse("r1(s1,e1)&r2(e1,f)")).head
-        val bindings = (0L until 5L).map(q =>
-          q -> Map("r1" -> 9L, "r2" -> 8L, "s1" -> KG.ent(KG.TAG_SUPPLIER, q)))
-        val scores = graft.exec.CQDBeamBatched.answerBatch(s, cq, bindings,
-          supplierEnts(s, dir), relEmb(s), graft.score.NativeTransE,
-          beam = Int.MaxValue)
-        val ents = supplierEnts(s, dir)
-        val answers = s.range(5).toDF("qid").crossJoin(ents)
+      cqdBatch("r1(s1,e1)&r2(e1,f)", NativeTransE, 9, 8) { (scores, ents) =>
+        val answers = ents.sparkSession.range(5).toDF("qid").crossJoin(ents)
           .filter(col("id") % 7 === col("qid") % 7)
           .select(col("qid"), col("id").as("entity"),
                   (col("id") % 3 === 0).as("is_hard"))
@@ -1533,32 +1090,7 @@ object PipelineQueries {
                   round(col("hits3"), 6).as("hits3"),
                   round(col("hits10"), 6).as("hits10"))
       },
-      Some {
-        val sc = s"1 + ${transeSql("400000000 + q.q", "9", "e.id")} + " +
-          s"${transeSql("e.id", "8", "f.id")}"
-        s"""WITH ents AS ($supplierEntsSql),
-           |qs AS (SELECT UNNEST(GENERATE_SERIES(0, 4)) AS q),
-           |sc AS (SELECT q.q AS qid, f.id AS entity, MAX($sc) AS score
-           |       FROM qs q, ents e, ents f GROUP BY q.q, f.id),
-           |rk AS (SELECT qid, entity,
-           |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, entity) - 1 AS rnk
-           |       FROM sc),
-           |ans AS (SELECT qid, entity, rnk, (entity % 3 = 0) AS is_hard FROM rk
-           |        WHERE entity % 7 = qid % 7),
-           |marked AS (SELECT qid, entity, rnk, is_hard,
-           |    COALESCE(SUM(CASE WHEN NOT is_hard THEN 1 ELSE 0 END) OVER
-           |      (PARTITION BY qid ORDER BY rnk ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS ne,
-           |    COALESCE(SUM(CASE WHEN is_hard THEN 1 ELSE 0 END) OVER
-           |      (PARTITION BY qid ORDER BY rnk ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS nh
-           |  FROM ans),
-           |fr AS (SELECT qid, rnk - ne - nh AS f FROM marked WHERE is_hard)
-           |SELECT CAST(qid AS BIGINT) AS qid,
-           |       ROUND(AVG(1.0 / (1 + f)), 6) AS mrr,
-           |       ROUND(AVG(CASE WHEN f < 1 THEN 1.0 ELSE 0.0 END), 6) AS hits1,
-           |       ROUND(AVG(CASE WHEN f < 3 THEN 1.0 ELSE 0.0 END), 6) AS hits3,
-           |       ROUND(AVG(CASE WHEN f < 10 THEN 1.0 ELSE 0.0 END), 6) AS hits10
-           |FROM fr GROUP BY qid""".stripMargin
-      }),
+      Some(scored.chainMrr(NativeTransE, (0L until 5L).map(KG.ent(KG.TAG_SUPPLIER, _)), 9, 8))),
 
     // O3+O4+O5+A6: full metric pipeline with the filtered setting.
     ("metric_mrr",

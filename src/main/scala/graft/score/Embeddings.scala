@@ -36,7 +36,16 @@ object Embeddings {
   /** The DuckDB-SQL rendering of [[vecElem]] — element `i` (0-based) of the
     * synthetic vector for SQL expression `idExpr`. */
   def sqlVecElem(idExpr: String, i: Int, seed: Double): String =
-    s"SIN((($idExpr) % 9973 + 1) * ${i + 1} * 0.017 + $seed)"
+    sqlElem(idExpr, (i + 1).toString, seed)
+
+  /** The DuckDB-SQL rendering of [[deterministicVec]]: the `dim`-wide
+    * synthetic vector for SQL expression `idExpr` as a DOUBLE list, whose
+    * element k (1-based) is [[sqlVecElem]] at k − 1. */
+  def sqlVec(idExpr: String, dim: Int, seed: Double): String =
+    s"list_transform(generate_series(1, $dim), k -> ${sqlElem(idExpr, "k", seed)})"
+
+  private def sqlElem(idExpr: String, k: String, seed: Double): String =
+    s"SIN((($idExpr) % 9973 + 1) * $k * 0.017 + $seed)"
 
   /** F9: random embedding init N(0, std) (rotate.py:108-115), made
     * per-element deterministic: Box-Muller on two xxhash64-derived uniforms
