@@ -15,30 +15,33 @@ object SparkEntry {
     HardExec.run(spark, "/root/testdata/sf0.001", lstr, b)
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = {
+  /** Every row once: (name, query fn, optional DuckDB oracle SQL). The KG
+    * rows' oracle is their formula rendered as SQL. */
+  private lazy val rows: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = {
     val kg = KGQueries.all.map { case (name, lstr, b) =>
-      name -> ((s: SparkSession, dir: String) => HardExec.run(s, dir, lstr, b))
-    }.toMap
-    val pipe = (PipelineQueries.entries ++ SystemQueries.entries ++
-        OperatorQueries.entries ++ LayoutQueries.entries ++
-        AacQueries.entries ++ FlacQueries.entries).map {
-      case (name, fn, _) => name -> fn
-    }.toMap
-    kg ++ pipe
+      (name, (s: SparkSession, dir: String) => HardExec.run(s, dir, lstr, b),
+       Some(OracleSql.formulaSql(lstr, b)))
+    }
+    val all = kg ++ PipelineQueries.entries ++ SystemQueries.entries ++
+      OperatorQueries.entries ++ LayoutQueries.entries ++
+      AacQueries.entries ++ FlacQueries.entries
+    requireUnique(all.map(_._1))
+    all
   }
+
+  /** Refuses a repeated row name: the maps below would keep only the last
+    * row of that name and drop the others without a word. */
+  private[graft] def requireUnique(names: Seq[String]): Unit = {
+    val repeated = names.diff(names.distinct).distinct.sorted
+    require(repeated.isEmpty, s"repeated query names: ${repeated.mkString(", ")}")
+  }
+
+  /** One entry per implemented operator from SURVEY.md §2. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    rows.map { case (name, fn, _) => name -> fn }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = {
-    val kg = KGQueries.all.map { case (name, lstr, b) =>
-      name -> OracleSql.formulaSql(lstr, b)
-    }.toMap
-    val pipe = (PipelineQueries.entries ++ SystemQueries.entries ++
-        OperatorQueries.entries ++ LayoutQueries.entries ++
-        AacQueries.entries ++ FlacQueries.entries).collect {
-      case (name, _, Some(sql)) => name -> sql
-    }.toMap
-    kg ++ pipe
-  }
+  def oracleSql: Map[String, String] =
+    rows.collect { case (name, _, Some(sql)) => name -> sql }.toMap
 }

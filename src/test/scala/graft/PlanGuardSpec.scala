@@ -80,6 +80,16 @@ class PlanGuardSpec extends AnyFunSuite {
     // Verify dump SQL the driver can never match to a parquet result).
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracles without queries: ${orphans.mkString(", ")}")
+    // The registry refuses a repeated name, so its map holds every row:
+    // 335 names, each registered once.
+    assert(SparkEntry.queries.size == 335)
+  }
+
+  test("the registry refuses a repeated query name") {
+    SparkEntry.requireUnique(Seq("a", "b", "c"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.requireUnique(Seq("b", "a", "b", "c", "a", "b")))
+    assert(e.getMessage.endsWith("repeated query names: a, b"))
   }
 
   test("no registered query plans a global object aggregate") {
