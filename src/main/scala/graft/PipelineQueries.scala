@@ -87,18 +87,11 @@ object PipelineQueries {
 
   /** A scored row: the fused kernels registered, then `run` over the
     * supplier entities and relations 0–21 with seeded vectors at `model`'s
-    * widths (relations: RotatE's DIM/2 phases, SWTransE's DIM/particles
-    * translations, RESCAL's DIM × DIM matrix; ConvE is 9 wide throughout). */
+    * widths ([[ScoredOracle.widths]]). */
   private def scoredRow(model: KGEModel)(
       run: (SparkSession, DataFrame, DataFrame) => DataFrame): QFn = (s, dir) => {
     graft.functions.ArrayKernels.register(s)
-    val (entDim, relDim) = model match {
-      case c: ConvE           => (c.dim, c.dim)
-      case NativeRotatE       => (DIM, DIM / 2)
-      case sw: NativeSWTransE => (DIM, DIM / sw.particles)
-      case NativeRescal       => (DIM, DIM * DIM)
-      case _                  => (DIM, DIM)
-    }
+    val (entDim, relDim) = ScoredOracle.widths(model, DIM)
     val ents = t(s, dir, "supplier").select(
       (lit(KG.TAG_SUPPLIER * KG.TAG_BASE) + col("s_suppkey")).cast("long").as("id"))
     run(s, Embeddings.deterministic(ents, "id", entDim, ENT_SEED),

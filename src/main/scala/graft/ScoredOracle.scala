@@ -144,18 +144,7 @@ private[graft] final class ScoredOracle(dim: Int, entSeed: Double,
   def ent(id: Long): String = Embeddings.sqlVec(id.toString, dim, entSeed)
   def rel(id: Long): String = Embeddings.sqlVec(id.toString, dim, relSeed)
 
-  private def entWidth(m: KGEModel): Int = m match {
-    case c: ConvE => c.dim
-    case _        => dim
-  }
-
-  private def relWidth(m: KGEModel): Int = m match {
-    case c: ConvE           => c.dim
-    case NativeRotatE       => dim / 2
-    case sw: NativeSWTransE => dim / sw.particles
-    case NativeRescal       => dim * dim
-    case _                  => dim
-  }
+  private def entWidth(m: KGEModel): Int = widths(m, dim)._1
 
   /** `ev` and `ctes`, then `body`. */
   private def query(width: Int, ctes: Seq[String], body: String): String =
@@ -207,7 +196,7 @@ private[graft] final class ScoredOracle(dim: Int, entSeed: Double,
     * relation's vector. */
   private def pairs(m: KGEModel, rel: Long, heads: String): String = {
     val from = s"$heads p JOIN ev h ON h.id = p.e\n    CROSS JOIN (SELECT " +
-      s"${Embeddings.sqlVec(rel.toString, relWidth(m), relSeed)} AS v) r"
+      s"${Embeddings.sqlVec(rel.toString, widths(m, dim)._2, relSeed)} AS v) r"
     m match {
       case sw: NativeSWTransE => sliced(sw.particles, from)
       case _: ConvE           => conve(from)
@@ -216,7 +205,8 @@ private[graft] final class ScoredOracle(dim: Int, entSeed: Double,
     }
   }
 
-  /** The expression scorers, on the heads' and tails' ids. */
+  /** The expression scorers: elementwise on the seeded vectors of the ids
+    * h.id, rel and t.id; RESCAL's contraction on the lists h.v, r.v, t.v. */
   private def expr(m: KGEModel, rel: Long): String = {
     def h(i: Int) = Embeddings.sqlVecElem("h.id", i, entSeed)
     def t(i: Int) = Embeddings.sqlVecElem("t.id", i, entSeed)
@@ -290,6 +280,18 @@ private[graft] final class ScoredOracle(dim: Int, entSeed: Double,
 }
 
 private[graft] object ScoredOracle {
+
+  /** The entity and relation vector widths the rows give scorer `m` when
+    * entities are `dim` wide: ConvE is 9 wide throughout; RotatE's
+    * relations are dim/2 phases, SWTransE's dim/particles translations
+    * and RESCAL's a dim × dim matrix. */
+  def widths(m: KGEModel, dim: Int): (Int, Int) = m match {
+    case c: ConvE           => (c.dim, c.dim)
+    case NativeRotatE       => (dim, dim / 2)
+    case sw: NativeSWTransE => (dim, dim / sw.particles)
+    case NativeRescal       => (dim, dim * dim)
+    case _                  => (dim, dim)
+  }
 
   /** LMPNN's update net after the last superstep: none, the ReLU MLP, or
     * the bias-only entity projection. */

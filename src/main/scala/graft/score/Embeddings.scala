@@ -41,7 +41,7 @@ object Embeddings {
   /** The DuckDB-SQL rendering of [[deterministicVec]]: the `dim`-wide
     * synthetic vector for SQL expression `idExpr` as a DOUBLE list, whose
     * element k (1-based) is [[sqlVecElem]] at k − 1. */
-  def sqlVec(idExpr: String, dim: Int, seed: Double): String =
+  private[graft] def sqlVec(idExpr: String, dim: Int, seed: Double): String =
     s"list_transform(generate_series(1, $dim), k -> ${sqlElem(idExpr, "k", seed)})"
 
   private def sqlElem(idExpr: String, k: String, seed: Double): String =
