@@ -58,6 +58,10 @@ object HardExec {
     }
   }
 
+  /** An atom's distinct variable names, in its frame's column order. */
+  private def atomVars(a: Atomic): Seq[String] =
+    Seq(a.head, a.tail).filter(_.isVar).map(_.name).distinct
+
   /** Evaluate one conjunct: returns the relation of satisfying assignments,
     * one BIGINT column per variable of the conjunct.
     *
@@ -108,11 +112,13 @@ object HardExec {
           acc.crossJoin(if (anchored) broadcast(frame) else frame)
         }
     }
-    // Negated atoms: anti-join on the atom's (bound) variables (R4).
+    // Negated atoms: anti-join on the atom's (bound) variables (R4). A
+    // variable-free negated atom joins on no key: it filters the whole
+    // conjunct.
     cq.neg.foreach { a =>
       val frame = atomFrame(edges, a, b)
       val accCols = acc.columns.toSet
-      val cols = frame.columns.toSeq
+      val cols = atomVars(a)
       require(cols.forall(accCols.contains),
         s"negated atom ${a.lstr} has variables unbound by positive atoms")
       acc = acc.join(frame, cols, "left_anti")
@@ -227,12 +233,14 @@ object HardExec {
       val trc = freshTr()
       val exc = trc + "_ex"
       val frame0 = atomFrameT(edgesT, a, b, trc)
-      val keys = frame0.columns.filterNot(_ == trc).toSeq
+      val keys = atomVars(a)
       val accCols = acc.columns.toSet
       require(keys.forall(accCols.contains),
         s"negated atom ${a.lstr} has variables unbound by positive atoms")
-      val frame = frame0.groupBy(keys.map(col): _*)
-        .agg(max(col(trc)).as(trc)).withColumn(exc, lit(1))
+      // A variable-free atom's frame already has at most one row.
+      val frame = (if (keys.isEmpty) frame0.drop("_const_hit")
+                   else frame0.groupBy(keys.map(col): _*)
+                     .agg(max(col(trc)).as(trc))).withColumn(exc, lit(1))
       acc = acc.join(frame, keys, "left")
       negChecks += ((exc, trc))
     }

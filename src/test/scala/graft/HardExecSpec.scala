@@ -24,13 +24,22 @@ class HardExecSpec extends AnyFunSuite {
 
   lazy val edgesDf = triples.toSeq.toDF("src", "rel", "dst")
 
-  def bruteForce(f: Formula, b: Binding): Set[Long] = {
+  // Deterministic train split of the same KG, for the tagged evaluator:
+  // edges as (src, rel, dst, _tr) with _tr = 1 on train edges.
+  def isTrain(t: (Long, Long, Long)): Boolean = (t._1 * 7 + t._2 * 3 + t._3) % 4 != 0
+  val trainTriples: Set[(Long, Long, Long)] = triples.filter(isTrain)
+  lazy val edgesT = triples.toSeq
+    .map { case t @ (h, r, d) => (h, r, d, if (isTrain(t)) 1 else 0) }
+    .toDF("src", "rel", "dst", "_tr")
+
+  def bruteForce(f: Formula, b: Binding,
+                 kg: Set[(Long, Long, Long)] = triples): Set[Long] = {
     val entities = (0L until nEnt).toSet
     def sat(g: Formula, asg: Map[String, Long]): Boolean = g match {
       case Atomic(r, h, t) =>
         val hv = if (h.isConst) b(h.name) else asg(h.name)
         val tv = if (t.isConst) b(t.name) else asg(t.name)
-        triples.contains((hv, b(r), tv))
+        kg.contains((hv, b(r), tv))
       case Not(g0)   => !sat(g0, asg)
       case And(l, r) => sat(l, asg) && sat(r, asg)
       case Or(l, r)  => sat(l, asg) || sat(r, asg)
@@ -43,6 +52,19 @@ class HardExecSpec extends AnyFunSuite {
         case v :: rest => entities.exists(e => anyAssign(rest, asg + (v -> e)))
       }
     entities.filter(c => anyAssign(exVars.toList, Map("f" -> c)))
+  }
+
+  /** `evalFormulaTagged`'s rows as (f, in_full, in_easy). */
+  def taggedRows(f: Formula, b: Binding): Set[(Long, Int, Int)] =
+    HardExec.evalFormulaTagged(edgesT, f, b).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
+
+  /** Brute force's tagged rows: every answer over the full or the train
+    * KG, with its membership in each. */
+  def taggedWant(f: Formula, b: Binding): Set[(Long, Int, Int)] = {
+    val (full, train) = (bruteForce(f, b), bruteForce(f, b, trainTriples))
+    def flag(in: Boolean) = if (in) 1 else 0
+    (full ++ train).map(e => (e, flag(full(e)), flag(train(e))))
   }
 
   def randomBinding(f: Formula, seed: Int): Binding = {
@@ -81,6 +103,22 @@ class HardExecSpec extends AnyFunSuite {
           .collect().map(_.getLong(0)).toSet
         assert(got == bruteForce(f, b), s"$lstr binding=$b")
       }
+    }
+  }
+
+  test("a variable-free negated atom filters the whole conjunct") {
+    val f = Parser.parse("r1(s1,f)&!r2(s1,s2)")
+    // One binding per case of the negated edge: absent, train, full-only.
+    // r1 = r2, so the positive atom has the negated edge among its answers.
+    val (tr, fullOnly) = triples.toSeq.sorted.partition(isTrain)
+    val (h0, r0, _) = tr.head
+    val absent = (h0, r0, (0L until nEnt).find(t => !triples((h0, r0, t))).get)
+    Seq(absent, tr.head, fullOnly.head).foreach { case (h, r, t) =>
+      val b = Map("r1" -> r, "r2" -> r, "s1" -> h, "s2" -> t)
+      val got = HardExec.evalFormula(edgesDf, f, b)
+        .collect().map(_.getLong(0)).toSet
+      assert(got == bruteForce(f, b), s"binding=$b")
+      assert(taggedRows(f, b) == taggedWant(f, b), s"tagged, binding=$b")
     }
   }
 
