@@ -131,9 +131,8 @@ object HardExec {
   def evalFormula(edges: DataFrame, f: Formula, b: Binding,
                   relStats: Map[Long, Long] = Map.empty): DataFrame = {
     val cqs = Normalize.toDnf(f)
-    val free = cqs.head.freeVar.name
     cqs.map(cq => evalCQ(edges, cq, b, relStats)
-         .select(col(free).cast("long").as("f")))
+         .select(col(cq.freeVar.name).cast("long").as("f")))
        .reduce(_ unionAll _)
        .distinct()
   }

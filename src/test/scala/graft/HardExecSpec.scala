@@ -72,7 +72,7 @@ class HardExecSpec extends AnyFunSuite {
     val names = (f.atoms.map(_.rel) ++ f.terms.filter(_.isConst).map(_.name)).distinct
     names.map { n =>
       if (n.startsWith("r")) n -> (2L * r.nextInt(3) + r.nextInt(2))
-      else n -> rnd.nextInt(nEnt).toLong
+      else n -> r.nextInt(nEnt).toLong
     }.toMap
   }
 
@@ -119,6 +119,49 @@ class HardExecSpec extends AnyFunSuite {
         .collect().map(_.getLong(0)).toSet
       assert(got == bruteForce(f, b), s"binding=$b")
       assert(taggedRows(f, b) == taggedWant(f, b), s"tagged, binding=$b")
+    }
+  }
+
+  /** Safe range: every conjunct has `f`, a positive atom, and no negated-
+    * atom variable that its positive atoms leave unbound. */
+  def safeRange(f: Formula): Boolean = Normalize.toDnf(f).forall { cq =>
+    val bound = cq.pos.flatMap(a => Seq(a.head, a.tail)).toSet
+    cq.pos.nonEmpty && cq.vars.contains(Term("f")) &&
+      cq.neg.forall(a => Seq(a.head, a.tail).forall(t => t.isConst || bound(t)))
+  }
+
+  // Seeded random formulas over up to 4 variables (e1–e3, f), each with
+  // its own binding, split by the safe-range fragment.
+  lazy val (safeFormulas, unsafeFormulas) = {
+    val rnd = new scala.util.Random(11)
+    val terms = RandomFormulas.terms :+ "e3"
+    Seq.fill(1200) {
+      val f = RandomFormulas.formula(rnd, 3, terms)
+      (f, randomBinding(f, rnd.nextInt()))
+    }.partition { case (f, _) => safeRange(f) }
+  }
+
+  test("random safe-range formulas match brute force in both modes") {
+    assert(safeFormulas.size >= 150)
+    val stats = triples.groupBy(_._2).map { case (r, ts) => r -> ts.size.toLong }
+    safeFormulas.foreach { case (f, b) =>
+      val want = bruteForce(f, b)
+      Seq(Map.empty[Long, Long], stats).foreach { st =>
+        val got = HardExec.evalFormula(edgesDf, f, b, st)
+          .collect().map(_.getLong(0)).toSet
+        assert(got == want, s"${f.lstr} binding=$b stats=${st.nonEmpty}")
+      }
+      assert(taggedRows(f, b) == taggedWant(f, b), s"tagged ${f.lstr} binding=$b")
+    }
+  }
+
+  test("random formulas outside the safe-range fragment are refused in both modes") {
+    assert(unsafeFormulas.nonEmpty)
+    unsafeFormulas.foreach { case (f, b) =>
+      withClue(s"${f.lstr}: ") {
+        intercept[IllegalArgumentException](HardExec.evalFormula(edgesDf, f, b))
+        intercept[IllegalArgumentException](HardExec.evalFormulaTagged(edgesT, f, b))
+      }
     }
   }
 

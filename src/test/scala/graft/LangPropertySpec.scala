@@ -7,23 +7,10 @@ import graft.lang._
   * DNF semantic equivalence against direct formula evaluation. */
 class LangPropertySpec extends AnyFunSuite {
 
-  def randomFormula(rnd: scala.util.Random, depth: Int): Formula = {
-    if (depth == 0 || rnd.nextInt(3) == 0) {
-      val rel = s"r${rnd.nextInt(4) + 1}"
-      val terms = Vector("s1", "s2", "e1", "e2", "f")
-      Atomic(rel, Term(terms(rnd.nextInt(terms.size))),
-             Term(terms(rnd.nextInt(terms.size))))
-    } else rnd.nextInt(3) match {
-      case 0 => And(randomFormula(rnd, depth - 1), randomFormula(rnd, depth - 1))
-      case 1 => Or(randomFormula(rnd, depth - 1), randomFormula(rnd, depth - 1))
-      case 2 => Not(randomFormula(rnd, depth - 1))
-    }
-  }
-
   test("parser round-trip on 300 random formulas") {
     val rnd = new scala.util.Random(3)
     (1 to 300).foreach { _ =>
-      val f = randomFormula(rnd, 3)
+      val f = RandomFormulas.formula(rnd, 3)
       assert(Parser.parse(f.lstr) == f, f.lstr)
     }
   }
@@ -32,7 +19,7 @@ class LangPropertySpec extends AnyFunSuite {
     val rnd = new scala.util.Random(5)
     val nEnt = 4
     (1 to 150).foreach { _ =>
-      val f = randomFormula(rnd, 3)
+      val f = RandomFormulas.formula(rnd, 3)
       val triples = Set.fill(14)(
         (rnd.nextInt(nEnt).toLong, rnd.nextInt(4).toLong + 1,
          rnd.nextInt(nEnt).toLong))
