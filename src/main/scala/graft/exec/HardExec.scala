@@ -1,6 +1,6 @@
 package graft.exec
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.lang._
@@ -17,6 +17,13 @@ import graft.model.KG
   * and [[OracleSql]] emits the equivalent ANSI SQL from the same structure so
   * the two can never drift.
   *
+  * One conjunct planner serves two modes. Plain mode answers over one edge
+  * relation. Tagged mode answers over edges carrying a train flag `_tr`
+  * and reports, per answer, membership in the full-KG and the train-KG
+  * answer sets in one pass (the split evaluation of `eval.Workload`).
+  * The modes share the atom frames and the join order; they differ only in
+  * the negation step and the final projection.
+  *
   * Scale design: every atom is a filter on `rel` (+ constant endpoint) over
   * the edges table — Catalyst pushes both into the parquet/cached scan.
   * Joins are equi-joins on entity-id columns; the accumulated binding
@@ -27,34 +34,43 @@ import graft.model.KG
 object HardExec {
 
   /** DataFrame of an atom's variable bindings: one column per distinct
-    * variable in the atom (R1: atom lookup).
+    * variable in the atom (R1: atom lookup). In tagged mode (`tr` set) the
+    * edge's train flag rides along as column `tr`.
     *
     * No per-atom `distinct()`: the edges relation is a *set* (KG.edges is
     * duplicate-free by construction), so each projection here is already
     * duplicate-free — and even with a duplicated input, the final
     * free-variable projection dedups, so results are unchanged; only join
     * multiplicity (perf) would suffer. Dropping it removes one shuffle per
-    * atom. */
-  private def atomFrame(edges: DataFrame, a: Atomic, b: Binding): DataFrame = {
+    * atom. Being duplicate-free also makes the train flag well-defined per
+    * assignment. */
+  private def atomFrame(edges: DataFrame, a: Atomic, b: Binding,
+                        tr: Option[String]): DataFrame = {
     val relId = b.getOrElse(a.rel,
       throw new IllegalArgumentException(s"unbound relation ${a.rel}"))
     val df = edges.filter(col("rel") === relId)
+    val flag = tr.map(col("_tr").as(_)).toSeq
     (a.head.isConst, a.tail.isConst) match {
       case (true, true) =>
-        df.filter(col("src") === b(a.head.name) && col("dst") === b(a.tail.name))
-          .select(lit(1L).as("_const_hit")).limit(1)
+        val hits = df.filter(col("src") === b(a.head.name) && col("dst") === b(a.tail.name))
+        tr match {
+          case None => hits.select(lit(1L).as("_const_hit")).limit(1)
+          // Zero-or-one row: groupBy over the matches (empty input ⇒ empty
+          // frame ⇒ the conjunct fails, like the untagged limit(1)).
+          case Some(c) => hits.groupBy(lit(1L).as("_const_hit")).agg(max(col("_tr")).as(c))
+        }
       case (true, false) =>
         df.filter(col("src") === b(a.head.name))
-          .select(col("dst").as(a.tail.name))
+          .select(col("dst").as(a.tail.name) +: flag: _*)
       case (false, true) =>
         df.filter(col("dst") === b(a.tail.name))
-          .select(col("src").as(a.head.name))
+          .select(col("src").as(a.head.name) +: flag: _*)
       case (false, false) =>
         if (a.head.name == a.tail.name)
           df.filter(col("src") === col("dst"))
-            .select(col("src").as(a.head.name))
+            .select(col("src").as(a.head.name) +: flag: _*)
         else
-          df.select(col("src").as(a.head.name), col("dst").as(a.tail.name))
+          df.select(Seq(col("src").as(a.head.name), col("dst").as(a.tail.name)) ++ flag: _*)
     }
   }
 
@@ -62,80 +78,106 @@ object HardExec {
   private def atomVars(a: Atomic): Seq[String] =
     Seq(a.head, a.tail).filter(_.isVar).map(_.name).distinct
 
-  /** Evaluate one conjunct: returns the relation of satisfying assignments,
-    * one BIGINT column per variable of the conjunct.
-    *
-    * Join order (the driver-side planner of SURVEY §4 — semantic DAG order
-    * is ours to pick, Catalyst only reorders by stats it can see):
-    * constant-anchored atoms first; then, among atoms connected to the
-    * accumulated binding relation, any atom whose variables are ALL already
-    * bound (a pure filter — it can only shrink the frontier) before atoms
-    * that introduce a new variable (joins that can grow it); ties by
-    * smallest relation cardinality (`relStats`, one cached 22-row aggregate
-    * per KG). Cyclic shapes (3c/3cm/3pcp) benefit most: the cycle-closing
-    * edge lands right after its endpoints bind instead of after another
-    * expansion. Result sets are order-independent; only intermediate sizes
-    * change. */
-  def evalCQ(edges: DataFrame, cq: CQ, b: Binding,
-             relStats: Map[Long, Long] = Map.empty): DataFrame = {
-    require(cq.pos.nonEmpty, "conjunct needs at least one positive atom")
-    def card(a: Atomic): Long = relStats.getOrElse(b(a.rel), Long.MaxValue)
+  /** Join order of a conjunct's positive atoms (the driver-side planner of
+    * SURVEY §4 — semantic DAG order is ours to pick, Catalyst only reorders
+    * by stats it can see): constant-anchored atoms first; then, among atoms
+    * sharing a variable with those already placed, any atom whose variables
+    * are ALL already bound (a pure filter — it can only shrink the
+    * frontier) before atoms that introduce a new variable (joins that can
+    * grow it); ties by smallest relation cardinality `card`. With no
+    * connected atom left, the next in constants-first order. Cyclic shapes
+    * (3c/3cm/3pcp) benefit most: the cycle-closing edge lands right after
+    * its endpoints bind instead of after another expansion. Result sets are
+    * order-independent; only intermediate sizes change. */
+  private def joinOrder(pos: Seq[Atomic], card: Atomic => Long): Seq[Atomic] = {
     val remaining = scala.collection.mutable.ListBuffer(
-      cq.pos.sortBy(a => (-Seq(a.head, a.tail).count(_.isConst), card(a))): _*)
-    var acc = atomFrame(edges, remaining.remove(0), b)
-    while (remaining.nonEmpty) {
-      val accCols = acc.columns.toSet
-      val connected = remaining.zipWithIndex.filter { case (a, _) =>
-        Seq(a.head, a.tail).exists(t => t.isVar && accCols.contains(t.name))
-      }
-      val fullyBound = connected.filter { case (a, _) =>
-        Seq(a.head, a.tail).forall(t => !t.isVar || accCols.contains(t.name))
-      }
-      val idx =
-        if (fullyBound.nonEmpty) fullyBound.minBy { case (a, _) => card(a) }._2
-        else if (connected.nonEmpty) connected.minBy { case (a, _) => card(a) }._2
-        else 0
-      val next = remaining.remove(idx)
-      val frame = atomFrame(edges, next, b)
-      val shared = frame.columns.filter(accCols.contains).toSeq
-      acc =
-        if (shared.nonEmpty) acc.join(frame, shared)
-        else {
-          // Disconnected atom: broadcast it rather than let a
-          // CartesianProduct re-scan both sides per partition pair — but
-          // only when it is constant-anchored (one entity's adjacency list,
-          // bounded by max degree; the case in every declared query type).
-          // An unanchored disconnected atom is a full relation: broadcasting
-          // that would blow the driver at scale, so it stays a plain cross
-          // join and AQE picks the physical strategy.
-          val anchored = Seq(next.head, next.tail).exists(_.isConst)
-          acc.crossJoin(if (anchored) broadcast(frame) else frame)
-        }
+      pos.sortBy(a => (-Seq(a.head, a.tail).count(_.isConst), card(a))): _*)
+    val bound = scala.collection.mutable.Set.empty[String]
+    Seq.fill(pos.size) {
+      val connected = remaining.filter(a => atomVars(a).exists(bound))
+      val fullyBound = connected.filter(a => atomVars(a).forall(bound))
+      val next =
+        if (fullyBound.nonEmpty) fullyBound.minBy(card)
+        else if (connected.nonEmpty) connected.minBy(card)
+        else remaining.head
+      remaining -= next
+      bound ++= atomVars(next)
+      next
     }
-    // Negated atoms: anti-join on the atom's (bound) variables (R4). A
-    // variable-free negated atom joins on no key: it filters the whole
-    // conjunct.
-    cq.neg.foreach { a =>
-      val frame = atomFrame(edges, a, b)
-      val accCols = acc.columns.toSet
-      val cols = atomVars(a)
-      require(cols.forall(accCols.contains),
-        s"negated atom ${a.lstr} has variables unbound by positive atoms")
-      acc = acc.join(frame, cols, "left_anti")
-    }
-    acc.drop("_const_hit")
   }
 
-  /** Evaluate a full formula: DNF -> per-conjunct eval -> union -> distinct
-    * projection onto the free variable, output column `f`. */
-  def evalFormula(edges: DataFrame, f: Formula, b: Binding,
-                  relStats: Map[Long, Long] = Map.empty): DataFrame = {
-    val cqs = Normalize.toDnf(f)
-    cqs.map(cq => evalCQ(edges, cq, b, relStats)
-         .select(col(cq.freeVar.name).cast("long").as("f")))
-       .reduce(_ unionAll _)
-       .distinct()
+  /** Plan one conjunct. Plain mode returns its answers as column `f` (one
+    * row per satisfying assignment). Tagged mode returns
+    * `(f, _in_full ∈ {0,1}, _in_easy ∈ {0,1})` per satisfying assignment:
+    * an assignment is train-derivable iff every positive atom's edge is a
+    * train edge AND no negated atom matches a train edge; it is a full
+    * answer iff no negated atom matches any edge. (Train answers are NOT a
+    * subset of full answers under negation: removing train edges can admit
+    * new answers — both memberships are computed independently.) */
+  private def evalCQ(edges: DataFrame, cq: CQ, b: Binding,
+                     relStats: Map[Long, Long], tagged: Boolean): DataFrame = {
+    require(cq.pos.nonEmpty, "conjunct needs at least one positive atom")
+    val free = col(cq.freeVar.name).cast("long").as("f")
+    // Tagged mode: the n-th atom framed (the positive ones in join order,
+    // then the negated ones) carries its train flag as `_tr<n>`.
+    var n = 0
+    def frame(a: Atomic): DataFrame = {
+      n += 1
+      atomFrame(edges, a, b, if (tagged) Some(s"_tr$n") else None)
+    }
+    val order = joinOrder(cq.pos, a => relStats.getOrElse(b(a.rel), Long.MaxValue))
+    var acc = order.tail.foldLeft(frame(order.head)) { (acc, a) =>
+      val next = frame(a)
+      val shared = next.columns.filter(acc.columns.contains).toSeq
+      if (shared.nonEmpty) acc.join(next, shared)
+      else {
+        // Disconnected atom: broadcast it rather than let a
+        // CartesianProduct re-scan both sides per partition pair — but
+        // only when it is constant-anchored (one entity's adjacency list,
+        // bounded by max degree; the case in every declared query type).
+        // An unanchored disconnected atom is a full relation: broadcasting
+        // that would blow the driver at scale, so it stays a plain cross
+        // join and AQE picks the physical strategy.
+        val anchored = Seq(a.head, a.tail).exists(_.isConst)
+        acc.crossJoin(if (anchored) broadcast(next) else next)
+      }
+    }
+    val posTrain = (1 to n).map(i => col(s"_tr$i") === 1).reduce(_ && _)
+    // Negated atoms (R4), joined on the atom's variables: plain mode
+    // anti-joins; tagged mode left-joins the per-key (exists, any-train)
+    // aggregate. A variable-free negated atom joins on no key: it filters
+    // the whole conjunct (its frame already has at most one row).
+    val negTr = cq.neg.map { a =>
+      val keys = atomVars(a)
+      require(keys.forall(acc.columns.contains),
+        s"negated atom ${a.lstr} has variables unbound by positive atoms")
+      val neg = frame(a)
+      val tr = s"_tr$n"
+      acc =
+        if (!tagged) acc.join(neg, keys, "left_anti")
+        else acc.join((if (keys.isEmpty) neg.drop("_const_hit")
+                       else neg.groupBy(keys.map(col): _*).agg(max(col(tr)).as(tr)))
+                        .withColumn(tr + "_ex", lit(1)), keys, "left")
+      tr
+    }
+    if (!tagged) acc.select(free)
+    else acc.select(free,
+      negTr.map(t => col(t + "_ex").isNull).foldLeft(lit(true))(_ && _)
+        .cast("int").as("_in_full"),
+      negTr.map(t => coalesce(col(t), lit(0)) === 0).foldLeft(posTrain)(_ && _)
+        .cast("int").as("_in_easy"))
   }
+
+  /** DNF → per-conjunct plan → union (R3). */
+  private def evalDnf(edges: DataFrame, f: Formula, b: Binding,
+                      relStats: Map[Long, Long], tagged: Boolean): DataFrame =
+    Normalize.toDnf(f).map(evalCQ(edges, _, b, relStats, tagged)).reduce(_ unionAll _)
+
+  /** Evaluate a full formula: the union's distinct answers, output column
+    * `f` (R5). */
+  def evalFormula(edges: DataFrame, f: Formula, b: Binding,
+                  relStats: Map[Long, Long] = Map.empty): DataFrame =
+    evalDnf(edges, f, b, relStats, tagged = false).distinct()
 
   /** End-to-end: derive the KG edges from `dir` and answer the lstr query,
     * with cached relation-cardinality stats driving the atom order. */
@@ -143,131 +185,17 @@ object HardExec {
     evalFormula(KG.edges(spark, dir), Parser.parse(lstr), b,
                 KG.relStats(spark, dir))
 
-  // ---- tagged train/full split evaluation (one pass for two KGs) -------
-
-  /** [[atomFrame]] over a tagged edge relation `(src, rel, dst, _tr)`,
-    * keeping the train flag as column `trAs`. Per-atom frames remain
-    * duplicate-free on their variable columns (edges is a set), so `_tr`
-    * is well-defined per assignment. */
-  private def atomFrameT(edges: DataFrame, a: Atomic, b: Binding,
-                         trAs: String): DataFrame = {
-    val relId = b.getOrElse(a.rel,
-      throw new IllegalArgumentException(s"unbound relation ${a.rel}"))
-    val df = edges.filter(col("rel") === relId)
-    (a.head.isConst, a.tail.isConst) match {
-      case (true, true) =>
-        // Zero-or-one row: groupBy over the matches (empty input ⇒ empty
-        // frame ⇒ the conjunct fails, like the untagged limit(1)).
-        df.filter(col("src") === b(a.head.name) && col("dst") === b(a.tail.name))
-          .groupBy(lit(1L).as("_const_hit"))
-          .agg(max(col("_tr")).as(trAs))
-      case (true, false) =>
-        df.filter(col("src") === b(a.head.name))
-          .select(col("dst").as(a.tail.name), col("_tr").as(trAs))
-      case (false, true) =>
-        df.filter(col("dst") === b(a.tail.name))
-          .select(col("src").as(a.head.name), col("_tr").as(trAs))
-      case (false, false) =>
-        if (a.head.name == a.tail.name)
-          df.filter(col("src") === col("dst"))
-            .select(col("src").as(a.head.name), col("_tr").as(trAs))
-        else
-          df.select(col("src").as(a.head.name), col("dst").as(a.tail.name),
-                    col("_tr").as(trAs))
-    }
-  }
-
-  /** Evaluate one conjunct over tagged edges and report, per free-variable
-    * answer `f`, membership in the FULL-KG answer set and in the TRAIN-KG
-    * answer set — ONE join pipeline instead of two evaluations. An
-    * assignment is train-derivable iff every positive atom's edge is a
-    * train edge AND no negated atom matches a train edge; it is a full
-    * answer iff no negated atom matches any edge. (Note train answers are
-    * NOT a subset of full answers under negation: removing train edges can
-    * admit new answers — both memberships are computed independently.)
-    * Join ordering is identical to [[evalCQ]]. Returns
-    * `(f, _in_full ∈ {0,1}, _in_easy ∈ {0,1})` with one row per
-    * satisfying assignment (callers aggregate by `f`). */
-  def evalCQTagged(edgesT: DataFrame, cq: CQ, b: Binding,
-                   relStats: Map[Long, Long] = Map.empty): DataFrame = {
-    require(cq.pos.nonEmpty, "conjunct needs at least one positive atom")
-    def card(a: Atomic): Long = relStats.getOrElse(b(a.rel), Long.MaxValue)
-    var trIdx = 0
-    def freshTr(): String = { trIdx += 1; s"_tr$trIdx" }
-    val trCols = scala.collection.mutable.ListBuffer.empty[String]
-
-    val remaining = scala.collection.mutable.ListBuffer(
-      cq.pos.sortBy(a => (-Seq(a.head, a.tail).count(_.isConst), card(a))): _*)
-    var acc = {
-      val c = freshTr(); trCols += c
-      atomFrameT(edgesT, remaining.remove(0), b, c)
-    }
-    while (remaining.nonEmpty) {
-      val accCols = acc.columns.toSet
-      val connected = remaining.zipWithIndex.filter { case (a, _) =>
-        Seq(a.head, a.tail).exists(t => t.isVar && accCols.contains(t.name))
-      }
-      val fullyBound = connected.filter { case (a, _) =>
-        Seq(a.head, a.tail).forall(t => !t.isVar || accCols.contains(t.name))
-      }
-      val idx =
-        if (fullyBound.nonEmpty) fullyBound.minBy { case (a, _) => card(a) }._2
-        else if (connected.nonEmpty) connected.minBy { case (a, _) => card(a) }._2
-        else 0
-      val next = remaining.remove(idx)
-      val c = freshTr(); trCols += c
-      val frame = atomFrameT(edgesT, next, b, c)
-      val shared = frame.columns.filter(x => x != c && accCols.contains(x)).toSeq
-      acc =
-        if (shared.nonEmpty) acc.join(frame, shared)
-        else {
-          val anchored = Seq(next.head, next.tail).exists(_.isConst)
-          acc.crossJoin(if (anchored) broadcast(frame) else frame)
-        }
-    }
-    // Negated atoms: left join against the per-key (exists, any-train)
-    // aggregate — the tagged twin of the anti-join.
-    val negChecks = scala.collection.mutable.ListBuffer.empty[(String, String)]
-    cq.neg.foreach { a =>
-      val trc = freshTr()
-      val exc = trc + "_ex"
-      val frame0 = atomFrameT(edgesT, a, b, trc)
-      val keys = atomVars(a)
-      val accCols = acc.columns.toSet
-      require(keys.forall(accCols.contains),
-        s"negated atom ${a.lstr} has variables unbound by positive atoms")
-      // A variable-free atom's frame already has at most one row.
-      val frame = (if (keys.isEmpty) frame0.drop("_const_hit")
-                   else frame0.groupBy(keys.map(col): _*)
-                     .agg(max(col(trc)).as(trc))).withColumn(exc, lit(1))
-      acc = acc.join(frame, keys, "left")
-      negChecks += ((exc, trc))
-    }
-    val inFull = negChecks
-      .map { case (exc, _) => col(exc).isNull }
-      .foldLeft(lit(true))(_ && _)
-    val inEasy = negChecks
-      .map { case (_, trc) => coalesce(col(trc), lit(0)) === 0 }
-      .foldLeft(trCols.map(c => col(c) === 1).reduce(_ && _))(_ && _)
-    acc.select(col(cq.freeVar.name).cast("long").as("f"),
-               inFull.cast("int").as("_in_full"),
-               inEasy.cast("int").as("_in_easy"))
-  }
-
-  /** Full-formula tagged evaluation: DNF → per-conjunct tagged eval →
-    * union → per-answer max of both memberships. Returns
+  /** Full-formula tagged evaluation over edges `(src, rel, dst, _tr)`: the
+    * union's per-answer max of both memberships. Returns
     * `(f, in_full ∈ {0,1}, in_easy ∈ {0,1})`, one row per entity that is
     * an answer in EITHER KG. */
   def evalFormulaTagged(edgesT: DataFrame, f: Formula, b: Binding,
-                        relStats: Map[Long, Long] = Map.empty): DataFrame = {
-    val cqs = Normalize.toDnf(f)
-    cqs.map(evalCQTagged(edgesT, _, b, relStats))
-      .reduce(_ unionAll _)
+                        relStats: Map[Long, Long] = Map.empty): DataFrame =
+    evalDnf(edgesT, f, b, relStats, tagged = true)
       .groupBy("f")
       .agg(max(col("_in_full")).as("in_full"),
            max(col("_in_easy")).as("in_easy"))
       .filter(col("in_full") === 1 || col("in_easy") === 1)
-  }
 }
 
 /** ANSI-SQL generator mirroring [[HardExec]] for the DuckDB oracle. */
