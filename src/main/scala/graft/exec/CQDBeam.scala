@@ -12,7 +12,7 @@ import graft.score._
   * re-expressed as forward variable elimination over DataFrames.
   *
   * Per variable, in the BFS schedule from constants toward the free variable
-  * (QueryGraph.varOrder):
+  * (QueryGraph.schedule):
   *   - each incoming atom scores the candidate entity set against the solved
   *     source frontier: `score(head, rel, tail)` from the pluggable KGE model
   *     (R1 scored; abstract_kge.py:100-164 tail=None mode),
@@ -67,18 +67,6 @@ object CQDBeam {
     *              max either way. */
   def answerCQ(cq: CQ, b: Binding, ents: DataFrame, rels: DataFrame,
                model: KGEModel, beam: Int, godel: Boolean = false): DataFrame = {
-    val order = QueryGraph.varOrder(cq)
-    val varRank = order.zipWithIndex.toMap
-    val atoms = cq.pos.map(a => (a, false)) ++ cq.neg.map(a => (a, true))
-
-    // Atom is processed when its later-scheduled variable endpoint is solved
-    // (cycle back-edges thereby become ordinary incoming edges; cqd.py:134-145).
-    def procVar(a: Atomic): String = {
-      val vs = Seq(a.head, a.tail).filter(_.isVar).map(_.name)
-      require(vs.nonEmpty, s"atom ${a.lstr} has no variable")
-      vs.maxBy(varRank)
-    }
-
     val cand = ents.select(col("id").as("_cand"), col("vec").as("_cvec"))
     val frontiers = scala.collection.mutable.Map.empty[String, DataFrame]
     // Whether a frontier is PROVABLY ≤ broadcastFrontierMaxRows rows
@@ -103,18 +91,13 @@ object CQDBeam {
                   col("vec").as("_svec")),
          smallFrontier(t.name))
 
-    order.foreach { v =>
-      val incoming = atoms.filter { case (a, _) => procVar(a) == v }
+    QueryGraph.schedule(cq).foreach { case (v, incoming) =>
       if (incoming.isEmpty) {
         // Leaf existential: all entities, score 1 (cqd.py:160-162) — R8.
         frontiers(v) = ents.select(col("id").as("_ent"), lit(1.0).as("_score"))
         smallFrontier(v) = false
       } else {
-        val edgeFrames = incoming.map { case (a, neg) =>
-          val (srcTerm, srcIsHead) =
-            if (a.tail.isVar && a.tail.name == v)
-              (a.head, true) // head -> candidate tail
-            else (a.tail, false) // candidate head -> tail
+        val edgeFrames = incoming.map { case QueryGraph.Incoming(a, neg, srcTerm, srcIsHead) =>
           val (src, srcSmall) = frontierOf(srcTerm)
           val rvec = rels.filter(col("id") === b(a.rel))
             .select(col("vec").as("_rvec"))

@@ -31,15 +31,6 @@ object CQDBeamBatched {
                   ents: DataFrame, rels: DataFrame, model: KGEModel,
                   beam: Int): DataFrame = {
     import spark.implicits._
-    val order = QueryGraph.varOrder(cq)
-    val varRank = order.zipWithIndex.toMap
-    val atoms = cq.pos.map(a => (a, false)) ++ cq.neg.map(a => (a, true))
-
-    def procVar(a: Atomic): String = {
-      val vs = Seq(a.head, a.tail).filter(_.isVar).map(_.name)
-      vs.maxBy(varRank)
-    }
-
     val candWithVec = ents.select(col("id").as("_cand"),
                                   col("vec").as("_cvec"))
 
@@ -78,17 +69,13 @@ object CQDBeamBatched {
                 col("fr._score").as("_sscore"), col("vec").as("_svec"),
                 col("_rel"))
 
-    order.foreach { v =>
-      val incoming = atoms.filter { case (a, _) => procVar(a) == v }
+    QueryGraph.schedule(cq).foreach { case (v, incoming) =>
       if (incoming.isEmpty) {
         frontiers(v) = qids.crossJoin(
           ents.select(col("id").as("_ent"), lit(1.0).as("_score")))
         smallFrontier(v) = false
       } else {
-        val edgeFrames = incoming.map { case (a, neg) =>
-          val (srcTerm, srcIsHead) =
-            if (a.tail.isVar && a.tail.name == v) (a.head, true)
-            else (a.tail, false)
+        val edgeFrames = incoming.map { case QueryGraph.Incoming(a, neg, srcTerm, srcIsHead) =>
           val (src, srcSmall) =
             if (srcTerm.isConst)
               (constFrontier(a), nInst <= CQDBeam.broadcastFrontierMaxRows)

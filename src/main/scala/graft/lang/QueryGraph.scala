@@ -83,4 +83,27 @@ object QueryGraph {
     val ordered = unreachable ++ visited.toSeq.filterNot(_ == free) :+ free
     ordered.distinct
   }
+
+  /** An atom as CQD scores it when its variable is solved: against the
+    * solved frontier of `src`, onto that variable's candidates, which are
+    * the atom's tail when `srcIsHead`. */
+  private[graft] final case class Incoming(atom: Atomic, neg: Boolean, src: Term, srcIsHead: Boolean)
+
+  /** CQD's variable schedule: each variable in [[varOrder]] with its
+    * incoming atoms. An atom is processed when its later-scheduled variable
+    * endpoint is solved (cycle back-edges thereby become ordinary incoming
+    * edges; cqd.py:134-145); a variable with no incoming atom is a leaf
+    * existential. Refuses an atom with no variable. */
+  private[graft] def schedule(cq: CQ): Seq[(String, Seq[Incoming])] = {
+    val order = varOrder(cq)
+    val rank = order.zipWithIndex.toMap
+    val solved = (cq.pos.map((_, false)) ++ cq.neg.map((_, true))).map { case (a, neg) =>
+      val vs = Seq(a.head, a.tail).filter(_.isVar).map(_.name)
+      require(vs.nonEmpty, s"atom ${a.lstr} has no variable")
+      val v = vs.maxBy(rank)
+      v -> (if (a.tail.isVar && a.tail.name == v) Incoming(a, neg, a.head, srcIsHead = true)
+            else Incoming(a, neg, a.tail, srcIsHead = false))
+    }
+    order.map(v => v -> solved.collect { case (`v`, in) => in })
+  }
 }

@@ -69,4 +69,16 @@ class CQDBatchSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("a variable-free atom is refused as on the single path") {
+    val lstr = "r1(s1,f)&r2(s1,s2)"
+    val cq = Normalize.toDnf(Parser.parse(lstr)).head
+    val b = Map("r1" -> 0L, "r2" -> 1L, "s1" -> 4L, "s2" -> 2L)
+    val batched = intercept[IllegalArgumentException](CQDBeamBatched.answerBatch(
+      spark, cq, Seq(0L -> b), ents, rels, TransE(2), beam = 10))
+    val single = intercept[IllegalArgumentException](
+      CQDBeam.answer(lstr, b, ents, rels, TransE(2), beam = 10))
+    assert(batched.getMessage == single.getMessage)
+    assert(batched.getMessage.contains("r2(s1,s2) has no variable"))
+  }
 }
