@@ -1799,7 +1799,7 @@ object PipelineQueries {
           .withColumn("rank", col("rank").cast("long"))
       },
       Some(s"""WITH e AS ($embedsSql),
-              |cents AS (SELECT c, list_transform(generate_series(1, 64), i -> sin((c % 9973 + 1) * i * 0.017 + 2.7)) AS cv
+              |cents AS (SELECT c, ${Embeddings.sqlVec("c", 64, 2.7)} AS cv
               |          FROM generate_series(0, 7) t(c)),
               |assign AS (SELECT id, v, c AS cell,
               |             ROW_NUMBER() OVER (PARTITION BY id ORDER BY -list_dot_product(v, cv) ASC, c ASC) AS rn
@@ -1823,7 +1823,7 @@ object PipelineQueries {
           .withColumn("rank", col("rank").cast("long"))
       },
       Some(s"""WITH e AS ($embedsSql),
-              |cents AS (SELECT c, list_transform(generate_series(1, 64), i -> sin((c % 9973 + 1) * i * 0.017 + 2.7)) AS cv
+              |cents AS (SELECT c, ${Embeddings.sqlVec("c", 64, 2.7)} AS cv
               |          FROM generate_series(0, 7) t(c)),
               |assign AS (SELECT id, v, c AS cell,
               |             ROW_NUMBER() OVER (PARTITION BY id ORDER BY -list_dot_product(v, cv) ASC, c ASC) AS rn
@@ -1871,7 +1871,7 @@ object PipelineQueries {
           .withColumn("rank", col("rank").cast("long"))
       },
       Some(s"""WITH e AS ($embedsSql),
-              |cents AS (SELECT c, list_transform(generate_series(1, 64), i -> sin((c % 9973 + 1) * i * 0.017 + 2.7)) AS cv
+              |cents AS (SELECT c, ${Embeddings.sqlVec("c", 64, 2.7)} AS cv
               |          FROM generate_series(0, 7) t(c)),
               |assign AS (SELECT id, v, c AS cell,
               |             ROW_NUMBER() OVER (PARTITION BY id ORDER BY -list_dot_product(v, cv) ASC, c ASC) AS rn
@@ -1958,7 +1958,7 @@ object PipelineQueries {
           .withColumn("rank", col("rank").cast("long"))
       },
       Some(s"""WITH e AS ($embedsSql),
-              |cents AS (SELECT c, list_transform(generate_series(1, 64), i -> sin((c % 9973 + 1) * i * 0.017 + 2.7)) AS cv
+              |cents AS (SELECT c, ${Embeddings.sqlVec("c", 64, 2.7)} AS cv
               |          FROM generate_series(0, 7) t(c)),
               |assign AS (SELECT id, v, c AS cell,
               |             ROW_NUMBER() OVER (PARTITION BY id ORDER BY -list_dot_product(v, cv) ASC, c ASC) AS rn

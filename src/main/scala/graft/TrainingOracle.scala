@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.PortableHash
 import graft.model.KG
+import graft.score.Embeddings
 import graft.score.Training.{Model, Optimizer}
 
 /** DuckDB oracle SQL for the KGE training and eval rows: one CTE chain
@@ -88,7 +89,7 @@ private[graft] final class TrainingOracle(dim: Int, entSeed: Double,
       val ids = if (k.startsWith("rel")) "(SELECT DISTINCT rel AS id FROM te) tr"
                 else "en"
       s"""SELECT '$k' AS kind, id, i,
-         |    SIN((id % 9973 + 1) * i * 0.017 + ${seed(k)}) AS x
+         |    ${Embeddings.sqlElem("id", "i", seed(k))} AS x
          |  FROM $ids CROSS JOIN generate_series(1, $dim) g(i)""".stripMargin
     }.mkString("\n  UNION ALL ") + ")"
 

@@ -44,7 +44,9 @@ object Embeddings {
   private[graft] def sqlVec(idExpr: String, dim: Int, seed: Double): String =
     s"list_transform(generate_series(1, $dim), k -> ${sqlElem(idExpr, "k", seed)})"
 
-  private def sqlElem(idExpr: String, k: String, seed: Double): String =
+  /** Element `k` (a 1-based SQL expression) of the synthetic vector for
+    * `idExpr`. */
+  private[graft] def sqlElem(idExpr: String, k: String, seed: Double): String =
     s"SIN((($idExpr) % 9973 + 1) * $k * 0.017 + $seed)"
 
   /** F9: random embedding init N(0, std) (rotate.py:108-115), made
