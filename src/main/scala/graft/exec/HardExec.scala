@@ -126,10 +126,10 @@ object HardExec {
       atomFrame(edges, a, b, if (tagged) Some(s"_tr$n") else None)
     }
     val order = joinOrder(cq.pos, a => relStats.getOrElse(b(a.rel), Long.MaxValue))
-    var acc = order.tail.foldLeft(frame(order.head)) { (acc, a) =>
+    var acc = order.tail.foldLeft(frame(order.head)) { (joined, a) =>
       val next = frame(a)
-      val shared = next.columns.filter(acc.columns.contains).toSeq
-      if (shared.nonEmpty) acc.join(next, shared)
+      val shared = next.columns.filter(joined.columns.contains).toSeq
+      if (shared.nonEmpty) joined.join(next, shared)
       else {
         // Disconnected atom: broadcast it rather than let a
         // CartesianProduct re-scan both sides per partition pair — but
@@ -139,10 +139,9 @@ object HardExec {
         // that would blow the driver at scale, so it stays a plain cross
         // join and AQE picks the physical strategy.
         val anchored = Seq(a.head, a.tail).exists(_.isConst)
-        acc.crossJoin(if (anchored) broadcast(next) else next)
+        joined.crossJoin(if (anchored) broadcast(next) else next)
       }
     }
-    val posTrain = (1 to n).map(i => col(s"_tr$i") === 1).reduce(_ && _)
     // Negated atoms (R4), joined on the atom's variables: plain mode
     // anti-joins; tagged mode left-joins the per-key (exists, any-train)
     // aggregate. A variable-free negated atom joins on no key: it filters
@@ -164,7 +163,8 @@ object HardExec {
     else acc.select(free,
       negTr.map(t => col(t + "_ex").isNull).foldLeft(lit(true))(_ && _)
         .cast("int").as("_in_full"),
-      negTr.map(t => coalesce(col(t), lit(0)) === 0).foldLeft(posTrain)(_ && _)
+      negTr.map(t => coalesce(col(t), lit(0)) === 0)
+        .foldLeft(cq.pos.indices.map(i => col(s"_tr${i + 1}") === 1).reduce(_ && _))(_ && _)
         .cast("int").as("_in_easy"))
   }
 
