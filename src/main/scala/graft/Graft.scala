@@ -23,20 +23,13 @@ import graft.score.{Embeddings, KGEModel, TransE}
   * kg.registerViews()   // then: spark.sql("SELECT * FROM graft_edges ...")
   * }}}
   */
-final class GraftKG private[graft] (val spark: SparkSession, val edges: DataFrame,
-                                    val entities: DataFrame,
-                                    stats: () => Map[Long, Long]) {
-
-  def this(spark: SparkSession, edges: DataFrame, entities: DataFrame) =
-    this(spark, edges, entities, () => KG.relStatsOf(edges))
-
-  /** Relation cardinalities for `answer`'s join order, computed on first use. */
-  private lazy val relStats = stats()
+final class GraftKG(val spark: SparkSession, val edges: DataFrame,
+                    val entities: DataFrame) {
 
   /** Exact (hard-logic) EFO-1 answering: distinct entities for the free
     * variable. */
   def answer(lstr: String, binding: Binding): DataFrame =
-    HardExec.evalFormula(edges, Parser.parse(lstr), binding, relStats)
+    HardExec.evalFormula(edges, Parser.parse(lstr), binding)
 
   /** Default embedding tables: the deterministic synthetic space (entity
     * seed 0.3, relation seed 1.7 over a 64-relation universe) unless real
@@ -168,7 +161,7 @@ object Graft {
   /** KG derived from the driver's TPC-H-ish testdata (FIXTURES.md §7). */
   def fromTestdata(spark: SparkSession, dir: String): GraftKG =
     new GraftKG(spark, KG.edges(spark, dir),
-                KGIndex.derivedEntityDict(spark, dir), () => KG.relStats(spark, dir))
+                KGIndex.derivedEntityDict(spark, dir))
 
   /** KG from an explicit set of directed base triples; inverse edges are
     * added with `rel ^ 1` per the reference convention (S11). */

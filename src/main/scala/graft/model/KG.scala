@@ -267,12 +267,10 @@ object KG {
     * behind the hard-logic planner's join ordering. One 22-row aggregate,
     * cached per (context, dir). */
   def relStats(spark: SparkSession, dir: String): Map[Long, Long] =
-    statsCache.getOrElseUpdate(key(spark, dir), relStatsOf(edges(spark, dir)))
-
-  /** Relation cardinalities of any edges relation: one row per relation. */
-  private[graft] def relStatsOf(edges: DataFrame): Map[Long, Long] =
-    edges.groupBy("rel").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    statsCache.getOrElseUpdate(key(spark, dir), {
+      edges(spark, dir).groupBy("rel").count()
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    })
 
   /** DuckDB-oracle SQL prefix defining the identical `edges` relation.
     * Must stay semantically in lock-step with [[baseEdges]]. */

@@ -42,13 +42,6 @@ class GraftFacadeSpec extends AnyFunSuite {
     val direct = graft.exec.HardExec.run(spark, dir, lstr, b)
       .collect().map(_.getLong(0)).toSet
     assert(viaFacade == direct && direct.nonEmpty)
-    // Same plan too: the facade orders atoms by the same relation stats.
-    // kg_3c's unordered and ordered plans differ.
-    val (_, lstr3c, b3c) = KGQueries.all.find(_._1 == "kg_3c").get
-    def plan(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.optimizedPlan.toString.replaceAll("#\\d+", "")
-    assert(plan(kg.answer(lstr3c, b3c)) ==
-           plan(graft.exec.HardExec.run(spark, dir, lstr3c, b3c)))
   }
 
   test("Godel t-norm: 2i conjunction = min of edge scores") {
