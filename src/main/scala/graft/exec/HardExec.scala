@@ -1,9 +1,14 @@
 package graft.exec
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, GraftPlan, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.DeduplicateRelations
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, Cast, Coalesce, EqualTo, Expression, IsNull, Literal, Or}
+import org.apache.spark.sql.catalyst.expressions.aggregate.Max
+import org.apache.spark.sql.catalyst.plans.{Cross, Inner, JoinType, LeftAnti, LeftOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, Distinct, Filter, HintInfo, Join, JoinHint, Limit, LogicalPlan, Project, Repartition, Union}
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
-import graft.lang._
+import graft.lang.{Atomic, CQ, Formula, Normalize, Parser, Term}
 import graft.lang.Binding.Binding
 import graft.model.KG
 
@@ -13,7 +18,7 @@ import graft.model.KG
   * algebra (SURVEY §2.3): atom = indexed scan (R1), conjunction on a shared
   * variable = equi-join (R2), disjunction = union (R3), negated atom =
   * anti-join (R4), existential elimination = project+distinct (R5).
-  * This evaluator compiles a DNF'd formula into exactly that DataFrame plan,
+  * This evaluator compiles a DNF'd formula into exactly that Catalyst plan,
   * and [[OracleSql]] emits the equivalent ANSI SQL from the same structure so
   * the two can never drift.
   *
@@ -21,56 +26,73 @@ import graft.model.KG
   * relation. Tagged mode answers over edges carrying a train flag `_tr`
   * and reports, per answer, membership in the full-KG and the train-KG
   * answer sets in one pass (the split evaluation of `eval.Workload`).
-  * The modes share the atom frames and the join order; they differ only in
+  * The modes share the atom plans and the join order; they differ only in
   * the negation step and the final projection.
   *
-  * Scale design: every atom is a filter on `rel` (+ constant endpoint) over
-  * the edges table — Catalyst pushes both into the parquet/cached scan.
-  * Joins are equi-joins on entity-id columns; the accumulated binding
-  * relation stays narrow (one BIGINT column per variable). Join order is
-  * chosen greedily most-constants-first so the most selective atoms anchor
-  * the plan, and AQE re-plans broadcast/skew at runtime.
+  * Scale design: the whole formula is built as one logical plan and
+  * wrapped into a DataFrame once, so it is analyzed once per query, not
+  * once per Dataset operator. Every atom is a filter on `rel` (+ constant
+  * endpoint) over its own copy of the edges plan; Catalyst pushes both
+  * into the parquet/cached scan. Joins are equi-joins on entity-id
+  * columns, and the accumulated binding relation stays narrow (one BIGINT
+  * column per variable). Join order is chosen greedily most-constants-first
+  * so the most selective atoms anchor the plan. The physical strategy is
+  * gated on the edges frame's own size estimate: when it is at most
+  * `spark.sql.autoBroadcastJoinThreshold`, every atom after the first is
+  * broadcast and every atom reads a one-partition coalesce of the edges, so
+  * the query runs with no exchange but its broadcasts. Above the gate (or
+  * with the threshold at -1) only anchored disconnected atoms are
+  * broadcast, and AQE re-plans broadcast/skew at runtime.
   */
 object HardExec {
 
-  /** DataFrame of an atom's variable bindings: one column per distinct
-    * variable in the atom (R1: atom lookup). In tagged mode (`tr` set) the
-    * edge's train flag rides along as column `tr`.
+  /** A plan under construction: the attribute of each variable it binds
+    * and, in tagged mode, the train flag of each positive atom it joins. */
+  private final case class Frame(plan: LogicalPlan, vars: Map[String, Attribute],
+                                 flags: Seq[Attribute])
+
+  /** `plan` with new ids for the attributes it produces (the idiom of
+    * Spark's InlineCTE), so that each atom reads its own instance of the
+    * edges and the self-joins are well formed whatever the edges plan's
+    * root is. The cache manager matches plans canonically, so a copy of
+    * a cached frame still reads its cached scan. */
+  private def fresh(plan: LogicalPlan): LogicalPlan =
+    DeduplicateRelations(Join(plan, plan, Inner, None, JoinHint.NONE)).children(1)
+
+  /** Plan of an atom's variable bindings: one column per distinct
+    * variable in the atom (R1: atom lookup). In tagged mode the edge's
+    * train flag rides along.
     *
     * No per-atom `distinct()`: the edges relation is a *set* (KG.edges is
     * duplicate-free by construction), so each projection here is already
     * duplicate-free — and even with a duplicated input, the final
     * free-variable projection dedups, so results are unchanged; only join
-    * multiplicity (perf) would suffer. Dropping it removes one shuffle per
-    * atom. Being duplicate-free also makes the train flag well-defined per
-    * assignment. */
-  private def atomFrame(edges: DataFrame, a: Atomic, b: Binding,
-                        tr: Option[String]): DataFrame = {
-    val relId = b.getOrElse(a.rel,
-      throw new IllegalArgumentException(s"unbound relation ${a.rel}"))
-    val df = edges.filter(col("rel") === relId)
-    val flag = tr.map(col("_tr").as(_)).toSeq
-    (a.head.isConst, a.tail.isConst) match {
-      case (true, true) =>
-        val hits = df.filter(col("src") === b(a.head.name) && col("dst") === b(a.tail.name))
-        tr match {
-          case None => hits.select(lit(1L).as("_const_hit")).limit(1)
-          // Zero-or-one row: groupBy over the matches (empty input ⇒ empty
-          // frame ⇒ the conjunct fails, like the untagged limit(1)).
-          case Some(c) => hits.groupBy(lit(1L).as("_const_hit")).agg(max(col("_tr")).as(c))
-        }
-      case (true, false) =>
-        df.filter(col("src") === b(a.head.name))
-          .select(col("dst").as(a.tail.name) +: flag: _*)
-      case (false, true) =>
-        df.filter(col("dst") === b(a.tail.name))
-          .select(col("src").as(a.head.name) +: flag: _*)
-      case (false, false) =>
-        if (a.head.name == a.tail.name)
-          df.filter(col("src") === col("dst"))
-            .select(col("src").as(a.head.name) +: flag: _*)
-        else
-          df.select(Seq(col("src").as(a.head.name), col("dst").as(a.tail.name)) ++ flag: _*)
+    * multiplicity (perf) would suffer. Being duplicate-free also makes the
+    * train flag well-defined per assignment. */
+  private def atomFrame(edges: LogicalPlan, a: Atomic, b: Binding,
+                        tagged: Boolean): Frame = {
+    val e = fresh(edges)
+    def c(name: String): Attribute = e.output.find(_.name == name).get
+    val ends = Seq(a.head -> c("src"), a.tail -> c("dst"))
+    val loop = if (a.head.isVar && a.head == a.tail) Seq(EqualTo(c("src"), c("dst"))) else Nil
+    val matches = Filter((EqualTo(c("rel"), Literal(b(a.rel))) +: loop ++:
+      ends.collect { case (t, at) if t.isConst => EqualTo(at, Literal(b(t.name))) })
+      .reduce(And), e)
+    val vars = ends.collect { case (t, at) if t.isVar => Alias(at, t.name)() }.distinctBy(_.name)
+    if (vars.nonEmpty) {
+      val flag = if (tagged) Seq(Alias(c("_tr"), "_tr")()) else Nil
+      Frame(Project(vars ++ flag, matches), vars.map(v => v.name -> v.toAttribute).toMap,
+            flag.map(_.toAttribute))
+    } else if (!tagged)
+      // Constant–constant atom: zero or one row, so the conjunct holds or
+      // fails as a whole.
+      Frame(Limit(Literal(1), Project(Seq(Alias(Literal(1L), "_const_hit")()), matches)),
+            Map.empty, Nil)
+    else {
+      // Zero-or-one row: grouped on a constant (empty input ⇒ no row ⇒ the
+      // conjunct fails, like the untagged limit), with the match's flag.
+      val tr = Alias(Max(c("_tr")).toAggregateExpression(), "_tr")()
+      Frame(Aggregate(Seq(Literal(1L)), Seq(tr), matches), Map.empty, Seq(tr.toAttribute))
     }
   }
 
@@ -106,78 +128,116 @@ object HardExec {
     }
   }
 
-  /** Plan one conjunct. Plain mode returns its answers as column `f` (one
-    * row per satisfying assignment). Tagged mode returns
+  /** Plan one conjunct over `edges`. Plain mode returns its answers as
+    * column `f` (one row per satisfying assignment). Tagged mode returns
     * `(f, _in_full ∈ {0,1}, _in_easy ∈ {0,1})` per satisfying assignment:
     * an assignment is train-derivable iff every positive atom's edge is a
     * train edge AND no negated atom matches a train edge; it is a full
     * answer iff no negated atom matches any edge. (Train answers are NOT a
     * subset of full answers under negation: removing train edges can admit
-    * new answers — both memberships are computed independently.) */
-  private def evalCQ(edges: DataFrame, cq: CQ, b: Binding,
-                     relStats: Map[Long, Long], tagged: Boolean): DataFrame = {
+    * new answers — both memberships are computed independently.) With
+    * `small`, every atom after the first in join order is broadcast. */
+  private def evalCQ(edges: LogicalPlan, cq: CQ, b: Binding, relStats: Map[Long, Long],
+                     tagged: Boolean, small: Boolean): LogicalPlan = {
     require(cq.pos.nonEmpty, "conjunct needs at least one positive atom")
-    val free = col(cq.freeVar.name).cast("long").as("f")
-    // Tagged mode: the n-th atom framed (the positive ones in join order,
-    // then the negated ones) carries its train flag as `_tr<n>`.
-    var n = 0
-    def frame(a: Atomic): DataFrame = {
-      n += 1
-      atomFrame(edges, a, b, if (tagged) Some(s"_tr$n") else None)
-    }
+    val free = cq.freeVar.name
+    cq.allAtoms.foreach(a => require(b.contains(a.rel), s"unbound relation ${a.rel}"))
+    def frame(a: Atomic): Frame = atomFrame(edges, a, b, tagged)
+    def join(l: Frame, r: Frame, keys: Seq[String], kind: JoinType, bcast: Boolean) =
+      Join(l.plan, r.plan, kind, keys.map(v => EqualTo(l.vars(v), r.vars(v))).reduceOption(And),
+           if (bcast) JoinHint(None, Some(HintInfo(Some(BROADCAST)))) else JoinHint.NONE)
     val order = joinOrder(cq.pos, a => relStats.getOrElse(b(a.rel), Long.MaxValue))
     var acc = order.tail.foldLeft(frame(order.head)) { (joined, a) =>
       val next = frame(a)
-      val shared = next.columns.filter(joined.columns.contains).toSeq
-      if (shared.nonEmpty) joined.join(next, shared)
-      else {
-        // Disconnected atom: broadcast it rather than let a
-        // CartesianProduct re-scan both sides per partition pair — but
-        // only when it is constant-anchored (one entity's adjacency list,
-        // bounded by max degree; the case in every declared query type).
-        // An unanchored disconnected atom is a full relation: broadcasting
-        // that would blow the driver at scale, so it stays a plain cross
-        // join and AQE picks the physical strategy.
-        val anchored = Seq(a.head, a.tail).exists(_.isConst)
-        joined.crossJoin(if (anchored) broadcast(next) else next)
-      }
+      val shared = atomVars(a).filter(joined.vars.contains)
+      // A disconnected atom is broadcast rather than left to a
+      // CartesianProduct that re-scans both sides per partition pair — but
+      // above the gate only when it is constant-anchored (one entity's
+      // adjacency list, bounded by max degree; the case in every declared
+      // query type). An unanchored disconnected atom is a full relation:
+      // broadcasting that at scale would blow the driver, so it stays a
+      // plain cross join and AQE picks the physical strategy.
+      val bcast = small || (shared.isEmpty && Seq(a.head, a.tail).exists(_.isConst))
+      Frame(join(joined, next, shared, if (shared.isEmpty) Cross else Inner, bcast),
+            next.vars ++ joined.vars, joined.flags ++ next.flags)
     }
     // Negated atoms (R4), joined on the atom's variables: plain mode
     // anti-joins; tagged mode left-joins the per-key (exists, any-train)
     // aggregate. A variable-free negated atom joins on no key: it filters
-    // the whole conjunct (its frame already has at most one row).
-    val negTr = cq.neg.map { a =>
+    // the whole conjunct (its plan already has at most one row).
+    val negFlags = cq.neg.flatMap { a =>
       val keys = atomVars(a)
-      require(keys.forall(acc.columns.contains),
+      require(keys.forall(acc.vars.contains),
         s"negated atom ${a.lstr} has variables unbound by positive atoms")
       val neg = frame(a)
-      val tr = s"_tr$n"
-      acc =
-        if (!tagged) acc.join(neg, keys, "left_anti")
-        else acc.join((if (keys.isEmpty) neg.drop("_const_hit")
-                       else neg.groupBy(keys.map(col): _*).agg(max(col(tr)).as(tr)))
-                        .withColumn(tr + "_ex", lit(1)), keys, "left")
-      tr
+      if (!tagged) {
+        acc = acc.copy(plan = join(acc, neg, keys, LeftAnti, small))
+        None
+      } else {
+        val (perKey, tr) =
+          if (keys.isEmpty) (neg.plan, neg.flags.head)
+          else {
+            val anyTr = Alias(Max(neg.flags.head).toAggregateExpression(), "_tr")()
+            (Aggregate(keys.map(neg.vars), keys.map(neg.vars) :+ anyTr, neg.plan),
+             anyTr.toAttribute)
+          }
+        val ex = Alias(Literal(1), "_tr_ex")()
+        acc = acc.copy(plan = join(acc, neg.copy(plan = Project(perKey.output :+ ex, perKey)),
+                                   keys, LeftOuter, small))
+        Some(tr -> ex.toAttribute)
+      }
     }
-    if (!tagged) acc.select(free)
-    else acc.select(free,
-      negTr.map(t => col(t + "_ex").isNull).foldLeft(lit(true))(_ && _)
-        .cast("int").as("_in_full"),
-      negTr.map(t => coalesce(col(t), lit(0)) === 0)
-        .foldLeft(cq.pos.indices.map(i => col(s"_tr${i + 1}") === 1).reduce(_ && _))(_ && _)
-        .cast("int").as("_in_easy"))
+    val f = Alias(Cast(acc.vars(free), LongType), "f")()
+    def flag(conds: Seq[Expression], name: String) =
+      Alias(Cast(conds.foldLeft(Literal(true): Expression)(And), IntegerType), name)()
+    Project(
+      if (!tagged) Seq(f)
+      else Seq(f,
+        flag(negFlags.map { case (_, ex) => IsNull(ex) }, "_in_full"),
+        flag(acc.flags.map(EqualTo(_, Literal(1))) ++
+               negFlags.map { case (tr, _) => EqualTo(Coalesce(Seq(tr, Literal(0))), Literal(0)) },
+             "_in_easy")),
+      acc.plan)
   }
 
-  /** DNF → per-conjunct plan → union (R3). */
+  /** Whether `edges` is broadcast-sized: its plan's own size estimate is
+    * at most `spark.sql.autoBroadcastJoinThreshold` (no job runs for it;
+    * the threshold -1 turns the gate off). */
+  private def broadcastSized(edges: DataFrame): Boolean =
+    edges.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+
+  /** DNF → per-conjunct plan → union (R3) → the mode's final step, built
+    * as one plan and analyzed once. Below the gate the union is coalesced
+    * to one partition, so the final distinct (or `groupBy(f)`) plans with
+    * no exchange. */
   private def evalDnf(edges: DataFrame, f: Formula, b: Binding,
-                      relStats: Map[Long, Long], tagged: Boolean): DataFrame =
-    Normalize.toDnf(f).map(evalCQ(edges, _, b, relStats, tagged)).reduce(_ unionAll _)
+                      relStats: Map[Long, Long], tagged: Boolean): DataFrame = {
+    val small = broadcastSized(edges)
+    def oneTask(p: LogicalPlan) = if (small) Repartition(1, shuffle = false, p) else p
+    val source = oneTask(edges.queryExecution.analyzed)
+    val union = oneTask(Normalize.toDnf(f).map(evalCQ(source, _, b, relStats, tagged, small)) match {
+      case Seq(one) => one
+      case many => Union(many)
+    })
+    GraftPlan.frame(edges.sparkSession,
+      if (!tagged) Distinct(union)
+      else {
+        // The union's per-answer max of both memberships.
+        val Seq(fa, full, easy) = union.output
+        val Seq(inFull, inEasy) = Seq(full -> "in_full", easy -> "in_easy").map {
+          case (m, name) => Alias(Max(m).toAggregateExpression(), name)()
+        }
+        Filter(Or(EqualTo(inFull.toAttribute, Literal(1)), EqualTo(inEasy.toAttribute, Literal(1))),
+               Aggregate(Seq(fa), Seq(fa, inFull, inEasy), union))
+      })
+  }
 
   /** Evaluate a full formula: the union's distinct answers, output column
     * `f` (R5). */
   def evalFormula(edges: DataFrame, f: Formula, b: Binding,
                   relStats: Map[Long, Long] = Map.empty): DataFrame =
-    evalDnf(edges, f, b, relStats, tagged = false).distinct()
+    evalDnf(edges, f, b, relStats, tagged = false)
 
   /** End-to-end: derive the KG edges from `dir` and answer the lstr query,
     * with cached relation-cardinality stats driving the atom order. */
@@ -192,10 +252,6 @@ object HardExec {
   def evalFormulaTagged(edgesT: DataFrame, f: Formula, b: Binding,
                         relStats: Map[Long, Long] = Map.empty): DataFrame =
     evalDnf(edgesT, f, b, relStats, tagged = true)
-      .groupBy("f")
-      .agg(max(col("_in_full")).as("in_full"),
-           max(col("_in_easy")).as("in_easy"))
-      .filter(col("in_full") === 1 || col("in_easy") === 1)
 }
 
 /** ANSI-SQL generator mirroring [[HardExec]] for the DuckDB oracle. */

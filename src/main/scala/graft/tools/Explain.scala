@@ -1,7 +1,9 @@
 package graft.tools
 
-/** Plan inspector: prints the formatted physical plan and timed count of one
-  * named SparkEntry query. Usage: runMain graft.tools.Explain <query> [dir]. */
+/** Plan inspector: runs one or more named SparkEntry queries over a
+  * testdata directory and prints each one's row count and wall time; with
+  * `GRAFT_EXPLAIN` set it first prints the query's formatted physical
+  * plan. Usage: runMain graft.tools.Explain <dir> <query> [<query> ...]. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val dir = args(0)

@@ -7,7 +7,9 @@ import graft.exec.HardExec
 
 /** HardExec vs a brute-force EFO-1 model checker on a random tiny KG.
   * Covers R1-R5 (scan/join/union/anti-join/projection) for all 25 declared
-  * query shapes with three different bindings each. */
+  * query shapes with three different bindings each. The tiny KG plans
+  * below HardExec's broadcast gate; every check also runs above it, with
+  * the broadcast threshold at -1. */
 class HardExecSpec extends AnyFunSuite {
   import SparkTestSession.spark
   import spark.implicits._
@@ -67,6 +69,15 @@ class HardExecSpec extends AnyFunSuite {
     (full ++ train).map(e => (e, flag(full(e)), flag(train(e))))
   }
 
+  /** `body` below the broadcast gate (the session's threshold), then above
+    * it (threshold -1). */
+  def onBothSidesOfTheGate(body: => Unit): Unit =
+    Seq(None, Some("-1")).foreach {
+      case None => withClue("below the gate: ")(body)
+      case Some(t) => SparkTestSession.withBroadcastThreshold(t)(
+        withClue("above the gate: ")(body))
+    }
+
   def randomBinding(f: Formula, seed: Int): Binding = {
     val r = new scala.util.Random(seed)
     val names = (f.atoms.map(_.rel) ++ f.terms.filter(_.isConst).map(_.name)).distinct
@@ -77,48 +88,54 @@ class HardExecSpec extends AnyFunSuite {
   }
 
   test("stats-driven atom ordering does not change results") {
-    val stats = triples.groupBy(_._2).map { case (r, ts) => r -> ts.size.toLong }
-    Seq("r1(s1,e1)&r2(e1,e2)&r3(e2,f)",
-        "((((r1(s1,e1))&(r2(e1,f)))&(r3(s2,e2)))&(r4(e2,f)))&(r5(e1,e2))")
-      .foreach { lstr =>
-        val f = Parser.parse(lstr)
-        val b = randomBinding(f, 77)
-        val plain = HardExec.evalFormula(edgesDf, f, b)
-          .collect().map(_.getLong(0)).toSet
-        val ordered = HardExec.evalFormula(edgesDf, f, b, stats)
-          .collect().map(_.getLong(0)).toSet
-        assert(plain == ordered)
-      }
+    onBothSidesOfTheGate {
+      val stats = triples.groupBy(_._2).map { case (r, ts) => r -> ts.size.toLong }
+      Seq("r1(s1,e1)&r2(e1,e2)&r3(e2,f)",
+          "((((r1(s1,e1))&(r2(e1,f)))&(r3(s2,e2)))&(r4(e2,f)))&(r5(e1,e2))")
+        .foreach { lstr =>
+          val f = Parser.parse(lstr)
+          val b = randomBinding(f, 77)
+          val plain = HardExec.evalFormula(edgesDf, f, b)
+            .collect().map(_.getLong(0)).toSet
+          val ordered = HardExec.evalFormula(edgesDf, f, b, stats)
+            .collect().map(_.getLong(0)).toSet
+          assert(plain == ordered)
+        }
+    }
   }
 
   test("disconnected components: anchored and unanchored cross joins") {
-    // The unanchored disconnected atom r2(e1,e2) exercises the plain
-    // (non-broadcast) cross-join branch; the anchored variant r2(s2,e1)
-    // exercises the broadcast branch. Both against brute force.
-    Seq("r1(s1,f)&r2(e1,e2)", "r1(s1,f)&r2(s2,e1)").foreach { lstr =>
-      val f = Parser.parse(lstr)
-      (1 to 2).foreach { seed =>
-        val b = randomBinding(f, seed * 17 + lstr.hashCode)
-        val got = HardExec.evalFormula(edgesDf, f, b)
-          .collect().map(_.getLong(0)).toSet
-        assert(got == bruteForce(f, b), s"$lstr binding=$b")
+    onBothSidesOfTheGate {
+      // The unanchored disconnected atom r2(e1,e2) exercises the plain
+      // (non-broadcast) cross-join branch; the anchored variant r2(s2,e1)
+      // exercises the broadcast branch. Both against brute force.
+      Seq("r1(s1,f)&r2(e1,e2)", "r1(s1,f)&r2(s2,e1)").foreach { lstr =>
+        val f = Parser.parse(lstr)
+        (1 to 2).foreach { seed =>
+          val b = randomBinding(f, seed * 17 + lstr.hashCode)
+          val got = HardExec.evalFormula(edgesDf, f, b)
+            .collect().map(_.getLong(0)).toSet
+          assert(got == bruteForce(f, b), s"$lstr binding=$b")
+        }
       }
     }
   }
 
   test("a variable-free negated atom filters the whole conjunct") {
-    val f = Parser.parse("r1(s1,f)&!r2(s1,s2)")
-    // One binding per case of the negated edge: absent, train, full-only.
-    // r1 = r2, so the positive atom has the negated edge among its answers.
-    val (tr, fullOnly) = triples.toSeq.sorted.partition(isTrain)
-    val (h0, r0, _) = tr.head
-    val absent = (h0, r0, (0L until nEnt).find(t => !triples((h0, r0, t))).get)
-    Seq(absent, tr.head, fullOnly.head).foreach { case (h, r, t) =>
-      val b = Map("r1" -> r, "r2" -> r, "s1" -> h, "s2" -> t)
-      val got = HardExec.evalFormula(edgesDf, f, b)
-        .collect().map(_.getLong(0)).toSet
-      assert(got == bruteForce(f, b), s"binding=$b")
-      assert(taggedRows(f, b) == taggedWant(f, b), s"tagged, binding=$b")
+    onBothSidesOfTheGate {
+      val f = Parser.parse("r1(s1,f)&!r2(s1,s2)")
+      // One binding per case of the negated edge: absent, train, full-only.
+      // r1 = r2, so the positive atom has the negated edge among its answers.
+      val (tr, fullOnly) = triples.toSeq.sorted.partition(isTrain)
+      val (h0, r0, _) = tr.head
+      val absent = (h0, r0, (0L until nEnt).find(t => !triples((h0, r0, t))).get)
+      Seq(absent, tr.head, fullOnly.head).foreach { case (h, r, t) =>
+        val b = Map("r1" -> r, "r2" -> r, "s1" -> h, "s2" -> t)
+        val got = HardExec.evalFormula(edgesDf, f, b)
+          .collect().map(_.getLong(0)).toSet
+        assert(got == bruteForce(f, b), s"binding=$b")
+        assert(taggedRows(f, b) == taggedWant(f, b), s"tagged, binding=$b")
+      }
     }
   }
 
@@ -145,22 +162,38 @@ class HardExecSpec extends AnyFunSuite {
     assert(safeFormulas.size >= 150)
     val stats = triples.groupBy(_._2).map { case (r, ts) => r -> ts.size.toLong }
     safeFormulas.foreach { case (f, b) =>
-      val want = bruteForce(f, b)
-      Seq(Map.empty[Long, Long], stats).foreach { st =>
-        val got = HardExec.evalFormula(edgesDf, f, b, st)
-          .collect().map(_.getLong(0)).toSet
-        assert(got == want, s"${f.lstr} binding=$b stats=${st.nonEmpty}")
+      val (want, wantTagged) = (bruteForce(f, b), taggedWant(f, b))
+      onBothSidesOfTheGate {
+        Seq(Map.empty[Long, Long], stats).foreach { st =>
+          val got = HardExec.evalFormula(edgesDf, f, b, st)
+            .collect().map(_.getLong(0)).toSet
+          assert(got == want, s"${f.lstr} binding=$b stats=${st.nonEmpty}")
+        }
+        assert(taggedRows(f, b) == wantTagged, s"tagged ${f.lstr} binding=$b")
       }
-      assert(taggedRows(f, b) == taggedWant(f, b), s"tagged ${f.lstr} binding=$b")
     }
   }
 
   test("random formulas outside the safe-range fragment are refused in both modes") {
-    assert(unsafeFormulas.nonEmpty)
-    unsafeFormulas.foreach { case (f, b) =>
-      withClue(s"${f.lstr}: ") {
-        intercept[IllegalArgumentException](HardExec.evalFormula(edgesDf, f, b))
-        intercept[IllegalArgumentException](HardExec.evalFormulaTagged(edgesT, f, b))
+    onBothSidesOfTheGate {
+      assert(unsafeFormulas.nonEmpty)
+      unsafeFormulas.foreach { case (f, b) =>
+        withClue(s"${f.lstr}: ") {
+          intercept[IllegalArgumentException](HardExec.evalFormula(edgesDf, f, b))
+          intercept[IllegalArgumentException](HardExec.evalFormulaTagged(edgesT, f, b))
+        }
+      }
+    }
+  }
+
+  test("an unbound relation is refused in both modes") {
+    val f = Parser.parse("r1(s1,e1)&r2(e1,f)")
+    val b = Map("r2" -> 0L, "s1" -> 1L)
+    onBothSidesOfTheGate {
+      Seq(() => HardExec.evalFormula(edgesDf, f, b),
+          () => HardExec.evalFormulaTagged(edgesT, f, b)).foreach { eval =>
+        val e = intercept[IllegalArgumentException](eval())
+        assert(e.getMessage.contains("unbound relation r1"))
       }
     }
   }
@@ -170,10 +203,13 @@ class HardExecSpec extends AnyFunSuite {
       val f = Parser.parse(lstr)
       (1 to 3).foreach { seed =>
         val b = randomBinding(f, seed * 31 + name.hashCode)
-        val got = HardExec.evalFormula(edgesDf, f, b)
-          .collect().map(_.getLong(0)).toSet
-        val want = bruteForce(f, b)
-        assert(got == want, s"binding=$b")
+        val (want, wantTagged) = (bruteForce(f, b), taggedWant(f, b))
+        onBothSidesOfTheGate {
+          val got = HardExec.evalFormula(edgesDf, f, b)
+            .collect().map(_.getLong(0)).toSet
+          assert(got == want, s"binding=$b")
+          assert(taggedRows(f, b) == wantTagged, s"tagged, binding=$b")
+        }
       }
     }
   }

@@ -64,6 +64,36 @@ class PlanGuardSpec extends AnyFunSuite {
       s"A-ES sampler should be per-partition top-k, got:\n$phys")
   }
 
+  test("exact answers plan no shuffle below the broadcast gate, one above it") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ShuffleExchangeExec}
+    object Executed extends AdaptiveSparkPlanHelper
+    // sf0.001's edges (about 0.8 MB estimated) are under the default
+    // 10 MB threshold.
+    val kg = Graft.fromTestdata(spark, dir)
+    Seq("kg_3c", "kg_pin").foreach { name =>
+      val (_, lstr, b) = KGQueries.all.find(_._1 == name).get
+      // (shuffle exchanges, broadcast exchanges, cached scans) of the plan
+      // AQE starts from: run, AQE would fold an empty answer's plan away.
+      def shape(): (Int, Int, Int) = {
+        val p = kg.answer(lstr, b).queryExecution.executedPlan
+        (Executed.collect(p) { case e: ShuffleExchangeExec => e }.size,
+         Executed.collect(p) { case e: BroadcastExchangeExec => e }.size,
+         Executed.collect(p) { case s: InMemoryTableScanExec => s }.size)
+      }
+      val nonStream = graft.lang.Normalize.toDnf(graft.lang.Parser.parse(lstr))
+        .map(_.allAtoms.size - 1).sum
+      val (shuffles, broadcasts, scans) = shape()
+      assert((shuffles, broadcasts) == (0, nonStream), s"$name below the gate")
+      assert(scans > 0, s"$name below the gate reads no cached scan")
+      val (shufflesAbove, _, scansAbove) =
+        SparkTestSession.withBroadcastThreshold("-1")(shape())
+      assert(shufflesAbove > 0 && scansAbove > 0, s"$name above the gate")
+    }
+  }
+
   test("every query has a DuckDB oracle (or a documented exception)") {
     // The driver's correctness gate only covers queries with BOTH a
     // `queries` entry and an `oracleSql` entry — a new query without an

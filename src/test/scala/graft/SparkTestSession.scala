@@ -9,4 +9,13 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Runs `body` with `spark.sql.autoBroadcastJoinThreshold` at `value`,
+    * then restores the session's value. */
+  def withBroadcastThreshold[T](value: String)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try body finally spark.conf.set(key, saved)
+  }
 }
