@@ -2,10 +2,12 @@ package graft.exec
 
 import org.apache.spark.sql.{DataFrame, GraftPlan, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.DeduplicateRelations
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, Cast, Coalesce, EqualTo, Expression, IsNull, Literal, Or}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, Cast,
+  Coalesce, EqualTo, Expression, IsNull, Literal, Or}
 import org.apache.spark.sql.catalyst.expressions.aggregate.Max
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner, JoinType, LeftAnti, LeftOuter}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, Distinct, Filter, HintInfo, Join, JoinHint, Limit, LogicalPlan, Project, Repartition, Union}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, Distinct,
+  Filter, HintInfo, Join, JoinHint, Limit, LogicalPlan, Project, Repartition, Union}
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.lang.{Atomic, CQ, Formula, Normalize, Parser, Term}
@@ -74,16 +76,18 @@ object HardExec {
     val e = fresh(edges)
     def c(name: String): Attribute = e.output.find(_.name == name).get
     val ends = Seq(a.head -> c("src"), a.tail -> c("dst"))
-    val loop = if (a.head.isVar && a.head == a.tail) Seq(EqualTo(c("src"), c("dst"))) else Nil
+    val loop =
+      if (a.head.isVar && a.head == a.tail) Seq(EqualTo(c("src"), c("dst"))) else Nil
     val matches = Filter((EqualTo(c("rel"), Literal(b(a.rel))) +: loop ++:
       ends.collect { case (t, at) if t.isConst => EqualTo(at, Literal(b(t.name))) })
       .reduce(And), e)
-    val vars = ends.collect { case (t, at) if t.isVar => Alias(at, t.name)() }.distinctBy(_.name)
-    if (vars.nonEmpty) {
-      val flag = if (tagged) Seq(Alias(c("_tr"), "_tr")()) else Nil
+    val vars = ends.collect { case (t, at) if t.isVar => Alias(at, t.name)() }
+      .distinctBy(_.name)
+    val flag = if (tagged) Seq(c("_tr")) else Nil
+    if (vars.nonEmpty)
       Frame(Project(vars ++ flag, matches), vars.map(v => v.name -> v.toAttribute).toMap,
-            flag.map(_.toAttribute))
-    } else if (!tagged)
+            flag)
+    else if (!tagged)
       // Constant–constant atom: zero or one row, so the conjunct holds or
       // fails as a whole.
       Frame(Limit(Literal(1), Project(Seq(Alias(Literal(1L), "_const_hit")()), matches)),
@@ -144,7 +148,8 @@ object HardExec {
     cq.allAtoms.foreach(a => require(b.contains(a.rel), s"unbound relation ${a.rel}"))
     def frame(a: Atomic): Frame = atomFrame(edges, a, b, tagged)
     def join(l: Frame, r: Frame, keys: Seq[String], kind: JoinType, bcast: Boolean) =
-      Join(l.plan, r.plan, kind, keys.map(v => EqualTo(l.vars(v), r.vars(v))).reduceOption(And),
+      Join(l.plan, r.plan, kind,
+           keys.map(v => EqualTo(l.vars(v), r.vars(v))).reduceOption(And),
            if (bcast) JoinHint(None, Some(HintInfo(Some(BROADCAST)))) else JoinHint.NONE)
     val order = joinOrder(cq.pos, a => relStats.getOrElse(b(a.rel), Long.MaxValue))
     var acc = order.tail.foldLeft(frame(order.head)) { (joined, a) =>
@@ -182,8 +187,8 @@ object HardExec {
              anyTr.toAttribute)
           }
         val ex = Alias(Literal(1), "_tr_ex")()
-        acc = acc.copy(plan = join(acc, neg.copy(plan = Project(perKey.output :+ ex, perKey)),
-                                   keys, LeftOuter, small))
+        val exists = neg.copy(plan = Project(perKey.output :+ ex, perKey))
+        acc = acc.copy(plan = join(acc, exists, keys, LeftOuter, small))
         Some(tr -> ex.toAttribute)
       }
     }
@@ -194,9 +199,9 @@ object HardExec {
       if (!tagged) Seq(f)
       else Seq(f,
         flag(negFlags.map { case (_, ex) => IsNull(ex) }, "_in_full"),
-        flag(acc.flags.map(EqualTo(_, Literal(1))) ++
-               negFlags.map { case (tr, _) => EqualTo(Coalesce(Seq(tr, Literal(0))), Literal(0)) },
-             "_in_easy")),
+        flag(acc.flags.map(EqualTo(_, Literal(1))) ++ negFlags.map {
+               case (tr, _) => EqualTo(Coalesce(Seq(tr, Literal(0))), Literal(0))
+             }, "_in_easy")),
       acc.plan)
   }
 
@@ -216,10 +221,11 @@ object HardExec {
     val small = broadcastSized(edges)
     def oneTask(p: LogicalPlan) = if (small) Repartition(1, shuffle = false, p) else p
     val source = oneTask(edges.queryExecution.analyzed)
-    val union = oneTask(Normalize.toDnf(f).map(evalCQ(source, _, b, relStats, tagged, small)) match {
-      case Seq(one) => one
-      case many => Union(many)
-    })
+    val union = oneTask(
+      Normalize.toDnf(f).map(evalCQ(source, _, b, relStats, tagged, small)) match {
+        case Seq(one) => one
+        case many => Union(many)
+      })
     GraftPlan.frame(edges.sparkSession,
       if (!tagged) Distinct(union)
       else {
@@ -228,7 +234,8 @@ object HardExec {
         val Seq(inFull, inEasy) = Seq(full -> "in_full", easy -> "in_easy").map {
           case (m, name) => Alias(Max(m).toAggregateExpression(), name)()
         }
-        Filter(Or(EqualTo(inFull.toAttribute, Literal(1)), EqualTo(inEasy.toAttribute, Literal(1))),
+        Filter(Or(EqualTo(inFull.toAttribute, Literal(1)),
+                  EqualTo(inEasy.toAttribute, Literal(1))),
                Aggregate(Seq(fa), Seq(fa, inFull, inEasy), union))
       })
   }
