@@ -76,7 +76,7 @@ class PlanGuardSpec extends AnyFunSuite {
     Seq("kg_3c", "kg_pin").foreach { name =>
       val (_, lstr, b) = KGQueries.all.find(_._1 == name).get
       // (shuffle exchanges, broadcast exchanges, cached scans) of the plan
-      // AQE starts from: run, AQE would fold an empty answer's plan away.
+      // AQE starts from; once run, AQE may fold an empty answer's plan away.
       def shape(): (Int, Int, Int) = {
         val p = kg.answer(lstr, b).queryExecution.executedPlan
         (Executed.collect(p) { case e: ShuffleExchangeExec => e }.size,
